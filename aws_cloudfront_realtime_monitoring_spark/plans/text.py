@@ -42,6 +42,7 @@ LANG_ORDER = ["en", "es", "fr", "de"]
 #: One character class, three spellings:
 WS_RE = "[ \\t\\n\\r\\f\\x0B]+"              # Column API (Java regex source)
 WS_RE_SPARK_SQL = "[ \\\\t\\\\n\\\\r\\\\f\\\\x0B]+"  # inside spark.sql literals
+BPE_RE_SPARK_SQL = BPE_RE.replace("\\", "\\\\")  # BPE_RE inside spark.sql literals
 WS_RE_DUCK = "[ \\t\\n\\r\\f\\x0b]+"         # inside DuckDB literals (no unescaping)
 WS_PY = "[ \t\n\r\f\x0b]+"                  # Python re replica spelling
 
@@ -168,7 +169,6 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     # rand() barrier: stops CollapseProject from re-inlining the split
     # into every consumer below (no CSE across HOF lambdas otherwise)
-    bpe_lit = BPE_RE.replace("\\", "\\\\")
     scores = ", ".join(
         f"size(filter(words, x -> array_contains(array("
         + ", ".join(f"'{s}'" for s in STOPWORDS[l])
@@ -179,7 +179,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH base AS (
           SELECT doc_id, lang AS labeled_lang,
                  CAST(length(text) AS BIGINT) AS n_chars,
-                 CAST(size(regexp_extract_all(text, '{bpe_lit}', 0)) AS BIGINT)
+                 CAST(size(regexp_extract_all(text, '{BPE_RE_SPARK_SQL}', 0)) AS BIGINT)
                    AS n_bpe_tokens,
                  CAST(size(regexp_extract_all(text, '[.,;:!?]', 0)) AS BIGINT)
                    AS n_punct,

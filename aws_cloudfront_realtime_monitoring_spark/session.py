@@ -49,12 +49,9 @@ def get_spark(app_name: str = "aws_cloudfront_realtime_monitoring_spark",
         # (oracle-gate / bench lines become unparseable); logs stay clean
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # one task per cached-layout file: testdata tables are tiny on disk
-        # but CPU-heavy per byte (hashing/parsing), so default 128 MB splits
-        # + 4 MB open-cost packing would glue all files into one task. At
-        # real scale these two go back to defaults.
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.files.openCostInBytes", "4m")
+        # file scans keep Spark's byte-sized splits, the same rule at any
+        # scale: small files pack into about one task per core
+        # (sources.tables docstring)
         # testdata writes events.ts as TIMESTAMP(NANOS); Spark has no nanos
         # type, so read as long and convert in the loader (sources.tables).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -19,6 +19,12 @@ rename, safe under concurrent runs) and every later read scans the
 partitioned copy in parallel. Data is byte-identical row-for-row; only the
 physical file layout changes -- exactly what an ingest/compaction step does
 at cluster scale.
+
+Scan tasks are sized by Spark's byte rule, not one per file: a split
+holds ``min(maxPartitionBytes, max(openCostInBytes, total / cores))``
+bytes, each file counted as its size plus the open cost, so the
+``_CACHE_FILES`` small files pack into about one task per core, one file
+per task once there are as many cores as files.
 """
 
 from __future__ import annotations
@@ -343,6 +349,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     # too or the sibling gets a false memo hit and no views (r11
     # review); _session_key carries that discipline (and the Connect
     # fallback) for this memo and the load_table relation memo alike
+    # pinned before the memo check, as in load_table: a memo hit must
+    # not leave a session that was switched to another zone off UTC
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = _session_key(spark)
     _touch_session(key)
     sig = _source_sig(sf_dir)

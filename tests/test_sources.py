@@ -337,3 +337,44 @@ def test_session_memos_evict_oldest_session_past_lru_cap():
         tables._TABLE_MEMO.clear(); tables._TABLE_MEMO.update(saved[0])
         tables._VIEWS_CURRENT.clear(); tables._VIEWS_CURRENT.update(saved[1])
         tables._SESSION_LRU[:] = saved[2]
+
+
+def test_small_file_scan_packs_by_bytes(spark, tmp_path):
+    """Scan tasks are sized by bytes, not one per file: a directory of
+    100 small parquet files (a streaming sink after a few minutes) must
+    scan in at most defaultParallelism partitions. A 4 MB
+    maxPartitionBytes/openCostInBytes pair gives one task per file."""
+    d = str(tmp_path / "many")
+    spark.range(0, 1000, 1, 100).write.parquet(d)
+    assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 100
+    parts = spark.read.parquet(d).rdd.getNumPartitions()
+    assert parts <= spark.sparkContext.defaultParallelism
+
+
+def test_layout_cached_table_keeps_scan_width(spark, sf_dir):
+    """The other direction of the bytes rule: a layout-cached table (one
+    of the CPU-heavy ones) still scans at least one task per core, up
+    to its _CACHE_FILES files."""
+    from aws_cloudfront_realtime_monitoring_spark.sources import tables
+
+    assert tables.layout_dir(spark, sf_dir, "embeddings") is not None
+    parts = tables.load_table(spark, sf_dir, "embeddings").rdd.getNumPartitions()
+    assert parts >= min(tables._CACHE_FILES,
+                        spark.sparkContext.defaultParallelism)
+
+
+def test_register_views_pins_utc_on_memo_hit(spark, sf_dir):
+    """ADVICE r18: a register_views memo hit returned before the UTC
+    session-timezone pin, so a session switched to another zone after
+    the first registration kept it."""
+    from aws_cloudfront_realtime_monitoring_spark.sources.tables import (
+        register_views,
+    )
+
+    register_views(spark, sf_dir)  # first registration: memo filled
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        register_views(spark, sf_dir)  # memo HIT path
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")

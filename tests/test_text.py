@@ -475,3 +475,26 @@ def test_bpe_tokens_agree_on_vertical_tab(spark):
         f"SELECT len(regexp_extract_all('{text}', '{BPE_RE}')) AS n"
     ).fetchone()[0]
     assert spark_n == duck_n == 3  # 'a', 'b', 'c'; \x0B is whitespace
+
+
+def test_bpe_re_spark_sql_spelling_matches_python(spark):
+    """BPE_RE_SPARK_SQL is BPE_RE as written inside a spark.sql string
+    literal (which unescapes backslashes once): Spark's
+    regexp_extract_all with it must tokenize exactly as Python's
+    re.findall does with BPE_RE, whitespace escapes included."""
+    import re
+
+    from aws_cloudfront_realtime_monitoring_spark.plans.text import (
+        BPE_RE,
+        BPE_RE_SPARK_SQL,
+    )
+
+    sample = "Hello,\tworld 42x\x0bé!\n\fend\r-9"
+    spark.createDataFrame([(sample,)], "text STRING").createOrReplaceTempView(
+        "bpe_sample"
+    )
+    [row] = spark.sql(
+        f"SELECT regexp_extract_all(text, '{BPE_RE_SPARK_SQL}', 0) AS toks "
+        "FROM bpe_sample"
+    ).collect()
+    assert row.toks == re.findall(BPE_RE, sample)

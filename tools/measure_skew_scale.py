@@ -165,10 +165,6 @@ def main() -> None:
     spark = get_spark("skew_scale", extra_conf={
         "spark.ui.enabled": "true",
         "spark.ui.port": str(UI_PORT),
-        # at this corpus size the default 4 MB local split packing would
-        # make thousands of scan tasks; realistic splits instead
-        "spark.sql.files.maxPartitionBytes": "128m",
-        "spark.sql.files.openCostInBytes": "4m",
     })
     SWEEP.mkdir(parents=True, exist_ok=True)
     large_p, small_p = build_corpus(spark, args.rows)

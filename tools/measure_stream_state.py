@@ -274,10 +274,7 @@ def main() -> None:
     print(f"# start load {load:.2f} flagged={flagged} "
           f"provider={args.state_store} wm={args.watermark_hours}h "
           f"users={n_users} heap={args.heap}", file=sys.stderr)
-    conf = {
-        "spark.sql.files.maxPartitionBytes": "128m",
-        "spark.sql.files.openCostInBytes": "1m",
-    }
+    conf = {}
     if args.state_store == "rocksdb":
         conf["spark.sql.streaming.stateStore.providerClass"] = (
             "org.apache.spark.sql.execution.streaming.state."
