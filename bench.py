@@ -451,6 +451,14 @@ class _ExternalCpu:
         return ext
 
 
+def _codegen_compiles(spark) -> int:
+    """Classes whole-stage codegen has compiled in this JVM so far: Spark's
+    compilation-time histogram counts one sample per Janino compile, and a
+    codegen-cache hit adds none."""
+    return spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _prior_round_times(
     sf: float | None, calib_now: float | None = None
 ) -> dict[str, float]:
@@ -548,13 +556,18 @@ def main() -> None:
     prior_times = _prior_round_times(sf, calib_now=calib_start)
 
     ext_cpu = _ExternalCpu()
+    codegen_compiles: dict[str, int] = {}
 
     def timed_runs(name: str, n_runs: int = 3) -> tuple[list[float], float]:
         """min-of-N timing; also returns the MAX external-cores figure
         sampled across the runs, so a neighbor burst that lands mid-query
         (invisible to the start-only gate -- r8 recorded a phantom +5%
-        that way) is detected per query, not discovered after the round."""
+        that way) is detected per query, not discovered after the round.
+        Adds the classes codegen compiled across the runs to
+        ``codegen_compiles``, read outside the timed intervals: a warm
+        row that still compiles is re-paying Janino and the JIT."""
         per_run = []
+        compiles0 = _codegen_compiles(spark)
         # close out the idle/warm-up gap for its baseline-RESET side effect
         # only: a neighbor burst that ended before the timed window must not
         # count toward this query's max (it would cause spurious re-runs and
@@ -574,6 +587,8 @@ def main() -> None:
             # drop persisted intermediates (e.g. minhash signatures) so one
             # query's cache does not occupy memory during the next
             spark.catalog.clearCache()
+        codegen_compiles[name] = (codegen_compiles.get(name, 0)
+                                  + _codegen_compiles(spark) - compiles0)
         return per_run, ext_max
 
     wait_budget = float(MID_RUN_WAIT_BUDGET_SEC)
@@ -739,6 +754,7 @@ def main() -> None:
         regime=regime,
         extra_queries=extra_times,
         passes=passes,
+        codegen_compiles=codegen_compiles,
     ))
     spark.stop()
 
@@ -769,6 +785,7 @@ def _render_output(
     regime: dict | None = None,
     extra_queries: dict[str, float] | None = None,
     passes: list[dict] | None = None,
+    codegen_compiles: dict[str, int] | None = None,
     sidecar_dir: Path | None = None,
 ) -> str:
     """Write full diagnostics to the sidecar, return the compact stdout
@@ -865,6 +882,10 @@ def _render_output(
         # degraded pass was re-run in a later healthy window and every
         # per-query number is the min over all passes
         passes=passes or [],
+        # classes whole-stage codegen compiled across each query's timed
+        # runs (every pass, re-runs included); warm runs of a query whose
+        # classes stay in the codegen cache compile 0
+        codegen_compiles=codegen_compiles or {},
     )
     try:
         ((sidecar_dir or Path(__file__).resolve().parent) / SIDECAR).write_text(

@@ -40,6 +40,7 @@ def _fake_run(tmp_path):
                 {"start_ok": True, "end_ok": True, "calib_start": 0.55,
                  "calib_end": 0.598, "fault_start": 41.0,
                  "fault_end": 2048.7}],
+        codegen_compiles={name: 0 for name in bench.HEADLINE},
         sidecar_dir=tmp_path,
     )
     return line, tmp_path / bench.SIDECAR
@@ -99,6 +100,9 @@ def test_sidecar_carries_verbose_diagnostics(tmp_path):
     # sidecar (>1 entry = a degraded pass re-ran in a healthier window)
     assert len(detail["passes"]) == 2
     assert detail["passes"][1]["end_ok"] is True
+    # per-query codegen compiles across the timed runs: sidecar only
+    assert detail["codegen_compiles"] == {n: 0 for n in bench.HEADLINE}
+    assert "codegen_compiles" not in json.loads(line)
     # the sidecar is a superset of the stdout line's fields
     rec = json.loads(line)
     for k in ("metric", "value", "unit", "queries", "sf"):
@@ -127,8 +131,11 @@ def test_field_shedding_never_drops_required_fields(tmp_path):
         assert k in rec
 
 
-def test_prior_round_times_skips_unparsed_rounds(tmp_path):
-    # a round whose parsed is null (r11) must not poison the drift baseline
+def test_prior_round_times_skips_unparsed_rounds(tmp_path, monkeypatch):
+    # a round whose parsed is null (r11) must not poison the drift baseline;
+    # the leg runs at the 32 cores a wrapper without "cpus" stands for, so
+    # no core ratio scales the prior
+    monkeypatch.setattr(bench, "N_CPUS", 32)
     (tmp_path / "BENCH_r98.json").write_text(json.dumps(
         {"parsed": None, "tail": "truncated..."}))
     (tmp_path / "BENCH_r99.json").write_text(json.dumps(
@@ -142,12 +149,16 @@ def test_prior_round_times_skips_unparsed_rounds(tmp_path):
     assert orig.exists()
 
 
-def test_prior_round_times_calibration_normalizes_priors(tmp_path):
+def test_prior_round_times_calibration_normalizes_priors(
+        tmp_path, monkeypatch):
     """r13 verdict #2: a kernel-carrying prior round's times scale by
     calib_now/calib_round (clamped) before the min -- on a 2x-slow day
     the gate's bar doubles instead of re-running 12/29 queries to
-    re-measure the box; rounds without a kernel stay raw."""
+    re-measure the box; rounds without a kernel stay raw (on a leg at
+    the 32 cores they ran with)."""
     import unittest.mock as mock
+
+    monkeypatch.setattr(bench, "N_CPUS", 32)
 
     (tmp_path / "BENCH_r90.json").write_text(json.dumps(
         {"parsed": {"sf": 0.1, "queries": {"q": 1.5, "r": 4.0},
@@ -379,17 +390,24 @@ def test_prior_round_times_scales_kernelless_rounds_by_core_ratio(
     (tmp_path / "BENCH_r01.json").write_text(json.dumps({
         "cpus": 32,
         "parsed": {"sf": 0.1, "queries": {"q": 0.4}}}))
+    # a kernel-less round that ran on the lower-core leg
+    (tmp_path / "BENCH_r02.json").write_text(json.dumps({
+        "cpus": 8,
+        "parsed": {"sf": 0.1, "queries": {"p": 2.0}}}))
     try:
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
         b = importlib.reload(bench_mod)
         monkeypatch.setattr(b, "__file__", str(tmp_path / "bench.py"))
         low = b._prior_round_times(0.1, calib_now=2.0)
         assert abs(low["q"] - 0.4 * 4) < 1e-9  # 32/8 core ratio
+        assert low["p"] == 2.0  # same cores as its round: raw
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
         b = importlib.reload(bench_mod)
         monkeypatch.setattr(b, "__file__", str(tmp_path / "bench.py"))
         same = b._prior_round_times(0.1, calib_now=0.6)
         assert same["q"] == 0.4  # kernel-less, same cores: raw
+        # 8/32 core ratio, clamped at the ratio clamp's lower bound
+        assert same["p"] == 2.0 * max(8 / 32, b.CALIBRATION_RATIO_CLAMP[0])
     finally:
         monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
         importlib.reload(bench_mod)
