@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from aws_cloudfront_realtime_monitoring_spark.plans import load_all  # noqa: E402
+from aws_cloudfront_realtime_monitoring_spark.session import pin_session  # noqa: E402
 
 _REGISTRY = load_all()
 
@@ -76,7 +77,7 @@ def _ship_package(spark: SparkSession) -> None:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (reference Q1, README.md:100-113) on sf0.001."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_session(spark)
     _ship_package(spark)
     return _REGISTRY["q1_hourly_measure_by_dim"].build(spark, "/root/testdata/sf0.001")
 
@@ -86,9 +87,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def make(name: str) -> Callable[[SparkSession, str], DataFrame]:
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # events.ts is TIMESTAMP(NANOS) parquet; Spark reads it as long
-            # under this flag and sources.tables converts to TimestampType.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            # user-built sessions may lack the UTC / nanosAsLong pins
+            pin_session(spark)
             _ship_package(spark)
             return _REGISTRY[name].build(spark, sf_dir)
 

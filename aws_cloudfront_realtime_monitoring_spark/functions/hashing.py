@@ -42,11 +42,6 @@ def h60_spark_sql(expr: str) -> str:
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def mod_hash(h: Column, a: int, b: int) -> Column:
-    """Universal-hash permutation of a pre-hashed value (Spark side)."""
-    return (F.lit(a) * (h % F.lit(HASH_PRIME)) + F.lit(b)) % F.lit(HASH_PRIME)
-
-
 def mod_hash_sql(h_expr: str, a: int, b: int) -> str:
     """Universal-hash permutation (DuckDB SQL side)."""
     return f"(({a} * (({h_expr}) % {HASH_PRIME}) + {b}) % {HASH_PRIME})"

@@ -158,7 +158,7 @@ def fit_bpe(
 
     from ..functions.hashing import h60
     from ..operators.kmeans import FIT_SAMPLE_TARGET
-    from ..plans.text import WS_PY
+    from ..plans.text import WS_RE
 
     if n_merges < 1:
         raise ValueError(f"fit_bpe: n_merges must be >= 1, got {n_merges}")
@@ -179,7 +179,7 @@ def fit_bpe(
     )
     if not rows:
         raise ValueError("fit_bpe: docs is empty")
-    ws = re.compile(WS_PY)
+    ws = re.compile(WS_RE)
     freqs: dict[str, int] = {}
     for r in rows:
         for w in ws.split(r["__t"].lower()):
@@ -237,7 +237,7 @@ def encode_bpe_batches(
         StructType,
     )
 
-    from ..plans.text import WS_PY
+    from ..plans.text import WS_RE
 
     if not isinstance(merges, list) or any(
         not (isinstance(m, tuple) and len(m) == 2) for m in merges
@@ -256,7 +256,7 @@ def encode_bpe_batches(
     ])
 
     def encode_iter(batches):
-        ws = re.compile(WS_PY)
+        ws = re.compile(WS_RE)
         # ONE memo per task, not per batch (r17, guide 4.5): the Zipf
         # head repeats across every batch of the partition, so a
         # task-lifetime memo amortizes the greedy merge loop over the

@@ -62,96 +62,43 @@ def register(name: str, oracle: str | None, description: str = "",
 #: first 50 queries() entries -- positions 50-52 (the UDF trio) got none --
 #: so the registry is kept at <= 50 entries and queries whose verification
 #: is new or recently changed lead, with the long-stable rows behind them.
+#: Why each row holds its slot, and which row it displaced: COVERAGE.md,
+#: "Driver-slot history".
 PRIORITY = [
-    "q1_hourly_measure_by_dim",   # flagship stays first (entry())
-    "pixel_decode_real_stats",    # r15: decode OUTPUT oracle — full
-                                  # pixel-sum check over BMP /
-                                  # hierarchical-lossless JPEG /
-                                  # tRNS-color-key PNG (slot from
-                                  # scalar_functions, whose JVM scalar
-                                  # coverage stays hash-checked via
-                                  # load_demoted())
-    "animated_frame_real_stats",  # r15: APNG compositing oracle —
-                                  # per-frame composited channel means
-                                  # through the real Porter-Duff path
-                                  # (slot from text_fingerprint, kept
-                                  # hash-checked via load_demoted())
-    "image_audio_real_meta",      # r13: promoted the only row whose
-                                  # oracle hash-checks REAL pixel/DSP
-                                  # decode output (slot from
-                                  # multimodal_pipeline, whose fake-path
-                                  # plumbing container_audio_meta + the
-                                  # golden-bytes suites keep; the
-                                  # displaced row stays hash-checked via
-                                  # load_demoted())
-    "skew_salted_join",           # r10: promoted salted-join losslessness
-                                  # (slot from pivot_status_by_priority,
-                                  # whose B4 conditional-agg coverage
-                                  # strict_compat_narrow + q1_narrow_form
-                                  # keep): skew is the classic 100x-scale
-                                  # failure mode and the skew family had
-                                  # no driver row
-    "stream_session_equiv",       # r9: promoted MERGING session-window
-                                  # streaming equivalence (slot from
-                                  # derivative_rate, whose lag-window
-                                  # machinery interpolate_linear_fill +
-                                  # window_frames_ranking keep)
-    "dedup_lsh_recall",           # r9: promoted LSH recall audit (slot
-                                  # from udtf_tokenize, an API-capability
-                                  # row kept pass-x; audits earn driver
-                                  # slots, as ann_ivf_recall proved)
-    "ann_ivf_recall",             # r8: promoted recall-audit row (found
-                                  # the r7 recall-0 bug; slot from
-                                  # ann_topk_ivf, which runs in full as
-                                  # this row's IVF side)
-    "stream_stream_join_equiv",   # r8: promoted stream-stream interval
-                                  # join (slot from q1_narrow_form, whose
-                                  # B3/B4/B5 strict_compat_narrow +
-                                  # pivot_status_by_priority keep)
-    "curation_pipeline",          # r6b: promoted composition keep-list
-                                  # (slot from sessionize, whose lag+cumsum
-                                  # mechanics ARE the oracle of
-                                  # session_window_agg + stream_session_equiv)
-    "bm25_topk",                  # r6b: promoted retrieval row (slot from
-                                  # sliding_window_counts, subsumed by
-                                  # stream_sliding_equiv's identical oracle)
-    "semdedup",                   # r6b: promoted semantic dedup (slot from
-                                  # semi_anti_membership, whose semi/anti
-                                  # coverage subquery_shapes keeps)
-    "pii_redact",                 # r06: new curation row (slot from
-                                  # rank_orders_window, whose ranking
-                                  # coverage window_frames_ranking keeps)
-    "decontaminate",              # r06: new curation row (slot from
-                                  # lag_gap_analysis, whose lag mechanics
-                                  # sessionize keeps)
-    "text_repetition",            # r06: promoted from pytest-only (slot
-                                  # from ago_filter_count, subsumed by q1)
-    "hll_cube_range",             # r06: new 5-sigma in-query contract row
-                                  # (slot from narrow_unpivot_agg, subsumed
-                                  # by q1_narrow_form/strict_compat_narrow)
-    "cf_parse_wire_roundtrip",    # r03: header K/V + names parse (A9/A10)
-                                  # now flow through the oracle row
-    "stats_profile",              # r03: + percentile_approx (GK sketch)
-                                  # in-query rank-error contract
-    "stream_sliding_equiv",       # r03: new row (promoted pytest; slot
-                                  # from embedding_near_dup, whose blocked
-                                  # sibling carries the same contract)
-    "dedup_clusters",             # r03: fused hook/flatten barriers
-    "dedup_simhash",              # r03: localCheckpoint signature barrier
-    "dedup_minhash_lsh",          # r03: localCheckpoint signature barrier
-    "text_tfidf_topk",            # new in r02
-    "sample_stratified",          # new in r02
-    "text_profile",               # merged query (token stats + langid +
-                                  # quality in one pass)
-    "revenue_by_region",          # agg-below-join rewrite in r02
-    "pandas_udf_scalar",          # no driver row in r01 (position 50)
-    "grouped_udaf_applyinpandas",  # no driver row in r01 (position 51)
-    "approx_distinct_ips",        # oracle contract new in r02
-    "strict_compat_narrow",       # new in r02
-    "stream_hourly_bytes_equiv",  # new in r02
-    "stream_dedup_equiv",         # new in r02
-    "embedding_near_dup_blocked",  # block-join rewrite in r02
-    "grouping_analytics",         # merged query
+    "q1_hourly_measure_by_dim",
+    "pixel_decode_real_stats",
+    "animated_frame_real_stats",
+    "image_audio_real_meta",
+    "skew_salted_join",
+    "stream_session_equiv",
+    "dedup_lsh_recall",
+    "ann_ivf_recall",
+    "stream_stream_join_equiv",
+    "curation_pipeline",
+    "bm25_topk",
+    "semdedup",
+    "pii_redact",
+    "decontaminate",
+    "text_repetition",
+    "hll_cube_range",
+    "cf_parse_wire_roundtrip",
+    "stats_profile",
+    "stream_sliding_equiv",
+    "dedup_clusters",
+    "dedup_simhash",
+    "dedup_minhash_lsh",
+    "text_tfidf_topk",
+    "sample_stratified",
+    "text_profile",
+    "revenue_by_region",
+    "pandas_udf_scalar",
+    "grouped_udaf_applyinpandas",
+    "approx_distinct_ips",
+    "strict_compat_narrow",
+    "stream_hourly_bytes_equiv",
+    "stream_dedup_equiv",
+    "embedding_near_dup_blocked",
+    "grouping_analytics",
 ]
 
 
@@ -186,9 +133,7 @@ def load_full():
 
 def load_demoted() -> dict[str, Query]:
     """Spark/oracle pairs verified by the test suite outside the
-    <=50-entry driver registry: rows that lost their driver slot in a
-    registry swap (DEMOTED) plus rows born without one (EXTRAS)."""
+    <=50-entry driver registry (EXTRAS: rows registered with
+    ``driver_slot=False``)."""
     load_all()
-    from .core import DEMOTED as core_demoted
-    from .relational import DEMOTED as rel_demoted
-    return {**EXTRAS, **core_demoted, **rel_demoted}
+    return dict(EXTRAS)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timestream import expand_macros
 from ..sources.tables import load_table
-from . import Query, register
+from . import register
 
 
 def dsum(col: Column, scale: int = 4) -> Column:
@@ -164,79 +164,6 @@ def q2_create_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_points"), series.alias("series"))
     )
-
-
-def ago_filter_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relative time predicate ago(72h) with injectable now (B2/D5).
-
-    Demoted from the 50-row driver registry in r6 (its B2/`ago` semantics
-    are fully exercised by ``q1_hourly_measure_by_dim``); still verified
-    against its DuckDB oracle by the pytest suite via :data:`DEMOTED`."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        with_now(events, events)
-        .where(F.col("ts") >= F.col("__now") - F.expr("INTERVAL 72 HOURS"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def narrow_unpivot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide->narrow melt (A14, lambda_function.py:110-117) as unpivot, then
-    the conditional-aggregate un-pivot (B4/B5).
-
-    Demoted from the 50-row driver registry in r6 (the A14/B4/B5 path is
-    fully exercised by ``q1_narrow_form`` and ``strict_compat_narrow``);
-    still verified against its DuckDB oracle by the pytest suite via
-    :data:`DEMOTED`."""
-    events = load_table(spark, sf_dir, "events")
-    narrow = events.select(
-        F.col("value"), F.col("user_id").cast("double").alias("user_id")
-    ).unpivot(
-        ids=[], values=["value", "user_id"],
-        variableColumnName="measure_name", valueColumnName="measure_value",
-    )
-    return narrow.groupBy("measure_name").agg(
-        F.count("*").alias("n"), dsum(F.col("measure_value"), 2).alias("sum_measure")
-    )
-
-
-#: Spark/oracle pairs verified OUTSIDE the 50-row driver budget: the r6
-#: registry swapped these long-stable rows for text_repetition and
-#: hll_cube_range (per the r5 review), but tests/test_queries_oracle.py
-#: keeps running the exact same Spark-vs-DuckDB comparison for them, so
-#: demotion loses no verification -- only a driver slot.
-DEMOTED: dict[str, Query] = {
-    "ago_filter_count": Query(
-        "ago_filter_count",
-        ago_filter_count,
-        """
-        WITH now AS (SELECT max(ts) AS now_ts FROM events)
-        SELECT event_type, COUNT(*) AS n
-        FROM events, now
-        WHERE ts >= now.now_ts - INTERVAL 72 HOUR
-        GROUP BY event_type
-        """,
-        "Relative time predicate ago(72h) with injectable now (B2/D5).",
-        ("tier-b",),
-    ),
-    "narrow_unpivot_agg": Query(
-        "narrow_unpivot_agg",
-        narrow_unpivot_agg,
-        f"""
-        WITH narrow AS (
-          SELECT 'value' AS measure_name, value AS measure_value FROM events
-          UNION ALL
-          SELECT 'user_id' AS measure_name, user_id::DOUBLE AS measure_value FROM events
-        )
-        SELECT measure_name, COUNT(*) AS n, {dsum_sql('measure_value', 2)} AS sum_measure
-        FROM narrow GROUP BY measure_name
-        """,
-        "Wide->narrow melt (A14) as unpivot, then the conditional-aggregate "
-        "un-pivot (B4/B5).",
-        ("tier-a", "tier-b"),
-    ),
-}
 
 
 #: Grafana panel query template before macro expansion (B9, README.md:127-135)

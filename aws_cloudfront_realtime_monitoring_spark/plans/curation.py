@@ -35,9 +35,9 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h60, h60_sql
 from ..sources.tables import load_table
 from . import register
-from .text import (_LWORDS_SQL, _WORDS_SQL, WS_RE, WS_RE_DUCK,
-                   WS_RE_SPARK_SQL, adjacent_grams, gram_sql, lwords_col,
-                   grams_spark_sql, words_col, words_spark_sql)
+from .text import (_LWORDS_SQL, _WORDS_SQL, WS_RE, adjacent_grams,
+                   gram_sql, grams_spark_sql, lwords_col, sql_str_literal,
+                   words_col, words_spark_sql)
 
 # ------------------------------------------------------------- pii_redact
 
@@ -202,7 +202,7 @@ def decon_grams(df: DataFrame) -> DataFrame:
     w = df.select("doc_id", words_col().alias("ws"))
     return w.select(
         "doc_id",
-        F.array_distinct(adjacent_grams(F.col("ws"), DECON_N)).alias("gg"),
+        F.array_distinct(adjacent_grams("ws", DECON_N)).alias("gg"),
     )
 
 
@@ -240,14 +240,13 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decon_spark_sql() -> str:
-    """Spark-SQL spelling of decontaminate_df: the Column form cost
-    ~1,300 py4j round-trips per plan build (the zip_with/slice n-gram
-    chain -- tools/measure_build_split.py); one spark.sql call costs
-    ~20. The n-gram expression mirrors text.adjacent_grams exactly
-    (zip against shifted selves, NULL-concat grams filtered)."""
+    """The decontaminate query as one spark.sql string: the r6-r7
+    Column composition cost ~1,300 py4j round-trips per plan build (the
+    zip_with/slice n-gram chain -- tools/measure_build_split.py); one
+    spark.sql call costs ~20."""
     ws = words_spark_sql()  # the ONE tokenizer spelling (text.py)
     # the ONE n-gram spelling too (r13: this chain was a second live
-    # copy of text.adjacent_grams' SQL form)
+    # copy of text.grams_spark_sql)
     gg = f"array_distinct({grams_spark_sql('ws', DECON_N)})"
     return f"""
     WITH w AS (SELECT doc_id, {ws} AS ws FROM documents),
@@ -266,8 +265,8 @@ def _decon_spark_sql() -> str:
 
 def decon_bench_ngrams(g: DataFrame) -> DataFrame:
     """Distinct benchmark n-grams of a decon_grams relation (the
-    broadcast side) -- shared by the batch replica and the stream-static
-    parity row so the split/explode assembly cannot drift (r8 review)."""
+    broadcast side) -- shared by the stream-static parity row and the
+    stage tool so the split/explode assembly cannot drift (r8 review)."""
     return (
         g.where(F.col("doc_id") % DECON_MOD == 0)
         .select(F.explode("gg").alias("ng"))
@@ -291,16 +290,6 @@ def decon_corpus_hits(g: DataFrame, bench_ngrams: DataFrame) -> DataFrame:
     """Matched (doc_id, ng) rows of the non-benchmark corpus against the
     broadcast benchmark set -- the input decon_count aggregates."""
     return decon_corpus_grams(g).join(F.broadcast(bench_ngrams), "ng")
-
-
-def decontaminate_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-composition form (the r6-r7 build), kept as the SQL
-    build's pinned-equal replica (tests/test_curation.py); its
-    decon_grams/decon_count internals also serve the stream-static
-    parity row, whose input is a streaming frame no view can express."""
-    docs = load_table(spark, sf_dir, "documents")
-    g = decon_grams(docs)
-    return decon_count(decon_corpus_hits(g, decon_bench_ngrams(g)))
 
 
 # ------------------------------------------------------ quality_filter_c4
@@ -342,7 +331,8 @@ def _c4_planted_col() -> Column:
     )
 
 
-_C4_WORDS_SQL = f"list_filter(regexp_split_to_array(pt, '{WS_RE_DUCK}'), w -> w <> '')"
+_C4_WORDS_SQL = ("list_filter(regexp_split_to_array(pt, "
+                 f"{sql_str_literal(WS_RE, 'duck')}), w -> w <> '')")
 
 
 @register(
@@ -750,7 +740,7 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = docs.select("doc_id", words_col().alias("ws"))
     g = w.select(
         "doc_id",
-        F.array_distinct(adjacent_grams(F.col("ws"), SPAN_N)).alias("gg"),
+        F.array_distinct(adjacent_grams("ws", SPAN_N)).alias("gg"),
     )
     # materialize the fingerprint stream ONCE (lazy localCheckpoint): it
     # feeds three consumers (dup-gram counts, the hit join, per-doc

@@ -31,7 +31,7 @@ from ..functions.hashing import (HASH_PRIME, h60_spark_sql, h60_sql,
                                  mod_hash_sql, perm_params)
 from ..sources.tables import load_table, register_views
 from . import REGISTRY, register
-from .text import (_WORDS_SQL, grams_spark_sql, words_col,
+from .text import (_WORDS_SQL, adjacent_grams, grams_spark_sql,
                    words_spark_sql)
 
 # ---------------------------------------------------------------- shingles
@@ -63,9 +63,7 @@ def shingles_col() -> Column:
     ``transform(sequence(...), i -> element_at(words, i))`` body
     re-splits the text per element (measured 10x slower at sf0.1).
     """
-    from .text import adjacent_grams
-
-    return F.array_distinct(adjacent_grams(words_col(), 3))
+    return F.array_distinct(adjacent_grams(words_spark_sql(), 3))
 
 
 # ------------------------------------------------------------- exact dedup

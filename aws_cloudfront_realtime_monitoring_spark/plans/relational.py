@@ -187,87 +187,6 @@ def semi_anti_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semi.unionAll(anti)
 
 
-def rank_orders_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rnk") <= 3)
-        .select("o_custkey", "o_orderkey", "rnk")
-    )
-
-
-def lag_gap_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    diff_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    # round-half-up DECISECONDS in integer arithmetic, then ONE shared
-    # division: ROUND(double, 1) disagrees between engines on decimal
-    # ties (Spark HALF_UP on the shortest repr vs DuckDB scaling the
-    # binary value -- 2.65 s rounds to 2.7 vs 2.6; r8 review). diff_us
-    # is non-negative within the ordered stream, so floor == half-up.
-    gap = (
-        F.floor((diff_us + F.lit(50_000)) / F.lit(100_000)).cast("double")
-        / F.lit(10.0)
-    )
-    return (
-        events.withColumn("gap_s", gap)
-        .where(F.col("gap_s").isNotNull())
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"), dsum(F.col("gap_s"), 1).alias("sum_gap_s"))
-    )
-
-
-#: Spark/oracle pairs verified OUTSIDE the 50-row driver budget (see
-#: plans.core.DEMOTED): the r6 registry swapped these two window rows for
-#: pii_redact and decontaminate. Their coverage is not lost — ranking is
-#: still driver-checked by window_frames_ranking (rank/dense_rank/ntile +
-#: frames) and the lag mechanics by sessionize (lag + cumsum) — and
-#: tests/test_queries_oracle.py keeps running the exact same Spark-vs-
-#: DuckDB comparison for both.
-from . import Query  # noqa: E402  (registry dataclass, import-cycle-free)
-
-DEMOTED: dict[str, Query] = {
-    "rank_orders_window": Query(
-        "rank_orders_window",
-        rank_orders_window,
-        """
-        SELECT o_custkey, o_orderkey, rnk FROM (
-          SELECT o_custkey, o_orderkey,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                    ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rnk
-          FROM orders)
-        WHERE rnk <= 3
-        """,
-        "Window ranking: top-3 orders per customer via row_number. "
-        "One shuffle on the partition key; rank filter applied "
-        "before any further join (WindowGroupLimit pushdown).",
-        ("window",),
-    ),
-    "lag_gap_analysis": Query(
-        "lag_gap_analysis",
-        lag_gap_analysis,
-        f"""
-        SELECT user_id,
-               COUNT(*) AS n_events,
-               {dsum_sql('gap_s', 1)} AS sum_gap_s
-        FROM (
-          SELECT user_id, ts,
-                 CAST(((epoch_us(ts)
-                        - LAG(epoch_us(ts)) OVER (PARTITION BY user_id
-                                                  ORDER BY ts, event_id))
-                       + 50000) // 100000 AS DOUBLE) / 10 AS gap_s
-          FROM events)
-        WHERE gap_s IS NOT NULL
-        GROUP BY user_id
-        """,
-        "Analytic window function (lag) computing inter-event gaps "
-        "per user -- the sessionization building block.",
-        ("window",),
-    ),
-}
-
-
 @register(
     "sessionize",
     oracle=f"""

@@ -124,15 +124,15 @@ _PAIR_COS_SQL = (
 # SQL-string builds as of r8: the Column-composition forms cost ~3,000
 # py4j round-trips per plan build, ~0.6 s of pure driver chatter at any
 # data scale -- measured in tools/measure_build_split.py -- while one
-# spark.sql call costs ~20; the DataFrame forms remain below, suffixed
-# _df, pinned bit-identical by tests/test_similarity.py)
+# spark.sql call costs ~20; the DuckDB oracle pins each SQL build
+# bit-exactly, so no Column replica is kept)
 
 _QVEC_SPARK = (
     f"transform(embedding, x -> "
     f"CAST(ROUND(CAST(x AS DOUBLE) * {QUANT}, 0) AS BIGINT))"
 )
 
-#: same term order as _bucket_col: sum of when(e[d] >= 0, 1<<d).
+#: sum of (e[d] >= 0 ? 1<<d : 0), the oracle's _BUCKET_SQL term order.
 #: try_element_at (r11 review): under ANSI (the Spark 4 default) a
 #: plain element_at RAISES past the array length, while the DuckDB
 #: oracle's embedding[d+1] yields NULL -> the ELSE 0 arm -- a corpus
@@ -202,8 +202,8 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bf_spark_sql() -> str:
-    """Spark-SQL spelling of ann_topk_bruteforce_df (same plan: broadcast
-    probe set x corpus BNLJ, integer-exact dots, window rank)."""
+    """The ann_topk_bruteforce query: broadcast probe set x corpus BNLJ,
+    integer-exact dots, window rank."""
     return f"""
     WITH qn AS (SELECT vec_id, {_QVEC_SPARK} AS qe FROM embeddings),
     qnn AS (SELECT vec_id, qe, {_qnorm_sql('qe')} AS nrm FROM qn),
@@ -225,30 +225,6 @@ def _bf_spark_sql() -> str:
     """
 
 
-def ann_topk_bruteforce_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-composition form (the r1-r7 build), kept as the SQL
-    build's pinned-equal replica (tests/test_similarity.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", qvec().alias("qe")).withColumn("nrm", qnorm("qe"))
-    queries = base.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qe").alias("qqe"),
-        F.col("nrm").alias("qnrm"),
-    )
-    pairs = base.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        cosine(dot("qqe", "qe"), F.col("qnrm"), F.col("nrm")).alias("cos"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "cand_id", "rnk", (F.floor(F.col("cos") * 1e6 + 0.5) / 1e6).alias("cos6"))
-    )
-
-
 # ------------------------------------------------------- IVF-style top-k
 
 _BUCKET_SQL = " + ".join(
@@ -266,18 +242,6 @@ _BUCKET_SQL = " + ".join(
 #: the standard multi-probe trade (Lv et al., VLDB'07): more recall per
 #: probe WITHOUT growing the index.
 IVF_PROBE_HAMMING = 1
-
-
-def _bucket_col(bits: int = IVF_BITS) -> Column:
-    out = None
-    for d in range(bits):
-        # try_element_at: NULL (not an ANSI error) past the embedding
-        # length, matching the oracle's list index -- see _BUCKET_SPARK
-        term = F.when(
-            F.try_element_at("embedding", F.lit(d + 1)) >= 0, F.lit(1 << d)
-        ).otherwise(0)
-        out = term if out is None else out + term
-    return out
 
 
 def _probe_masks() -> list[int]:
@@ -355,8 +319,13 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_spark_sql() -> str:
-    """Spark-SQL spelling of ann_topk_ivf_df (same plan: probe-side
-    Hamming-ball explode, broadcast probes, bucket equi-join)."""
+    """The ann_topk_ivf query: probe-side Hamming-ball explode, broadcast
+    probes, bucket equi-join. The multi-probe fan-out happens on the
+    SMALL probe side: each probe explodes to its Hamming-ball bucket
+    codes and the (huge) corpus side still joins on its single stored
+    bucket, so the equi-join stays hash-partitionable and every
+    candidate pair appears exactly once (distinct XOR masks produce
+    distinct probe buckets)."""
     masks = ", ".join(str(m) for m in _probe_masks())
     return f"""
     WITH qn AS (
@@ -383,49 +352,6 @@ def _ivf_spark_sql() -> str:
     SELECT query_id, cand_id, rnk, FLOOR(cos * 1e6 + 0.5) / 1e6 AS cos6
     FROM ranked WHERE rnk <= 3
     """
-
-
-def ann_topk_ivf_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-composition form (the r1-r7 build), kept as the SQL
-    build's pinned-equal replica (tests/test_similarity.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", _bucket_col().alias("bucket"), qvec().alias("qe")
-    ).withColumn("nrm", qnorm("qe"))
-    queries = base.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("bucket").alias("qbucket"),
-        F.col("qe").alias("qqe"),
-        F.col("nrm").alias("qnrm"),
-    )
-    # multi-probe expansion happens on the SMALL probe side: each probe
-    # fans out to its Hamming-ball bucket codes and the (huge) corpus
-    # side still joins on its single stored bucket -- the equi-join
-    # stays hash-partitionable and every candidate pair appears exactly
-    # once (distinct XOR masks produce distinct probe buckets)
-    probes = queries.select(
-        "query_id", "qqe", "qnrm",
-        F.explode(F.array(*[F.lit(m) for m in _probe_masks()])).alias("mask"),
-        "qbucket",
-    ).select(
-        "query_id", "qqe", "qnrm",
-        F.col("qbucket").bitwiseXOR(F.col("mask")).alias("pbucket"),
-    )
-    pairs = base.join(
-        F.broadcast(probes),
-        (F.col("bucket") == F.col("pbucket")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        cosine(dot("qqe", "qe"), F.col("qnrm"), F.col("nrm")).alias("cos"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rnk") <= 3)
-        .select("query_id", "cand_id", "rnk", (F.floor(F.col("cos") * 1e6 + 0.5) / 1e6).alias("cos6"))
-    )
 
 
 # ------------------------------------------------- all-pairs near-dup scan
@@ -981,16 +907,6 @@ def recall_audit(approx: DataFrame, exact: DataFrame,
     )
 
 
-def ann_ivf_recall_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-composition form (the r1-r7 build), kept as the SQL
-    build's pinned-equal replica (tests/test_similarity.py)."""
-    return recall_audit(
-        ann_topk_ivf_df(spark, sf_dir),
-        ann_topk_bruteforce_df(spark, sf_dir),
-        "ivf",
-    )
-
-
 # --------------------------------------------- hybrid retrieval (r17)
 
 #: reciprocal-rank-fusion constant (Cormack/Clarke/Buettcher 2009's
@@ -1439,7 +1355,7 @@ def ann_pq_recall(
             spark, sf_dir, centroids=centroids, codebooks=codebooks,
             nprobe=nprobe, shortlist_mult=shortlist_mult,
         ),
-        ann_topk_bruteforce_df(spark, sf_dir),
+        ann_topk_bruteforce(spark, sf_dir),
         "pq",
     )
 
@@ -1511,6 +1427,6 @@ def ann_trained_recall(
 ) -> DataFrame:
     return recall_audit(
         ann_topk_trained(spark, sf_dir, centroids=centroids),
-        ann_topk_bruteforce_df(spark, sf_dir),
+        ann_topk_bruteforce(spark, sf_dir),
         "trained",
     )

@@ -32,6 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin_session
 from ..sources.tables import stream_dir
 from . import register
 from .core import _BIN_1H_SQL, dsum, dsum_sql, session_cte_sql
@@ -206,7 +207,7 @@ def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # shift every window/session timestamp away from the DuckDB
     # oracle's naive-as-UTC reading (r13 review; the load_table twin of
     # this guard is sources/tables.py's r11 fix)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session(spark)
     path = stream_dir(spark, sf_dir, name)
     schema = _STREAM_SCHEMAS.get(path)
     if schema is None:

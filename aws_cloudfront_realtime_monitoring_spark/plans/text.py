@@ -39,54 +39,52 @@ LANG_ORDER = ["en", "es", "fr", "de"]
 #: \x0B (vertical tab) but RE2's does not, and Python's str.split() adds
 #: all of Unicode whitespace -- so a bare `\s+` silently diverges between
 #: Spark, the DuckDB oracle, and Python-replica tests on edge-case text.
-#: One character class, three spellings:
-WS_RE = "[ \\t\\n\\r\\f\\x0B]+"              # Column API (Java regex source)
-WS_RE_SPARK_SQL = "[ \\\\t\\\\n\\\\r\\\\f\\\\x0B]+"  # inside spark.sql literals
-BPE_RE_SPARK_SQL = BPE_RE.replace("\\", "\\\\")  # BPE_RE inside spark.sql literals
-WS_RE_DUCK = "[ \\t\\n\\r\\f\\x0b]+"         # inside DuckDB literals (no unescaping)
-WS_PY = "[ \t\n\r\f\x0b]+"                  # Python re replica spelling
+#: One regex source (Python ``re`` reads it as is); :func:`sql_str_literal`
+#: spells it inside each engine's SQL string literals.
+WS_RE = "[ \\t\\n\\r\\f\\x0b]+"
 
 
-def words_col(col: str = "text") -> Column:
-    return F.filter(F.split(F.col(col), WS_RE), lambda w: w != F.lit(""))
+def sql_str_literal(s: str, dialect: str) -> str:
+    """``s`` as a quoted SQL string literal: Spark's parser unescapes
+    backslashes inside literals, so they double; DuckDB's standard
+    strings keep them as written and only double a quote. Regex text is
+    all the engines share here, never a query's semantic core."""
+    if dialect == "spark":
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if dialect == "duck":
+        return "'" + s.replace("'", "''") + "'"
+    raise ValueError(f"sql_str_literal: unknown dialect {dialect!r}")
 
 
 def words_spark_sql(col: str = "text") -> str:
-    """The Spark-SQL spelling of :func:`words_col` -- the ONE home for
-    the tokenizer fragment used inside ``spark.sql`` strings (r13
-    review: four verbatim copies had grown across dedup/curation/
+    """Whitespace-split word tokens of the SQL expression ``col``, empty
+    tokens dropped -- the ONE home for the Spark tokenizer fragment
+    (r13 review: four verbatim copies had grown across dedup/curation/
     sampling; a tokenizer change must land in one place or a builder
     silently forks from its own oracle)."""
-    return f"filter(split({col}, '{WS_RE_SPARK_SQL}'), w -> w != '')"
+    return f"filter(split({col}, {sql_str_literal(WS_RE, 'spark')}), w -> w != '')"
 
 
-_WORDS_SQL = f"list_filter(regexp_split_to_array(text, '{WS_RE_DUCK}'), w -> w <> '')"
+def words_col(col: str = "text") -> Column:
+    """Column form of :func:`words_spark_sql`."""
+    return F.expr(words_spark_sql(col))
 
 
-def adjacent_grams(ws: Column, n: int) -> Column:
-    """Adjacent word n-grams of an already-split word array, as a new array
-    column — pure Catalyst (zip the list against its shifted selves), so
-    n-gram construction is a narrow map with no explode and no shuffle.
-    zip_with pads the tail with NULLs; NULL-concat grams are filtered out."""
-    if n == 1:
-        return ws
-    joined = ws
-    for k in range(1, n):
-        shifted = F.slice(ws, k + 1, F.greatest(F.size(ws) - k, F.lit(0)))
-        joined = F.zip_with(
-            joined,
-            shifted,
-            lambda a, b: F.when(a.isNull() | b.isNull(), None).otherwise(
-                F.concat(a, F.lit(" "), b)
-            ),
-        )
-    return F.filter(joined, lambda x: x.isNotNull())
+_WORDS_SQL = ("list_filter(regexp_split_to_array(text, "
+              f"{sql_str_literal(WS_RE, 'duck')}), w -> w <> '')")
+
+
+def adjacent_grams(ws: str, n: int) -> Column:
+    """Column form of :func:`grams_spark_sql` over the SQL word-array
+    expression ``ws``."""
+    return F.expr(grams_spark_sql(ws, n))
 
 
 def grams_spark_sql(arr: str, n: int) -> str:
-    """Spark-SQL spelling of :func:`adjacent_grams` (zip the array
-    against its shifted selves, NULL-concat grams filtered) -- the ONE
-    home for the n-gram fragment inside ``spark.sql`` strings (r13
+    """Adjacent word n-grams of the word-array expression ``arr``: zip
+    the array against its shifted selves, a narrow map with no explode
+    and no shuffle; zip_with pads the tail with NULLs and NULL-concat
+    grams are filtered out. The ONE home for the n-gram fragment (r13
     review: dedup's trigram-shingle CTE and curation's decon chain were
     two more live spellings of the same invariant; like
     :func:`words_spark_sql`, a gram-shape change must land in one
@@ -124,7 +122,7 @@ def _langid_case_sql() -> str:
     oracle=f"""
     WITH w AS (
       SELECT doc_id, lang, length(text) AS n_chars,
-             len(regexp_extract_all(text, '{BPE_RE}')) AS n_bpe_tokens,
+             len(regexp_extract_all(text, {sql_str_literal(BPE_RE, 'duck')})) AS n_bpe_tokens,
              len(regexp_extract_all(text, '[.,;:!?]')) AS n_punct,
              {_WORDS_SQL} AS words
       FROM documents),
@@ -179,7 +177,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH base AS (
           SELECT doc_id, lang AS labeled_lang,
                  CAST(length(text) AS BIGINT) AS n_chars,
-                 CAST(size(regexp_extract_all(text, '{BPE_RE_SPARK_SQL}', 0)) AS BIGINT)
+                 CAST(size(regexp_extract_all(text, {sql_str_literal(BPE_RE, 'spark')}, 0)) AS BIGINT)
                    AS n_bpe_tokens,
                  CAST(size(regexp_extract_all(text, '[.,;:!?]', 0)) AS BIGINT)
                    AS n_punct,
@@ -216,15 +214,16 @@ TFIDF_TOPK = 3
 #: and the synthetic corpus is ASCII. Multilingual case-folding is NOT
 #: this fragment's job: that is text_normalize (NFKC + casefold, Arrow
 #: pandas UDF), whose Python replica test carries the Unicode contract.
-_LWORDS_SQL = f"list_filter(regexp_split_to_array(lower(text), '{WS_RE_DUCK}'), w -> w <> '')"
+_LWORDS_SQL = ("list_filter(regexp_split_to_array(lower(text), "
+               f"{sql_str_literal(WS_RE, 'duck')}), w -> w <> '')")
 
 
 def lwords_col() -> Column:
-    """Lowered word tokens as an array column -- the ONE Spark spelling
-    of ``_LWORDS_SQL`` (r11 review: text_tfidf_topk and curation's
+    """Lowered word tokens as an array column, the Spark twin of
+    ``_LWORDS_SQL`` (r11 review: text_tfidf_topk and curation's
     unigram_logprob each hand-spelled it; a whitespace-class fix in one
     would have forked the tokenizer between them)."""
-    return F.filter(F.split(F.lower("text"), WS_RE), lambda w: w != F.lit(""))
+    return F.expr(words_spark_sql("lower(text)"))
 
 
 def gram_list_sql(n: int) -> str:
@@ -616,10 +615,8 @@ def bm25_split_expr(dialect: str) -> str:
     """THE tokenizer spelling per engine -- the one fragment every BM25
     consumer (builder, oracle, stage-measurement tool) must share."""
     if dialect == "duck":
-        return ("unnest(list_filter(regexp_split_to_array(lower(text), "
-                f"'{WS_RE_DUCK}'), w -> w <> ''))")
-    return (f"explode(filter(split(lower(text), '{WS_RE_SPARK_SQL}'), "
-            "w -> w != ''))")
+        return f"unnest({_LWORDS_SQL})"
+    return f"explode({words_spark_sql('lower(text)')})"
 
 
 def bm25_dl_select(split_expr: str) -> str:
@@ -827,7 +824,7 @@ def bpe_stats_cols(enc: DataFrame) -> DataFrame:
     from ..functions.hashing import h60
 
     # length-prefix framing, not a bare separator join: no character is
-    # guaranteed absent from tokens (WS_PY does not strip \x1f), so
+    # guaranteed absent from tokens (WS_RE does not strip \x1f), so
     # ["a\x1fb</w>"] and ["a", "b</w>"] would collide under a plain
     # concat_ws("\x1f") -- "<len>:<token>" frames are unambiguous for
     # any token content (r17 review)

@@ -19,7 +19,7 @@ from pyspark.sql.functions import pandas_udf
 from ..sources.tables import load_table
 from . import register
 from .core import dsum, dsum_sql
-from .text import WS_RE_DUCK
+from .text import WS_RE, sql_str_literal
 
 
 def make_scaled_score():
@@ -113,7 +113,7 @@ def grouped_udaf_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     "udtf_tokenize",
     oracle=f"""
     WITH w AS (SELECT doc_id,
-                      list_filter(regexp_split_to_array(text, '{WS_RE_DUCK}'), x -> x <> '') AS words
+                      list_filter(regexp_split_to_array(text, {sql_str_literal(WS_RE, 'duck')}), x -> x <> '') AS words
                FROM documents)
     SELECT doc_id,
            unnest(generate_series(1, len(words))) AS pos,
@@ -146,14 +146,14 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             # split on the Java/RE2/Python common whitespace subset, NOT
             # str.split(): Python would also split on Unicode whitespace
             # (NBSP, ideographic space) the SQL oracle's RE2 \s does not.
-            # WS_PY is text.py's canonical Python spelling of that class
+            # WS_RE is text.py's one regex source for that class
             # (a hand-typed fourth copy could silently fork -- r8 review);
             # absolute import: eval runs on executors, where the shipped
             # package resolves by its top-level name
-            from aws_cloudfront_realtime_monitoring_spark.plans.text import WS_PY
+            from aws_cloudfront_realtime_monitoring_spark.plans.text import WS_RE
 
             for i, tok in enumerate(
-                t for t in _re.split(WS_PY, text) if t
+                t for t in _re.split(WS_RE, text) if t
             ):
                 yield i + 1, tok
 

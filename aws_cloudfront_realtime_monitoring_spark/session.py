@@ -36,6 +36,21 @@ _CREATED_MASTER: str | None = None
 CODEGEN_CACHE_ENTRIES = 2048
 
 
+def pin_session(spark: SparkSession) -> None:
+    """Set the session invariants every query's answer depends on, on any
+    session (``get_spark`` builds them in; a user-built session may lack
+    them or have switched them since):
+
+    - timezone UTC, so timestamp semantics match the DuckDB oracle's
+      naive-as-UTC reading of the parquet files;
+    - ``nanosAsLong``: testdata writes ``events.ts`` as TIMESTAMP(NANOS),
+      which Spark has no type for; it reads as long and the loader
+      converts it (``sources.tables``).
+    """
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def get_spark(app_name: str = "aws_cloudfront_realtime_monitoring_spark",
               cpus: str | int | None = None,
               shuffle_partitions: int | None = None,

@@ -52,7 +52,7 @@ def decode_kinesis_payload(col: Column, charset: str = "UTF-8") -> Column:
     return F.decode(raw, charset)
 
 
-def _typed_token(toks: str, i: int, typ: str) -> Column:
+def _typed_token_sql(toks: str, i: int, typ: str) -> str:
     """One positional token (of the array column named ``toks``) -> typed
     value: trim (the reference strips every token, lambda_function.py:81-93),
     ``-`` sentinel -> NULL (D2), ANSI-safe cast (``try_cast``: malformed
@@ -62,16 +62,11 @@ def _typed_token(toks: str, i: int, typ: str) -> Column:
     ``get()`` is OOB-safe (short/truncated lines yield NULLs, no ANSI
     error). Real CloudFront fields are URL-encoded, so edge whitespace
     beyond ASCII space does not occur on the wire.
-    """
-    return F.expr(_typed_token_sql(toks, i, typ))
 
-
-def _typed_token_sql(toks: str, i: int, typ: str) -> str:
-    """SQL-string form of :func:`_typed_token` (``nullif`` == the when/
-    otherwise sentinel mapping). Building 40 typed fields Column-by-Column
+    A SQL string, not a Column: building 40 typed fields Column-by-Column
     costs ~10 py4j round-trips each (~0.5 s of driver latency per parser
-    plan build); one F.expr per field parses JVM-side in a single call
-    with an identical analyzed plan.
+    plan build); the parser's one ``selectExpr`` parses them JVM-side in
+    a single call.
     """
     v = f"nullif(trim(get({toks}, {i})), '-')"
     if typ == "int":
@@ -81,7 +76,7 @@ def _typed_token_sql(toks: str, i: int, typ: str) -> str:
     return v
 
 
-def _url_decode_permissive(col: Column) -> Column:
+def _url_decode_permissive_sql(tok: str) -> str:
     """URL-decode that cannot kill a (streaming) query: ``url_decode``
     RAISES on a malformed percent-escape (e.g. a line truncated
     mid-escape, which D2 explicitly anticipates), which would fail the
@@ -92,19 +87,16 @@ def _url_decode_permissive(col: Column) -> Column:
     the well-formed escapes around the bad one -- a documented
     deviation; matching it exactly needs a row-Python UDF, off the hot
     path's table)."""
-    return F.coalesce(F.try_url_decode(col), col)
-
-
-def _url_decode_permissive_sql(tok: str) -> str:
-    """SQL-string form of :func:`_url_decode_permissive` (same tree: the
-    raw token is the coalesce fallback)."""
     return f"coalesce(try_url_decode({tok}), {tok})"
 
 
 def _cs_headers_sql(tok: str) -> str:
-    """SQL-string form of :func:`parse_cs_headers` -- identical filter/
-    transform lambdas, parsed JVM-side in the parser's single
-    ``selectExpr`` (r17; the ``_typed_token_sql`` rationale)."""
+    """Encoded ``cs-headers`` -> array<struct<Name,Value>> (A9).
+
+    Reference: URL-decode, split on ``\\n``, drop empties, split each on the
+    FIRST ``:`` only, skip entries without ``:``
+    (lambda_function.py:40-49). Golden shape: test.json:39-72.
+    """
     return (
         f"transform(filter(split({_url_decode_permissive_sql(tok)}, '\\n'), "
         "x -> x != '' AND contains(x, ':')), "
@@ -114,37 +106,20 @@ def _cs_headers_sql(tok: str) -> str:
 
 
 def _cs_header_names_sql(tok: str) -> str:
-    """SQL-string form of :func:`parse_cs_header_names`."""
+    """Encoded ``cs-header-names`` -> array<string> (A10,
+    lambda_function.py:50-52; golden shape test.json:73-82)."""
     return (f"filter(split({_url_decode_permissive_sql(tok)}, '\\n'), "
             "x -> x != '')")
 
 
-def parse_cs_headers(col: Column) -> Column:
-    """Encoded ``cs-headers`` -> array<struct<Name,Value>> (A9).
-
-    Reference: URL-decode, split on ``\\n``, drop empties, split each on the
-    FIRST ``:`` only, skip entries without ``:``
-    (lambda_function.py:40-49). Golden shape: test.json:39-72.
-    """
-    lines = F.filter(
-        F.split(_url_decode_permissive(col), "\n"),
-        lambda x: (x != F.lit("")) & x.contains(":"),
-    )
-    return F.transform(
-        lines,
-        lambda x: F.struct(
-            F.split_part(x, F.lit(":"), F.lit(1)).alias("Name"),
-            F.substr(x, F.instr(x, ":") + F.lit(1)).alias("Value"),
-        ),
-    )
+def parse_cs_headers(col: str) -> Column:
+    """Column form of :func:`_cs_headers_sql` over the column ``col``."""
+    return F.expr(_cs_headers_sql(col))
 
 
-def parse_cs_header_names(col: Column) -> Column:
-    """Encoded ``cs-header-names`` -> array<string> (A10,
-    lambda_function.py:50-52; golden shape test.json:73-82)."""
-    return F.filter(
-        F.split(_url_decode_permissive(col), "\n"), lambda x: x != F.lit("")
-    )
+def parse_cs_header_names(col: str) -> Column:
+    """Column form of :func:`_cs_header_names_sql` over the column ``col``."""
+    return F.expr(_cs_header_names_sql(col))
 
 
 def parse_log_lines(

@@ -37,6 +37,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
+from ..session import pin_session
+
 #: columns stored as TIMESTAMP(NANOS) in the driver's parquet
 _NANO_TS_COLUMNS = {"ts"}
 
@@ -78,7 +80,7 @@ def _read_raw(spark: SparkSession, src: str) -> DataFrame:
     # timezone so the NTZ->LTZ cast below (and every downstream date/epoch
     # function) is deterministic regardless of host timezone, and matches the
     # DuckDB oracle's naive-as-UTC reading of the same files.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session(spark)
     df = spark.read.parquet(src)
     for f in df.schema.fields:
         # Nanosecond-precision parquet timestamps arrive as raw LongType nanos
@@ -274,7 +276,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # skips _read_raw entirely, and a user-built session in a non-UTC
     # host timezone would shift every date/hour bucket away from the
     # DuckDB oracle's naive-as-UTC reading (r11 review)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session(spark)
     src = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(src)
@@ -351,7 +353,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     # fallback) for this memo and the load_table relation memo alike
     # pinned before the memo check, as in load_table: a memo hit must
     # not leave a session that was switched to another zone off UTC
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session(spark)
     key = _session_key(spark)
     _touch_session(key)
     sig = _source_sig(sf_dir)

@@ -20,14 +20,14 @@ from aws_cloudfront_realtime_monitoring_spark.operators.bpe import (
     load_bpe,
     save_bpe,
 )
-from aws_cloudfront_realtime_monitoring_spark.plans.text import WS_PY
+from aws_cloudfront_realtime_monitoring_spark.plans.text import WS_RE
 
 
 def _replica_fit(texts: list[str], n_merges: int) -> list[tuple[str, str]]:
     """Brute-force merge learning written independently of the
     production _pair_counts/_merge_vocab helpers: recount every word
     occurrence (no frequency dict) each round."""
-    ws = re.compile(WS_PY)
+    ws = re.compile(WS_RE)
     words = [list(w) + [EOW] for t in texts for w in ws.split(t.lower()) if w]
     merges = []
     for _ in range(n_merges):
@@ -125,7 +125,7 @@ def test_encode_batches_matches_replica_on_testdata(spark, sf_dir):
         r["doc_id"]: (r["n_tokens"], tuple(r["tokens"]))
         for r in encode_bpe_batches(docs, merges).collect()
     }
-    ws = re.compile(WS_PY)
+    ws = re.compile(WS_RE)
     raw = docs.select("doc_id", "text").collect()
     assert len(got) == len(raw) > 0
     for r in raw:
@@ -212,7 +212,7 @@ def test_stream_encode_equals_batch(spark, sf_dir):
 def test_tok_fp_distinguishes_separator_collisions(spark):
     """The fingerprint uses length-prefix framing, not a bare separator
     join: a token CONTAINING \\x1f must not collide with the split pair
-    (r17 review -- WS_PY does not strip \\x1f, so no separator
+    (r17 review -- WS_RE does not strip \\x1f, so no separator
     character is guaranteed absent from tokens)."""
     from aws_cloudfront_realtime_monitoring_spark.plans.text import bpe_stats_cols
 

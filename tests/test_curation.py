@@ -145,12 +145,12 @@ def test_decontaminate_counts_distinct_overlap(spark):
     from aws_cloudfront_realtime_monitoring_spark.plans.curation import DECON_N
     from aws_cloudfront_realtime_monitoring_spark.plans.text import (
         adjacent_grams,
-        words_col,
+        words_spark_sql,
     )
 
     g = docs.select(
         "doc_id",
-        F.array_distinct(adjacent_grams(words_col(), DECON_N)).alias("gg"),
+        F.array_distinct(adjacent_grams(words_spark_sql(), DECON_N)).alias("gg"),
     )
     is_bench = F.col("doc_id") % DECON_MOD == 0
     bn = g.where(is_bench).select(F.explode("gg").alias("ng")).distinct()
@@ -239,19 +239,3 @@ def test_dedup_spans_verbatim_duplicates_fully_flagged(spark, sf_dir):
     assert max(r.dup_frac_micro for r in out) == 1_000_000, (
         "verbatim duplicate docs should have 100% duplicated spans"
     )
-
-
-def test_decontaminate_sql_matches_dataframe_replica(spark, sf_dir):
-    """The r8 SQL-string rewrite of decontaminate (a plan-BUILD
-    optimization: ~1,300 py4j round-trips -> ~20) must stay
-    bit-identical to the Column-composition replica, whose
-    decon_grams/decon_count internals still drive the streaming parity
-    row."""
-    from aws_cloudfront_realtime_monitoring_spark.plans.curation import (
-        decontaminate,
-        decontaminate_df,
-    )
-
-    got = sorted(tuple(r) for r in decontaminate(spark, sf_dir).collect())
-    ref = sorted(tuple(r) for r in decontaminate_df(spark, sf_dir).collect())
-    assert got == ref and len(got) > 0

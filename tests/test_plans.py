@@ -87,11 +87,6 @@ def test_blocked_near_dup_is_distributed(spark, sf_dir):
     assert "FlatMapGroupsInPandas" in p
 
 
-def test_window_rank_filter_pushed(spark, sf_dir):
-    p = plan_of(spark, sf_dir, "rank_orders_window")
-    assert "WindowGroupLimit" in p                 # top-3 limit applied pre-shuffle
-
-
 def test_minhash_no_cartesian(spark, sf_dir):
     p = plan_of(spark, sf_dir, "dedup_minhash_lsh")
     assert "CartesianProduct" not in p
@@ -125,7 +120,7 @@ def test_approx_percentile_within_rank_error(spark, sf_dir):
 #: read-back scan; audited by tools/audit_plans.py instead
 _EXECUTING = {"dedup_clusters"} | {n for n in REGISTRY if n.startswith("stream_")}
 #: accepted BroadcastNestedLoopJoin surfaces:
-#: - q1/ago_filter_count/text_tfidf_topk: a ONE-ROW scalar broadcast
+#: - q1/text_tfidf_topk: a ONE-ROW scalar broadcast
 #:   (injectable now() / corpus count) with a non-equi or cross predicate —
 #:   effectively a filter, O(n x 1);
 #: - ann_topk_bruteforce: the deliberately-broadcast probe set;
@@ -143,7 +138,7 @@ _EXECUTING = {"dedup_clusters"} | {n for n in REGISTRY if n.startswith("stream_"
 #:   relation) cross-joins the K=10 hitters for the in-query bound check;
 #: - ann_ivf_recall: embeds ann_topk_bruteforce (its ground-truth side),
 #:   inheriting that row's deliberately-broadcast probe set.
-_NLJ_OK = {"q1_hourly_measure_by_dim", "ago_filter_count", "text_tfidf_topk",
+_NLJ_OK = {"q1_hourly_measure_by_dim", "text_tfidf_topk",
            "ann_topk_bruteforce", "string_distance_pairs", "unigram_logprob",
            "lang_temperature_sample", "curation_pipeline", "bm25_topk",
            "curriculum_stages", "heavy_hitters", "ann_ivf_recall",

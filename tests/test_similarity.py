@@ -268,20 +268,16 @@ def test_bucket_exprs_tolerate_short_embeddings(spark):
     """r11 review: under ANSI (the Spark 4 default) a plain element_at
     RAISES past the array length while the DuckDB oracle's list index
     yields NULL -> 0 -- a dim < IVF_BITS corpus would error on one
-    engine and answer on the other. Both bucket spellings must compute
+    engine and answer on the other. The bucket expression must compute
     the truncated sign pattern instead."""
-    from pyspark.sql import functions as F
-
     from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
         _BUCKET_SPARK,
-        _bucket_col,
     )
 
     df = spark.createDataFrame(
         [([1.0, -2.0, 3.0],)], "embedding array<float>"
     )
     want = 0b101  # bits 0 and 2 non-negative; bits 3..5 out of range
-    assert df.select(_bucket_col().alias("b")).first().b == want
     assert df.selectExpr(f"{_BUCKET_SPARK} AS b").first().b == want
 
 
@@ -356,8 +352,8 @@ def test_ann_ivf_recall_audit_and_multiprobe_floor(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
+        _BUCKET_SPARK,
         N_QUERIES,
-        _bucket_col,
         cosine,
         dot,
         qnorm,
@@ -377,7 +373,7 @@ def test_ann_ivf_recall_audit_and_multiprobe_floor(spark, sf_dir):
     # single-probe baseline recomputed inline: own-bucket candidates only
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
-        "vec_id", _bucket_col().alias("bucket"), qvec().alias("qe")
+        "vec_id", F.expr(_BUCKET_SPARK).alias("bucket"), qvec().alias("qe")
     ).withColumn("nrm", qnorm("qe"))
     queries = base.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("bucket").alias("qbucket"),
@@ -407,21 +403,6 @@ def test_ann_ivf_recall_audit_and_multiprobe_floor(spark, sf_dir):
         {(r.query_id, r.cand_id) for r in single.collect()} & exact3
     )
     assert multiprobe_recall > single_recall
-
-
-def test_sql_builds_match_dataframe_replicas(spark, sf_dir):
-    """The r8 SQL-string rewrites of the three ANN builders (a plan-BUILD
-    optimization: ~3,000 py4j round-trips -> ~20) must stay bit-identical
-    to the Column-composition replicas they replaced -- same IEEE op
-    order, same ranks, same rounding."""
-    from aws_cloudfront_realtime_monitoring_spark.plans import similarity as S
-
-    for name in ["ann_topk_bruteforce", "ann_topk_ivf", "ann_ivf_recall"]:
-        got = sorted(tuple(r) for r in getattr(S, name)(spark, sf_dir).collect())
-        ref = sorted(
-            tuple(r) for r in getattr(S, name + "_df")(spark, sf_dir).collect()
-        )
-        assert got == ref, name
 
 
 def test_trained_ann_beats_sign_lsh_recall(spark, sf_dir):

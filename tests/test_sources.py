@@ -366,15 +366,20 @@ def test_layout_cached_table_keeps_scan_width(spark, sf_dir):
 def test_register_views_pins_utc_on_memo_hit(spark, sf_dir):
     """ADVICE r18: a register_views memo hit returned before the UTC
     session-timezone pin, so a session switched to another zone after
-    the first registration kept it."""
+    the first registration kept it. The nanosAsLong read pin
+    (session.pin_session) must be restored on the same path."""
     from aws_cloudfront_realtime_monitoring_spark.sources.tables import (
         register_views,
     )
 
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
     register_views(spark, sf_dir)  # first registration: memo filled
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set(nanos, "false")
     try:
         register_views(spark, sf_dir)  # memo HIT path
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert spark.conf.get(nanos) == "true"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set(nanos, "true")

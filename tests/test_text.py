@@ -254,7 +254,7 @@ def test_words_split_cross_engine_fuzz(spark):
 
     from aws_cloudfront_realtime_monitoring_spark.plans.text import (
         _WORDS_SQL,
-        WS_PY,
+        WS_RE,
         words_col,
     )
 
@@ -277,7 +277,7 @@ def test_words_split_cross_engine_fuzz(spark):
         duck = con.execute(
             f"SELECT {_WORDS_SQL} FROM (SELECT ? AS text)", [t]
         ).fetchone()[0]
-        py = [w for w in re.split(WS_PY, t) if w != ""]
+        py = [w for w in re.split(WS_RE, t) if w != ""]
         assert spark_words[i] == duck == py, (
             repr(t), spark_words[i], duck, py
         )
@@ -409,13 +409,13 @@ def test_bm25_matches_python_replica(spark, sf_dir):
     from aws_cloudfront_realtime_monitoring_spark.plans.text import (
         BM25_QUERIES,
         BM25_TOPK,
-        WS_PY,
+        WS_RE,
         bm25_topk,
     )
     from aws_cloudfront_realtime_monitoring_spark.sources.tables import load_table
 
     docs = {
-        r.doc_id: [w for w in re.split(WS_PY, r.text.lower()) if w]
+        r.doc_id: [w for w in re.split(WS_RE, r.text.lower()) if w]
         for r in load_table(spark, sf_dir, "documents").collect()
     }
     # the operator's corpus-size contract: N counts TOKENIZED documents
@@ -478,23 +478,32 @@ def test_bpe_tokens_agree_on_vertical_tab(spark):
 
 
 def test_bpe_re_spark_sql_spelling_matches_python(spark):
-    """BPE_RE_SPARK_SQL is BPE_RE as written inside a spark.sql string
+    """sql_str_literal(BPE_RE, "spark") is BPE_RE as a spark.sql string
     literal (which unescapes backslashes once): Spark's
     regexp_extract_all with it must tokenize exactly as Python's
-    re.findall does with BPE_RE, whitespace escapes included."""
+    re.findall does with BPE_RE, whitespace escapes included. The DuckDB
+    spelling must agree too, and a quote in a pattern must survive both
+    literals."""
     import re
+
+    import duckdb
 
     from aws_cloudfront_realtime_monitoring_spark.plans.text import (
         BPE_RE,
-        BPE_RE_SPARK_SQL,
+        sql_str_literal,
     )
 
-    sample = "Hello,\tworld 42x\x0bé!\n\fend\r-9"
+    sample = "Hello,\tworld 42x\x0bé!\n\fend\r-9 it's"
     spark.createDataFrame([(sample,)], "text STRING").createOrReplaceTempView(
         "bpe_sample"
     )
-    [row] = spark.sql(
-        f"SELECT regexp_extract_all(text, '{BPE_RE_SPARK_SQL}', 0) AS toks "
-        "FROM bpe_sample"
-    ).collect()
-    assert row.toks == re.findall(BPE_RE, sample)
+    for pat in (BPE_RE, "'|" + BPE_RE):
+        [row] = spark.sql(
+            "SELECT regexp_extract_all(text, "
+            f"{sql_str_literal(pat, 'spark')}, 0) AS toks FROM bpe_sample"
+        ).collect()
+        duck = duckdb.execute(
+            f"SELECT regexp_extract_all(?, {sql_str_literal(pat, 'duck')})",
+            [sample],
+        ).fetchone()[0]
+        assert row.toks == duck == re.findall(pat, sample), pat

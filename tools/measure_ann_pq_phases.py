@@ -45,7 +45,7 @@ def main() -> None:
     from aws_cloudfront_realtime_monitoring_spark.operators.pq import (
         encode_pq, fit_pq)
     from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
-        ann_topk_bruteforce_df, ann_topk_pq, ann_topk_trained, qvec,
+        ann_topk_bruteforce, ann_topk_pq, ann_topk_trained, qvec,
         recall_audit)
     from aws_cloudfront_realtime_monitoring_spark.plans.core import load_table
 
@@ -88,11 +88,11 @@ def main() -> None:
     timed("trained_search_noop", lambda: noop(
         ann_topk_trained(spark, sf, centroids=cents)))
 
-    timed("bruteforce_noop", lambda: noop(ann_topk_bruteforce_df(spark, sf)))
+    timed("bruteforce_noop", lambda: noop(ann_topk_bruteforce(spark, sf)))
 
     timed("pq_audit_full_noop", lambda: noop(recall_audit(
         ann_topk_pq(spark, sf, centroids=cents, codebooks=cbs),
-        ann_topk_bruteforce_df(spark, sf), "pq")))
+        ann_topk_bruteforce(spark, sf), "pq")))
 
     # the registry rows end-to-end (fits included), bench discipline
     from aws_cloudfront_realtime_monitoring_spark.plans import load_full

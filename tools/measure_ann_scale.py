@@ -217,7 +217,7 @@ def _pq_sweep(spark, last_dir: tuple[str, str], args) -> None:
 def _pq_recall_nprobe(spark, d, cents, cbs, nprobe):
     """ann_pq_recall's n_both relation with the nprobe knob exposed."""
     from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
-        ann_topk_bruteforce_df,
+        ann_topk_bruteforce,
         ann_topk_pq,
         recall_audit,
     )
@@ -225,7 +225,7 @@ def _pq_recall_nprobe(spark, d, cents, cbs, nprobe):
     return recall_audit(
         ann_topk_pq(spark, d, centroids=cents, codebooks=cbs,
                     nprobe=nprobe),
-        ann_topk_bruteforce_df(spark, d),
+        ann_topk_bruteforce(spark, d),
         "pq",
     ).select("query_id", "n_both")
 
@@ -234,14 +234,14 @@ def ann_trained_recall_nprobe(spark, d, cents, nprobe):
     """ann_trained_recall with the nprobe knob exposed (the registry row
     pins the production default; the sweep varies it)."""
     from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
-        ann_topk_bruteforce_df,
+        ann_topk_bruteforce,
         ann_topk_trained,
         recall_audit,
     )
 
     return recall_audit(
         ann_topk_trained(spark, d, centroids=cents, nprobe=nprobe),
-        ann_topk_bruteforce_df(spark, d),
+        ann_topk_bruteforce(spark, d),
         "trained",
     ).select("query_id", "n_both")
 

@@ -8,12 +8,13 @@ an eager localCheckpoint so the next stage's clock starts from real
 blocks instead of recomputing the prefix. The stage relations come FROM
 the plans/curation.py builders (decon_grams / decon_bench_ngrams /
 decon_corpus_grams / decon_count) -- the bm25 stage-from-builders
-discipline. Caveat: the registry row itself runs the SQL-string
-spelling (_decon_spark_sql); the builders are its Column-form replica,
-pinned RESULT-equal (tests/test_curation.py) but not plan-identical,
-so the staged-vs-full gap below includes any spelling divergence
-Catalyst introduces (none observed: both spell the same n-gram
-expression tree):
+discipline. Caveat: the registry row itself runs one SQL string
+(_decon_spark_sql), while the builders compose the same tokenizer and
+n-gram SQL fragments (text.words_spark_sql / grams_spark_sql) as
+DataFrame stages; their results are pinned by the stream-static parity
+row's oracle (stream_decontaminate_equiv), not plan-identity, so the
+staged-vs-full gap below includes any stage-assembly divergence
+Catalyst introduces:
 
 1. ``bench``  -- benchmark-side n-gram build: split + zip_with 4-grams
                  over the doc_id % 13 == 0 docs, explode, DISTINCT
