@@ -81,14 +81,34 @@ def ago(interval: str, now: Column | datetime | str | None = None) -> Column:
 
     ``now`` is injectable (D5) so tests and oracle comparisons are
     deterministic; defaults to ``current_timestamp()`` like Timestream.
+
+    The default cutoff is an uncorrelated scalar subquery, not
+    ``current_timestamp() - interval``. The optimizer folds
+    ``current_timestamp()`` into a timestamp literal and whole-stage
+    codegen inlines timestamp and long literals into the generated
+    source, so every query (every dashboard poll) would compile, and
+    JIT, new classes. A decimal literal goes to codegen by reference
+    instead, so the subquery returns the cutoff as ``DECIMAL(18, 0)``
+    micros and a repeated query reuses its cached class. The subquery
+    reads its own ``VALUES`` row, because a ``FROM``-less one folds back
+    into a literal; ``ComputeCurrentTime`` gives it the main query's
+    instant, so the cutoff is exact. The filter is not pushed to parquet
+    as a result; on the sink that costs nothing, because
+    ``write_partitioned_parquet`` stores ``timestamp`` as INT96 without
+    statistics, which row-group filtering cannot use. Revisit this if
+    the sink ever writes ``TIMESTAMP_MICROS``. An injected ``now`` is
+    the same literal on every build, so it keeps the plain spelling.
     """
     secs = _interval_seconds(interval)
     if now is None:
-        now_col = F.current_timestamp()
-    else:
-        # ts_lit owns the datetime-vs-string session-tz discipline (the
-        # r12 host-tz fix, factored out in r13 so range_distinct shares it)
-        now_col = ts_lit(now)
+        return F.timestamp_micros(F.expr(
+            f"CAST((SELECT CAST(unix_micros(c) - {secs * 1_000_000}"
+            " AS DECIMAL(18, 0)) FROM VALUES (current_timestamp()) AS t(c))"
+            " AS BIGINT)"
+        ))
+    # ts_lit owns the datetime-vs-string session-tz discipline (the r12
+    # host-tz fix, factored out in r13 so range_distinct shares it)
+    now_col = ts_lit(now)
     # micros, not unix_timestamp: the parser keeps millisecond precision
     # (D3), and a seconds-truncated cutoff would shift the boundary by up
     # to 1 s against the ms-precision data (r7 review)

@@ -4,8 +4,10 @@ The reference's storage tiers (Timestream memory store 24 h, magnetic store
 7 d -- template.yaml:203-205) map to partition-level operations on the D6
 layout (``event_date=<date>/event_hour=<h>``):
 
-- the "hot window" a query touches is enforced by partition pruning
-  (``WHERE timestamp >= ago(24h)`` scans only matching partitions);
+- the "hot window" a query touches is pruned by partition only through a
+  predicate on the partition columns (``event_date`` / ``event_hour``):
+  ``timestamp`` is a data column, so ``WHERE timestamp >= ago(24h)`` alone
+  has empty ``PartitionFilters`` and scans every partition;
 - expiry (magnetic-store retention) is a partition DROP -- an O(partitions)
   metadata operation, no data rewrite, exactly how large lakes retire data.
 """

@@ -15,6 +15,13 @@ than the cap never hits on a cyclic re-run: the 11 rows of the benchmark's
 ``query_sweep`` generate 165 classes, so every warm pass recompiled all 165
 at the default, and the JIT re-learned each one. ``CODEGEN_CACHE_ENTRIES``
 sizes the cache to the measured working set instead.
+
+A class's cache key is its generated source, so anything that varies
+between runs of one query makes a new class every run. Spark names each
+whole-stage class after its codegen stage id, and under AQE those ids
+follow the order in which query stages get planned, which differs from
+run to run; ``spark.sql.codegen.useIdInClassName=false`` drops the id from
+the source, so a re-planned stage hits its cached class.
 """
 
 from __future__ import annotations
@@ -64,8 +71,9 @@ def get_spark(app_name: str = "aws_cloudfront_realtime_monitoring_spark",
       oracle (naive-UTC parquet timestamps).
     - Arrow on for every pandas interchange (Pandas UDFs, toPandas).
     - Codegen class cache sized to the engine's working set
-      (``CODEGEN_CACHE_ENTRIES``), so repeated queries reuse their
-      compiled classes instead of recompiling them.
+      (``CODEGEN_CACHE_ENTRIES``) and keyed without the run-dependent
+      stage id, so repeated queries reuse their compiled classes instead
+      of recompiling them.
     """
     cpus = str(cpus or DEFAULT_CPUS)
     builder = (
@@ -84,6 +92,7 @@ def get_spark(app_name: str = "aws_cloudfront_realtime_monitoring_spark",
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # file scans keep Spark's byte-sized splits, the same rule at any
         # scale: small files pack into about one task per core
         # (sources.tables docstring)

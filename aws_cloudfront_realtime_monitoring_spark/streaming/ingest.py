@@ -357,8 +357,15 @@ def write_partitioned_parquet(
     """Exactly-once partitioned parquet sink (the Timestream stand-in, D6).
 
     Partitioning by (event_date, event_hour) gives Catalyst partition
-    pruning for the time-range queries (README.md:109) and makes retention
-    a partition drop (template.yaml:203-205 semantics).
+    pruning for time-range queries that filter on those columns
+    (README.md:109) and makes retention a partition drop
+    (template.yaml:203-205 semantics).
+
+    ``timestamp`` is written as INT96 (Spark's default
+    ``outputTimestampType``), which gets no parquet statistics, so a
+    filter on it skips no row groups. ``ago()``'s default cutoff relies
+    on this: it gives up pushdown to keep the dashboard's codegen class
+    cached (see ``functions/timestream.ago``).
     """
     with_parts = with_time_partitions(parsed)
     return (

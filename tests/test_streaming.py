@@ -102,6 +102,55 @@ def test_streaming_partitioned_parquet_sink(spark, replay_dir):
         assert spark.read.parquet(sink_dir).count() == 22
 
 
+def test_sink_timestamp_is_int96_without_statistics(spark, replay_dir):
+    """The sink's ``timestamp`` column is physical INT96 with no row-group
+    statistics (Spark's default ``outputTimestampType``), so parquet
+    filtering on it skips nothing. ``ago()``'s default cutoff gives up
+    pushdown for a cached codegen class on that basis."""
+    import pyarrow.parquet as pq
+
+    with tempfile.TemporaryDirectory() as out:
+        sink_dir = os.path.join(out, "data")
+        q = write_partitioned_parquet(
+            stream_log_lines(spark, replay_dir), sink_dir, os.path.join(out, "ck")
+        ).start()
+        q.processAllAvailable()
+        q.stop()
+        files = [os.path.join(root, f) for root, _, names in os.walk(sink_dir)
+                 for f in names if f.endswith(".parquet")]
+        assert files
+        for path in files:
+            meta = pq.ParquetFile(path).metadata
+            col = meta.schema.names.index("timestamp")
+            kind = meta.schema.column(col).physical_type
+            stats = [meta.row_group(g).column(col).is_stats_set
+                     for g in range(meta.num_row_groups)]
+            assert (kind, any(stats)) == ("INT96", False), (
+                f"sink timestamp is now {kind} with statistics={stats}: "
+                "parquet pushdown on it can skip data, so revisit ago()'s "
+                "default cutoff, which trades that pushdown away "
+                "(functions/timestream.py)")
+
+
+def test_ago_filters_a_stream(spark):
+    """``ago()``'s default cutoff (a scalar subquery) works in a
+    streaming filter and keeps only the in-window rows."""
+    from aws_cloudfront_realtime_monitoring_spark.functions.timestream import ago
+
+    now = float(int(time.time()))
+    with tempfile.TemporaryDirectory() as d:
+        with open(os.path.join(d, "batch.txt"), "w") as f:
+            for i, hours in enumerate((1, 2, 48)):
+                f.write(make_line(now - hours * 3600, f"req-{i}", "IAD66-C1", 100) + "\n")
+        recent = stream_log_lines(spark, d).where(F.col("timestamp") >= ago("24h"))
+        q = run_to_memory_sink(recent.select("x_edge_request_id"), "ago_out")
+        try:
+            got = {r.x_edge_request_id for r in spark.sql("SELECT * FROM ago_out").collect()}
+        finally:
+            q.stop()
+    assert got == {"req-0", "req-1"}
+
+
 def test_streaming_source_sampling(spark, replay_dir):
     parsed = stream_log_lines(spark, replay_dir, sample_fraction=0.5)
     q = run_to_memory_sink(parsed.select("x_edge_request_id"), "sampled_out")

@@ -39,12 +39,16 @@ def test_ago_injectable_now(spark):
 
 
 def test_ago_defaults_to_current_timestamp(spark):
-    cut, now = (
-        spark.range(1)
-        .select(ago("1h").alias("c"), F.current_timestamp().alias("n"))
+    """The default cutoff is the query's own start time minus the
+    interval, exactly, on every row of every partition."""
+    same, rows = (
+        spark.range(0, 1000, 1, 4)
+        .select(ago("1h").alias("c"),
+                (F.current_timestamp() - F.expr("INTERVAL 1 HOUR")).alias("n"))
+        .agg(F.count(F.when(F.col("c") == F.col("n"), 1)), F.count(F.lit(1)))
         .collect()[0]
     )
-    assert abs((now - cut).total_seconds() - 3600) < 2
+    assert (same, rows) == (1000, 1000)
 
 
 def test_create_time_series_orders_by_time(spark):
