@@ -116,9 +116,10 @@ LC_CHAIN_MAX = 1
 #: scan+agg over the cached edges); r17 first added a MEMORY_ONLY
 #: persist (measured: a wash at sf0.1's ~3k-row seed, 1.18x at a
 #: near-gate 1M-node chain where the three 2M-row-cache scans are real
-#: work; tools/measure_cc_seed_ab.py). The current spelling subsumes
-#: both: the seed is a LAZY localCheckpoint (eager=False), so the
-#: probe's broadcast build materializes it as a side effect of the
+#: work; SCALE.md "r17: seed persist vs recompute in the fast path").
+#: The current spelling subsumes both: the seed is a LAZY
+#: localCheckpoint (eager=False), so the probe's broadcast build
+#: materializes it as a side effect of the
 #: probe job (localCheckpoint persists MEMORY_AND_DISK and truncates
 #: lineage when the first job that computes it finishes) -- one
 #: evaluation total, like the persist arm, AND the materialized

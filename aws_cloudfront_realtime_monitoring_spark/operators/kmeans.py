@@ -42,8 +42,8 @@ def _sq_dist(vec_col: str, centroid: list[int]) -> Column:
     the array literal alone costs ~2*dim py4j round-trips per centroid
     the Column way, and a k=16/dim=64 assignment builds k of these per
     Lloyd iteration — the same driver-chatter class the r8 ANN
-    SQL-string migration measured at ~0.6 s/plan
-    (tools/measure_build_split.py). The SQL form is one round-trip;
+    SQL-string migration measured at ~0.6 s/plan (SCALE.md
+    "Plan-build vs execute split"). The SQL form is one round-trip;
     values are identical (same integer ops)."""
     lits = ",".join(f"{int(c)}L" for c in centroid)
     # backtick-quoted identifier: a backtick INSIDE the name must be
@@ -93,17 +93,6 @@ def assign_clusters(qvecs: DataFrame, centroids: list[list[int]],
         cluster = cluster.when(F.col(f"__d{j}") == dmin, j)
     out = out.select("*", cluster.alias("cluster"), dmin.alias("dist"))
     return out.drop(*[f"__d{j}" for j in range(len(centroids))])
-
-
-#: snapshot into the assign_iter closure at plan-build time (r16 ADVICE:
-#: mirrors similarity.SCRATCH_POOL and multimodal.MEDIA_SCRATCH): True
-#: uses the per-worker scratch pool, False allocates fresh tiles per
-#: batch, so tools/measure_scratch_ab.py-style interleaved A/B runs can
-#: isolate the allocation variable for THIS kernel too — and a debugging
-#: arm that disables pooling is no longer silently re-enabled by the
-#: next kmeans assignment. Values are bit-identical either way (same
-#: ops, same order; tests/test_kmeans.py pins the replica).
-KMEANS_SCRATCH = True
 
 
 def assign_clusters_batches(qvecs: DataFrame, centroids: list[list[int]],
@@ -159,24 +148,13 @@ def assign_clusters_batches(qvecs: DataFrame, centroids: list[list[int]],
         StructField("dist", LongType()),
     ])
 
-    # snapshot HERE so the closure shipped to executors carries the
-    # (possibly A/B-flipped) module value, not a hardcoded True
-    USE_POOL = KMEANS_SCRATCH
-
     def assign_iter(batches):
-        if USE_POOL:
-            from aws_cloudfront_realtime_monitoring_spark.operators import (
-                scratch as _scratch_mod,
-            )
-
-            # re-assert worker-side (r16): a media-kernel A/B arm on a
-            # reused worker may have left scratch.ENABLED=False (see
-            # plans/similarity.py block_pair)
-            _scratch_mod.ENABLED = True
-            scratch = _scratch_mod.scratch
-        else:  # A/B instrumentation path (same shape as block_pair's)
-            def scratch(key_: str, shape: tuple, dtype) -> np.ndarray:
-                return np.empty(shape, dtype=dtype)
+        # tiles live in the per-worker scratch pool (operators/scratch.py);
+        # values are bit-identical to fresh allocations (same ops, same
+        # order; tests/test_kmeans.py pins the Column-form replica)
+        from aws_cloudfront_realtime_monitoring_spark.operators.scratch import (
+            scratch,
+        )
 
         cn = np.einsum("ij,ij->i", cmat, cmat)
         for pdf in batches:

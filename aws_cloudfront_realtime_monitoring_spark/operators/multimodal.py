@@ -148,10 +148,12 @@ def _defilter(lines: np.ndarray, rowbytes: int, bpp: int) -> np.ndarray:
 
     # per-worker pooled buffers (r16, verdict #5): one worker defilters
     # MANY payloads and the first-touch-fault regime (SCALE.md) taxes
-    # every fresh allocation; `out` is fully written row by row before
-    # any read, `prev` needs its zero semantics restored per call (the
-    # spec's "row above the first row is zero"). Bit-identical to the
-    # fresh np.zeros spelling -- the pixel oracle hashes pin it.
+    # every fresh allocation (the r16 A/B measured no throughput change
+    # either way, SCALE.md "Measured ANN/similarity decade"); `out` is
+    # fully written row by row before any read, `prev` needs its zero
+    # semantics restored per call (the spec's "row above the first row
+    # is zero"). Bit-identical to the fresh np.zeros spelling -- the
+    # pixel oracle hashes pin it.
     out = scratch("png.defilter.u16", (height, rowbytes), np.uint16)
     prev = scratch("png.defilter.prev", (rowbytes,), np.uint16)
     prev.fill(0)
@@ -636,15 +638,6 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
 
 
-#: driver-side pool switch for the media decode kernels, snapshotted
-#: into each mapInPandas closure at plan-build time (the
-#: plans/similarity.py SCRATCH_POOL pattern) and applied worker-side by
-#: setting operators.scratch.ENABLED — the decoders call scratch()
-#: directly, too deep to thread a parameter. A/B instrumentation only
-#: (tools/measure_media_scale.py --scratch-ab); production leaves it on.
-MEDIA_SCRATCH = True
-
-
 def decode_batches(docs_with_payload: DataFrame) -> DataFrame:
     """Run the media decoder over Arrow batches via ``mapInPandas``
     (REAL decode for BMP/PNG/JPEG/GIF/WebP, deterministic fake for the
@@ -656,12 +649,8 @@ def decode_batches(docs_with_payload: DataFrame) -> DataFrame:
     pandas processing, bounded memory, no driver involvement, output schema
     declared up front.
     """
-    use_pool = MEDIA_SCRATCH
 
     def decode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import scratch as _scratch_mod
-
-        _scratch_mod.ENABLED = use_pool
         for pdf in batches:
             out = [
                 # NULL payloads/doc_ids (ingest gaps) stay inside the
@@ -763,12 +752,8 @@ def image_pixel_stats_batches(
     can hash-check decode OUTPUT, not just header metadata.
     ``skip_invalid`` follows the audio_feature_batches corrupt-record
     contract (drop vs propagate)."""
-    use_pool = MEDIA_SCRATCH
 
     def stats_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import scratch as _scratch_mod
-
-        _scratch_mod.ENABLED = use_pool
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -829,12 +814,7 @@ def sample_animation_frames(
     from .apng import count_apng_frames, decode_apng_frames
     from .gif import count_gif_frames, decode_gif_frames
 
-    use_pool = MEDIA_SCRATCH
-
     def frames_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import scratch as _scratch_mod
-
-        _scratch_mod.ENABLED = use_pool
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -931,12 +911,8 @@ def resize_pixel_stats_batches(
     over the RESIZED raster (sum_px / position-weighted wsum_px in
     DESTINATION coordinates, so a resize that samples the wrong source
     pixels or places them wrong cannot hash-match)."""
-    use_pool = MEDIA_SCRATCH
 
     def stats_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import scratch as _scratch_mod
-
-        _scratch_mod.ENABLED = use_pool
         weights = np.arange(1, out_h * out_w + 1, dtype=np.int64).reshape(
             out_h, out_w)
         for pdf in batches:

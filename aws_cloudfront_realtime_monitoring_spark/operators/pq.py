@@ -55,10 +55,6 @@ from pyspark.sql import DataFrame
 
 from ..functions.hashing import h60
 
-#: snapshot into the encode closure at plan-build time — the pooled-
-#: buffer A/B flag, mirroring KMEANS_SCRATCH / similarity.SCRATCH_POOL.
-PQ_SCRATCH = True
-
 
 def _np():
     import numpy as np
@@ -257,19 +253,11 @@ def encode_pq(
         + [StructField("cluster", IntegerType()),
            StructField("codes", ArrayType(ShortType()))]
     )
-    use_pool = PQ_SCRATCH
 
     def encode_iter(batches):
-        if use_pool:
-            from aws_cloudfront_realtime_monitoring_spark.operators import (
-                scratch as _scratch_mod,
-            )
-
-            _scratch_mod.ENABLED = True
-            scratch = _scratch_mod.scratch
-        else:
-            def scratch(key_: str, shape: tuple, dtype):
-                return np.empty(shape, dtype=dtype)
+        from aws_cloudfront_realtime_monitoring_spark.operators.scratch import (
+            scratch,
+        )
 
         for pdf in batches:
             n = len(pdf)

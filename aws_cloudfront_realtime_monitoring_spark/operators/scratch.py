@@ -37,22 +37,12 @@ import numpy as np
 
 _POOL: dict[str, np.ndarray] = {}
 
-#: kill-switch for interleaved A/B measurement (tools/measure_media_scale
-#: --scratch-ab): False makes every scratch() call a fresh allocation --
-#: the exact pre-pool spelling. Snapshot driver-side flags into closures
-#: where plans are built (plans/similarity.py pattern); kernels that call
-#: scratch() directly from worker-side code set this global inside the
-#: iterator from a closure-captured boolean.
-ENABLED = True
-
 
 def scratch(key: str, shape: tuple[int, ...], dtype) -> np.ndarray:
     """A ``shape``-shaped view of the persistent buffer for ``key``
     (grown to at least the needed size, 2× geometric so repeated
     near-misses don't re-fault). Contents are undefined."""
     dt = np.dtype(dtype)
-    if not ENABLED:
-        return np.empty(shape, dtype=dt)
     n = 1
     for s in shape:
         n *= int(s)

@@ -242,8 +242,8 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _decon_spark_sql() -> str:
     """The decontaminate query as one spark.sql string: the r6-r7
     Column composition cost ~1,300 py4j round-trips per plan build (the
-    zip_with/slice n-gram chain -- tools/measure_build_split.py); one
-    spark.sql call costs ~20."""
+    zip_with/slice n-gram chain -- SCALE.md "Plan-build vs execute
+    split"); one spark.sql call costs ~20."""
     ws = words_spark_sql()  # the ONE tokenizer spelling (text.py)
     # the ONE n-gram spelling too (r13: this chain was a second live
     # copy of text.grams_spark_sql)
@@ -277,10 +277,9 @@ def decon_bench_ngrams(g: DataFrame) -> DataFrame:
 def decon_corpus_grams(g: DataFrame) -> DataFrame:
     """Exploded (doc_id, ng) rows of the NON-benchmark corpus side -- the
     probe relation of the broadcast join. Split out of
-    :func:`decon_corpus_hits` so the ~sf10 stage tool
-    (tools/measure_decon_stages.py) times exactly the production
-    corpus-scan stage rather than a hand-rolled replica (the bm25
-    stage-SQL-from-builders discipline, r12)."""
+    :func:`decon_corpus_hits` so the corpus-scan stage can be timed on
+    its own as the production relation, not a hand-rolled replica
+    (SCALE.md "decontaminate stage breakdown at ~sf10")."""
     return g.where(~(F.col("doc_id") % DECON_MOD == 0)).select(
         "doc_id", F.explode("gg").alias("ng")
     )

@@ -62,15 +62,6 @@ NEAR_DUP_MAX_BITS = 20
 #: r14 review: a function-local constant left the s>0 branch untested)
 NEAR_DUP_CHUNK = 1024
 
-#: snapshot into the block_pair closure at plan-build time: True uses
-#: the per-worker scratch pool (operators/scratch.py, the r15
-#: first-touch-fault mitigation), False allocates fresh tiles per group
-#: (the pre-r15 behavior). Exists so tools/measure_scratch_ab.py can
-#: INTERLEAVE the two spellings in one session and isolate the
-#: allocation variable from memory-regime drift; values are
-#: bit-identical either way (same ops, same order -- the oracle pins it).
-SCRATCH_POOL = True
-
 # ----------------------------------------------------------- shared exprs
 
 _QVEC_SQL = (
@@ -123,7 +114,7 @@ _PAIR_COS_SQL = (
 # ---- Spark-SQL spellings of the same expressions (the ANN builders are
 # SQL-string builds as of r8: the Column-composition forms cost ~3,000
 # py4j round-trips per plan build, ~0.6 s of pure driver chatter at any
-# data scale -- measured in tools/measure_build_split.py -- while one
+# data scale -- SCALE.md "Plan-build vs execute split" -- while one
 # spark.sql call costs ~20; the DuckDB oracle pins each SQL build
 # bit-exactly, so no Column replica is kept)
 
@@ -475,7 +466,6 @@ def embedding_near_dup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # snapshot the module constant HERE so the closure shipped to
     # executors carries the (possibly test-patched) value
     CHUNK = NEAR_DUP_CHUNK
-    USE_POOL = SCRATCH_POOL
 
     def block_pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # every tile lives in the per-worker scratch pool
@@ -483,24 +473,13 @@ def embedding_near_dup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and the r14 sweep isolated a first-touch-fault regime
         # (~10 MB/s in bad windows) where re-allocating ~100 MB of
         # fresh tiles per group costs integer factors of wall on an
-        # identical plan; warm pages are reused instead. Values are
-        # bit-identical to the fresh-allocation spelling (same dtypes,
-        # same operation ORDER) -- the oracle hash pins it.
-        if USE_POOL:
-            from aws_cloudfront_realtime_monitoring_spark.operators import (
-                scratch as _scratch_mod,
-            )
-
-            # re-assert worker-side (r16): a media-kernel A/B arm on a
-            # REUSED worker may have left scratch.ENABLED=False; each
-            # kernel's closure is authoritative for its own tasks, else
-            # this kernel's measured 2.2x mitigation silently degrades
-            # to fresh allocs after any such run in the session
-            _scratch_mod.ENABLED = True
-            scratch = _scratch_mod.scratch
-        else:  # A/B instrumentation path (tools/measure_scratch_ab.py)
-            def scratch(key_: str, shape: tuple, dtype) -> np.ndarray:
-                return np.empty(shape, dtype=dtype)
+        # identical plan; warm pages are reused instead (SCALE.md
+        # "Measured ANN/similarity decade" keeps the 2.2x A/B). Values
+        # are bit-identical to the fresh-allocation spelling (same
+        # dtypes, same operation ORDER) -- the oracle hash pins it.
+        from aws_cloudfront_realtime_monitoring_spark.operators.scratch import (
+            scratch,
+        )
 
         g1, g2 = key
         left = pdf[pdf["blk"] == g1] if g1 != g2 else pdf

@@ -621,10 +621,8 @@ def bm25_split_expr(dialect: str) -> str:
 
 def bm25_dl_select(split_expr: str) -> str:
     """Standalone per-doc token-length statement (stage 1): the exact
-    statement the builder checkpoints AND the one
-    tools/measure_bm25_stages.py times (r12 review: the tool carried a
-    hand copy of every stage, which a scoring tweak would silently
-    desynchronize).
+    statement the builder checkpoints (per-stage timings at ~sf10:
+    SCALE.md "bm25_topk stage breakdown").
 
     r17 (guide 2.4, remove shuffles outright): a document's token count
     is the LENGTH of its split array, so dl is a narrow map over the

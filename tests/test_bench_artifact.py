@@ -342,6 +342,49 @@ def test_extra_queries_ride_sidecar_not_stdout(tmp_path):
         assert name in reg, name
 
 
+def test_layers_ride_sidecar_not_stdout(tmp_path):
+    """The per-row layer profile is sidecar-only: it names every
+    headline and extra row, so it would blow the stdout window."""
+    times = {name: 1.0 for name in bench.HEADLINE}
+    layers = {name: {"build_s": 0.1, "exec_s": 0.9, "stages": 2.0}
+              for name in bench.HEADLINE + bench.EXTRA_QUERIES}
+    line = bench._render_output(
+        times=times, sf=0.1, load_start=1.0, load_end=1.0,
+        load_flagged=False, reran=[], query_ext_cores={},
+        wait_budget_left=0.0, layers=layers, sidecar_dir=tmp_path,
+    )
+    assert "layers" not in json.loads(line)
+    assert "build_s" not in line
+    detail = json.loads((tmp_path / bench.SIDECAR).read_text())
+    assert detail["layers"] == layers
+
+
+def test_layer_profile_counts_only_work_after_the_mark(spark):
+    """The status-store profile of a shuffle query sees its map and
+    reduce stages, the shuffle bytes between them and executor CPU; a
+    query that ran before the mark is not counted."""
+    spark.range(0, 20_000, 1, 3).selectExpr("id % 11 AS k") \
+        .groupBy("k").count().collect()
+    mark = bench._status_mark(spark)
+    idle = bench._layer_profile(spark, mark)
+    assert (idle["jobs"], idle["stages"], idle["tasks"]) == (0, 0, 0)
+    assert idle["jobs_active_s"] == 0
+    assert idle["top_stage"] is None
+
+    spark.range(0, 200_000, 1, 4).selectExpr("id % 97 AS k") \
+        .groupBy("k").count().write.format("noop").mode("overwrite").save()
+    prof = bench._layer_profile(spark, mark)
+    assert prof["jobs"] >= 1
+    assert prof["jobs_active_s"] > 0
+    assert prof["stages"] >= 2
+    assert prof["tasks"] >= prof["stages"]
+    assert prof["shuffle_write_bytes"] > 0
+    assert prof["shuffle_read_bytes"] > 0
+    assert prof["executor_cpu_s"] > 0
+    assert prof["executor_run_s"] >= prof["top_stage"]["run_s"]
+    assert 0 < prof["max_task_s"] <= prof["executor_run_s"]
+
+
 def test_regime_thresholds_scale_with_core_count(monkeypatch):
     """r17: the driver's low-core bench leg runs the same 32-split
     calibration kernel ~32/cores slower, so the gate's DEFAULT calib

@@ -447,26 +447,6 @@ def test_fit_kmeans_sampled_fit_validates_full_corpus(spark):
         fit_kmeans(df, k=2, max_iters=2, fit_fraction=0.3)
 
 
-def test_assign_clusters_batches_pool_flag_is_bit_identical(
-        spark, monkeypatch):
-    """r16 ADVICE: assign_iter used to hardcode scratch.ENABLED=True,
-    so kmeans' pooled buffers could never be A/B-measured or disabled.
-    Pin the module flag's contract: KMEANS_SCRATCH=False (the fresh-
-    allocation arm) produces byte-identical assignments."""
-    from aws_cloudfront_realtime_monitoring_spark.operators import kmeans as km
-
-    rows = [(i, [int((i * 7 + d * 3) % 11 - 5) * 1_000_000
-                 for d in range(6)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id BIGINT, qv ARRAY<BIGINT>")
-    cents = [[0] * 6, [2_000_000] * 6, [-3_000_000] * 6]
-    pooled = {r.vec_id: (r.cluster, r.dist)
-              for r in km.assign_clusters_batches(df, cents).collect()}
-    monkeypatch.setattr(km, "KMEANS_SCRATCH", False)
-    fresh = {r.vec_id: (r.cluster, r.dist)
-             for r in km.assign_clusters_batches(df, cents).collect()}
-    assert pooled == fresh and len(pooled) == 40
-
-
 def test_fit_kmeans_auto_driver_path_matches_distributed(fitted, spark):
     """r17 optimization: fit_fraction='auto' runs the whole Lloyd loop
     driver-side in numpy on the collected bounded sample. On a corpus

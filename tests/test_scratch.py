@@ -59,22 +59,3 @@ def test_scratch_out_parameter_values_match_fresh():
     assert (cos == fresh_cos).all()  # bit-identical, not just close
     clear_pool()
 
-
-def test_block_pair_pool_and_fresh_spellings_identical(spark, sf_dir):
-    """The SCRATCH_POOL toggle (A/B instrumentation) must be
-    value-transparent: pool and fresh-alloc builds of the blocked
-    near-dup row return identical rows."""
-    from aws_cloudfront_realtime_monitoring_spark.plans import load_full
-    from aws_cloudfront_realtime_monitoring_spark.plans import (
-        similarity as sim,
-    )
-
-    q = load_full()["embedding_near_dup_blocked"]
-    try:
-        sim.SCRATCH_POOL = True
-        a = sorted(map(tuple, q.build(spark, sf_dir).collect()))
-        sim.SCRATCH_POOL = False
-        b = sorted(map(tuple, q.build(spark, sf_dir).collect()))
-    finally:
-        sim.SCRATCH_POOL = True
-    assert a == b and a

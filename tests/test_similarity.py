@@ -540,11 +540,10 @@ def test_pq_default_shortlist_subset_and_audit_shape(spark, sf_dir):
         assert r.n_both + r.n_pq_only <= 3, tuple(r)
 
 
-def test_pq_encode_matches_numpy_replica_and_pool_flag(spark, monkeypatch):
-    """encode_pq's codes replicated independently in numpy (quantize ->
-    coarse argmin -> residual -> per-subspace argmin, first-min ties),
-    plus the PQ_SCRATCH=False fresh-allocation arm's bit-identity and
-    the code-range invariant."""
+def test_pq_encode_matches_numpy_replica_and_pool_flag(spark):
+    """encode_pq's pooled-buffer codes replicated independently in numpy
+    (quantize -> coarse argmin -> residual -> per-subspace argmin,
+    first-min ties), plus the code-range invariant."""
     import numpy as np
 
     from aws_cloudfront_realtime_monitoring_spark.operators import pq as pqm
@@ -573,10 +572,6 @@ def test_pq_encode_matches_numpy_replica_and_pool_flag(spark, monkeypatch):
     assert got == want
     for _, codes in got.values():
         assert all(0 <= c < 4 for c in codes)
-    monkeypatch.setattr(pqm, "PQ_SCRATCH", False)
-    fresh = {r.vec_id: (r.cluster, list(r.codes))
-             for r in pqm.encode_pq(df, cents, cbs).collect()}
-    assert fresh == got
 
 
 def test_fit_pq_guards_and_determinism(spark):

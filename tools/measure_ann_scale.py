@@ -20,8 +20,8 @@ decorrelate -- a true scale-up, not a duplication change):
   count keeps per-group work bounded and balanceable: the fixed B=8
   decomposition is re-measured side by side (target forced huge so B
   pins at the floor) to quantify what the scaling buys. Max single-task
-  duration is sampled from the REST status API (measure_skew_scale's
-  machinery) because a straggler can hide inside a 32-core makespan.
+  duration is read from Spark's status store (measure_skew_scale's
+  ``timed``) because a straggler can hide inside a 32-core makespan.
 
 Usage: python tools/measure_ann_scale.py [--copies 10 100] [--runs 3]
 Prints a markdown table (for SCALE.md) plus one JSON line. Corpora live
@@ -282,10 +282,7 @@ def main() -> None:
 
     load, flagged = _wait_for_quiet_box()
     print(f"# start load {load:.2f} flagged={flagged}", file=sys.stderr)
-    spark = get_spark("ann_scale", extra_conf={
-        "spark.ui.enabled": "true",
-        "spark.ui.port": str(mss.UI_PORT),
-    })
+    spark = get_spark("ann_scale")
     registry = load_full()
 
     dirs: list[tuple[str, str]] = [

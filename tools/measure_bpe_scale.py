@@ -81,10 +81,7 @@ def main() -> None:
 
     load, flagged = _wait_for_quiet_box()
     print(f"# start load {load:.2f} flagged={flagged}", file=sys.stderr)
-    spark = get_spark("bpe_scale", extra_conf={
-        "spark.ui.enabled": "true",
-        "spark.ui.port": str(mss.UI_PORT),
-    })
+    spark = get_spark("bpe_scale")
 
     dirs: list[tuple[str, str]] = [
         ("sf0.01", "/root/testdata/sf0.01"),

@@ -227,78 +227,11 @@ def probe_batches(spark, path: str) -> dict:
     }
 
 
-def _scratch_ab(spark, pool, n: int, pairs: int, runs: int) -> None:
-    """Interleaved pool/fresh A/B of the pooled decode buffers (r16,
-    verdict #5) on the mixed image corpus: the measure_scratch_ab
-    pattern -- MEDIA_SCRATCH is snapshotted per plan build, so each arm
-    rebuilds the plan with its own flag; pairs share (approximately)
-    one memory regime and the paired ratio isolates the allocation
-    variable. Memory probe brackets every pair."""
-    import scale_sweep  # noqa: F401 (sys.path side effect parity)
-
-    from measure_scratch_ab import mem_probe
-
-    from aws_cloudfront_realtime_monitoring_spark.operators import multimodal as mm
-
-    path = build_corpus(spark, pool, "images", n)
-    # decode gate (the exit-0-checked-nothing class the r15 review
-    # caught in this same tool): image_pixel_stats_batches silently
-    # DROPS undecodable payloads (skip_invalid=True), so a regressed
-    # pool would leave both arms timing an empty pipeline and this A/B
-    # would print a confident null having measured nothing. Require
-    # every payload to produce a stats row before any timing.
-    n_ok = (mm.image_pixel_stats_batches(spark.read.parquet(path))
-            .count())
-    if n_ok != n:
-        raise RuntimeError(
-            f"scratch A/B corpus: only {n_ok}/{n} payloads produced "
-            "pixel stats -- pool regression, refusing to time it")
-
-    def run(use_pool: bool) -> float:
-        mm.MEDIA_SCRATCH = use_pool
-        t0 = time.perf_counter()
-        (mm.image_pixel_stats_batches(spark.read.parquet(path))
-         .write.format("noop").mode("overwrite").save())
-        return round(time.perf_counter() - t0, 2)
-
-    recs = []
-    try:
-        run(True)
-        run(False)  # untimed warm-ups, one per arm
-        for i in range(pairs):
-            f0, r0 = mem_probe()
-            a = min(run(True) for _ in range(runs))
-            b = min(run(False) for _ in range(runs))
-            f1, r1 = mem_probe()
-            rec = {"pool_s": a, "fresh_s": b,
-                   "ratio": round(b / a, 2) if a else None,
-                   "fault_mbps": (f0, f1), "read_gbps": (r0, r1)}
-            recs.append(rec)
-            print(f"# pair {i}: {rec}", file=sys.stderr)
-    finally:
-        mm.MEDIA_SCRATCH = True
-    healthy = [p for p in recs if min(p["read_gbps"]) >= 1.0]
-    ratios = sorted(p["ratio"] for p in healthy if p["ratio"])
-    print("\n| pair | pool (s) | fresh (s) | fresh/pool | fault MB/s | read GB/s |")
-    print("|---|---|---|---|---|---|")
-    for i, p in enumerate(recs):
-        print(f"| {i} | {p['pool_s']} | {p['fresh_s']} | {p['ratio']} |"
-              f" {p['fault_mbps']} | {p['read_gbps']} |")
-    print(json.dumps({
-        "metric": "media_scratch_ab", "n": n, "pairs": recs,
-        "healthy_pairs": len(healthy),
-        "median_ratio": ratios[len(ratios) // 2] if ratios else None}))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--cells", default="5000,50000,500000")
     ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--scratch-ab", type=int, default=None, metavar="N",
-                    help="run ONLY the interleaved pool/fresh decode A/B "
-                         "on an N-payload image corpus (r16, verdict #5)")
-    ap.add_argument("--pairs", type=int, default=4)
     args = ap.parse_args()
     cells = [int(c) for c in args.cells.split(",")]
 
@@ -319,11 +252,6 @@ def main() -> None:
 
     pool = build_pool()
     SWEEP_DIR.mkdir(parents=True, exist_ok=True)
-
-    if args.scratch_ab:
-        _scratch_ab(spark, pool, args.scratch_ab, args.pairs, args.runs)
-        spark.stop()
-        return
 
     results: dict[str, dict] = {}
     rows_md: list[str] = []

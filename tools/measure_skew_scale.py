@@ -13,9 +13,9 @@ join and the aggregation:
 recording min-of-N wall AND the max single-task duration of each run's
 heaviest stage (straggler detection needs task-level data: wall time on
 a 32-core box under-reports a straggler that still fits inside other
-tasks' makespan). Task durations come from the REST status API
-(taskSummary quantile 1.0), so this tool runs its own session with the
-UI enabled; production sessions keep it off.
+tasks' makespan). Task durations come from Spark's in-process status
+store (bench.py's ``_layer_profile``, taskSummary quantile 1.0), which
+Spark keeps with the UI off.
 
 Broadcast note: the small side is sized ABOVE the broadcast threshold
 (the operator's documented domain -- "too big to broadcast, far smaller
@@ -36,17 +36,20 @@ Prints a markdown table + one JSON line. Corpus under
 from __future__ import annotations
 
 import argparse
-import calendar
 import json
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from bench import _ExternalCpu, _wait_for_quiet_box
+from bench import (
+    _ExternalCpu,
+    _layer_profile,
+    _status_mark,
+    _wait_for_quiet_box,
+)
 
 from aws_cloudfront_realtime_monitoring_spark.operators.skew import (
     salted_join,
@@ -55,7 +58,6 @@ from aws_cloudfront_realtime_monitoring_spark.operators.skew import (
 from aws_cloudfront_realtime_monitoring_spark.session import get_spark
 
 SWEEP = REPO / ".scale_sweep" / "skew_v1"
-UI_PORT = 4057
 HOT_SHARE = 0.5  # the hot key owns this fraction of large-side rows
 N_KEYS = 1_000_000  # uniform tail key domain (also the small side's keys)
 
@@ -91,63 +93,27 @@ def build_corpus(spark, rows: int,
     return str(large_p), str(small_p)
 
 
-def _rest(app_id: str, path: str):
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/{path}"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.loads(r.read())
-
-
-def _max_task_ms(spark, since_ms: float) -> tuple[float, int]:
-    """(max single-task duration ms, its stage id) across stages whose
-    first task launched after ``since_ms`` -- the run's straggler."""
-    app_id = spark.sparkContext.applicationId
-    worst, worst_stage = 0.0, -1
-    for st in _rest(app_id, "stages?status=COMPLETE"):
-        sub = st.get("firstTaskLaunchedTime")
-        if not sub:
-            continue
-        # the REST timestamp is GMT ("...GMT" suffix): timegm, NOT
-        # mktime, which would interpret the struct as LOCAL time and
-        # offset the filter by the box's UTC delta -- off-box-TZ runs
-        # would count stale stages or silently record 0.0 (r14 review)
-        t = time.strptime(sub[:19], "%Y-%m-%dT%H:%M:%S")
-        if calendar.timegm(t) * 1000 < since_ms - 1000:
-            continue
-        try:
-            summ = _rest(
-                app_id,
-                f"stages/{st['stageId']}/{st['attemptId']}/taskSummary"
-                "?quantiles=1.0")
-        except Exception:
-            continue  # tiny stages may have no summary yet
-        dur = (summ.get("duration") or [0])[0]
-        if dur > worst:
-            worst, worst_stage = dur, st["stageId"]
-    return worst, worst_stage
-
-
 def timed(spark, build_df, runs: int) -> dict:
     ext = _ExternalCpu()
     build_df().write.format("noop").mode("overwrite").save()  # warm-up
     ext.sample()
     per, task_max, ext_runs = [], 0.0, []
     for _ in range(runs):
-        t0_ms = time.time() * 1000
+        mark = _status_mark(spark)
         t0 = time.perf_counter()
         build_df().write.format("noop").mode("overwrite").save()
         per.append(round(time.perf_counter() - t0, 3))
         # sample PER RUN, immediately after it: a single whole-window
         # average dilutes a mid-sweep neighbor burst below visibility
         # (r14: the ann sweep's 88->205 s spread sat next to
-        # ext_cores=0.0), and the REST calls below would pollute the
-        # window if sampled after them
+        # ext_cores=0.0), and the status-store read below would pollute
+        # the window if sampled after it
         ext_runs.append(round(ext.sample(), 2))
-        m, _sid = _max_task_ms(spark, t0_ms)
-        task_max = max(task_max, m)
+        task_max = max(task_max, _layer_profile(spark, mark)["max_task_s"])
         spark.catalog.clearCache()
-        ext.sample()  # reset the window past the REST/clear overhead
+        ext.sample()  # reset the window past the read/clear overhead
     return {"sec": min(per), "runs": per,
-            "max_task_s": round(task_max / 1000, 2),
+            "max_task_s": round(task_max, 2),
             # the headline is the WORST run's load: one number that says
             # whether any cell in this experiment was contaminated
             "ext_cores": max(ext_runs) if ext_runs else 0.0,
@@ -162,10 +128,7 @@ def main() -> None:
 
     load, flagged = _wait_for_quiet_box()
     print(f"# start load {load:.2f} flagged={flagged}", file=sys.stderr)
-    spark = get_spark("skew_scale", extra_conf={
-        "spark.ui.enabled": "true",
-        "spark.ui.port": str(UI_PORT),
-    })
+    spark = get_spark("skew_scale")
     SWEEP.mkdir(parents=True, exist_ok=True)
     large_p, small_p = build_corpus(spark, args.rows)
 

@@ -11,8 +11,8 @@ three ways:
    stats-pruning reader (Spark parquet pushdown, DuckDB zone maps,
    Iceberg/Delta file skipping) must decode; the rest are provably
    skippable;
-2. Spark task input bytes (status REST API): what a real Spark scan
-   actually read under its parquet row-group pushdown;
+2. Spark task input bytes (the in-process status store): what a real
+   Spark scan actually read under its parquet row-group pushdown;
 3. wall clock of the Spark scan.
 
 Usage: python tools/measure_zorder.py [sf_dir] [n_files]
@@ -21,14 +21,13 @@ Prints a markdown table (redirect into SCALE.md).
 
 from __future__ import annotations
 
-import json
 import shutil
 import sys
 import tempfile
 import time
-import urllib.request
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -76,22 +75,14 @@ def footer_overlap(layout_dir: str, hour_lo_ts, hour_hi_ts,
 
 def spark_scan_bytes(spark, path: str, pred) -> tuple[int, int, float]:
     """(task input bytes, result rows, wall seconds) for scanning
-    ``path`` under ``pred``, from the status REST API stage metrics."""
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
+    ``path`` under ``pred``, from the status store's stage metrics."""
+    from bench import _layer_profile, _status_mark
 
-    def stages():
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages?status=complete"
-        ) as r:
-            return {s["stageId"]: s for s in json.load(r)}
-
-    before = stages()
+    mark = _status_mark(spark)
     t0 = time.time()
     n = spark.read.parquet(path).where(pred).count()
     wall = time.time() - t0
-    new = [s for sid, s in stages().items() if sid not in before]
-    return sum(s.get("inputBytes", 0) for s in new), n, wall
+    return _layer_profile(spark, mark)["input_bytes"], n, wall
 
 
 def main() -> None:
@@ -103,8 +94,7 @@ def main() -> None:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    spark = get_spark("measure_zorder", cpus=8,
-                      extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("measure_zorder", cpus=8)
     # Spark's default INT96 timestamps carry NO parquet min/max stats --
     # no engine can prune on them; MICROS is what Delta/Iceberg write
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
