@@ -32,6 +32,11 @@ Structure (ITU-T T.81):
   EOI;
 - the entropy-coded segment is a bitstream with 0xFF00 byte stuffing and
   optional RSTn markers that reset DC predictors on MCU boundaries;
+- entropy coding is kept apart from the coding process, as in T.81: each
+  SOS builds one entropy decoder (``HuffmanEntropy`` here,
+  ``ArithEntropy`` / ``ArithLossless`` in ``jpeg_arith.py``) and hands
+  it to the one scan driver for its process -- single-scan sequential,
+  multi-scan sequential, progressive or lossless;
 - sequential: each MCU interleaves one 8x8 block per component per
   sampling factor; blocks decode as (Huffman DC diff, run-length AC),
   de-zigzag, dequantize, IDCT (an 8x8 cosine-basis matrix product),
@@ -56,7 +61,7 @@ import struct
 
 import numpy as np
 
-from .jpeg_arith import ArithEntropy, parse_dac
+from .jpeg_arith import ArithEntropy, ArithLossless, parse_dac
 
 #: zigzag order: index i of the scan -> position in the 8x8 block
 _ZIGZAG = np.array([
@@ -106,7 +111,9 @@ class _BitReader:
             if nxt == 0x00:
                 self.pos += 2
             else:
-                raise _MarkerHit(0xFF00 | nxt)
+                # a real marker (RSTn / EOI) inside a data unit
+                raise ValueError(
+                    f"JPEG scan data ended early (marker {0xFF00 | nxt:#x})")
         else:
             self.pos += 1
         self.bits = (self.bits << 8) | b
@@ -123,13 +130,6 @@ class _BitReader:
     def align(self) -> None:
         self.bits = 0
         self.nbits = 0
-
-
-class _MarkerHit(Exception):
-    """Raised when the bit reader lands on a real marker (RSTn / EOI)."""
-
-    def __init__(self, marker: int):
-        self.marker = marker
 
 
 class _Huff:
@@ -206,6 +206,206 @@ def _parse_dht(seg: bytes, huff_dc: dict, huff_ac: dict) -> None:
         table = _Huff(counts, seg[s + 17 : s + 17 + n])
         (huff_dc if tc == 0 else huff_ac)[th] = table
         s += 17 + n
+
+
+def _table(tables: dict, tid: int) -> _Huff:
+    t = tables.get(tid)
+    if t is None:
+        raise ValueError("JPEG references missing table")
+    return t
+
+
+class HuffmanEntropy:
+    """Huffman entropy decoder for one scan (T.81 F.2.2, G.1.2, H.2):
+    the bit reader over the entropy-coded segment, the DHT tables in
+    force at the SOS, the DC predictions and the progressive EOB run.
+
+    It has the interface of ``jpeg_arith.ArithEntropy`` (DCT processes)
+    and ``jpeg_arith.ArithLossless`` (lossless), so each coding
+    process has ONE scan driver taking the entropy decoder as a
+    parameter -- the split libjpeg draws between jdhuff.c and
+    jdarith.c. Table ids resolve at use: a progressive DC scan names
+    an AC table the stream need not define, and vice versa."""
+
+    def __init__(self, data: bytes, pos: int, huff_dc: dict,
+                 huff_ac: dict) -> None:
+        self.data = data
+        self.br = _BitReader(data, pos)
+        self.huff_dc = huff_dc
+        self.huff_ac = huff_ac
+        self.pred: dict[int, int] = {}
+        self.eob_run = 0
+
+    @property
+    def end_pos(self) -> int:
+        """Byte position where this scan's entropy data stopped."""
+        return self.br.pos
+
+    def restart(self) -> None:
+        """Byte-align, consume the RSTn marker, and zero the DC
+        predictions and the EOB run (T.81 F.2.1.3.1 / G.1.2.2)."""
+        br, data = self.br, self.data
+        br.align()
+        if (br.pos + 1 >= len(data) or data[br.pos] != 0xFF
+                or not (0xD0 <= data[br.pos + 1] <= 0xD7)):
+            raise ValueError("expected JPEG restart marker")
+        br.pos += 2
+        self.pred = {}
+        self.eob_run = 0
+
+    def dc_diff(self, cid: int, dc_tid: int, prec: int = 8,
+                differential: bool = False) -> int:
+        """One DC difference folded into ``cid``'s prediction; returns
+        the prediction. ``differential`` (hierarchical frames): PRED
+        stays 0 -- the value is coded directly (T.81 F.1.1.5.1) -- and
+        the magnitude category may run one past the non-differential
+        cap (tables F.1/F.6: diffs of differences span twice the
+        range)."""
+        br = self.br
+        s = _table(self.huff_dc, dc_tid).decode(br)
+        if s > _dc_ssss_max(prec) + (1 if differential else 0):
+            raise ValueError("invalid JPEG DC magnitude")
+        d = _extend(br.read(s), s)
+        if differential:
+            return d
+        v = self.pred[cid] = self.pred.get(cid, 0) + d
+        if not -(1 << 26) <= v <= (1 << 26):
+            # legal |DC| <= 2^15; a crafted max-diff run would overflow
+            # the int32 store (OverflowError on numpy 2.x, escaping
+            # ValueError)
+            raise ValueError("JPEG DC predictor out of range")
+        return v
+
+    def data_unit(self, cid: int, dc_tid: int, ac_tid: int,
+                  prec: int = 8, differential: bool = False) -> np.ndarray:
+        """One full sequential data unit (T.81 F.2.2.1-F.2.2.2): the 64
+        coefficients in ZIGZAG order as int64, DC prediction-resolved
+        (in differential frames, the raw differential DC)."""
+        ac_t = _table(self.huff_ac, ac_tid)
+        zz = np.zeros(64, np.int64)
+        zz[0] = self.dc_diff(cid, dc_tid, prec, differential)
+        br = self.br
+        k = 1
+        while k <= 63:
+            rs = ac_t.decode(br)
+            r, s = rs >> 4, rs & 15
+            if s == 0:
+                if r != 15:
+                    break  # EOB
+                k += 16  # ZRL
+                continue
+            k += r
+            if k > 63:
+                raise ValueError("JPEG AC run past block end")
+            zz[k] = _extend(br.read(s), s)
+            k += 1
+        return zz
+
+    def dc_refine(self) -> int:
+        """Progressive DC refinement: one raw bit (G.1.2.1)."""
+        return self.br.read(1)
+
+    def ac_band(self, ac_tid: int, block, ss: int, se: int,
+                al: int = 0) -> None:
+        """First AC scan for one block (T.81 G.1.2.2): run-length coding
+        within the band [ss, se], point-transformed << al; EOBn codes
+        carry a run of all-zero-band blocks."""
+        if self.eob_run > 0:
+            self.eob_run -= 1
+            return
+        tbl = _table(self.huff_ac, ac_tid)
+        br = self.br
+        k = ss
+        while k <= se:
+            rs = tbl.decode(br)
+            r, s = rs >> 4, rs & 15
+            if s == 0:
+                if r < 15:  # EOBn: run of 2^r + extra blocks ends here
+                    self.eob_run = (1 << r) - 1
+                    if r:
+                        self.eob_run += br.read(r)
+                    return
+                k += 16  # ZRL
+                continue
+            k += r
+            if k > se:
+                raise ValueError("JPEG AC run past band end")
+            block[k] = _extend(br.read(s), s) << al
+            k += 1
+
+    def ac_refine_band(self, ac_tid: int, block, ss: int, se: int,
+                       al: int) -> None:
+        """AC refinement scan for one block (T.81 G.1.2.3): newly-nonzero
+        coefficients arrive as +-1<<Al; every already-nonzero coefficient
+        passed over consumes one correction bit; zero-history
+        coefficients count toward the run."""
+        br = self.br
+        p1 = 1 << al
+        m1 = -1 << al
+        k = ss
+        if self.eob_run == 0:
+            tbl = _table(self.huff_ac, ac_tid)
+            while k <= se:
+                rs = tbl.decode(br)
+                r, s = rs >> 4, rs & 15
+                val = 0
+                if s == 0:
+                    if r < 15:
+                        self.eob_run = 1 << r
+                        if r:
+                            self.eob_run += br.read(r)
+                        break
+                    # r == 15: ZRL -- skip 16 zero-history coefficients
+                else:
+                    if s != 1:
+                        raise ValueError("invalid JPEG refinement magnitude")
+                    val = p1 if br.read(1) else m1
+                while k <= se:
+                    c = int(block[k])
+                    if c != 0:
+                        # correction bit for a nonzero-history coefficient
+                        if br.read(1) and (c & p1) == 0:
+                            block[k] = c + (p1 if c >= 0 else m1)
+                    else:
+                        if r == 0:
+                            break
+                        r -= 1
+                    k += 1
+                if val and k <= se:
+                    block[k] = val
+                k += 1
+        if self.eob_run > 0:
+            # inside an EOB run: only correction bits for nonzero history
+            while k <= se:
+                c = int(block[k])
+                if c != 0 and br.read(1) and (c & p1) == 0:
+                    block[k] = c + (p1 if c >= 0 else m1)
+                k += 1
+            self.eob_run -= 1
+
+    def diff(self, cid: int, tid: int, x: int) -> int:
+        """One lossless prediction difference (T.81 H.2): an SSSS
+        category from DC table ``tid`` plus that many raw bits;
+        category 16 means +32768 with no bits. (``cid`` and ``x`` are
+        the arithmetic model's conditioning context; Huffman coding
+        has none.)"""
+        s = _table(self.huff_dc, tid).decode(self.br)
+        if s > 16:
+            raise ValueError("invalid lossless JPEG magnitude")
+        return 32768 if s == 16 else _extend(self.br.read(s), s)
+
+
+def _scan_entropy(arith: bool, lossless: bool, data: bytes, pos: int,
+                  scan_tables: dict, huff_dc: dict, huff_ac: dict,
+                  dc_cond: dict, ac_cond: dict):
+    """The entropy decoder for one scan starting at ``pos``: the only
+    place the Huffman/arithmetic choice is made (shared with the
+    hierarchical driver)."""
+    if not arith:
+        return HuffmanEntropy(data, pos, huff_dc, huff_ac)
+    if lossless:
+        return ArithLossless(data, pos, dc_cond, scan_tables)
+    return ArithEntropy(data, pos, dc_cond, ac_cond, scan_tables)
 
 
 def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -305,8 +505,8 @@ def _decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
             progressive = marker in (0xC2, 0xCA)
             lossless = marker in (0xC3, 0xCB)
             # SOF9 = extended sequential, SOF10 = progressive, SOF11 =
-            # lossless (r13), all QM-coded; frame semantics match their
-            # Huffman twins
+            # lossless (r13): the SOF1/2/3 processes with QM coding --
+            # only the entropy decoder built at each SOS differs
             arith = marker in (0xC9, 0xCA, 0xCB)
             prec, h, w, ncomp = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
             if lossless:
@@ -380,6 +580,9 @@ def _decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
                 # per MCU than the decode loop reads -- bitstream
                 # desync into silent garbage (r11 review)
                 raise ValueError("JPEG SOS repeats a component id")
+            ent = _scan_entropy(arith, lossless, payload, pos + 2 + seg_len,
+                                scan_tables, huff_dc, huff_ac,
+                                dc_cond, ac_cond)
             if lossless:
                 # T.81 H: Ss carries the predictor selector, Al the
                 # point transform; Se/Ah are zero
@@ -390,91 +593,39 @@ def _decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
                         raise ValueError(
                             "lossless JPEG component delivered twice")
                     loss_done.add(cid)
-                if arith:
-                    pos = _decode_lossless_arith_scan(
-                        payload, pos + 2 + seg_len, loss, scan_comps,
-                        scan_tables, dc_cond, restart_interval,
-                        pred_sel, pt,
-                    )
-                else:
-                    pos = _decode_lossless_scan(
-                        payload, pos + 2 + seg_len, loss, scan_comps,
-                        scan_tables, huff_dc, restart_interval,
-                        pred_sel, pt,
-                    )
-                continue
-            if arith:
-                for cid in scan_comps:
-                    if scan_tables[cid][0] > 3 or scan_tables[cid][1] > 3:
-                        raise ValueError(
-                            "JPEG arithmetic conditioning table id > 3")
-                if progressive:
-                    ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-                    ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
-                    pos = _decode_arith_progressive_scan(
-                        payload, pos + 2 + seg_len, prog, scan_comps,
-                        scan_tables, dc_cond, ac_cond, restart_interval,
-                        ss, se, ah, al,
-                    )
-                    continue
-                if seq is None and set(scan_comps) == {
-                    c[0] for c in frame[2]
-                }:
-                    # single-scan arithmetic file (the common case)
-                    return _decode_arith_scan(
-                        payload, pos + 2 + seg_len, frame, scan_tables,
-                        qt, dc_cond, ac_cond, restart_interval,
-                        _resolve_color(frame[2], adobe), dct_prec,
-                    )
-                # multi-scan sequential arithmetic: accumulate like the
-                # Huffman multi-scan path and finalize at EOI
-                if seq is None:
-                    seq = _ProgState(*frame, dct_prec)
-                for cid in scan_comps:
-                    if cid in seq_done:
-                        raise ValueError(
-                            "JPEG component delivered by two sequential "
-                            "scans"
-                        )
-                    seq_done.add(cid)
-                pos = _decode_arith_sequential_scan(
-                    payload, pos + 2 + seg_len, seq, scan_comps,
-                    scan_tables, dc_cond, ac_cond, restart_interval,
+                pos = _decode_lossless_scan(
+                    ent, loss, scan_comps, scan_tables, restart_interval,
+                    pred_sel, pt,
                 )
                 continue
-            if not progressive:
-                if seq is None and set(scan_comps) == {
-                    c[0] for c in frame[2]
-                }:
-                    # single-scan file (the common case): one-pass decode
-                    return _decode_scan(
-                        payload, pos + 2 + seg_len, frame, scan_tables,
-                        qt, huff_dc, huff_ac, restart_interval,
-                        _resolve_color(frame[2], adobe), dct_prec,
-                    )
-                # MULTI-SCAN sequential (r10): each scan delivers the
-                # full 64 coefficients for a SUBSET of components --
-                # accumulate into the shared coefficient state and
-                # finalize at EOI, exactly like progressive
-                if seq is None:
-                    seq = _ProgState(*frame, dct_prec)
-                for cid in scan_comps:
-                    if cid in seq_done:
-                        raise ValueError(
-                            "JPEG component delivered by two sequential "
-                            "scans"
-                        )
-                    seq_done.add(cid)
-                pos = _decode_sequential_scan(
-                    payload, pos + 2 + seg_len, seq, scan_comps,
-                    scan_tables, huff_dc, huff_ac, restart_interval,
+            if progressive:
+                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
+                ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
+                pos = _decode_progressive_scan(
+                    ent, prog, scan_comps, scan_tables, restart_interval,
+                    ss, se, ah, al,
                 )
                 continue
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
-            pos = _decode_progressive_scan(
-                payload, pos + 2 + seg_len, prog, scan_comps, scan_tables,
-                huff_dc, huff_ac, restart_interval, ss, se, ah, al,
+            if seq is None and set(scan_comps) == {c[0] for c in frame[2]}:
+                # single-scan file (the common case): one-pass decode
+                return _decode_scan(
+                    ent, frame, scan_tables, qt, restart_interval,
+                    _resolve_color(frame[2], adobe), dct_prec,
+                )
+            # MULTI-SCAN sequential (r10): each scan delivers the full 64
+            # coefficients for a SUBSET of components -- accumulate into
+            # the shared coefficient state and finalize at EOI, exactly
+            # like progressive
+            if seq is None:
+                seq = _ProgState(*frame, dct_prec)
+            for cid in scan_comps:
+                if cid in seq_done:
+                    raise ValueError(
+                        "JPEG component delivered by two sequential scans"
+                    )
+                seq_done.add(cid)
+            pos = _decode_sequential_scan(
+                ent, seq, scan_comps, scan_tables, restart_interval,
             )
             continue
         pos += 2 + seg_len
@@ -521,8 +672,12 @@ def _resolve_color(comps, adobe: int | None) -> str:
     return "cmyk"
 
 
-def _decode_scan(data, pos, frame, scan_tables, qt, huff_dc, huff_ac,
-                 restart_interval, color, prec=8):
+def _decode_scan(ent, frame, scan_tables, qt, restart_interval, color,
+                 prec=8):
+    """Single-scan sequential frame (every component in one scan): each
+    data unit dequantizes and IDCTs straight into its plane, under the
+    shared MAX_PIXELS cap rather than the multi-scan path's stricter
+    coefficient-store cap. ``ent``: the scan's entropy decoder."""
     h, w, comps = frame
     if h <= 0 or w <= 0:
         raise ValueError("degenerate JPEG dimensions")
@@ -557,34 +712,29 @@ def _decode_scan(data, pos, frame, scan_tables, qt, huff_dc, huff_ac,
         planes[cid] = scratch(
             f"jpeg.seq_plane.{cid}",
             (mcus_y * vs * 8, mcus_x * hs * 8), np.float64)
-    br = _BitReader(data, pos)
-    pred = {cid: 0 for cid, *_ in comps}
     mcu_count = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                _expect_rst(br, data)
-                pred = {cid: 0 for cid in pred}
+                ent.restart()
             for cid, hs, vs, tq in comps:
-                try:
-                    dc_t = huff_dc[scan_tables[cid][0]]
-                    ac_t = huff_ac[scan_tables[cid][1]]
-                    q = qt[tq]
-                except KeyError as exc:
-                    raise ValueError("JPEG references missing table") from exc
+                q = qt.get(tq)
+                if q is None:
+                    raise ValueError("JPEG references missing table")
+                dc_tid, ac_tid = scan_tables[cid]
                 for by in range(vs):
                     for bx in range(hs):
-                        try:
-                            block = _decode_block(br, dc_t, ac_t, q, pred,
-                                                  cid, prec)
-                        except _MarkerHit as exc:
-                            raise ValueError(
-                                f"JPEG scan data ended early "
-                                f"(marker {exc.marker:#x})"
-                            ) from exc
+                        zz = ent.data_unit(cid, dc_tid, ac_tid, prec)
+                        # int64 product: a crafted stream can hold DC at
+                        # the 2^26 guard limit with a 16-bit quant entry
+                        # (2^42 product), which an int32 store would
+                        # silently wrap into corrupt pixels
+                        block = np.zeros(64, np.int64)
+                        block[_ZIGZAG] = zz * q
                         y0 = (my * vs + by) * 8
                         x0 = (mx * hs + bx) * 8
-                        planes[cid][y0 : y0 + 8, x0 : x0 + 8] = block
+                        planes[cid][y0 : y0 + 8, x0 : x0 + 8] = _idct2(
+                            block.reshape(8, 8))
             mcu_count += 1
     return _assemble(planes, comps, h, w, hmax, vmax, color, prec)
 
@@ -704,11 +854,13 @@ class _ProgState:
         self.n_scans = 0
 
 
-def _decode_progressive_scan(data, pos, prog, scan_comps, scan_tables,
-                             huff_dc, huff_ac, restart_interval,
-                             ss, se, ah, al, differential=False) -> int:
-    """Decode one progressive scan into ``prog``; returns the byte
-    position of the next marker after the entropy-coded data."""
+def _decode_progressive_scan(ent, prog, scan_comps, scan_tables,
+                             restart_interval, ss, se, ah, al,
+                             differential=False) -> int:
+    """Decode one progressive scan into ``prog`` through the entropy
+    decoder ``ent`` (T.81 G.1.2 Huffman or G.2 arithmetic: same scan
+    geometry, same point transform); returns the byte position of the
+    next marker after the entropy-coded data."""
     prog.n_scans += 1
     if prog.n_scans > _PROG_MAX_SCANS:
         # a legal encoder emits ~10 scans; the cap bounds total decode
@@ -719,33 +871,78 @@ def _decode_progressive_scan(data, pos, prog, scan_comps, scan_tables,
         raise ValueError("too many JPEG scans")
     if not (0 <= ss <= se <= 63) or ah > 13 or al > 13:
         raise ValueError("invalid JPEG progressive scan parameters")
-    known = {c[0] for c in prog.comps}
+    _check_scan_comps(prog, scan_comps)
+    if ss == 0:
+        if se != 0:
+            raise ValueError("JPEG DC scan with nonzero Se")
+
+        def unit(cid, by, bx):
+            arr = prog.coefs[cid]
+            if ah == 0:  # first DC scan: diff coding, point transform <<Al
+                v = ent.dc_diff(cid, scan_tables[cid][0], prog.prec,
+                                differential) << al
+                if not -(1 << 30) <= v <= (1 << 30):
+                    # a legal 8-bit DC is |coef| <= 2047 and Al <= 13, so
+                    # |v| < 2^24 (12-bit: |diff| <= 32767 -> |v| < 2^28)
+                    raise ValueError("JPEG DC predictor out of range")
+                arr[by, bx, 0] = v
+            elif ent.dc_refine():  # refinement: one bit, ORed at Al
+                # two's-complement OR appends the magnitude bit for
+                # either sign
+                arr[by, bx, 0] |= np.int32(1 << al)
+
+        _walk_units(ent, prog, scan_comps, restart_interval, unit)
+    else:
+        if len(scan_comps) != 1:
+            raise ValueError("JPEG AC scan must be single-component")
+        ac_tid = scan_tables[scan_comps[0]][1]
+        band = ent.ac_band if ah == 0 else ent.ac_refine_band
+
+        def unit(cid, by, bx):
+            band(ac_tid, prog.coefs[cid][by, bx], ss, se, al)
+
+        _walk_units(ent, prog, scan_comps, restart_interval, unit)
+    return _skip_to_marker(ent)
+
+
+def _check_scan_comps(state, scan_comps) -> None:
+    known = {c[0] for c in state.comps}
     for cid in scan_comps:
         if cid not in known:
             raise ValueError("JPEG scan references unknown component")
-    br = _BitReader(data, pos)
-    try:
-        if ss == 0:
-            if se != 0:
-                raise ValueError("JPEG DC scan with nonzero Se")
-            _decode_prog_dc(br, prog, scan_comps, scan_tables, huff_dc,
-                            restart_interval, ah, al, differential)
-        else:
-            if len(scan_comps) != 1:
-                raise ValueError("JPEG AC scan must be single-component")
-            _decode_prog_ac(br, prog, scan_comps[0], scan_tables, huff_ac,
-                            restart_interval, ss, se, ah, al)
-    except _MarkerHit as exc:
-        raise ValueError(
-            f"JPEG scan data ended early (marker {exc.marker:#x})"
-        ) from exc
-    return _skip_to_marker(data, br.pos)
 
 
-def _skip_to_marker(data: bytes, p: int) -> int:
-    """Skip pad bits / fill bytes / stray trailing restart markers to
-    the next real marker after a scan's entropy-coded data (shared by
-    the progressive and multi-scan sequential paths)."""
+def _walk_units(ent, state, scan_comps, restart_interval, unit) -> None:
+    """Visit one scan's data units in T.81 A.2 order, calling
+    ``unit(cid, block_row, block_col)`` and restarting ``ent`` every
+    ``restart_interval`` MCUs: an interleaved scan walks the frame MCU
+    grid with hs x vs blocks per component; a single-component scan is
+    non-interleaved over that component's TRUE block grid."""
+    comps = [c for c in state.comps if c[0] in scan_comps]
+    if len(comps) > 1:  # interleaved: MCU order, hs x vs blocks each
+        for u in range(state.mcus_y * state.mcus_x):
+            if restart_interval and u and u % restart_interval == 0:
+                ent.restart()
+            my, mx = divmod(u, state.mcus_x)
+            for cid, hs, vs, _tq in comps:
+                for by in range(vs):
+                    for bx in range(hs):
+                        unit(cid, my * vs + by, mx * hs + bx)
+    else:  # single component: non-interleaved, true component grid
+        cid = comps[0][0]
+        nby, nbx = state.nblocks[cid]
+        for u in range(nby * nbx):
+            if restart_interval and u and u % restart_interval == 0:
+                ent.restart()
+            by, bx = divmod(u, nbx)
+            unit(cid, by, bx)
+
+
+def _skip_to_marker(ent) -> int:
+    """Skip pad bits / fill bytes / stray trailing restart markers from
+    where ``ent`` stopped to the next real marker after a scan's
+    entropy-coded data (shared by the multi-scan drivers)."""
+    data, p = ent.data, ent.end_pos
     while p + 1 < len(data):
         if data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF):
             if 0xD0 <= data[p + 1] <= 0xD7:
@@ -756,256 +953,27 @@ def _skip_to_marker(data: bytes, p: int) -> int:
     return len(data)
 
 
-def _decode_sequential_scan(data, pos, seq, scan_comps, scan_tables,
-                            huff_dc, huff_ac, restart_interval,
-                            differential=False) -> int:
-    """One scan of a MULTI-SCAN sequential (SOF0/1) file: each block of
-    the scan's components delivers its full 64 coefficients (DC diff +
-    AC run-length, T.81 F.2.2), stored at zigzag indices in the shared
-    coefficient state for the common finalize. Geometry follows the
-    progressive DC rules: an interleaved subset walks the frame MCU
-    grid with hs x vs blocks per component, a single-component scan is
-    non-interleaved over the TRUE component block grid. Returns the
-    byte position of the next marker."""
+def _decode_sequential_scan(ent, seq, scan_comps, scan_tables,
+                            restart_interval, differential=False) -> int:
+    """One scan of a MULTI-SCAN sequential file: each block of the
+    scan's components delivers its full 64 coefficients through the
+    entropy decoder ``ent`` (T.81 F.2.2 Huffman or F.2.4 arithmetic),
+    stored at zigzag indices in the shared coefficient state for the
+    common finalize. Geometry follows the progressive DC rules
+    (``_walk_units``). ``differential`` (hierarchical frames): the DC
+    is coded directly, without prediction. Returns the byte position
+    of the next marker."""
     seq.n_scans += 1
     if seq.n_scans > _PROG_MAX_SCANS:
         raise ValueError("too many JPEG scans")
-    comps = [c for c in seq.comps if c[0] in scan_comps]
-    if len(comps) != len(scan_comps):
-        raise ValueError("JPEG scan references unknown component")
-    tables = {}
-    for cid in scan_comps:
-        dc_t = huff_dc.get(scan_tables[cid][0])
-        ac_t = huff_ac.get(scan_tables[cid][1])
-        if dc_t is None or ac_t is None:
-            raise ValueError("JPEG references missing table")
-        tables[cid] = (dc_t, ac_t)
-    pred = {cid: 0 for cid in scan_comps}
-    br = _BitReader(data, pos)
-    try:
-        if len(comps) > 1:  # interleaved subset: frame MCU order
-            for u in range(seq.mcus_y * seq.mcus_x):
-                if restart_interval and u and u % restart_interval == 0:
-                    _expect_rst(br, br.data)
-                    pred = {cid: 0 for cid in pred}
-                my, mx = divmod(u, seq.mcus_x)
-                for cid, hs, vs, _tq in comps:
-                    dc_t, ac_t = tables[cid]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            _seq_unit(br, seq.coefs[cid], my * vs + by,
-                                      mx * hs + bx, dc_t, ac_t, pred, cid,
-                                      seq.prec, differential)
-        else:  # single component: non-interleaved, true component grid
-            cid, _hs, _vs, _tq = comps[0]
-            dc_t, ac_t = tables[cid]
-            nby, nbx = seq.nblocks[cid]
-            for u in range(nby * nbx):
-                if restart_interval and u and u % restart_interval == 0:
-                    _expect_rst(br, br.data)
-                    pred = {cid: 0 for cid in pred}
-                by, bx = divmod(u, nbx)
-                _seq_unit(br, seq.coefs[cid], by, bx, dc_t, ac_t, pred,
-                          cid, seq.prec, differential)
-    except _MarkerHit as exc:
-        raise ValueError(
-            f"JPEG scan data ended early (marker {exc.marker:#x})"
-        ) from exc
-    return _skip_to_marker(data, br.pos)
+    _check_scan_comps(seq, scan_comps)
 
+    def unit(cid, by, bx):
+        seq.coefs[cid][by, bx] = ent.data_unit(
+            cid, *scan_tables[cid], seq.prec, differential)
 
-def _seq_unit(br, arr, by, bx, dc_t, ac_t, pred, cid, prec=8,
-              differential=False):
-    """Full 64-coefficient decode of one sequential data unit (T.81
-    F.2.2.1-F.2.2.2) into the zigzag-ordered coefficient store.
-    ``differential`` (hierarchical SOF5 frames, r14): the DC value is
-    coded DIRECTLY -- no block-to-block prediction (T.81 F.1.1.5.1
-    sets PRED=0 in differential frames), and the magnitude category
-    may run one past the non-differential cap (tables F.1/F.6: diffs
-    of differences span twice the range)."""
-    s = dc_t.decode(br)
-    if s > _dc_ssss_max(prec) + (1 if differential else 0):
-        raise ValueError("invalid JPEG DC magnitude")
-    d = _extend(br.read(s), s)
-    if differential:
-        v = d
-    else:
-        pred[cid] += d
-        v = pred[cid]
-    if not -(1 << 26) <= v <= (1 << 26):
-        # same crafted-stream overflow guard as the progressive DC path
-        raise ValueError("JPEG DC predictor out of range")
-    block = arr[by, bx]
-    block[0] = v
-    k = 1
-    while k <= 63:
-        rs = ac_t.decode(br)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r != 15:
-                break  # EOB
-            k += 16  # ZRL
-            continue
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run past block end")
-        block[k] = _extend(br.read(s), s)
-        k += 1
-
-
-def _decode_prog_dc(br, prog, scan_comps, scan_tables, huff_dc,
-                    restart_interval, ah, al, differential=False):
-    comps = [c for c in prog.comps if c[0] in scan_comps]
-    pred = {cid: 0 for cid in scan_comps}
-    tables = {}
-    if ah == 0:
-        for cid in scan_comps:
-            tbl = huff_dc.get(scan_tables[cid][0])
-            if tbl is None:
-                raise ValueError("JPEG references missing table")
-            tables[cid] = tbl
-    if len(comps) > 1:  # interleaved: MCU order, hs x vs blocks each
-        units = prog.mcus_y * prog.mcus_x
-        for u in range(units):
-            if restart_interval and u and u % restart_interval == 0:
-                _expect_rst(br, br.data)
-                pred = {cid: 0 for cid in pred}
-            my, mx = divmod(u, prog.mcus_x)
-            for cid, hs, vs, _tq in comps:
-                for by in range(vs):
-                    for bx in range(hs):
-                        _dc_unit(br, prog.coefs[cid], my * vs + by,
-                                 mx * hs + bx, tables.get(cid), pred,
-                                 cid, ah, al, prog.prec, differential)
-    else:  # single component: non-interleaved, true component grid
-        cid, hs, vs, _tq = comps[0]
-        nby, nbx = prog.nblocks[cid]
-        for u in range(nby * nbx):
-            if restart_interval and u and u % restart_interval == 0:
-                _expect_rst(br, br.data)
-                pred = {cid: 0 for cid in pred}
-            by, bx = divmod(u, nbx)
-            _dc_unit(br, prog.coefs[cid], by, bx, tables.get(cid), pred,
-                     cid, ah, al, prog.prec, differential)
-
-
-def _dc_unit(br, arr, by, bx, tbl, pred, cid, ah, al, prec=8,
-             differential=False):
-    if ah == 0:  # first DC scan: diff coding, point transform <<Al
-        s = tbl.decode(br)
-        if s > _dc_ssss_max(prec) + (1 if differential else 0):
-            raise ValueError("invalid JPEG DC magnitude")
-        d = _extend(br.read(s), s)
-        if differential:  # hierarchical SOF6: PRED=0, value coded directly
-            v = d << al
-        else:
-            pred[cid] += d
-            v = pred[cid] << al
-        if not -(1 << 30) <= v <= (1 << 30):
-            # a legal 8-bit DC is |coef| <= 2047 and Al <= 13, so
-            # |v| < 2^24 (12-bit: |diff| <= 32767 -> |v| < 2^28); a
-            # crafted run of max diffs walks pred arbitrarily high and
-            # would overflow the int32 store (numpy 2.x raises
-            # OverflowError, escaping ValueError)
-            raise ValueError("JPEG DC predictor out of range")
-        arr[by, bx, 0] = v
-    elif br.read(1):  # refinement: one bit, ORed at position Al
-        # two's-complement OR appends the magnitude bit for either sign
-        arr[by, bx, 0] |= np.int32(1 << al)
-
-
-def _decode_prog_ac(br, prog, cid, scan_tables, huff_ac, restart_interval,
-                    ss, se, ah, al):
-    tbl = huff_ac.get(scan_tables[cid][1])
-    if tbl is None:
-        raise ValueError("JPEG references missing table")
-    nby, nbx = prog.nblocks[cid]
-    arr = prog.coefs[cid]
-    eob_run = 0
-    for u in range(nby * nbx):
-        if restart_interval and u and u % restart_interval == 0:
-            _expect_rst(br, br.data)
-            eob_run = 0
-        by, bx = divmod(u, nbx)
-        block = arr[by, bx]
-        if ah == 0:
-            eob_run = _ac_first(br, tbl, block, ss, se, al, eob_run)
-        else:
-            eob_run = _ac_refine(br, tbl, block, ss, se, al, eob_run)
-
-
-def _ac_first(br, tbl, block, ss, se, al, eob_run) -> int:
-    """First AC scan for one block (T.81 G.1.2.2): run-length coding
-    within the band, EOBn codes carry a run of all-zero-band blocks."""
-    if eob_run > 0:
-        return eob_run - 1
-    k = ss
-    while k <= se:
-        rs = tbl.decode(br)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r < 15:  # EOBn: run of 2^r + extra blocks ends here
-                eob_run = (1 << r) - 1
-                if r:
-                    eob_run += br.read(r)
-                return eob_run
-            k += 16  # ZRL
-            continue
-        k += r
-        if k > se:
-            raise ValueError("JPEG AC run past band end")
-        block[k] = _extend(br.read(s), s) << al
-        k += 1
-    return 0
-
-
-def _ac_refine(br, tbl, block, ss, se, al, eob_run) -> int:
-    """AC refinement scan for one block (T.81 G.1.2.3): newly-nonzero
-    coefficients arrive as +-1<<Al; every already-nonzero coefficient
-    passed over consumes one correction bit; zero-history coefficients
-    count toward the run."""
-    p1 = 1 << al
-    m1 = -1 << al
-    k = ss
-    if eob_run == 0:
-        while k <= se:
-            rs = tbl.decode(br)
-            r, s = rs >> 4, rs & 15
-            val = 0
-            if s == 0:
-                if r < 15:
-                    eob_run = 1 << r
-                    if r:
-                        eob_run += br.read(r)
-                    break
-                # r == 15: ZRL -- skip 16 zero-history coefficients
-            else:
-                if s != 1:
-                    raise ValueError("invalid JPEG refinement magnitude")
-                val = p1 if br.read(1) else m1
-            while k <= se:
-                c = int(block[k])
-                if c != 0:
-                    # correction bit for a nonzero-history coefficient
-                    if br.read(1) and (c & p1) == 0:
-                        block[k] = c + (p1 if c >= 0 else m1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if val and k <= se:
-                block[k] = val
-            k += 1
-    if eob_run > 0:
-        # inside an EOB run: only correction bits for nonzero history
-        while k <= se:
-            c = int(block[k])
-            if c != 0 and br.read(1) and (c & p1) == 0:
-                block[k] = c + (p1 if c >= 0 else m1)
-            k += 1
-        eob_run -= 1
-    return eob_run
+    _walk_units(ent, seq, scan_comps, restart_interval, unit)
+    return _skip_to_marker(ent)
 
 
 def _finalize_progressive(prog: _ProgState, qt,
@@ -1069,9 +1037,9 @@ def _predict_lossless(plane, x: int, y: int, first_line: int,
     """The H.1.2.1 prediction for a NON-initial sample (the caller
     handles the scan-start/post-restart default): first line of the
     current restart interval predicts from Ra, the first column from
-    Rb, interior samples by the scan's selected predictor 1-7. Shared
-    verbatim by the Huffman (SOF3) and arithmetic (SOF11) drivers --
-    prediction is entropy-independent in T.81."""
+    Rb, interior samples by the scan's selected predictor 1-7.
+    Prediction is entropy-independent in T.81: Huffman (SOF3) and
+    arithmetic (SOF11) scans share it."""
     if y == first_line:
         return int(plane[y, x - 1])
     if x == 0:
@@ -1094,30 +1062,30 @@ def _predict_lossless(plane, x: int, y: int, first_line: int,
     return (ra + rb) >> 1
 
 
-def _decode_lossless_scan(data, pos, loss, scan_comps, scan_tables,
-                          huff_dc, restart_interval, pred_sel, pt,
+def _decode_lossless_scan(ent, loss, scan_comps, scan_tables,
+                          restart_interval, pred_sel, pt,
                           differential=False) -> int:
-    """One lossless (SOF3) scan per T.81 Annex H: samples raster-scan
-    in MCU order (one sample per scan component per MCU -- sampling
-    factors are all 1x1 by the SOF gate), each coded as a Huffman
-    SSSS magnitude category from a DC table + that many raw bits
-    (category 16 means +32768 with no bits, H.2), reconstructed as
-    ``(prediction + diff) mod 2^16``. Prediction (H.1.2.1): the very
-    first sample -- and the first after every restart -- predicts from
-    the default ``2^(P-Pt-1)``; the rest of the first line *of the
-    scan and of every restart interval* uses Ra (left, the
-    one-dimensional horizontal predictor); on later lines the first
-    column uses Rb (above) and interior samples use the scan's
-    selected predictor 1-7. Returns the byte position of the next
-    marker.
+    """One lossless scan per T.81 Annex H: samples raster-scan in MCU
+    order (one sample per scan component per MCU -- sampling factors
+    are all 1x1 by the SOF gate), each difference decoded by the
+    entropy decoder ``ent`` (H.2 Huffman SSSS categories, or the
+    H.1.2.2 arithmetic model conditioned on the neighbours'
+    differences) and reconstructed as ``(prediction + diff) mod 2^16``.
+    Prediction (H.1.2.1): the very first sample -- and the first after
+    every restart -- predicts from the default ``2^(P-Pt-1)``; the rest
+    of the first line *of the scan and of every restart interval* uses
+    Ra (left, the one-dimensional horizontal predictor); on later lines
+    the first column uses Rb (above) and interior samples use the
+    scan's selected predictor 1-7. Returns the byte position of the
+    next marker.
 
-    ``differential`` (hierarchical SOF7 frames, r14): no prediction at
-    all -- T.81 H.2 disables the predictor in differential frames (the
-    SOS Ss field shall be 0), the coded values ARE the mod-2^16
-    differences against the (expanded) reference, and the point
-    transform must be 0 (this decoder's documented hierarchical
-    restriction -- a nonzero Pt would scale diffs and references
-    differently)."""
+    ``differential`` (hierarchical SOF7/SOF15 frames, r14): no
+    prediction at all -- T.81 H.2 disables the predictor in
+    differential frames (the SOS Ss field shall be 0), the coded values
+    ARE the mod-2^16 differences against the (expanded) reference, and
+    the point transform must be 0 (this decoder's documented
+    hierarchical restriction -- a nonzero Pt would scale diffs and
+    references differently)."""
     if differential:
         if pred_sel != 0:
             raise ValueError(
@@ -1131,114 +1099,23 @@ def _decode_lossless_scan(data, pos, loss, scan_comps, scan_tables,
     if pt >= loss.prec:
         raise ValueError("lossless JPEG point transform >= precision")
     known = {c[0] for c in loss.comps}
-    tables = {}
     for cid in scan_comps:
         if cid not in known:
             raise ValueError("JPEG scan references unknown component")
         loss.pt[cid] = pt
-        t = huff_dc.get(scan_tables[cid][0])
-        if t is None:
-            raise ValueError("JPEG references missing table")
-        tables[cid] = t
+    units = [(cid, scan_tables[cid][0], loss.planes[cid])
+             for cid in scan_comps]
     default = 1 << (loss.prec - pt - 1)
-    br = _BitReader(data, pos)
     fresh = dict.fromkeys(scan_comps, True)  # scan start / post-RST
     first_line = 0  # row where the current restart interval began
     mcu = 0
-    try:
-        for y in range(loss.h):
-            for x in range(loss.w):
-                if restart_interval and mcu and mcu % restart_interval == 0:
-                    _expect_rst(br, data)
-                    fresh = dict.fromkeys(scan_comps, True)
-                    first_line = y
-                for cid in scan_comps:
-                    plane = loss.planes[cid]
-                    if differential:
-                        px = 0  # no prediction in differential frames
-                    elif fresh[cid]:
-                        px = default
-                        fresh[cid] = False
-                    else:
-                        px = _predict_lossless(plane, x, y, first_line,
-                                               pred_sel)
-                    s = tables[cid].decode(br)
-                    if s > 16:
-                        raise ValueError("invalid lossless JPEG magnitude")
-                    diff = 32768 if s == 16 else _extend(br.read(s), s)
-                    plane[y, x] = (px + diff) & 0xFFFF
-                mcu += 1
-    except _MarkerHit as exc:
-        raise ValueError(
-            f"JPEG scan data ended early (marker {exc.marker:#x})"
-        ) from exc
-    return _skip_to_marker(data, br.pos)
-
-
-def _decode_lossless_arith_scan(data, pos, loss, scan_comps, scan_tables,
-                                dc_cond, restart_interval, pred_sel,
-                                pt, differential=False) -> int:
-    """One LOSSLESS ARITHMETIC (SOF11) scan: identical sample order,
-    prediction (via :func:`_predict_lossless`) and mod-2^16
-    reconstruction as the Huffman driver, with the entropy layer
-    replaced by the Annex H QM model (operators.jpeg_arith.
-    ArithLossless): each difference decodes under the 5x5 conditioning
-    of the classes of the differences coded at the left and above
-    neighbours. Class state: ``up_cls`` holds the class coded at
-    (x, y-1) within the CURRENT restart interval, ``left`` the class at
-    (x-1, y); both are zero at the scan start, at row starts (left),
-    and after every restart -- a restart discards the decoder
-    registers, every statistics area, the predictions AND the
-    neighbour classes (F.2.1.3.1 extended per H.1.1). Returns the byte
-    position of the next marker. ``differential``: same hierarchical
-    SOF15 semantics as the Huffman twin (predictor 0, Pt 0, values are
-    mod-2^16 differences; the class conditioning is untouched -- it
-    tracks coded values, not predictions)."""
-    from .jpeg_arith import ArithLossless
-
-    if differential:
-        if pred_sel != 0:
-            raise ValueError(
-                "differential lossless JPEG scan must carry predictor 0")
-        if pt != 0:
-            raise ValueError(
-                "nonzero point transform unsupported in differential "
-                "lossless JPEG")
-    elif not (1 <= pred_sel <= 7):
-        raise ValueError("invalid lossless JPEG predictor")
-    if pt >= loss.prec:
-        raise ValueError("lossless JPEG point transform >= precision")
-    known = {c[0] for c in loss.comps}
-    tids = {}
-    for cid in scan_comps:
-        if cid not in known:
-            raise ValueError("JPEG scan references unknown component")
-        loss.pt[cid] = pt
-        tid = scan_tables[cid][0]
-        if tid > 3:
-            raise ValueError("JPEG arithmetic conditioning table id > 3")
-        tids[cid] = tid
-    default = 1 << (loss.prec - pt - 1)
-    ent = ArithLossless(data, pos, dc_cond)
-    fresh = dict.fromkeys(scan_comps, True)
-    first_line = 0
-    up_cls = {cid: np.zeros(loss.w, np.uint8) for cid in scan_comps}
-    left_cls = dict.fromkeys(scan_comps, 0)
-    mcu = 0
     for y in range(loss.h):
-        for cid in scan_comps:
-            left_cls[cid] = 0  # row start: the a-difference is 0
         for x in range(loss.w):
             if restart_interval and mcu and mcu % restart_interval == 0:
-                nxt = _expect_arith_rst(data, ent)
-                ent = ArithLossless(data, nxt, dc_cond)
+                ent.restart()
                 fresh = dict.fromkeys(scan_comps, True)
                 first_line = y
-                for cid in scan_comps:
-                    up_cls[cid][:] = 0
-                    left_cls[cid] = 0
-            for cid in scan_comps:
-                plane = loss.planes[cid]
+            for cid, tid, plane in units:
                 if differential:
                     px = 0  # no prediction in differential frames
                 elif fresh[cid]:
@@ -1247,16 +1124,9 @@ def _decode_lossless_arith_scan(data, pos, loss, scan_comps, scan_tables,
                 else:
                     px = _predict_lossless(plane, x, y, first_line,
                                            pred_sel)
-                d, cls = ent.diff(tids[cid], left_cls[cid],
-                                  int(up_cls[cid][x]))
-                plane[y, x] = (px + d) & 0xFFFF
-                up_cls[cid][x] = cls
-                left_cls[cid] = cls
+                plane[y, x] = (px + ent.diff(cid, tid, x)) & 0xFFFF
             mcu += 1
-    p_end = ent.dec.marker_pos
-    if p_end is None:
-        p_end = ent.dec.pos
-    return _skip_to_marker(data, p_end)
+    return _skip_to_marker(ent)
 
 
 def _finalize_lossless(loss: _LosslessState,
@@ -1286,251 +1156,3 @@ def _finalize_lossless(loss: _LosslessState,
         out = out * (255.0 / float((1 << prec) - 1))
     return (loss.w, loss.h,
             np.clip(np.round(out), 0, 255).astype(np.uint8))
-
-
-def _expect_rst(br: _BitReader, data: bytes) -> None:
-    br.align()
-    if (br.pos + 1 >= len(data) or data[br.pos] != 0xFF
-            or not (0xD0 <= data[br.pos + 1] <= 0xD7)):
-        raise ValueError("expected JPEG restart marker")
-    br.pos += 2
-
-
-def _decode_block(br, dc_t, ac_t, q, pred, cid, prec=8) -> np.ndarray:
-    coef = np.zeros(64, np.int32)
-    s = dc_t.decode(br)
-    if s > _dc_ssss_max(prec):
-        raise ValueError("invalid JPEG DC magnitude")
-    pred[cid] += _extend(br.read(s), s)
-    if not -(1 << 26) <= pred[cid] <= (1 << 26):
-        # legal |DC| <= 2047; a crafted max-diff run would overflow the
-        # int32 store (OverflowError on numpy 2.x, escaping ValueError)
-        raise ValueError("JPEG DC predictor out of range")
-    coef[0] = pred[cid]
-    k = 1
-    while k < 64:
-        rs = ac_t.decode(br)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if rs == 0xF0:  # ZRL: sixteen zeros
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run past block end")
-        coef[k] = _extend(br.read(s), s)
-        k += 1
-    # int64 product: a crafted stream can hold DC at the 2^26 guard
-    # limit with a 16-bit quant entry (2^42 product), which an int32
-    # store would silently wrap into corrupt pixels -- the progressive
-    # finalize upcasts for the same reason (r11 review)
-    block = np.zeros(64, np.int64)
-    block[_ZIGZAG] = coef.astype(np.int64) * q
-    return _idct2(block.reshape(8, 8))
-
-
-# ------------------------------------------------- arithmetic (SOF9)
-
-def _expect_arith_rst(data: bytes, ent: "ArithEntropy | ArithLossless") -> int:
-    """Locate and consume the restart marker terminating the current
-    arithmetic entropy segment; returns the byte position AFTER it.
-    ``ent`` is either entropy wrapper (DCT or lossless) -- only the
-    shared ``.dec`` QM decoder is touched (r14 advice: the lossless
-    scan driver passes ArithLossless here).
-    Unlike the Huffman path there is no bit buffer to align: the QM
-    decoder stops feeding at the first marker (or may not have consumed
-    up to it -- the encoder's flush padding is legal residue), so scan
-    forward past stuffed/fill bytes to the next true marker."""
-    p = ent.dec.marker_pos
-    if p is None:
-        p = ent.dec.pos
-    while p + 1 < len(data) and not (
-        data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF)
-    ):
-        p += 1
-    if p + 1 >= len(data) or not (0xD0 <= data[p + 1] <= 0xD7):
-        raise ValueError("expected JPEG restart marker")
-    return p + 2
-
-
-def _decode_arith_scan(data, pos, frame, scan_tables, qt, dc_cond, ac_cond,
-                       restart_interval, color, prec=8):
-    """Single-scan arithmetic (SOF9) frame: mirror of ``_decode_scan``
-    with the QM entropy layer in place of Huffman tables. A restart
-    boundary discards the WHOLE entropy state -- decoder registers,
-    every statistics area, DC predictions and conditioning contexts
-    (T.81 F.2.1.3.1) -- by constructing a fresh ``ArithEntropy``."""
-    h, w, comps = frame
-    if h <= 0 or w <= 0:
-        raise ValueError("degenerate JPEG dimensions")
-    from .gif import MAX_PIXELS
-
-    if h * w > MAX_PIXELS:
-        raise ValueError("JPEG dimensions exceed the decode cap")
-    if len(comps) == 1:
-        # same non-interleaved single-component rule as _decode_scan
-        cid0, _hs0, _vs0, tq0 = comps[0]
-        comps = [(cid0, 1, 1, tq0)]
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    # pooled plane buffers -- same full-coverage argument as
-    # _decode_scan's (every MCU block written, zeros never read)
-    from .scratch import scratch
-
-    planes = {}
-    for cid, hs, vs, _tq in comps:
-        planes[cid] = scratch(
-            f"jpeg.seq_plane.{cid}",
-            (mcus_y * vs * 8, mcus_x * hs * 8), np.float64)
-    ent = ArithEntropy(data, pos, dc_cond, ac_cond)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                nxt = _expect_arith_rst(data, ent)
-                ent = ArithEntropy(data, nxt, dc_cond, ac_cond)
-            for cid, hs, vs, tq in comps:
-                try:
-                    q = qt[tq]
-                except KeyError as exc:
-                    raise ValueError(
-                        "JPEG references missing table") from exc
-                dc_tid, ac_tid = scan_tables[cid]
-                for by in range(vs):
-                    for bx in range(hs):
-                        zz = ent.data_unit(cid, dc_tid, ac_tid, prec)
-                        block = np.zeros(64, np.int64)
-                        block[_ZIGZAG] = zz * q
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        planes[cid][y0:y0 + 8, x0:x0 + 8] = _idct2(
-                            block.reshape(8, 8))
-            mcu_count += 1
-    return _assemble(planes, comps, h, w, hmax, vmax, color, prec)
-
-
-def _decode_arith_sequential_scan(data, pos, seq, scan_comps, scan_tables,
-                                  dc_cond, ac_cond, restart_interval,
-                                  differential=False) -> int:
-    """One scan of a MULTI-SCAN arithmetic sequential file: mirror of
-    ``_decode_sequential_scan`` storing zigzag coefficients into the
-    shared state for the common finalize. Returns the byte position of
-    the next marker."""
-    seq.n_scans += 1
-    if seq.n_scans > _PROG_MAX_SCANS:
-        raise ValueError("too many JPEG scans")
-    comps = [c for c in seq.comps if c[0] in scan_comps]
-    if len(comps) != len(scan_comps):
-        raise ValueError("JPEG scan references unknown component")
-    ent = ArithEntropy(data, pos, dc_cond, ac_cond)
-
-    def restart() -> ArithEntropy:
-        return ArithEntropy(
-            data, _expect_arith_rst(data, ent), dc_cond, ac_cond)
-
-    if len(comps) > 1:  # interleaved subset: frame MCU order
-        for u in range(seq.mcus_y * seq.mcus_x):
-            if restart_interval and u and u % restart_interval == 0:
-                ent = restart()
-            my, mx = divmod(u, seq.mcus_x)
-            for cid, hs, vs, _tq in comps:
-                dc_tid, ac_tid = scan_tables[cid]
-                for by in range(vs):
-                    for bx in range(hs):
-                        seq.coefs[cid][my * vs + by, mx * hs + bx][:] = (
-                            ent.data_unit(cid, dc_tid, ac_tid, seq.prec,
-                                          differential))
-    else:  # single component: non-interleaved, true component grid
-        cid, _hs, _vs, _tq = comps[0]
-        dc_tid, ac_tid = scan_tables[cid]
-        nby, nbx = seq.nblocks[cid]
-        for u in range(nby * nbx):
-            if restart_interval and u and u % restart_interval == 0:
-                ent = restart()
-            by, bx = divmod(u, nbx)
-            seq.coefs[cid][by, bx][:] = ent.data_unit(
-                cid, dc_tid, ac_tid, seq.prec, differential)
-    p = ent.dec.marker_pos
-    return _skip_to_marker(data, ent.dec.pos if p is None else p)
-
-
-def _decode_arith_progressive_scan(data, pos, prog, scan_comps, scan_tables,
-                                   dc_cond, ac_cond, restart_interval,
-                                   ss, se, ah, al,
-                                   differential=False) -> int:
-    """One progressive-arithmetic (SOF10) scan into ``prog``: the T.81
-    G.2 statistical models over the Annex G scan geometry (same MCU /
-    true-component-grid rules as the Huffman progressive path). Every
-    scan -- and every restart interval within one -- starts from fresh
-    statistics, a fresh decoder, and zeroed DC predictions (F.2.1.3.1).
-    Returns the byte position of the next marker."""
-    prog.n_scans += 1
-    if prog.n_scans > _PROG_MAX_SCANS:
-        raise ValueError("too many JPEG scans")
-    if not (0 <= ss <= se <= 63) or ah > 13 or al > 13:
-        raise ValueError("invalid JPEG progressive scan parameters")
-    known = {c[0] for c in prog.comps}
-    for cid in scan_comps:
-        if cid not in known:
-            raise ValueError("JPEG scan references unknown component")
-    ent = ArithEntropy(data, pos, dc_cond, ac_cond)
-
-    def restart() -> ArithEntropy:
-        return ArithEntropy(
-            data, _expect_arith_rst(data, ent), dc_cond, ac_cond)
-
-    if ss == 0:
-        if se != 0:
-            raise ValueError("JPEG DC scan with nonzero Se")
-        comps = [c for c in prog.comps if c[0] in scan_comps]
-
-        def dc_unit(cid, dc_tid, arr, by, bx):
-            if ah == 0:  # first DC scan: diff model, point transform
-                v = ent.dc_diff(cid, dc_tid, prog.prec,
-                                differential) << al
-                if not -(1 << 30) <= v <= (1 << 30):
-                    raise ValueError("JPEG DC predictor out of range")
-                arr[by, bx, 0] = v
-            elif ent.dc_refine():  # one fixed-estimate decision
-                arr[by, bx, 0] |= np.int32(1 << al)
-
-        if len(comps) > 1:  # interleaved: MCU order
-            for u in range(prog.mcus_y * prog.mcus_x):
-                if restart_interval and u and u % restart_interval == 0:
-                    ent = restart()
-                my, mx = divmod(u, prog.mcus_x)
-                for cid, hs, vs, _tq in comps:
-                    for by in range(vs):
-                        for bx in range(hs):
-                            dc_unit(cid, scan_tables[cid][0],
-                                    prog.coefs[cid], my * vs + by,
-                                    mx * hs + bx)
-        else:  # single component: true component grid
-            cid, _hs, _vs, _tq = comps[0]
-            nby, nbx = prog.nblocks[cid]
-            for u in range(nby * nbx):
-                if restart_interval and u and u % restart_interval == 0:
-                    ent = restart()
-                by, bx = divmod(u, nbx)
-                dc_unit(cid, scan_tables[cid][0], prog.coefs[cid], by, bx)
-    else:
-        if len(scan_comps) != 1:
-            raise ValueError("JPEG AC scan must be single-component")
-        cid = scan_comps[0]
-        ac_tid = scan_tables[cid][1]
-        nby, nbx = prog.nblocks[cid]
-        arr = prog.coefs[cid]
-        for u in range(nby * nbx):
-            if restart_interval and u and u % restart_interval == 0:
-                ent = restart()
-            by, bx = divmod(u, nbx)
-            if ah == 0:
-                ent.ac_band(ac_tid, arr[by, bx], ss, se, al)
-            else:
-                ent.ac_refine_band(ac_tid, arr[by, bx], ss, se, al)
-    p = ent.dec.marker_pos
-    return _skip_to_marker(data, ent.dec.pos if p is None else p)

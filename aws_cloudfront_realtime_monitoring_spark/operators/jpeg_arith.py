@@ -38,8 +38,10 @@ Everything here is written from the public spec:
   fixed non-adaptive sign bin.
 
 Nothing in this module touches Spark: it is pure-numpy entropy-level
-machinery the jpeg.py scan drivers call per data unit, exactly where
-the Huffman `_decode_block` sits. Reference parity: the reference
+machinery. ``ArithEntropy`` and ``ArithLossless`` have the interface of
+the Huffman decoder ``jpeg.HuffmanEntropy`` (per-unit decode calls,
+``restart()``, ``end_pos``), so jpeg.py's one scan driver per coding
+process takes either as a parameter. Reference parity: the reference
 (lambda_function.py) never decodes media — this belongs to the
 LLM-pipeline multimodal family, same contract as operators/jpeg.py.
 """
@@ -291,12 +293,56 @@ def parse_dac(seg: bytes, dc_cond: dict, ac_cond: dict) -> None:
             raise ValueError("invalid JPEG DAC table class")
 
 
-class ArithEntropy:
-    """Per-entropy-segment state for the Annex F sequential statistical
-    model: the QM decoder plus DC/AC statistics areas, DC predictions
-    and DC conditioning contexts. Restart intervals discard the whole
-    object and build a fresh one (T.81 F.2.1.3.1: RSTn resets the
-    arithmetic decoder, every statistics area, and the DC predictions).
+class _QMScan:
+    """Entropy-segment plumbing shared by the two arithmetic decoders:
+    the QM decoder over the current segment, where it stopped, and the
+    restart that starts the next one. Subclasses keep their model state
+    in ``_reset``, which a restart re-runs."""
+
+    def __init__(self, data: bytes, pos: int) -> None:
+        self.data = data
+        self._reset(pos)
+
+    def _reset(self, pos: int) -> None:
+        self.dec = QMDecoder(self.data, pos)
+
+    @property
+    def end_pos(self) -> int:
+        """Byte position where this segment's entropy data stopped: the
+        marker the decoder hit, else its read position (the encoder's
+        flush padding may end short of the marker)."""
+        p = self.dec.marker_pos
+        return self.dec.pos if p is None else p
+
+    def restart(self) -> None:
+        """Consume the restart marker ending this segment and start the
+        next with a fresh decoder and statistics (T.81 F.2.1.3.1: RSTn
+        resets the arithmetic decoder, every statistics area, and the
+        DC predictions). There is no bit buffer to align: scan forward
+        past stuffed and fill bytes to the next true marker."""
+        data, p = self.data, self.end_pos
+        while p + 1 < len(data) and not (
+            data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF)
+        ):
+            p += 1
+        if p + 1 >= len(data) or not (0xD0 <= data[p + 1] <= 0xD7):
+            raise ValueError("expected JPEG restart marker")
+        self._reset(p + 2)
+
+
+def _check_cond_ids(tids) -> None:
+    """Arithmetic conditioning tables are numbered 0-3 (T.81 B.2.4.3)."""
+    if any(t > 3 for t in tids):
+        raise ValueError("JPEG arithmetic conditioning table id > 3")
+
+
+class ArithEntropy(_QMScan):
+    """Per-scan state for the Annex F sequential and Annex G
+    progressive statistical models: the QM decoder plus DC/AC
+    statistics areas, DC predictions and DC conditioning contexts.
+    ``scan_tables`` (component id -> (DC, AC) table ids from the SOS)
+    is checked against the four conditioning tables. Same interface as
+    the Huffman decoder ``jpeg.HuffmanEntropy``.
     """
 
     #: DC statistics layout (per conditioning table): 5 context classes
@@ -310,10 +356,15 @@ class ArithEntropy:
     AC_BINS = 245
 
     def __init__(self, data: bytes, pos: int, dc_cond: dict,
-                 ac_cond: dict) -> None:
-        self.dec = QMDecoder(data, pos)
+                 ac_cond: dict, scan_tables: dict | None = None) -> None:
+        _check_cond_ids(t for pair in (scan_tables or {}).values()
+                        for t in pair)
         self.dc_cond = dc_cond
         self.ac_cond = ac_cond
+        super().__init__(data, pos)
+
+    def _reset(self, pos: int) -> None:
+        super()._reset(pos)
         self.dc_stats: dict[int, np.ndarray] = {}
         self.ac_stats: dict[int, np.ndarray] = {}
         self.fixed = np.full(1, FIXED_STATE, np.uint8)
@@ -371,8 +422,8 @@ class ArithEntropy:
                         v |= mm
                     mm >>= 1
             v += 1
-            # precision-dependent magnitude cap: the arithmetic twin of
-            # the Huffman path's `s > _dc_ssss_max(prec)` check (T.81
+            # precision-dependent magnitude cap: the same limit as
+            # HuffmanEntropy's `s > _dc_ssss_max(prec)` check (T.81
             # tables F.1/F.6: |diff| < 2^11 at 8-bit, 2^15 at 12-bit).
             # Without it a crafted stream decodes out-of-spec
             # coefficients into garbage pixels that strict mode would
@@ -489,8 +540,8 @@ class ArithEntropy:
         return zz
 
 
-class ArithLossless:
-    """Per-entropy-segment state for the Annex H LOSSLESS statistical
+class ArithLossless(_QMScan):
+    """Per-scan state for the Annex H LOSSLESS statistical
     model (T.81 H.1.2.2): the DC-difference procedure of F.2.4.1
     extended to TWO-dimensional conditioning. The zero/sign/first-
     magnitude decisions are conditioned on the 5-way classes of the
@@ -510,19 +561,42 @@ class ArithLossless:
     (X1 codes magnitude 1 and has no bits, so 115..128 never collide);
     tree 1 (b large) X at 129..143, bits at 144..157.
 
-    Restart intervals discard the whole object (same F.2.1.3.1 rule as
-    :class:`ArithEntropy`): decoder registers, statistics, and the
-    neighbour-difference classes all reset.
+    Neighbour classes, per component: ``up_cls`` maps column x to the
+    class coded at (x, y-1) within the CURRENT restart interval,
+    ``left_cls`` holds the class at (x-1, y); both read 0 at the scan
+    start and after every restart, and ``left`` also at each row start.
+    A restart resets the decoder registers, every statistics area AND
+    the neighbour classes (F.2.1.3.1 extended per H.1.1). Same
+    interface as the Huffman decoder ``jpeg.HuffmanEntropy``; only DC
+    (Tc=0) table ids in ``scan_tables`` are checked.
     """
 
     LL_BINS = 158
 
-    def __init__(self, data: bytes, pos: int, dc_cond: dict) -> None:
-        self.dec = QMDecoder(data, pos)
+    def __init__(self, data: bytes, pos: int, dc_cond: dict,
+                 scan_tables: dict | None = None) -> None:
+        _check_cond_ids(dc for dc, _ac in (scan_tables or {}).values())
         self.dc_cond = dc_cond
-        self.stats: dict[int, np.ndarray] = {}
+        super().__init__(data, pos)
 
-    def diff(self, tid: int, ca: int, cb: int) -> tuple[int, int]:
+    def _reset(self, pos: int) -> None:
+        super()._reset(pos)
+        self.stats: dict[int, np.ndarray] = {}
+        self.up_cls: dict[int, dict[int, int]] = {}
+        self.left_cls: dict[int, int] = {}
+
+    def diff(self, cid: int, tid: int, x: int) -> int:
+        """Decode component ``cid``'s prediction difference at column
+        ``x`` under the classes of its left and above neighbours, and
+        record this difference's class for the samples decoded next."""
+        up = self.up_cls.setdefault(cid, {})
+        d, cls = self._diff(tid, self.left_cls.get(cid, 0) if x else 0,
+                            up.get(x, 0))
+        up[x] = cls
+        self.left_cls[cid] = cls
+        return d
+
+    def _diff(self, tid: int, ca: int, cb: int) -> tuple[int, int]:
         """Decode one prediction difference under neighbour classes
         ``(ca, cb)``; returns ``(diff, class_code)`` where the class
         code is what a FUTURE sample conditions on for this position.

@@ -47,15 +47,13 @@ from .jpeg import (
     _ProgState,
     _ZIGZAG,
     _assemble,
-    _decode_arith_progressive_scan,
-    _decode_arith_sequential_scan,
-    _decode_lossless_arith_scan,
     _decode_lossless_scan,
     _decode_progressive_scan,
     _decode_sequential_scan,
     _parse_dht,
     _parse_dqt,
     _resolve_color,
+    _scan_entropy,
 )
 from .jpeg_arith import parse_dac
 
@@ -176,7 +174,7 @@ class _HFrame:
         #: component ids delivered by a scan; sequential/lossless frames
         #: deliver each exactly once (progressive frames revisit
         #: components across spectral/approximation scans, same posture
-        #: as the non-hierarchical twin's seq_done/loss_done sets)
+        #: as jpeg._decode_jpeg's seq_done/loss_done sets)
         self.done: set[int] = set()
 
     def comp_dims(self, cid: int) -> tuple[int, int]:
@@ -242,8 +240,8 @@ def decode_hierarchical(payload: bytes) -> tuple[int, int, np.ndarray]:
         if not frame.progressive and frame.done != {
             c[0] for c in frame.comps
         }:
-            # mirror the non-hierarchical twin's seq_done/loss_done
-            # completeness check: without it a malformed pyramid frame
+            # the same completeness check as jpeg._decode_jpeg's
+            # seq_done/loss_done: without it a malformed pyramid frame
             # with undelivered components would reconstruct them from
             # all-zero state as fabricated flat channels (r14 review)
             raise ValueError(
@@ -379,50 +377,22 @@ def decode_hierarchical(payload: bytes) -> tuple[int, int, np.ndarray]:
                             "twice")
                     frame.done.add(cid)
             frame.n_scans += 1
-            data_pos = pos + 2 + seg_len
+            ent = _scan_entropy(frame.arith, frame.lossless, payload,
+                                pos + 2 + seg_len, scan_tables, huff_dc,
+                                huff_ac, dc_cond, ac_cond)
             diff = frame.differential
             if frame.lossless:
-                if frame.arith:
-                    for cid in scan_comps:
-                        if scan_tables[cid][0] > 3:
-                            raise ValueError(
-                                "JPEG arithmetic conditioning table id > 3")
-                    pos = _decode_lossless_arith_scan(
-                        payload, data_pos, frame.state, scan_comps,
-                        scan_tables, dc_cond, restart_interval, ss, al,
-                        differential=diff)
-                else:
-                    pos = _decode_lossless_scan(
-                        payload, data_pos, frame.state, scan_comps,
-                        scan_tables, huff_dc, restart_interval, ss, al,
-                        differential=diff)
-                continue
-            if frame.arith:
-                for cid in scan_comps:
-                    if scan_tables[cid][0] > 3 or scan_tables[cid][1] > 3:
-                        raise ValueError(
-                            "JPEG arithmetic conditioning table id > 3")
-                if frame.progressive:
-                    pos = _decode_arith_progressive_scan(
-                        payload, data_pos, frame.state, scan_comps,
-                        scan_tables, dc_cond, ac_cond, restart_interval,
-                        ss, se, ah, al, differential=diff)
-                else:
-                    pos = _decode_arith_sequential_scan(
-                        payload, data_pos, frame.state, scan_comps,
-                        scan_tables, dc_cond, ac_cond, restart_interval,
-                        differential=diff)
-                continue
-            if frame.progressive:
+                pos = _decode_lossless_scan(
+                    ent, frame.state, scan_comps, scan_tables,
+                    restart_interval, ss, al, differential=diff)
+            elif frame.progressive:
                 pos = _decode_progressive_scan(
-                    payload, data_pos, frame.state, scan_comps,
-                    scan_tables, huff_dc, huff_ac, restart_interval,
-                    ss, se, ah, al, differential=diff)
+                    ent, frame.state, scan_comps, scan_tables,
+                    restart_interval, ss, se, ah, al, differential=diff)
             else:
                 pos = _decode_sequential_scan(
-                    payload, data_pos, frame.state, scan_comps,
-                    scan_tables, huff_dc, huff_ac, restart_interval,
-                    differential=diff)
+                    ent, frame.state, scan_comps, scan_tables,
+                    restart_interval, differential=diff)
             continue
         pos += 2 + seg_len
     raise ValueError("hierarchical JPEG ended without EOI")

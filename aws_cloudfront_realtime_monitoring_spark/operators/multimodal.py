@@ -627,10 +627,6 @@ def decode_image(doc_id: int, payload: bytes, strict: bool = False) -> dict:
     return fake_decode(doc_id, payload)
 
 
-#: back-compat alias (pre-r6 name, when ALL formats were stubbed)
-decode_image_stub = decode_image
-
-
 def attach_payload(docs: DataFrame) -> DataFrame:
     """Materialize an opaque binary column (here: utf-8 bytes of ``text``
     standing in for image bytes) -- the multimodal storage model: payloads

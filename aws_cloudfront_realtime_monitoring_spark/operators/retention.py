@@ -119,10 +119,11 @@ def compact_partition(
     state from a crashed prior run -- a stranded ``.compact-old`` with no
     live partition is renamed back into place; a stale ``.compact-tmp``
     or an already-swapped ``.compact-old`` is removed -- so no data is
-    ever stranded without a recovery path. A pid lockfile
-    (``.compact-lock``) keeps recovery and a LIVE concurrent run from
-    racing: a second invocation while the holder is alive raises
-    ``ValueError``; a lock left by a dead process is reclaimed.
+    ever stranded without a recovery path. An exclusive ``flock`` on a
+    hidden lock file (``.compact-lock``) keeps recovery and a LIVE
+    concurrent run from racing: a second invocation while the holder
+    runs raises ``ValueError``; the kernel releases the lock when the
+    holder exits, however it exits.
 
     NOTE: like drop_partitions_older_than, a streaming sink's
     ``_spark_metadata`` log still lists the old files; read a compacted
@@ -151,99 +152,44 @@ def compact_partition(
     # Deterministic names let a later run repair a CRASHED one -- but
     # they would also let a concurrent retry destroy a LIVE run's
     # scratch state (rmtree its tmp mid-write, "recover" .compact-old
-    # out from under its swap). A pid lockfile arbitrates: recovery and
-    # compaction only proceed when no live process holds the lock
-    # (compaction is a same-host maintenance job in this layout; table
-    # formats replace all of this with transactional commits).
-    _acquire_compact_lock(lock, partition_dir)
+    # out from under its swap). The lock arbitrates: recovery and
+    # compaction only proceed while this run holds it (compaction is a
+    # same-host maintenance job in this layout; table formats replace
+    # all of this with transactional commits).
+    fd = _acquire_compact_lock(lock, partition_dir)
     try:
         return _compact_locked(spark, partition_dir, tmp, old,
                                target_file_bytes)
     finally:
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
+        # closing releases the flock. The file itself stays: unlinking
+        # it after the unlock would let a run that opened the old inode
+        # lock it while a later run creates and locks a NEW inode at the
+        # same name -- two compactions at once
+        os.close(fd)
 
 
-def _acquire_compact_lock(lock: str, partition_dir: str) -> None:
-    """Take the pid lockfile, or raise ``ValueError`` if a live process
-    holds it.
+def _acquire_compact_lock(lock: str, partition_dir: str) -> int:
+    """Take a non-blocking exclusive ``flock`` on the lock file and return
+    its descriptor (closing it releases the lock), or raise
+    ``ValueError`` if another run holds it.
 
-    The pid is written to a private temp name FIRST and published with one
-    ``os.link`` -- the lock name never exists without its pid inside, so a
-    concurrent invocation can never read an empty lock, parse holder=0,
-    and unlink a LIVE holder (the create-then-write race of the previous
-    ``O_EXCL`` + ``os.write`` sequence). Reclaiming a dead holder's lock
-    serializes on a permanent sidecar ``flock`` (``<lock>.guard``): without
-    it, waiter B could read a dead holder, waiter C meanwhile reclaim and
-    publish its own LIVE lock, and B's unlink would then delete C's live
-    lock (two concurrent compactions). With the guard held, the
-    read-verify-unlink sequence is atomic against other reclaimers, and a
-    live lock can only appear via ``os.link`` -- which requires the name to
-    be absent, impossible while the guard holder has just observed it
-    present and nobody else may unlink it. The guard file itself is never
-    unlinked (unlinking it would re-open the classic flock-on-removed-file
-    race), so an empty ``.guard`` sidecar per partition is expected.
+    The kernel ties the lock to the open file, so a holder that exits or
+    crashes releases it, and a leftover lock file, whatever it contains,
+    blocks nobody. ``flock`` locks belong to the open file
+    description, so two threads that each ``os.open`` the file exclude
+    each other just as two processes do.
     """
     import fcntl
-    import threading
-    import time
 
-    # pid alone is NOT unique within a process: two threads would share the
-    # temp name, truncate/unlink each other's pid file mid-acquire, and die
-    # on FileNotFoundError instead of one clean refusal (caught by the r9
-    # verify drive).
-    tmp_lock = f"{lock}.{os.getpid()}.{threading.get_ident()}"
-    with open(tmp_lock, "w") as f:
-        f.write(str(os.getpid()))
-        f.flush()
-        os.fsync(f.fileno())
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
     try:
-        for _ in range(20):
-            try:
-                os.link(tmp_lock, lock)
-                return
-            except FileExistsError:
-                pass
-            # read-verify-unlink under the reclaim guard (see docstring):
-            # flock is per-fd, so a fresh os.open per attempt serializes
-            # same-process threads as well as other processes
-            guard_fd = os.open(lock + ".guard", os.O_CREAT | os.O_RDWR, 0o644)
-            try:
-                fcntl.flock(guard_fd, fcntl.LOCK_EX)
-                try:
-                    holder = int(open(lock).read().strip() or "0")
-                except FileNotFoundError:
-                    continue  # released between link and read; retry the link
-                except (OSError, ValueError):
-                    holder = 0
-                alive = False
-                if holder > 0:
-                    try:
-                        os.kill(holder, 0)
-                        alive = True
-                    except ProcessLookupError:
-                        alive = False
-                    except PermissionError:
-                        alive = True  # process exists, owned by another user
-                if alive:
-                    raise ValueError(
-                        f"compaction of {partition_dir!r} already in "
-                        f"progress (pid {holder})"
-                    )
-                try:
-                    os.unlink(lock)  # dead holder; guard makes this safe
-                except FileNotFoundError:
-                    pass
-            finally:
-                os.close(guard_fd)
-            time.sleep(0.05)
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        os.close(fd)
         raise ValueError(
-            f"could not acquire compaction lock {lock!r} after 20 attempts"
-        )
-    finally:
-        os.unlink(tmp_lock)
+            f"compaction of {partition_dir!r} already in progress"
+        ) from None
+    return fd
 
 
 def _compact_locked(spark, partition_dir, tmp, old, target_file_bytes):

@@ -35,42 +35,28 @@ ZBITS = 16
 _MASK = (1 << ZBITS) - 1
 
 
-def zorder_key(a: Column, b: Column) -> Column:
-    """Morton interleave of two non-negative ints quantized to ZBITS bits:
-    bit i of ``a`` lands at position 2i, bit i of ``b`` at 2i+1.
+def zorder_key_sql(a: str, b: str) -> str:
+    """Morton interleave of two non-negative ints quantized to ZBITS bits,
+    as portable SQL (Spark and DuckDB both parse this spelling: &, >>,
+    <<, + over BIGINTs): bit i of ``a`` lands at position 2i, bit i of
+    ``b`` at 2i+1.
 
     PRECONDITION: inputs must already fit ZBITS bits — values beyond
     2^16-1 ALIAS modulo 2^16 (v and v+65536 interleave identically),
     which silently destroys the min/max pruning the layout exists for
     (r12 review: hours-since-epoch is ~490k and ids outgrow 65535 at
-    scale). Quantize wide domains first with :func:`zorder_quantize` —
-    ``zorder_layout`` and the registry row do it for you.
-
-    Inputs cast to BIGINT first: shiftleft keeps the input column's type,
-    so an IntegerType ``b`` would overflow at bit 15 (1 << 31 = INT_MIN,
-    a negative Morton key that breaks the layout sort -- r7 code-review
-    finding, pinned by the int-column round-trip test)."""
-    a = a.cast("long").bitwiseAND(F.lit(_MASK))
-    b = b.cast("long").bitwiseAND(F.lit(_MASK))
-    out = F.lit(0).cast("long")
-    for i in range(ZBITS):
-        out = (
-            out
-            + F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i)
-            + F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    return out
-
-
-def zorder_key_sql(a: str, b: str) -> str:
-    """The identical interleave as portable SQL (Spark and DuckDB both
-    parse this spelling: &, >>, <<, + over BIGINTs)."""
+    scale). Quantize wide domains first with
+    :func:`zorder_quantize_sql` — ``zorder_layout`` and the registry row
+    do it for you."""
     terms = []
     # each term FULLY parenthesized: in Postgres-style grammars (DuckDB),
     # `+` binds tighter than `<<`, so `x << 0 + y << 1` would parse as
     # `x << (0 + y) << 1` -- an overflow, not an interleave
     for i in range(ZBITS):
-        # CAST ... AS BIGINT mirrors the Column variant's overflow guard
+        # CAST ... AS BIGINT first: a shift keeps its input's type, so an
+        # INT ``b`` would overflow at bit 15 (1 << 31 = INT_MIN, a
+        # negative Morton key that breaks the layout sort -- r7 review,
+        # pinned by the int-column round-trip test)
         terms.append(
             f"((((CAST(({a}) AS BIGINT) & {_MASK}) >> {i}) & 1) << {2 * i})"
         )
@@ -80,27 +66,15 @@ def zorder_key_sql(a: str, b: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_quantize(v: Column, vmin: int, vmax: int) -> Column:
-    """Monotone range quantization of ``v`` (known bounds, Python ints)
-    onto [0, 2^ZBITS): ``q = (v - vmin) * (2^ZBITS - 1) div span`` —
-    order-preserving, so per-file min/max tightness survives, and NO
-    aliasing however wide the domain (the raw interleave's low-bit mask
-    made v and v+65536 identical, r12 review). Integer-exact: the
-    division is spelled (x - x % span) / span, and a double division of
-    an exact multiple <= span * 65535 < 2^53 is exact (requires
-    span < 2^37; timestamps/ids are far below)."""
-    span = max(int(vmax) - int(vmin), 1)
-    if span >= 1 << 37:
-        raise ValueError("zorder_quantize: dimension span too wide")
-    x = (v.cast("long") - F.lit(int(vmin))) * F.lit(_MASK)
-    return ((x - F.pmod(x, F.lit(span))) / F.lit(span)).cast("long")
-
-
 def zorder_quantize_sql(v: str, vmin: str, vmax: str, dialect: str) -> str:
-    """The identical quantization as SQL with IN-QUERY bounds expressions
-    (a one-row stats relation): Spark spells integer division ``div``,
-    DuckDB ``//`` — both floor, and (v - vmin) is nonnegative by
-    construction so they agree."""
+    """Monotone range quantization of ``v`` onto [0, 2^ZBITS) as SQL:
+    ``q = (v - vmin) * (2^ZBITS - 1) div span`` — order-preserving, so
+    per-file min/max tightness survives, and NO aliasing however wide
+    the domain (the raw interleave's low-bit mask made v and v+65536
+    identical, r12 review). The bounds are SQL expressions: literals,
+    or columns of a one-row stats relation. Spark spells integer
+    division ``div``, DuckDB ``//`` — both floor, and (v - vmin) is
+    nonnegative by construction so they agree."""
     intdiv = "//" if dialect == "duck" else "div"
     span = f"greatest(CAST(({vmax}) AS BIGINT) - CAST(({vmin}) AS BIGINT), 1)"
     return (f"(((CAST(({v}) AS BIGINT) - CAST(({vmin}) AS BIGINT)) "
@@ -133,10 +107,12 @@ def zorder_layout(df: DataFrame, a: Column, b: Column,
         # the falsy check and silently take the default partitioning
         # (r11 review): surface the sizing bug instead
         raise ValueError("zorder_layout: partitions must be >= 1 or None")
-    if "__z" in df.columns:
-        # withColumn would silently replace the caller's column and the
-        # final drop would erase it from the output (r12 review)
-        raise ValueError("zorder_layout: input already has a __z column")
+    for hidden in ("__z", "__za", "__zb"):
+        if hidden in df.columns:
+            # withColumns would silently replace the caller's column and
+            # the final drop would erase it from the output (r12 review)
+            raise ValueError(
+                f"zorder_layout: input already has a {hidden} column")
     lo_a, hi_a, lo_b, hi_b = df.select(
         F.min(a), F.max(a), F.min(b), F.max(b)
     ).first()
@@ -150,29 +126,36 @@ def zorder_layout(df: DataFrame, a: Column, b: Column,
         lo_a = hi_a = 0
     if lo_b is None:
         lo_b = hi_b = 0
-    for name, lo in (("a", lo_a), ("b", lo_b)):
+    quantized = []
+    for name, col, lo, hi in (("a", "__za", lo_a, hi_a),
+                              ("b", "__zb", lo_b, hi_b)):
         if not isinstance(lo, int):
-            # int(datetime) raises deep inside zorder_quantize AFTER the
-            # stats job already ran -- surface the contract up front:
-            # dimensions are integers (cast timestamps to epoch units
-            # first, as every in-repo caller does)
+            # surface the contract up front: dimensions are integers
+            # (cast timestamps to epoch units first, as every in-repo
+            # caller does)
             raise TypeError(
                 f"zorder_layout: dimension {name} must be integer-typed "
                 f"(got {type(lo).__name__}); cast timestamps/dates to "
                 "epoch hours/days first"
             )
-    # coalesce AFTER quantizing (r14 advice): a NULL dimension VALUE --
-    # every row of an all-NULL column, or stray NULLs in a live one --
-    # quantizes to NULL, NULL propagates through the interleave's +, and
-    # every affected row's __z goes NULL: the r13 per-dimension bounds
-    # defaulting then delivered ONE range partition (all-NULL sort key),
-    # not the promised clean sort on the live dimension. NULLs
-    # contribute a constant 0 to the key instead, exactly like an
-    # all-NULL dimension's bounds already do.
-    keyed = df.withColumn("__z", zorder_key(
-        F.coalesce(zorder_quantize(a, lo_a, hi_a), F.lit(0)),
-        F.coalesce(zorder_quantize(b, lo_b, hi_b), F.lit(0)),
-    ))
+        if hi - lo >= 1 << 37:
+            # keeps (v - vmin) * (2^ZBITS - 1) far inside a BIGINT
+            raise ValueError("zorder_layout: dimension span too wide")
+        # coalesce AFTER quantizing (r14 advice): a NULL dimension VALUE
+        # -- every row of an all-NULL column, or stray NULLs in a live
+        # one -- quantizes to NULL, NULL propagates through the
+        # interleave's +, and every affected row's __z goes NULL: the
+        # r13 per-dimension bounds defaulting then delivered ONE range
+        # partition (all-NULL sort key), not the promised clean sort on
+        # the live dimension. NULLs contribute a constant 0 to the key
+        # instead, exactly like an all-NULL dimension's bounds do.
+        quantized.append("coalesce(" + zorder_quantize_sql(
+            col, str(lo), str(hi), "spark") + ", 0)")
+    keyed = (
+        df.withColumns({"__za": a, "__zb": b})
+        .withColumn("__z", F.expr(zorder_key_sql(*quantized)))
+        .drop("__za", "__zb")
+    )
     ranged = (
         keyed.repartitionByRange(partitions, "__z")
         if partitions is not None

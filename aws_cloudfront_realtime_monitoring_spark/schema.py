@@ -77,24 +77,6 @@ def storage_name(wire_name: str) -> str:
     return wire_name.replace("-", "_")
 
 
-def wire_schema() -> T.StructType:
-    """Positional schema of the raw TSV line, wire field names, declared
-    types. ``timestamp`` stays DoubleType here (raw epoch-seconds float);
-    conversion to TimestampType happens in the parser."""
-    return T.StructType(
-        [T.StructField(name, _SPARK_TYPES[t], True) for name, t in CF_FIELDS]
-    )
-
-
-_DDL_TYPES = {"str": "STRING", "int": "BIGINT", "float": "DOUBLE"}
-
-
-def wire_ddl() -> str:
-    """DDL form of :func:`wire_schema` with back-quoted (dashed) names, for
-    ``from_csv``."""
-    return ", ".join(f"`{name}` {_DDL_TYPES[t]}" for name, t in CF_FIELDS)
-
-
 def wide_schema(parsed_headers: bool = False) -> T.StructType:
     """Schema of the primary wide typed table (FIXTURES.md F2): storage
     names, ``timestamp`` as TimestampType, optional parsed header arrays

@@ -447,6 +447,48 @@ def test_arith_multiscan_per_component_matches_single_scan():
     np.testing.assert_array_equal(got[2], ref[2])
 
 
+def test_arith_multiscan_per_component_restarts_match_single_scan():
+    """Per-component arithmetic scans under a DRI: each non-interleaved
+    scan restarts every N data units of its component's TRUE block grid
+    (fresh decoder and statistics per interval, F.2.1.3.1), and the
+    restarted multi-scan decode equals the unrestarted single-scan
+    one."""
+    rng = np.random.RandomState(23)
+    px = rng.randint(0, 256, size=(20, 27, 3), dtype=np.uint8)
+    ref = decode_jpeg_pixels(make_arith_jpeg(px, quant=3))
+
+    q = np.full(64, 3, np.int32)
+    planes, _sampling, _mx, _my = _prep_planes(px, 1)
+    for restart in (1, 5):
+        out = bytearray(b"\xff\xd8")
+        out += _seg(0xDB, bytes([0]) + bytes(q.astype(np.uint8)))
+        sof = bytes([8]) + struct.pack(">HH", 20, 27) + bytes([3])
+        for ci in range(3):
+            sof += bytes([ci + 1, 0x11, 0])
+        out += _seg(0xC9, sof)
+        out += _seg(0xDD, struct.pack(">H", restart))
+        for ci, plane in enumerate(planes):
+            nbx = plane.shape[1] // 8
+            enc = _ArithSeqEncoder({}, {})
+            data = bytearray()
+            for u in range((plane.shape[0] // 8) * nbx):
+                if u and u % restart == 0:
+                    data += enc.flush()
+                    data += bytes([0xFF, 0xD0 + ((u // restart - 1) % 8)])
+                    enc = _ArithSeqEncoder({}, {})
+                by, bx = divmod(u, nbx)
+                zz = _fdct_quant(
+                    plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8], q
+                ).reshape(64)[_ZIGZAG]
+                enc.data_unit(ci + 1, 0, 0, zz)
+            data += enc.flush()
+            out += _seg(0xDA, bytes([1, ci + 1, 0x00, 0, 63, 0])) + data
+        out += b"\xff\xd9"
+        got = decode_jpeg_pixels(bytes(out))
+        assert got[:2] == ref[:2] == (27, 20)
+        np.testing.assert_array_equal(got[2], ref[2])
+
+
 def test_arith_malformed_stays_valueerror():
     rng = np.random.RandomState(23)
     px = rng.randint(0, 256, size=(16, 16, 1), dtype=np.uint8)

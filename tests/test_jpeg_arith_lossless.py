@@ -241,7 +241,8 @@ def test_arith_lossless_malformed_stays_valueerror():
     # NOTE truncation INSIDE the entropy data is not detectable for QM
     # streams: T.81 D.2.7's termination convention supplies zero bits
     # past any marker/end, so a cut stream decodes (to wrong samples)
-    # rather than desyncing -- unlike the Huffman path's _MarkerHit.
+    # rather than desyncing -- unlike the Huffman bit reader, which
+    # raises on a marker inside a data unit.
     # Structural truncation must still raise:
     i = blob.index(b"\xff\xda")
     with pytest.raises(ValueError):

@@ -638,6 +638,100 @@ def test_hier_lossless_color_pyramid_exact():
     np.testing.assert_array_equal(got, px.astype(np.uint8))
 
 
+# ------------------------------------------ restarts in differential frames
+
+def _with_restarts(units: list, restart: int, encode) -> bytes:
+    """Entropy bytes of ``units`` split into restart intervals of
+    ``restart`` units: ``encode`` codes each interval from a fresh
+    encoder (byte-aligned, statistics reset) and RSTn markers, numbered
+    mod 8, separate the intervals."""
+    out = bytearray()
+    for i in range(0, len(units), restart):
+        if i:
+            out += bytes([0xFF, 0xD0 + (i // restart - 1) % 8])
+        out += encode(units[i:i + restart])
+    return bytes(out)
+
+
+def _restarted_pyramid(px: np.ndarray, lossless: bool, arith: bool,
+                       restart: int) -> bytes:
+    """Two-level grayscale pyramid (base, EXP(1,1), differential frame)
+    whose DIFFERENTIAL scan restarts every ``restart`` units (0: no
+    DRI). Differential frames predict nothing (PRED=0), so an interval
+    codes exactly like a standalone run of its units: samples for the
+    Huffman lossless frame, whole rows for the arithmetic one (its
+    neighbour classes reset with the interval), blocks for DCT."""
+    base = px[::2, ::2]
+    out = bytearray(b"\xff\xd8")
+    out += _seg(0xDB, bytes([0]) + bytes(np.ones(64, np.uint8)))
+    out += _dhp(8, *px.shape, [(1, 1, 1, 0)])
+    if lossless:
+        out += _dht(0, 0, [5] * 17, list(range(17)))
+        scan = _arith_lossless_scan_bytes if arith else _encode_lossless_plane
+        base_bytes = scan(base, differential=False)
+        diff = (px - _expand_ref(base, 1, 1, *px.shape)) & 0xFFFF
+        units = list(diff) if arith else list(diff.reshape(-1))
+
+        def encode(chunk):  # rows stay 2-D; a run of samples is one row
+            return scan(np.atleast_2d(np.array(chunk)), differential=True)
+
+    else:
+        out += _dht(0, 0, [4] * 12, list(range(12)))
+        out += _dht(1, 0, [8] * len(_AC_SYMBOLS), list(_AC_SYMBOLS))
+        scan = _arith_dct_scan_bytes if arith else _encode_dct_frame
+        base_bytes = scan(base, level_shift=True, differential=False)
+        up = _expand_ref(_dct_frame_model(base, level_shift=True), 1, 1,
+                         *px.shape)
+        padded = _pad8(px - up)
+        units = [padded[by:by + 8, bx:bx + 8]
+                 for by in range(0, padded.shape[0], 8)
+                 for bx in range(0, padded.shape[1], 8)]
+
+        def encode(chunk):  # the interval's blocks side by side, in order
+            return scan(np.hstack(chunk), level_shift=False,
+                        differential=True)
+
+    sof_base, sof_diff = {
+        (False, False): (0xC0, 0xC5), (False, True): (0xC9, 0xCD),
+        (True, False): (0xC3, 0xC7), (True, True): (0xCB, 0xCF),
+    }[lossless, arith]
+    # lossless: Ss carries the predictor (1 in the base, 0 differential)
+    base_band, diff_band = ((1, 0), (0, 0)) if lossless else ((0, 63),) * 2
+    out += _seg(sof_base, _sof_body(8, *base.shape, [(1, 1, 1, 0)]))
+    out += _sos([(1, 0, 0)], *base_band, 0, 0)
+    out += base_bytes
+    out += _exp(1, 1)
+    if restart:  # DRI persists across frames: only the differential
+        out += _seg(0xDD, struct.pack(">H", restart))  # frame restarts
+    out += _seg(sof_diff, _sof_body(8, *px.shape, [(1, 1, 1, 0)]))
+    out += _sos([(1, 0, 0)], *diff_band, 0, 0)
+    # DRI counts samples; the arithmetic lossless units are rows
+    per = restart // px.shape[1] if lossless and arith else restart
+    out += _with_restarts(units, per or len(units), encode)
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+@pytest.mark.parametrize("lossless", [True, False])
+@pytest.mark.parametrize("arith", [False, True])
+def test_hier_differential_frame_restarts_match_unrestarted(lossless, arith):
+    """A DRI ahead of a differential frame restarts its scan every N
+    units; the restarted decode equals the unrestarted one (lossless
+    pyramids: both equal the source exactly)."""
+    px = _rng(19).randint(30, 220, (18, 21)).astype(np.int64)
+    plain = decode_hierarchical(
+        _restarted_pyramid(px, lossless, arith, 0))
+    # arithmetic lossless intervals are whole rows: N = k * width
+    for restart in ((21, 42) if lossless and arith else (1, 4)):
+        got = decode_hierarchical(
+            _restarted_pyramid(px, lossless, arith, restart))
+        assert got[:2] == plain[:2] == (21, 18)
+        np.testing.assert_array_equal(got[2], plain[2])
+    if lossless:
+        np.testing.assert_array_equal(plain[2][:, :, 0],
+                                      px.astype(np.uint8))
+
+
 def test_decode_image_reports_hierarchical_as_jpeg():
     from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import decode_image
 

@@ -769,10 +769,12 @@ def test_compact_partition_recovers_crashed_swap(spark):
 
 
 def test_compact_partition_lock_blocks_concurrent_run(spark):
-    """The pid lockfile keeps a retry from destroying a LIVE run's
-    scratch state: a lock held by a live process raises, a lock from a
-    dead process is reclaimed and compaction proceeds."""
+    """The compaction lock keeps a retry from destroying a LIVE run's
+    scratch state: a held lock raises, and a lock whose holder exited
+    without unlocking is free again, so compaction proceeds."""
+    import fcntl
     import subprocess
+    import sys
 
     from aws_cloudfront_realtime_monitoring_spark.operators.retention import (
         compact_partition,
@@ -782,19 +784,59 @@ def test_compact_partition_lock_blocks_concurrent_run(spark):
         part = os.path.join(d, "event_date=2024-01-04")
         spark.range(30).write.parquet(part)
         lock = os.path.join(d, ".event_date=2024-01-04.compact-lock")
-        # live holder (this very process) -> refused
-        with open(lock, "w") as f:
-            f.write(str(os.getpid()))
-        with pytest.raises(ValueError, match="already in progress"):
-            compact_partition(spark, part, target_file_bytes=10**9)
-        # dead holder -> lock reclaimed, compaction proceeds
-        child = subprocess.Popen(["true"])
-        child.wait()
-        with open(lock, "w") as f:
-            f.write(str(child.pid))
+        # live holder -> refused
+        fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            with pytest.raises(ValueError, match="already in progress"):
+                compact_partition(spark, part, target_file_bytes=10**9)
+        finally:
+            os.close(fd)
+        # a child locks and exits without unlocking -> the kernel
+        # released its lock, compaction proceeds
+        subprocess.run(
+            [sys.executable, "-c",
+             "import fcntl, os, sys; "
+             "fd = os.open(sys.argv[1], os.O_RDWR); "
+             "fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)", lock],
+            check=True)
         _nb, n_after = compact_partition(spark, part, target_file_bytes=10**9)
         assert n_after == 1
-        assert not os.path.exists(lock)
+        # the lock is free after the run
+        fd = os.open(lock, os.O_RDWR)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        finally:
+            os.close(fd)
+
+
+def test_compact_partition_ignores_stale_pid_in_lock_file(spark):
+    """A lock file left by an older pid-file lock, naming a pid that now
+    belongs to some unrelated LIVE process, must not block compaction:
+    only a held flock does (the pid-file lock refused until that
+    process exited)."""
+    import subprocess
+
+    from aws_cloudfront_realtime_monitoring_spark.operators.retention import (
+        compact_partition,
+    )
+
+    with tempfile.TemporaryDirectory() as d:
+        part = os.path.join(d, "event_date=2024-01-06")
+        spark.range(30).write.parquet(part)
+        lock = os.path.join(d, ".event_date=2024-01-06.compact-lock")
+        bystander = subprocess.Popen(["sleep", "60"])
+        try:
+            with open(lock, "w") as f:
+                f.write(str(bystander.pid))
+            _nb, n_after = compact_partition(spark, part,
+                                             target_file_bytes=10**9)
+            assert n_after == 1
+            assert bystander.poll() is None  # still alive throughout
+        finally:
+            bystander.kill()
+            bystander.wait()
+        assert spark.read.parquet(part).count() == 30
 
 
 def test_connector_wrappers_reject_misnamed_overrides(spark):
@@ -875,13 +917,11 @@ def test_cut_chunks_rejects_stale_or_degenerate_chunk_size():
         _cut_chunks("k", pd.Series([1]), (0, 0, 0), 0, "g")
 
 
-def test_compact_lock_never_visible_without_pid():
-    """The lock is published by os.link of a pre-written temp file, so the
-    lock name NEVER exists with empty content -- the old O_EXCL-then-write
-    sequence had a window where a concurrent invocation read an empty
-    lock, parsed holder=0, and unlinked the LIVE holder (r9 advice)."""
+def test_compact_lock_refuses_while_held_and_frees_on_release():
+    """Acquire/release cycles: while a descriptor holds the lock, a second
+    acquire (a fresh open file, as another thread or process would
+    have) refuses; closing the holder's descriptor frees it at once."""
     import tempfile as _tf
-    import threading
 
     from aws_cloudfront_realtime_monitoring_spark.operators.retention import (
         _acquire_compact_lock,
@@ -889,99 +929,36 @@ def test_compact_lock_never_visible_without_pid():
 
     with _tf.TemporaryDirectory() as d:
         lock = os.path.join(d, "p.compact-lock")
-        stop = threading.Event()
-        empties = []
-
-        def poll():
-            while not stop.is_set():
-                try:
-                    if open(lock).read().strip() == "":
-                        empties.append(1)
-                except FileNotFoundError:
-                    pass
-
-        t = threading.Thread(target=poll)
-        t.start()
-        try:
-            for _ in range(200):
+        for _ in range(50):
+            fd = _acquire_compact_lock(lock, "p")
+            with pytest.raises(ValueError, match="already in progress"):
                 _acquire_compact_lock(lock, "p")
-                assert open(lock).read().strip() == str(os.getpid())
-                os.unlink(lock)
-        finally:
-            stop.set()
-            t.join()
-        assert not empties, f"lock observed empty {len(empties)} times"
-        # held by a live pid (ourselves) -> a second acquire refuses
-        # rather than reclaiming
-        _acquire_compact_lock(lock, "p")
-        with pytest.raises(ValueError, match="already in progress"):
-            _acquire_compact_lock(lock, "p")
-        os.unlink(lock)
+            os.close(fd)
 
 
-def test_compact_lock_reclaim_respects_live_replacement():
-    """Dead-holder reclaim must not delete a lock that was REPLACED by a
-    LIVE holder between its read and its unlink (r9 advice TOCTOU: waiter
-    B reads a dead pid, waiter C reclaims and publishes its own live
-    lock, B's unlink then deletes C's live lock -- two compactions). The
-    fix serializes read-verify-unlink on the permanent .guard flock; this
-    test holds the guard, stages exactly that replacement while a
-    reclaimer is parked on the flock, and asserts the reclaimer REFUSES
-    and the live lock survives."""
-    import fcntl
-    import subprocess
-    import tempfile as _tf
-    import threading
-
+def test_compact_lock_file_is_never_unlinked(spark):
+    """The lock file keeps its inode across runs and refusals: an unlink
+    after an unlock would let a run holding the old inode and a run that
+    created a new one compact at the same time."""
     from aws_cloudfront_realtime_monitoring_spark.operators.retention import (
         _acquire_compact_lock,
+        compact_partition,
     )
 
-    with _tf.TemporaryDirectory() as d:
-        lock = os.path.join(d, "p.compact-lock")
-        child = subprocess.Popen(["true"])
-        child.wait()
-        with open(lock, "w") as f:
-            f.write(str(child.pid))  # a dead holder, ripe for reclaim
-        # hold the reclaim guard so the racing acquirer parks right where
-        # the TOCTOU window used to be (after link fails, before its read)
-        guard_fd = os.open(lock + ".guard", os.O_CREAT | os.O_RDWR, 0o644)
-        fcntl.flock(guard_fd, fcntl.LOCK_EX)
-        errs: list[BaseException] = []
-        done = threading.Event()
-
-        def acquire():
-            try:
-                _acquire_compact_lock(lock, "p")
-            except BaseException as e:  # noqa: BLE001
-                errs.append(e)
-            finally:
-                done.set()
-
-        t = threading.Thread(target=acquire)
-        t.start()
+    with tempfile.TemporaryDirectory() as d:
+        part = os.path.join(d, "event_date=2024-01-07")
+        spark.range(30).write.parquet(part)
+        lock = os.path.join(d, ".event_date=2024-01-07.compact-lock")
+        fd = _acquire_compact_lock(lock, part)
+        inode = os.stat(lock).st_ino
         try:
-            # while the reclaimer is blocked on the guard, replace the dead
-            # lock with a LIVE one (ours) -- the exact interleave from the
-            # advice, made deterministic
-            time.sleep(0.3)
-            assert not done.is_set(), "reclaimer should be parked on guard"
-            os.unlink(lock)
-            tmp = lock + ".staged"
-            with open(tmp, "w") as f:
-                f.write(str(os.getpid()))
-            os.link(tmp, lock)
-            os.unlink(tmp)
+            with pytest.raises(ValueError, match="already in progress"):
+                compact_partition(spark, part, target_file_bytes=10**9)
+            assert os.stat(lock).st_ino == inode
         finally:
-            os.close(guard_fd)  # release the guard
-        t.join(timeout=30)
-        assert done.is_set()
-        # the reclaimer observed the live replacement and refused -- it did
-        # NOT unlink the live lock
-        assert len(errs) == 1 and isinstance(errs[0], ValueError), errs
-        assert "already in progress" in str(errs[0])
-        assert open(lock).read().strip() == str(os.getpid())
-        os.unlink(lock)
+            os.close(fd)
+        compact_partition(spark, part, target_file_bytes=10**9)
+        assert os.stat(lock).st_ino == inode
 
 
 def test_compact_partition_concurrent_threads_one_winner(spark):
@@ -1019,8 +996,8 @@ def test_compact_partition_concurrent_threads_one_winner(spark):
                     if isinstance(r, str) and "already in progress" in r]
         assert len(wins) == 1 and len(refusals) == 5, results
         assert not os.path.exists(part + ".compact-lock")
-        # the permanent .guard flock sidecar is the ONLY allowed survivor
-        # (unlinking it would re-open the flock-on-removed-file race)
+        # no non-hidden lock litter (the hidden lock file itself stays
+        # by design, see compact_partition)
         leftovers = [p for p in _glob.glob(part + ".compact-lock.*")
                      if not p.endswith(".guard")]
         assert not leftovers, leftovers

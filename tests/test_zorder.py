@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from aws_cloudfront_realtime_monitoring_spark.operators.zorder import (
     zorder_decode,
-    zorder_key,
+    zorder_key_sql,
     zorder_layout,
 )
 
@@ -19,7 +19,7 @@ def test_zorder_key_decodes_back_to_inputs(spark):
         (F.col("id") * 7919 % 65536).alias("a"),
         (F.col("id") * 104729 % 65536).alias("b"),
     )
-    rows = df.select("a", "b", zorder_key(F.col("a"), F.col("b")).alias("z")).collect()
+    rows = df.select("a", "b", F.expr(zorder_key_sql("a", "b")).alias("z")).collect()
     for r in rows:
         assert zorder_decode(r.z) == (r.a, r.b)
 
@@ -29,7 +29,7 @@ def test_zorder_key_orders_locality(spark):
     small tile is bounded by the tile's enclosing power-of-2 square."""
     pts = [(a, b) for a in range(8) for b in range(8)]
     df = spark.createDataFrame(pts, ["a", "b"])
-    rows = df.select(zorder_key(F.col("a"), F.col("b")).alias("z")).collect()
+    rows = df.select(F.expr(zorder_key_sql("a", "b")).alias("z")).collect()
     zs = sorted(r.z for r in rows)
     assert zs == list(range(64))  # an 8x8 tile fills exactly [0, 64)
 
@@ -66,41 +66,25 @@ def test_zorder_layout_tightens_second_dimension(spark):
 
 
 def test_zorder_key_integer_columns_no_overflow(spark):
-    """Regression (r7 code review): shiftleft keeps the input type, so
+    """Regression (r7 code review): a shift keeps the input type, so
     INT columns overflowed at bit 15 (1 << 31 = INT_MIN) and produced
-    negative Morton keys. The cast-to-long guard must make INT and LONG
-    inputs agree, and keys must stay non-negative and invertible."""
-    from pyspark.sql import functions as F
-
-    from aws_cloudfront_realtime_monitoring_spark.operators.zorder import (
-        zorder_decode,
-        zorder_key,
-        zorder_key_sql,
-    )
-
+    negative Morton keys. The cast-to-BIGINT guard must make INT and
+    LONG inputs agree, and keys must stay non-negative and invertible."""
     rows = [(0, 32768), (32768, 0), (65535, 65535), (12345, 54321)]
-    df_int = spark.createDataFrame(rows, "a INT, b INT")
-    df_long = spark.createDataFrame(rows, "a LONG, b LONG")
-    got_int = [
-        r.z for r in df_int.select(
-            zorder_key(F.col("a"), F.col("b")).alias("z")).collect()
-    ]
-    got_long = [
-        r.z for r in df_long.select(
-            zorder_key(F.col("a"), F.col("b")).alias("z")).collect()
-    ]
-    assert got_int == got_long
-    for (a, b), z in zip(rows, got_int):
+    got = {}
+    for typ in ("INT", "LONG"):
+        spark.createDataFrame(rows, f"a {typ}, b {typ}") \
+            .createOrReplaceTempView(f"zo_{typ}")
+        got[typ] = [
+            r.z for r in spark.sql(
+                f"SELECT CAST({zorder_key_sql('a', 'b')} AS BIGINT) AS z "
+                f"FROM zo_{typ}"
+            ).collect()
+        ]
+    assert got["INT"] == got["LONG"]
+    for (a, b), z in zip(rows, got["INT"]):
         assert z >= 0
         assert zorder_decode(z) == (a, b)
-    # the SQL spelling agrees on INT columns too
-    df_int.createOrReplaceTempView("zo_int")
-    got_sql = [
-        r.z for r in spark.sql(
-            f"SELECT CAST({zorder_key_sql('a', 'b')} AS BIGINT) AS z FROM zo_int"
-        ).collect()
-    ]
-    assert got_sql == got_int
 
 
 def test_zorder_layout_wide_domains_still_prune(spark):
@@ -133,7 +117,7 @@ def test_zorder_layout_wide_domains_still_prune(spark):
 
 def test_zorder_quantize_monotone_and_exact(spark):
     from aws_cloudfront_realtime_monitoring_spark.operators.zorder import (
-        zorder_quantize,
+        zorder_quantize_sql,
     )
 
     lo = 490_000
@@ -141,8 +125,8 @@ def test_zorder_quantize_monotone_and_exact(spark):
     df = spark.range(0, 1000).select(
         (F.col("id") * 317 + lo).cast("long").alias("v")
     )
-    rows = df.select("v", zorder_quantize(F.col("v"), lo, hi).alias("q")) \
-             .orderBy("v").collect()
+    q = F.expr(zorder_quantize_sql("v", str(lo), str(hi), "spark"))
+    rows = df.select("v", q.alias("q")).orderBy("v").collect()
     qs = [r.q for r in rows]
     assert all(0 <= q <= 65535 for q in qs)
     assert qs == sorted(qs)  # monotone
@@ -152,12 +136,15 @@ def test_zorder_quantize_monotone_and_exact(spark):
 
 
 def test_zorder_layout_guards(spark):
-    df = spark.range(5).select(
-        F.col("id").alias("a"), F.col("id").alias("b"),
-        F.lit(1).alias("__z"),
-    )
-    with pytest.raises(ValueError, match="__z"):
-        zorder_layout(df, F.col("a"), F.col("b"))
+    # every hidden column the layout adds is refused on input, or the
+    # final drop would erase the caller's column
+    for hidden in ("__z", "__za", "__zb"):
+        df = spark.range(5).select(
+            F.col("id").alias("a"), F.col("id").alias("b"),
+            F.lit(1).alias(hidden),
+        )
+        with pytest.raises(ValueError, match=f"{hidden} column"):
+            zorder_layout(df, F.col("a"), F.col("b"))
 
 
 def test_zorder_layout_one_null_dimension_keeps_other_tight(spark):
