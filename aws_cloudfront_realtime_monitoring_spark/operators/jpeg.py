@@ -19,17 +19,18 @@ ARITHMETIC-coded sequential, progressive AND lossless frames
 (SOF9/SOF10 r12, SOF11 r13: the T.81 Annex D QM coder + the Annex F
 sequential, Annex G progressive, and Annex H.1.2.2 lossless
 statistical models in ``jpeg_arith.py``, DAC conditioning, restarts
-with full statistics reset). All color spaces convert to RGB (or stay
-single-channel grayscale) on output. Only the near-extinct
-differential and hierarchical pyramid variants raise ``ValueError``
-(the multimodal layer falls back to Pillow-if-present or the
-documented fake, exactly like the other decoders' unsupported
-profiles).
+with full statistics reset), plus HIERARCHICAL (DHP-led) pyramids of
+any of those frames with their differential corrections (T.81 Annex J;
+the reconstruction math lives in ``jpeg_hier.py``). All color spaces
+convert to RGB (or stay single-channel grayscale) on output.
 
 Structure (ITU-T T.81):
-- markers: SOI, DQT (quant tables), SOF0/SOF2 (dims, components,
-  sampling factors), DHT (Huffman tables), DRI (restart interval), SOS,
-  EOI;
+- markers: SOI, DQT (quant tables), SOFn (dims, components, sampling
+  factors), DHT (Huffman tables), DAC (arithmetic conditioning), DRI
+  (restart interval), SOS, EOI, and in pyramids DHP and EXP; ONE marker
+  walk (``_decode_jpeg``) reads them all -- a plain file is a stream of
+  one frame, a pyramid a sequence of frames each closed into the
+  reference planes the next differential frame corrects;
 - the entropy-coded segment is a bitstream with 0xFF00 byte stuffing and
   optional RSTn markers that reset DC predictors on MCU boundaries;
 - entropy coding is kept apart from the coding process, as in T.81: each
@@ -169,8 +170,8 @@ def _dc_ssss_max(prec: int) -> int:
 
 
 def _parse_dqt(seg: bytes, qt: dict) -> None:
-    """One DQT segment into the table dict (shared with the
-    hierarchical driver -- tables persist across pyramid frames)."""
+    """One DQT segment into the table dict (tables persist across
+    pyramid frames, T.81 B.2.4)."""
     s = 0
     while s < len(seg):
         pq, tq = seg[s] >> 4, seg[s] & 15
@@ -196,8 +197,7 @@ def _parse_dqt(seg: bytes, qt: dict) -> None:
 
 
 def _parse_dht(seg: bytes, huff_dc: dict, huff_ac: dict) -> None:
-    """One DHT segment into the table dicts (shared with the
-    hierarchical driver)."""
+    """One DHT segment into the table dicts."""
     s = 0
     while s < len(seg):
         tc, th = seg[s] >> 4, seg[s] & 15
@@ -399,8 +399,7 @@ def _scan_entropy(arith: bool, lossless: bool, data: bytes, pos: int,
                   scan_tables: dict, huff_dc: dict, huff_ac: dict,
                   dc_cond: dict, ac_cond: dict):
     """The entropy decoder for one scan starting at ``pos``: the only
-    place the Huffman/arithmetic choice is made (shared with the
-    hierarchical driver)."""
+    place the Huffman/arithmetic choice is made."""
     if not arith:
         return HuffmanEntropy(data, pos, huff_dc, huff_ac)
     if lossless:
@@ -410,12 +409,12 @@ def _scan_entropy(arith: bool, lossless: bool, data: bytes, pos: int,
 
 def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, np.ndarray]:
     """REAL decoder for sequential AND progressive (8/12-bit, Huffman
-    or arithmetic) AND lossless (Huffman or arithmetic) JPEG:
-    returns (width, height, pixels[h, w, 1 or 3] uint8 — grayscale or
-    RGB; CMYK/YCCK inputs convert to RGB). Raises ``ValueError`` on
-    malformed input or unsupported variants (differential,
-    hierarchical) — ONLY ValueError, whatever
-    the corruption (struct/index errors from fuzzed bytes are
+    or arithmetic) AND lossless (Huffman or arithmetic) JPEG, and for
+    hierarchical (DHP-led) pyramids of those frames with their
+    differential corrections: returns (width, height, pixels[h, w, 1
+    or 3] uint8 — grayscale or RGB; CMYK/YCCK inputs convert to RGB).
+    Raises ``ValueError`` on malformed input — ONLY ValueError,
+    whatever the corruption (struct/index errors from fuzzed bytes are
     remapped), so a malformed payload can never kill an executor task
     instead of taking the documented fallback."""
     try:
@@ -427,56 +426,189 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, np.ndarray]:
         raise ValueError(f"malformed JPEG: {exc}") from exc
 
 
+#: SOFn markers (T.81 B.1.1.3) and the coding process each names:
+#: SOF5-7 / SOF13-15 are the DIFFERENTIAL frames of a pyramid, and
+#: SOF9-15 code their process with the QM coder instead of Huffman
+#: tables -- only the entropy decoder built at each SOS differs
+_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+_DIFF = frozenset({0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF})
+_LOSSLESS = frozenset({0xC3, 0xC7, 0xCB, 0xCF})
+_PROGRESSIVE = frozenset({0xC2, 0xC6, 0xCA, 0xCE})
+_ARITH = frozenset({0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF})
+
+#: a legal pyramid is <= ~8 stages (each EXP doubles a dimension toward
+#: the DHP bound); the cap stops a crafted stream from stacking frames
+_PYRAMID_MAX_FRAMES = 16
+
+
+def _parse_frame_header(seg: bytes, marker: int) -> tuple:
+    """(prec, h, w, comps) of an SOFn segment, every per-marker rule
+    applied (T.81 B.2.2). The DHP segment (``marker`` 0xDE) shares the
+    syntax but describes the WHOLE pyramid -- any legal precision (a
+    lossless pyramid may be 2-16 bit) and component count, with the
+    per-frame rules applied as the frames themselves arrive."""
+    if len(seg) < 6:
+        raise ValueError("truncated JPEG frame header")
+    prec, h, w, ncomp = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
+    lossless = marker in _LOSSLESS
+    if marker == 0xDE:
+        if not (2 <= prec <= 16):
+            raise ValueError(f"{prec}-bit JPEG DHP invalid")
+        if not (1 <= ncomp <= 4):
+            raise ValueError(f"{ncomp}-component JPEG DHP unsupported")
+    elif lossless:
+        if not (2 <= prec <= 16):
+            raise ValueError(f"{prec}-bit lossless JPEG invalid")
+        if ncomp not in (1, 3):
+            raise ValueError(f"{ncomp}-component lossless JPEG unsupported")
+    elif marker == 0xC0 and prec != 8:
+        # baseline is 8-bit by definition
+        raise ValueError(f"{prec}-bit baseline JPEG invalid")
+    elif prec not in (8, 12):
+        # every other DCT process allows exactly 8 or 12 (12-bit r11)
+        raise ValueError(f"{prec}-bit JPEG unsupported")
+    elif ncomp not in (1, 3, 4):
+        raise ValueError(f"{ncomp}-component JPEG unsupported")
+    if len(seg) < 6 + 3 * ncomp:
+        raise ValueError("truncated JPEG frame header")
+    comps = []
+    for c in range(ncomp):
+        cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
+        hs, vs = samp >> 4, samp & 15
+        if not (1 <= hs <= 4 and 1 <= vs <= 4):
+            # a fuzzed 0 factor would divide-by-zero in the MCU
+            # arithmetic -- outside the ValueError-only contract
+            raise ValueError(f"invalid JPEG sampling factors {hs}x{vs}")
+        if lossless and (hs, vs) != (1, 1):
+            # subsampling is meaningless for predictive lossless and
+            # essentially unseen in real files
+            raise ValueError("subsampled lossless JPEG unsupported")
+        comps.append((cid, hs, vs, tq))
+    if len({c[0] for c in comps}) != ncomp:
+        # scans name components by id: a repeated id would leave one
+        # plane undelivered yet pass every per-id check downstream
+        raise ValueError("JPEG frame repeats a component id")
+    return prec, h, w, comps
+
+
+def _parse_sos(seg: bytes) -> tuple:
+    """(component ids, {id: (DC, AC) table ids}, Ss, Se, Ah, Al) of an
+    SOS segment. Lossless scans carry the predictor selector in Ss and
+    the point transform in Al."""
+    ns = seg[0]
+    if len(seg) < 1 + 2 * ns + 3:
+        raise ValueError("truncated JPEG SOS header")
+    scan_tables = {}
+    scan_comps = []
+    for c in range(ns):
+        cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]
+        scan_tables[cid] = (tabs >> 4, tabs & 15)
+        scan_comps.append(cid)
+    if len(scan_comps) != len(set(scan_comps)):
+        # a duplicated id would pass the set-based full-scan gate while
+        # the stream interleaves MORE blocks per MCU than the decode
+        # loop reads -- bitstream desync into silent garbage (r11 review)
+        raise ValueError("JPEG SOS repeats a component id")
+    ss, se, a = seg[1 + 2 * ns : 4 + 2 * ns]
+    return scan_comps, scan_tables, ss, se, a >> 4, a & 15
+
+
+class _Frame:
+    """One frame mid-decode: its header, its coding process, the
+    coefficient or sample state its scans accumulate into, and the
+    components those scans delivered. A plain file is one frame; a
+    pyramid is a sequence of them, each closed into the reference
+    planes by ``jpeg_hier.to_reference``."""
+
+    def __init__(self, marker: int, seg: bytes,
+                 exp: tuple[int, int] = (0, 0), pyramid: bool = False):
+        self.differential = marker in _DIFF
+        self.lossless = marker in _LOSSLESS
+        self.progressive = marker in _PROGRESSIVE
+        self.arith = marker in _ARITH
+        self.exp = exp  # EXP flags (horizontal, vertical) before it
+        self.pyramid = pyramid
+        self.prec, self.h, self.w, self.comps = _parse_frame_header(
+            seg, marker)
+        self.state: _ProgState | _LosslessState | None = None
+        if self.lossless:
+            self.state = _LosslessState(self.h, self.w, self.comps,
+                                        self.prec)
+        elif self.progressive or pyramid:
+            # a plain sequential frame allocates at its first scan: the
+            # common single-scan file decodes straight to planes
+            self.state = _ProgState(self.h, self.w, self.comps, self.prec)
+        self.n_scans = 0
+        #: component ids delivered by a scan; sequential and lossless
+        #: frames deliver each exactly once (progressive frames revisit
+        #: components across spectral/approximation scans)
+        self.done: set[int] = set()
+
+    @property
+    def complete(self) -> bool:
+        return self.done == {c[0] for c in self.comps}
+
+    def decode_scan(self, ent, scan_comps, scan_tables, restart_interval,
+                    ss, se, ah, al) -> int:
+        """Decode one scan into the frame state through the entropy
+        decoder ``ent``; returns the byte position of the next marker."""
+        if not self.progressive:
+            for cid in scan_comps:
+                if cid in self.done:
+                    raise ValueError(
+                        "JPEG pyramid frame component delivered twice"
+                        if self.pyramid else
+                        "lossless JPEG component delivered twice"
+                        if self.lossless else
+                        "JPEG component delivered by two sequential scans")
+                self.done.add(cid)
+        self.n_scans += 1
+        args = (ent, self.state, scan_comps, scan_tables, restart_interval)
+        if self.lossless:
+            return _decode_lossless_scan(*args, ss, al, self.differential)
+        if self.progressive:
+            return _decode_progressive_scan(*args, ss, se, ah, al,
+                                            self.differential)
+        return _decode_sequential_scan(*args, self.differential)
+
+
 def _decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
+    from . import jpeg_hier  # Annex J reconstruction (imports this module)
+
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     qt: dict[int, np.ndarray] = {}
     huff_dc: dict[int, _Huff] = {}
     huff_ac: dict[int, _Huff] = {}
-    restart_interval = 0
-    frame = None  # (height, width, [(comp_id, h_samp, v_samp, qt_id)])
-    dct_prec = 8  # DCT-mode sample precision (8 or 12, T.81 B.2.2)
-    progressive = False
-    # arithmetic (SOF9, r12): QM-coded extended sequential; conditioning
-    # from DAC segments (defaults applied per table in jpeg_arith)
-    arith = False
+    # arithmetic conditioning from DAC segments (defaults applied per
+    # table in jpeg_arith)
     dc_cond: dict[int, tuple[int, int]] = {}
     ac_cond: dict[int, int] = {}
-    prog: _ProgState | None = None
-    # multi-scan SEQUENTIAL state (scans covering component subsets of a
-    # SOF0/1 frame): reuses the progressive coefficient-accumulator and
-    # finalize; seq_done tracks delivered components (each exactly once)
-    seq: _ProgState | None = None
-    seq_done: set[int] = set()
-    # LOSSLESS (SOF3, r10): predictive sample planes accumulate across
-    # scans exactly like the sequential coefficient state
-    lossless = False
-    loss: _LosslessState | None = None
-    loss_done: set[int] = set()
+    restart_interval = 0
     adobe: int | None = None  # APP14 color-transform byte, if present
+    frame: _Frame | None = None
+    # a pyramid (T.81 Annex J): the DHP header, the reference plane of
+    # each component, and the EXP flags waiting for the next frame
+    dhp: tuple | None = None
+    refs: dict[int, np.ndarray] = {}
+    exp = (0, 0)
+    n_frames = 0
+    first_lossless = False
+    # an EXP or a frame met before a DHP: the stream is no well-formed
+    # pyramid, and a later DHP reports the first of them
+    stray: str | None = None
     pos = 2
     while pos + 2 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError(f"bad JPEG marker sync at byte {pos}")
         marker = payload[pos + 1]
         if marker == 0xD9:  # EOI
-            if prog is not None and prog.n_scans > 0:
-                return _finalize_progressive(
-                    prog, qt, _resolve_color(frame[2], adobe))
-            if seq is not None:
-                if seq_done != {c[0] for c in frame[2]}:
-                    raise ValueError(
-                        "sequential JPEG ended with undelivered components"
-                    )
-                return _finalize_progressive(
-                    seq, qt, _resolve_color(frame[2], adobe))
-            if loss is not None:
-                if loss_done != {c[0] for c in frame[2]}:
-                    raise ValueError(
-                        "lossless JPEG ended with undelivered components"
-                    )
-                return _finalize_lossless(loss, adobe)
-            raise ValueError("JPEG ended before scan data")
+            if dhp is None:
+                return _finish_frame(frame, qt, adobe, eoi=True)
+            if frame is not None:
+                jpeg_hier.to_reference(frame, qt, refs)
+            return jpeg_hier.final_assemble(dhp, refs, adobe,
+                                            first_lossless)
         if marker == 0x01 or 0xD0 <= marker <= 0xD7 or marker == 0xFF:
             # TEM / stray RSTn / fill byte: no length field
             pos += 1 if marker == 0xFF else 2
@@ -491,70 +623,6 @@ def _decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
             _parse_dqt(seg, qt)
         elif marker == 0xC4:  # DHT
             _parse_dht(seg, huff_dc, huff_ac)
-        elif marker == 0xDE:
-            # DHP: a hierarchical (pyramid) stream -- frame sequencing,
-            # EXP expansion, and differential reconstruction live in
-            # their own driver (T.81 Annex J, r14)
-            from .jpeg_hier import decode_hierarchical
-
-            return decode_hierarchical(payload)
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xCB):
-            # SOF0/1/2/3 (Huffman) / SOF9/10/11 (arithmetic)
-            if frame is not None:
-                raise ValueError("multiple JPEG frame headers")
-            progressive = marker in (0xC2, 0xCA)
-            lossless = marker in (0xC3, 0xCB)
-            # SOF9 = extended sequential, SOF10 = progressive, SOF11 =
-            # lossless (r13): the SOF1/2/3 processes with QM coding --
-            # only the entropy decoder built at each SOS differs
-            arith = marker in (0xC9, 0xCA, 0xCB)
-            prec, h, w, ncomp = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            if lossless:
-                # T.81 B.2.2: lossless precision is 2-16 bits
-                if not (2 <= prec <= 16):
-                    raise ValueError(f"{prec}-bit lossless JPEG invalid")
-                if ncomp not in (1, 3):
-                    raise ValueError(
-                        f"{ncomp}-component lossless JPEG unsupported")
-            elif marker == 0xC0 and prec != 8:
-                # baseline is 8-bit by definition (T.81 B.2.2)
-                raise ValueError(f"{prec}-bit baseline JPEG invalid")
-            elif prec not in (8, 12):
-                # extended sequential (SOF1) / progressive (SOF2)
-                # allow exactly 8 or 12 (T.81 B.2.2); 12-bit decode r11
-                raise ValueError(f"{prec}-bit JPEG unsupported")
-            elif ncomp not in (1, 3, 4):
-                raise ValueError(f"{ncomp}-component JPEG unsupported")
-            dct_prec = prec
-            comps = []
-            for c in range(ncomp):
-                cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
-                hs, vs = samp >> 4, samp & 15
-                if not (1 <= hs <= 4 and 1 <= vs <= 4):
-                    # a fuzzed 0 factor would divide-by-zero in the MCU
-                    # arithmetic -- outside the ValueError-only contract
-                    raise ValueError(
-                        f"invalid JPEG sampling factors {hs}x{vs}"
-                    )
-                if lossless and (hs, vs) != (1, 1):
-                    # subsampling is meaningless for predictive lossless
-                    # and essentially unseen in real files
-                    raise ValueError("subsampled lossless JPEG unsupported")
-                comps.append((cid, hs, vs, tq))
-            frame = (h, w, comps)
-            if progressive:
-                prog = _ProgState(h, w, comps, dct_prec)
-            if lossless:
-                loss = _LosslessState(h, w, comps, prec)
-        elif marker in (0xC5, 0xC6, 0xC7,
-                        0xCD, 0xCE, 0xCF):
-            # differential frames are ONLY legal inside a hierarchical
-            # (DHP-led) stream, which the 0xDE branch above dispatches
-            # to jpeg_hier before any frame arrives -- reaching one
-            # here means the stream never declared a pyramid
-            raise ValueError(
-                "differential JPEG frame outside a hierarchical "
-                "(DHP) stream")
         elif marker == 0xCC:  # DAC: arithmetic conditioning
             parse_dac(seg, dc_cond, ac_cond)
         elif marker == 0xDD:  # DRI
@@ -562,90 +630,91 @@ def _decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
         elif marker == 0xEE and seg[:5] == b"Adobe" and len(seg) >= 12:
             # APP14 Adobe: version(2) flags0(2) flags1(2) transform(1)
             adobe = seg[11]
+        elif marker == 0xDE:  # DHP: the stream is a pyramid
+            if stray is not None:
+                raise ValueError(stray)
+            if dhp is not None:
+                raise ValueError("multiple JPEG DHP segments")
+            dhp = _parse_frame_header(seg, marker)
+        elif marker == 0xDF:  # EXP: expand the reference for the next frame
+            if dhp is None:
+                stray = stray or "JPEG EXP outside a hierarchical stream"
+            else:
+                if len(seg) != 1:
+                    raise ValueError("malformed JPEG EXP segment")
+                if frame is not None:
+                    jpeg_hier.to_reference(frame, qt, refs)
+                    frame = None
+                exp = (seg[0] >> 4, seg[0] & 15)
+                if exp[0] > 1 or exp[1] > 1:
+                    raise ValueError("invalid JPEG EXP expansion flags")
+        elif marker in _SOF and dhp is None:
+            if marker in _DIFF:
+                raise ValueError(
+                    "differential JPEG frame outside a hierarchical "
+                    "(DHP) stream")
+            if frame is not None:
+                raise ValueError("multiple JPEG frame headers")
+            stray = stray or "JPEG frame before DHP in a hierarchical stream"
+            frame = _Frame(marker, seg)
+        elif marker in _SOF:  # the next frame of the pyramid
+            if frame is not None:
+                jpeg_hier.to_reference(frame, qt, refs)
+            n_frames += 1
+            if n_frames > _PYRAMID_MAX_FRAMES:
+                raise ValueError("too many JPEG pyramid frames")
+            frame = _Frame(marker, seg, exp, pyramid=True)
+            exp = (0, 0)
+            if n_frames == 1:
+                first_lossless = frame.lossless
+            jpeg_hier.check_frame(frame, dhp, refs)
         elif marker == 0xDA:  # SOS: entropy data follows
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
-            ns = seg[0]
-            if len(seg) < 1 + 2 * ns + 3:
-                raise ValueError("truncated JPEG SOS header")
-            scan_tables = {}
-            scan_comps = []
-            for c in range(ns):
-                cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]
-                scan_tables[cid] = (tabs >> 4, tabs & 15)
-                scan_comps.append(cid)
-            if len(scan_comps) != len(set(scan_comps)):
-                # a duplicated id would pass the set-based full-scan
-                # gate below while the stream interleaves MORE blocks
-                # per MCU than the decode loop reads -- bitstream
-                # desync into silent garbage (r11 review)
-                raise ValueError("JPEG SOS repeats a component id")
-            ent = _scan_entropy(arith, lossless, payload, pos + 2 + seg_len,
-                                scan_tables, huff_dc, huff_ac,
-                                dc_cond, ac_cond)
-            if lossless:
-                # T.81 H: Ss carries the predictor selector, Al the
-                # point transform; Se/Ah are zero
-                pred_sel = seg[1 + 2 * ns]
-                pt = seg[3 + 2 * ns] & 15
-                for cid in scan_comps:
-                    if cid in loss_done:
-                        raise ValueError(
-                            "lossless JPEG component delivered twice")
-                    loss_done.add(cid)
-                pos = _decode_lossless_scan(
-                    ent, loss, scan_comps, scan_tables, restart_interval,
-                    pred_sel, pt,
-                )
-                continue
-            if progressive:
-                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-                ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
-                pos = _decode_progressive_scan(
-                    ent, prog, scan_comps, scan_tables, restart_interval,
-                    ss, se, ah, al,
-                )
-                continue
-            if seq is None and set(scan_comps) == {c[0] for c in frame[2]}:
-                # single-scan file (the common case): one-pass decode
-                return _decode_scan(
-                    ent, frame, scan_tables, qt, restart_interval,
-                    _resolve_color(frame[2], adobe), dct_prec,
-                )
-            # MULTI-SCAN sequential (r10): each scan delivers the full 64
-            # coefficients for a SUBSET of components -- accumulate into
-            # the shared coefficient state and finalize at EOI, exactly
-            # like progressive
-            if seq is None:
-                seq = _ProgState(*frame, dct_prec)
-            for cid in scan_comps:
-                if cid in seq_done:
-                    raise ValueError(
-                        "JPEG component delivered by two sequential scans"
-                    )
-                seq_done.add(cid)
-            pos = _decode_sequential_scan(
-                ent, seq, scan_comps, scan_tables, restart_interval,
-            )
+            scan_comps, scan_tables, ss, se, ah, al = _parse_sos(seg)
+            ent = _scan_entropy(frame.arith, frame.lossless, payload,
+                                pos + 2 + seg_len, scan_tables, huff_dc,
+                                huff_ac, dc_cond, ac_cond)
+            if frame.state is None:
+                if set(scan_comps) == {c[0] for c in frame.comps}:
+                    # single-scan file (the common case): one-pass decode
+                    return _decode_scan(
+                        ent, frame, scan_tables, qt, restart_interval,
+                        _resolve_color(frame.comps, adobe))
+                # MULTI-SCAN sequential (r10): each scan delivers the
+                # full 64 coefficients for a SUBSET of components --
+                # accumulate and finalize at EOI, exactly like progressive
+                frame.state = _ProgState(frame.h, frame.w, frame.comps,
+                                         frame.prec)
+            pos = frame.decode_scan(ent, scan_comps, scan_tables,
+                                    restart_interval, ss, se, ah, al)
             continue
         pos += 2 + seg_len
-    if prog is not None and prog.n_scans > 0:
-        # missing EOI but scans decoded: tolerate truncated-tail files
-        return _finalize_progressive(
-            prog, qt, _resolve_color(frame[2], adobe))
-    if seq is not None and seq_done == {c[0] for c in frame[2]}:
-        # every component's scan arrived; only the EOI byte is missing
-        return _finalize_progressive(
-            seq, qt, _resolve_color(frame[2], adobe))
-    if loss is not None and loss_done == {c[0] for c in frame[2]}:
-        return _finalize_lossless(loss, adobe)
-    if seq is not None or loss is not None:
-        # scans WERE decoded but some component never arrived before the
-        # payload ended -- say so, instead of the misleading "no SOS"
-        # (r11 review: an operator debugging strict mode was told no
-        # scan existed when the real problem was a truncated tail)
-        raise ValueError("JPEG truncated with undelivered components")
-    raise ValueError("JPEG has no SOS segment")
+    if dhp is not None:
+        raise ValueError("hierarchical JPEG ended without EOI")
+    return _finish_frame(frame, qt, adobe, eoi=False)
+
+
+def _finish_frame(frame: _Frame | None, qt, adobe: int | None,
+                  eoi: bool) -> tuple[int, int, np.ndarray]:
+    """The image of a plain (one-frame) file at its EOI, or where the
+    payload ends without one: a truncated tail is tolerated once every
+    component's scan arrived."""
+    if frame is None or frame.state is None or (
+            frame.progressive and not frame.n_scans):
+        raise ValueError("JPEG ended before scan data" if eoi
+                         else "JPEG has no SOS segment")
+    if not frame.progressive and not frame.complete:
+        # scans WERE decoded but some component never arrived -- say so,
+        # instead of the misleading "no SOS" (r11 review)
+        kind = "lossless" if frame.lossless else "sequential"
+        raise ValueError(f"{kind} JPEG ended with undelivered components"
+                         if eoi else
+                         "JPEG truncated with undelivered components")
+    if frame.lossless:
+        return _finalize_lossless(frame.state, adobe)
+    return _finalize_progressive(frame.state, qt,
+                                 _resolve_color(frame.comps, adobe))
 
 
 def _resolve_color(comps, adobe: int | None) -> str:
@@ -672,13 +741,12 @@ def _resolve_color(comps, adobe: int | None) -> str:
     return "cmyk"
 
 
-def _decode_scan(ent, frame, scan_tables, qt, restart_interval, color,
-                 prec=8):
+def _decode_scan(ent, frame, scan_tables, qt, restart_interval, color):
     """Single-scan sequential frame (every component in one scan): each
     data unit dequantizes and IDCTs straight into its plane, under the
     shared MAX_PIXELS cap rather than the multi-scan path's stricter
     coefficient-store cap. ``ent``: the scan's entropy decoder."""
-    h, w, comps = frame
+    h, w, comps, prec = frame.h, frame.w, frame.comps, frame.prec
     if h <= 0 or w <= 0:
         raise ValueError("degenerate JPEG dimensions")
     from .gif import MAX_PIXELS
@@ -976,10 +1044,10 @@ def _decode_sequential_scan(ent, seq, scan_comps, scan_tables,
     return _skip_to_marker(ent)
 
 
-def _finalize_progressive(prog: _ProgState, qt,
-                          color) -> tuple[int, int, np.ndarray]:
+def _idct_planes(prog: _ProgState, qt) -> dict[int, np.ndarray]:
     """Dequantize + de-zigzag + batched IDCT of the accumulated
-    coefficients, then the shared assemble tail."""
+    coefficients: one float plane per component over its MCU-padded
+    block grid, not yet level-shifted."""
     planes = {}
     for cid, hs, vs, tq in prog.comps:
         q = qt.get(tq)
@@ -996,8 +1064,15 @@ def _finalize_progressive(prog: _ProgState, qt,
             pix.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3)
             .reshape(nby * 8, nbx * 8)
         )
-    return _assemble(planes, prog.comps, prog.h, prog.w, prog.hmax,
-                     prog.vmax, color, prog.prec)
+    return planes
+
+
+def _finalize_progressive(prog: _ProgState, qt,
+                          color) -> tuple[int, int, np.ndarray]:
+    """The accumulated coefficients through the IDCT and the shared
+    assemble tail."""
+    return _assemble(_idct_planes(prog, qt), prog.comps, prog.h, prog.w,
+                     prog.hmax, prog.vmax, color, prog.prec)
 
 
 # ------------------------------------------------- lossless (SOF3)
@@ -1142,7 +1217,13 @@ def _finalize_lossless(loss: _LosslessState,
          << loss.pt.get(cid, 0)).astype(np.float64)
         for cid, *_ in loss.comps
     ]
-    prec = loss.prec
+    return loss.w, loss.h, _lossless_pixels(chans, loss.prec, adobe)
+
+
+def _lossless_pixels(chans, prec: int, adobe: int | None) -> np.ndarray:
+    """Absolute P-bit channels (lossless frames and lossless-led
+    pyramids) to the uint8 output: literal channels unless Adobe
+    transform 1 says YCbCr, full scale 2^P - 1 mapped to 255."""
     if len(chans) == 3 and adobe == 1:
         half = float(1 << (prec - 1))  # chroma centers at 2^(P-1)
         y, cb, cr = chans[0], chans[1] - half, chans[2] - half
@@ -1154,5 +1235,4 @@ def _finalize_lossless(loss: _LosslessState,
     out = np.dstack(chans)
     if prec != 8:  # map full-scale 2^P - 1 to 255
         out = out * (255.0 / float((1 << prec) - 1))
-    return (loss.w, loss.h,
-            np.clip(np.round(out), 0, 255).astype(np.uint8))
+    return np.clip(np.round(out), 0, 255).astype(np.uint8)

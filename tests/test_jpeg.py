@@ -351,6 +351,28 @@ def test_jpeg_rejects_malformed_and_nonbaseline():
         decode_jpeg_pixels(progressive)                   # SOF2 declined
     with pytest.raises(ValueError):
         decode_jpeg_pixels(b"not a jpeg")
+    # an SOF whose component count claims more than the segment carries
+    short = bytearray(good)
+    short[bytes(short).find(b"\xff\xc0") + 9] = 3
+    with pytest.raises(ValueError, match="truncated JPEG frame header"):
+        decode_jpeg_pixels(bytes(short))
+
+
+def test_jpeg_sof_repeated_component_id_rejected():
+    """Scans name components by id, so an SOF repeating one leaves a
+    plane no scan can reach: ids (1, 1, 3) with an SOS over (1, 3) would
+    otherwise decode to garbage."""
+    px = np.random.RandomState(7).randint(0, 256, (16, 16, 3)).astype(
+        np.uint8)
+    blob = bytearray(make_jpeg(px))
+    sof_at = bytes(blob).find(b"\xff\xc0")
+    assert blob[sof_at + 10 : sof_at + 17 : 3] == b"\x01\x02\x03"
+    blob[sof_at + 13] = 1  # component ids (1, 1, 3)
+    sos_at = bytes(blob).find(b"\xff\xda")
+    sos_end = sos_at + 2 + struct.unpack_from(">H", blob, sos_at + 2)[0]
+    blob[sos_at:sos_end] = _seg(0xDA, bytes([2, 1, 0x00, 3, 0x00, 0, 63, 0]))
+    with pytest.raises(ValueError, match="JPEG frame repeats a component id"):
+        decode_jpeg_pixels(bytes(blob))
 
 
 def test_jpeg_through_decode_image_and_mapinpandas(spark):

@@ -30,9 +30,6 @@ from test_jpeg import (
 )
 
 from aws_cloudfront_realtime_monitoring_spark.operators.jpeg import decode_jpeg_pixels
-from aws_cloudfront_realtime_monitoring_spark.operators.jpeg_hier import (
-    decode_hierarchical,
-)
 
 
 # ------------------------------------------------------------ encoder
@@ -228,7 +225,7 @@ def _rng(seed: int) -> np.random.RandomState:
 def test_hier_lossless_two_level_roundtrip_exact():
     px = _rng(5).randint(0, 256, (21, 18)).astype(np.int64)
     data = make_hier_lossless_gray(px, levels=2)
-    w, h, out = decode_jpeg_pixels(data)  # via the DHP dispatch
+    w, h, out = decode_jpeg_pixels(data)
     assert (w, h) == (18, 21)
     np.testing.assert_array_equal(out[:, :, 0], px.astype(np.uint8))
 
@@ -236,7 +233,7 @@ def test_hier_lossless_two_level_roundtrip_exact():
 def test_hier_lossless_three_level_roundtrip_exact():
     px = _rng(6).randint(0, 256, (40, 33)).astype(np.int64)
     data = make_hier_lossless_gray(px, levels=3)
-    _w, _h, out = decode_hierarchical(data)
+    _w, _h, out = decode_jpeg_pixels(data)
     np.testing.assert_array_equal(out[:, :, 0], px.astype(np.uint8))
 
 
@@ -278,7 +275,7 @@ def test_hier_lossless_single_axis_expansion():
     out += _sos([(1, 0, 0)], 0, 0, 0, 0)
     out += _encode_lossless_plane(diff, differential=True)
     out += b"\xff\xd9"
-    _w, _h, got = decode_hierarchical(bytes(out))
+    _w, _h, got = decode_jpeg_pixels(bytes(out))
     np.testing.assert_array_equal(got[:, :, 0], px.astype(np.uint8))
 
 
@@ -303,7 +300,7 @@ def test_hier_lossless_final_correction_without_expansion():
     out += _sos([(1, 1, 0)], 0, 0, 0, 0)
     out += _encode_lossless_plane(diff, differential=True)
     out += b"\xff\xd9"
-    w, h, got = decode_hierarchical(bytes(out))
+    w, h, got = decode_jpeg_pixels(bytes(out))
     assert (w, h) == (16, 16)
     # mod-2^16 correction makes the DCT stage's rounding vanish IF the
     # decoder's base reconstruction matches the encoder's model; allow
@@ -314,7 +311,7 @@ def test_hier_lossless_final_correction_without_expansion():
 def test_hier_error_paths():
     px = _rng(11).randint(0, 256, (8, 8)).astype(np.int64)
     good = make_hier_lossless_gray(px, levels=2)
-    assert decode_hierarchical(good)[2].shape == (8, 8, 1)
+    assert decode_jpeg_pixels(good)[2].shape == (8, 8, 1)
 
     # differential frame before any reference
     out = bytearray(b"\xff\xd8")
@@ -325,7 +322,7 @@ def test_hier_error_paths():
     out += _encode_lossless_plane(px & 0xFFFF, differential=True)
     out += b"\xff\xd9"
     with pytest.raises(ValueError, match="reference"):
-        decode_hierarchical(bytes(out))
+        decode_jpeg_pixels(bytes(out))
 
     # EXP before a NON-differential frame
     out = bytearray(b"\xff\xd8")
@@ -337,7 +334,7 @@ def test_hier_error_paths():
     out += _encode_lossless_plane(px, differential=False)
     out += b"\xff\xd9"
     with pytest.raises(ValueError, match="EXP before a non-differential"):
-        decode_hierarchical(bytes(out))
+        decode_jpeg_pixels(bytes(out))
 
     # pyramid that never reaches DHP resolution
     out = bytearray(b"\xff\xd8")
@@ -348,7 +345,7 @@ def test_hier_error_paths():
     out += _encode_lossless_plane(px, differential=False)
     out += b"\xff\xd9"
     with pytest.raises(ValueError, match="DHP resolution"):
-        decode_hierarchical(bytes(out))
+        decode_jpeg_pixels(bytes(out))
 
     # a differential SOF outside any DHP stream stays rejected
     naked = bytearray(b"\xff\xd8")
@@ -373,7 +370,7 @@ def test_hier_error_paths():
     out += _encode_lossless_plane(px, differential=False)
     out += b"\xff\xd9"
     with pytest.raises(ValueError, match="undelivered"):
-        decode_hierarchical(bytes(out))
+        decode_jpeg_pixels(bytes(out))
 
     # ... and delivering the SAME component twice in one frame is a
     # duplicate, not a silent overwrite
@@ -386,7 +383,7 @@ def test_hier_error_paths():
         out += _encode_lossless_plane(px, differential=False)
     out += b"\xff\xd9"
     with pytest.raises(ValueError, match="delivered twice"):
-        decode_hierarchical(bytes(out))
+        decode_jpeg_pixels(bytes(out))
 
     # differential lossless scan must carry predictor 0
     out = bytearray(good)
@@ -398,7 +395,65 @@ def test_hier_error_paths():
     assert out[ss_off] == 0
     out[ss_off] = 1
     with pytest.raises(ValueError, match="predictor 0"):
-        decode_hierarchical(bytes(out))
+        decode_jpeg_pixels(bytes(out))
+
+    # pyramid sequencing: a DHP must lead every frame and EXP, once
+    dhp_at = good.find(b"\xff\xde")
+    dhp = good[dhp_at:dhp_at + 4 + good[dhp_at + 3] - 2]
+    sof_at = good.find(b"\xff\xc3")
+    sof_end = sof_at + 2 + good[sof_at + 3]
+    late = (good[:dhp_at] + good[dhp_at + len(dhp):sof_end] + dhp
+            + good[sof_end:])
+    with pytest.raises(ValueError, match="frame before DHP"):
+        decode_jpeg_pixels(late)
+    with pytest.raises(ValueError, match="EXP outside"):
+        decode_jpeg_pixels(good[:dhp_at] + _exp(1, 1) + good[dhp_at:])
+    with pytest.raises(ValueError, match="multiple JPEG DHP"):
+        decode_jpeg_pixels(good[:sof_at] + dhp + good[sof_at:])
+    # ... while a plain file ignores an EXP it never acts on
+    from test_jpeg import make_jpeg
+
+    plain = make_jpeg(px.astype(np.uint8)[:, :, None])
+    assert np.array_equal(decode_jpeg_pixels(plain[:2] + _exp(1, 1)
+                                             + plain[2:])[2],
+                          decode_jpeg_pixels(plain)[2])
+
+
+def test_hier_baseline_frame_must_be_8_bit():
+    """T.81 B.2.2 holds inside a pyramid too: SOF0 is 8-bit by
+    definition. A 12-bit pyramid whose base frame carries SOF0 is
+    rejected; the same frames under SOF1 (extended sequential)
+    decode."""
+    px = _rng(20).randint(0, 256, (16, 16)).astype(np.uint8)
+    data = bytearray(make_hier_dct_gray(px)[0])
+    for marker in (b"\xff\xde", b"\xff\xc0", b"\xff\xc5"):
+        data[bytes(data).find(marker) + 4] = 12  # P of DHP and frames
+    with pytest.raises(ValueError, match="12-bit baseline JPEG invalid"):
+        decode_jpeg_pixels(bytes(data))
+    data[bytes(data).find(b"\xff\xc0") + 1] = 0xC1
+    assert decode_jpeg_pixels(bytes(data))[:2] == (16, 16)
+
+
+@pytest.mark.parametrize("build", ["lossless", "dct"])
+def test_hier_fuzz_valueerror_only(build):
+    """Mutations of a valid pyramid either decode or raise ValueError --
+    never anything else (the executor-task contract), through the one
+    marker walk that reads every frame of the stream."""
+    rng = np.random.RandomState(7)
+    px = rng.randint(0, 256, (12, 10)).astype(np.int64)
+    good = (make_hier_lossless_gray(px, levels=2) if build == "lossless"
+            else make_hier_dct_gray(px.astype(np.uint8))[0])
+    for _ in range(300):
+        blob = bytearray(good)
+        for _f in range(rng.randint(1, 6)):
+            blob[rng.randint(0, len(blob))] = rng.randint(0, 256)
+        if rng.rand() < 0.5:
+            blob = blob[: rng.randint(2, len(blob))]
+        try:
+            _w, _h, pix = decode_jpeg_pixels(bytes(blob))
+            assert pix.dtype == np.uint8
+        except ValueError:
+            pass
 
 
 # ------------------------------------------- arithmetic pyramid frames
@@ -454,7 +509,7 @@ def test_hier_arith_lossless_pyramid_exact():
     out += _sos([(1, 0, 0)], 0, 0, 0, 0)
     out += _arith_lossless_scan_bytes(diff, differential=True)
     out += b"\xff\xd9"
-    w, h, got = decode_hierarchical(bytes(out))
+    w, h, got = decode_jpeg_pixels(bytes(out))
     assert (w, h) == (11, 14)
     np.testing.assert_array_equal(got[:, :, 0], px.astype(np.uint8))
 
@@ -503,7 +558,7 @@ def test_hier_arith_dct_pyramid():
     out += _arith_dct_scan_bytes(diff, level_shift=False,
                                  differential=True)
     out += b"\xff\xd9"
-    w, h, got = decode_hierarchical(bytes(out))
+    w, h, got = decode_jpeg_pixels(bytes(out))
     assert (w, h) == (15, 18)
     assert np.abs(got[:, :, 0].astype(int) - model.astype(int)).max() <= 1
 
@@ -551,7 +606,7 @@ def test_hier_progressive_differential_dc_scan_exact():
     out += _sos([(1, 0, 0)], 0, 0, 0, 0)  # progressive DC scan, Al=0
     out += dc_scan
     out += b"\xff\xd9"
-    _w, _h, got = decode_hierarchical(bytes(out))
+    _w, _h, got = decode_jpeg_pixels(bytes(out))
     assert np.abs(got[:, :, 0].astype(int) - target.astype(int)).max() <= 1
 
 
@@ -607,7 +662,7 @@ def test_hier_arith_progressive_differential_dc_scan_exact():
     out += _sos([(1, 0, 0)], 0, 0, 0, 0)
     out += dc_scan
     out += b"\xff\xd9"
-    _w, _h, got = decode_hierarchical(bytes(out))
+    _w, _h, got = decode_jpeg_pixels(bytes(out))
     assert np.abs(got[:, :, 0].astype(int) - target.astype(int)).max() <= 1
 
 
@@ -633,7 +688,7 @@ def test_hier_lossless_color_pyramid_exact():
         out += _sos([(ci + 1, 0, 0)], 0, 0, 0, 0)
         out += _encode_lossless_plane(diff, differential=True)
     out += b"\xff\xd9"
-    w, h, got = decode_hierarchical(bytes(out))
+    w, h, got = decode_jpeg_pixels(bytes(out))
     assert (w, h) == (9, 10)
     np.testing.assert_array_equal(got, px.astype(np.uint8))
 
@@ -719,11 +774,11 @@ def test_hier_differential_frame_restarts_match_unrestarted(lossless, arith):
     units; the restarted decode equals the unrestarted one (lossless
     pyramids: both equal the source exactly)."""
     px = _rng(19).randint(30, 220, (18, 21)).astype(np.int64)
-    plain = decode_hierarchical(
+    plain = decode_jpeg_pixels(
         _restarted_pyramid(px, lossless, arith, 0))
     # arithmetic lossless intervals are whole rows: N = k * width
     for restart in ((21, 42) if lossless and arith else (1, 4)):
-        got = decode_hierarchical(
+        got = decode_jpeg_pixels(
             _restarted_pyramid(px, lossless, arith, restart))
         assert got[:2] == plain[:2] == (21, 18)
         np.testing.assert_array_equal(got[2], plain[2])
