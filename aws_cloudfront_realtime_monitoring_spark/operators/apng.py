@@ -8,9 +8,11 @@ animation as ancillary chunks an APNG-unaware reader ignores: one
 frame (sequence number, region geometry, delay, dispose/blend ops), and
 ``fdAT`` chunks carrying each non-first frame's pixel stream. A frame
 region is encoded EXACTLY like a standalone PNG image of its own
-dimensions under the IHDR depth/color/interlace -- so frame decode here
-is :func:`multimodal._decode_subimage` reused verbatim, and only the
-chunk walk, validation, and compositing are new.
+dimensions under the IHDR depth/color/interlace. The chunk walk and its
+animation validation are SHARED with the static decoder
+(:class:`multimodal._PNGChunks`: one pass collects the IDAT stream and
+the frames), and so is each frame's scanline decode
+(:meth:`multimodal._PNGChunks.samples`); only compositing is new here.
 
 Compositing follows the spec's state machine: the output buffer (always
 RGBA; gray/palette sources expand) starts fully-transparent black, each
@@ -24,9 +26,9 @@ Memory contract matches :func:`operators.gif.decode_gif_frames`: only
 requested frames are retained while every frame composites through one
 reused canvas; with no bound, files past ``DEFAULT_MAX_FRAMES`` are
 REFUSED, never silently trimmed. Malformed ANIMATION data raises
-``ValueError``; ``decode_image`` catches it and reports the payload as
-the static image an APNG-unaware viewer would show (the spec's own
-fallback posture).
+``ValueError`` here; the walk only records it, so ``decode_image``
+reports the payload as the static image an APNG-unaware viewer would
+show (the spec's own fallback posture).
 
 Reference parity: the reference (aws-cloudfront-realtime-monitoring)
 delegates media handling entirely; this mirrors the GIF animation path's
@@ -35,18 +37,9 @@ role as the repo's real frame-sampling substrate.
 
 from __future__ import annotations
 
-import struct
-import zlib
-
 import numpy as np
 
-from .multimodal import (
-    _PNG_CHANNELS,
-    _PNG_DEPTHS,
-    _PNG_SIG,
-    _decode_subimage,
-    _expand_png_samples,
-)
+from .multimodal import _PNGChunks, _expand_png_samples
 
 #: same retention contract as the GIF decoder
 DEFAULT_MAX_FRAMES = 256
@@ -54,174 +47,24 @@ DEFAULT_MAX_FRAMES = 256
 _DISPOSE_NONE, _DISPOSE_BACKGROUND, _DISPOSE_PREVIOUS = 0, 1, 2
 _BLEND_SOURCE, _BLEND_OVER = 0, 1
 
-#: the animation control chunks: ancillary to a static reader, but a
-#: CRC/shape error in one means the ANIMATION is corrupt -- raise (the
-#: caller falls back to the static image) instead of skip-and-continue
-_ANIM_CHUNKS = (b"acTL", b"fcTL", b"fdAT")
+
+def _animation(payload: bytes) -> _PNGChunks:
+    """The shared chunk walk, raising the animation defect it recorded
+    ("not an APNG (no acTL)" for a static PNG) as ``ValueError``."""
+    png = _PNGChunks(payload)
+    if png.anim_error is not None:
+        raise ValueError(png.anim_error)
+    return png
 
 
-class _Frame:
-    __slots__ = ("w", "h", "x", "y", "delay_num", "delay_den",
-                 "dispose", "blend", "data", "from_idat")
-
-    def __init__(self, fctl: bytes, from_idat: bool) -> None:
-        (_seq, self.w, self.h, self.x, self.y, self.delay_num,
-         self.delay_den, self.dispose, self.blend) = struct.unpack(
-            ">IIIIIHHBB", fctl)
-        self.data: list[bytes] = []
-        self.from_idat = from_idat
-
-
-def _parse(payload: bytes) -> tuple[tuple, bytes | None, bytes | None,
-                                    int, list[_Frame]]:
-    """Chunk walk -> (ihdr fields, plte, trns, num_plays, frames).
-    Raises ValueError when the payload is not a PNG, carries no acTL, or
-    the animation chunks are malformed (bad CRC, out-of-order sequence
-    numbers, geometry outside the canvas, fcTL count != acTL's)."""
-    if len(payload) < len(_PNG_SIG) + 12 or payload[: len(_PNG_SIG)] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, ended = len(_PNG_SIG), None, False
-    plte = trns = None
-    actl = None
-    frames: list[_Frame] = []
-    next_seq = 0
-    saw_idat = False
-    idat_frame: _Frame | None = None  # the fcTL-before-IDAT frame, if any
-    pending_fctl: bytes | None = None
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack_from(">I", payload, pos)
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        if len(data) < length or pos + 12 + length > len(payload):
-            raise ValueError("truncated PNG chunk")
-        (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
-        if crc != zlib.crc32(ctype + data) & 0xFFFFFFFF:
-            if ctype[:1].isupper() or ctype in _ANIM_CHUNKS:
-                raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-            pos += 12 + length
-            continue
-        if ctype == b"IHDR":
-            ihdr = data
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"tRNS":
-            trns = data
-        elif ctype == b"acTL":
-            if saw_idat or actl is not None or len(data) != 8:
-                raise ValueError("misplaced or malformed acTL")
-            actl = struct.unpack(">II", data)
-        elif ctype == b"fcTL":
-            if len(data) != 26 or pending_fctl is not None:
-                raise ValueError("malformed or doubled fcTL")
-            (seq,) = struct.unpack_from(">I", data)
-            if seq != next_seq:
-                raise ValueError(
-                    f"APNG sequence number {seq}, expected {next_seq}")
-            next_seq += 1
-            pending_fctl = data
-        elif ctype == b"IDAT":
-            if pending_fctl is not None and not frames:
-                idat_frame = _Frame(pending_fctl, from_idat=True)
-                frames.append(idat_frame)
-                pending_fctl = None
-            if idat_frame is not None:
-                idat_frame.data.append(data)
-            saw_idat = True
-        elif ctype == b"fdAT":
-            if len(data) < 4:
-                raise ValueError("malformed fdAT")
-            (seq,) = struct.unpack_from(">I", data)
-            if seq != next_seq:
-                raise ValueError(
-                    f"APNG sequence number {seq}, expected {next_seq}")
-            next_seq += 1
-            if pending_fctl is not None:
-                frames.append(_Frame(pending_fctl, from_idat=False))
-                pending_fctl = None
-            if not frames or frames[-1].from_idat:
-                raise ValueError("fdAT with no owning fcTL")
-            frames[-1].data.append(data[4:])
-        elif ctype == b"IEND":
-            ended = True
-            break
-        pos += 12 + length
-    if ihdr is None or len(ihdr) != 13 or not saw_idat or not ended:
-        raise ValueError("PNG missing IHDR/IDAT/IEND")
-    if actl is None:
-        raise ValueError("not an APNG (no acTL)")
-    if pending_fctl is not None:
-        raise ValueError("fcTL with no frame data")
-    num_frames, num_plays = actl
-    if num_frames != len(frames) or num_frames < 1:
-        raise ValueError(
-            f"acTL declares {num_frames} frames, stream has {len(frames)}")
-    width, height, depth, color, comp, filt, interlace = struct.unpack(
-        ">IIBBBBB", ihdr)
-    if width <= 0 or height <= 0:
-        raise ValueError("degenerate PNG dimensions")
-    from . import SLOW_PATH_MAX_PIXELS
-
-    if width * height > SLOW_PATH_MAX_PIXELS:
-        raise ValueError("PNG dimensions exceed the decode cap")
-    if (color not in _PNG_CHANNELS or depth not in _PNG_DEPTHS[color]
-            or comp != 0 or filt != 0 or interlace not in (0, 1)):
-        raise ValueError("invalid PNG IHDR combination")
-    for i, f in enumerate(frames):
-        if (f.w <= 0 or f.h <= 0 or f.x + f.w > width or f.y + f.h > height
-                or f.dispose > 2 or f.blend > 1):
-            raise ValueError(f"APNG frame {i} geometry/ops invalid")
-        if not f.data:
-            raise ValueError(f"APNG frame {i} has no pixel data")
-    if frames[0].from_idat and (
-        frames[0].w != width or frames[0].h != height
-        or frames[0].x or frames[0].y
-    ):
-        raise ValueError("APNG first (IDAT) frame must cover the canvas")
-    return ((width, height, depth, color, interlace), plte, trns,
-            num_plays, frames)
-
-
-def apng_frame_count(payload: bytes) -> int | None:
-    """Frame count from the animation chunks, WITHOUT inflating any
-    pixel data (chunk walk only) -- the decode_image metadata hook.
-    Returns None for a static PNG (no acTL); raises ValueError when the
-    animation data is malformed (caller falls back to static).
-
-    Contract nuance (r15): the ``acTL``-substring fast path below
-    returns None WITHOUT re-validating the chunk stream, so a payload
-    that is malformed *and* contains no acTL bytes reads as a clean
-    static PNG here even though _parse would have raised. That is safe
-    for the production call site because decode_image has already run
-    (and CRC'd) the static decode on the same payload -- corrupt chunk
-    streams never reach this gate -- but a future caller that wants
-    malformed-vs-static discrimination on raw payloads must call
-    _parse directly."""
-    # cheap gate before the full walk: _parse re-CRCs every chunk
-    # (including all IDAT bytes the static decode just CRC'd), which is
-    # pure duplicate per-byte work on the production decode_batches hot
-    # path for the overwhelmingly-common static case (r14 review). A
-    # C-speed substring scan can false-POSITIVE on compressed pixel
-    # bytes (then the full parse decides, semantics unchanged) but never
-    # false-negative: a real acTL chunk always contains these bytes.
-    if b"acTL" not in payload:
-        return None
-    try:
-        _hdr, _plte, _trns, _plays, frames = _parse(payload)
-    except ValueError as exc:
-        if "no acTL" in str(exc):
-            return None
-        raise
-    return len(frames)
-
-
-def _to_rgba(px: np.ndarray, color: int, depth: int,
-             plte: bytes | None, trns: bytes | None) -> np.ndarray:
+def _to_rgba(png: _PNGChunks, px: np.ndarray) -> np.ndarray:
     """Native-channel samples -> RGBA at the source depth's dtype: the
     static decoder's expansion rules (:func:`multimodal.
     _expand_png_samples` -- ONE copy, r14 review) plus the forced-RGBA
     presentation compositing needs (gray replicates to 3 channels,
     missing alpha fills opaque)."""
-    px, alpha = _expand_png_samples(px, color, depth, plte, trns)
+    color, depth = png.color, png.depth
+    px, alpha = _expand_png_samples(px, color, depth, png.plte, png.trns)
     if color == 3:
         if alpha is None:
             alpha = np.full(px.shape[:2], 255, np.uint8)
@@ -260,8 +103,8 @@ def _blend_over(dst: np.ndarray, src: np.ndarray, amax: int) -> np.ndarray:
 def count_apng_frames(payload: bytes) -> tuple[int, int, int]:
     """(width, height, n_frames) from the chunk walk alone -- the
     sampling pre-pass twin of :func:`gif.count_gif_frames`."""
-    (width, height, *_rest), _plte, _trns, _plays, frames = _parse(payload)
-    return width, height, len(frames)
+    png = _animation(payload)
+    return png.width, png.height, len(png.frames)
 
 
 def decode_apng_frames(
@@ -275,8 +118,8 @@ def decode_apng_frames(
     with neither, files past ``DEFAULT_MAX_FRAMES`` frames are REFUSED
     (never silently trimmed). Peak memory is one canvas (plus one
     PREVIOUS-dispose snapshot) plus the kept copies."""
-    hdr, plte, trns, _plays, frames = _parse(payload)
-    width, height, depth, color, interlace = hdr
+    png = _animation(payload)
+    frames = png.frames
     if keep_indices is not None:
         def keep(i: int) -> bool:
             return i in keep_indices
@@ -292,11 +135,9 @@ def decode_apng_frames(
     else:
         def keep(i: int) -> bool:
             return i < max_frames
-    ch = _PNG_CHANNELS[color]
-    bpp = max(1, ch * depth // 8)
-    dt = np.uint16 if depth == 16 else np.uint8
-    amax = 65535 if depth == 16 else 255
-    canvas = np.zeros((height, width, 4), dt)  # transparent black
+    dt = np.uint16 if png.depth == 16 else np.uint8
+    amax = 65535 if png.depth == 16 else 255
+    canvas = np.zeros((png.height, png.width, 4), dt)  # transparent black
     screens: list[np.ndarray] = []
     for i, f in enumerate(frames):
         region = (slice(f.y, f.y + f.h), slice(f.x, f.x + f.w))
@@ -305,11 +146,7 @@ def decode_apng_frames(
             dispose = _DISPOSE_BACKGROUND  # spec: first-frame degrade
         snapshot = canvas[region].copy() if dispose == _DISPOSE_PREVIOUS \
             else None
-        src = _to_rgba(
-            _decode_subimage(b"".join(f.data), f.w, f.h, ch, depth,
-                             interlace, bpp),
-            color, depth, plte, trns,
-        )
+        src = _to_rgba(png, png.samples(f.data, f.w, f.h))
         if f.blend == _BLEND_SOURCE or i == 0:
             canvas[region] = src
         else:
@@ -320,4 +157,4 @@ def decode_apng_frames(
             canvas[region] = 0
         elif dispose == _DISPOSE_PREVIOUS:
             canvas[region] = snapshot
-    return width, height, screens
+    return png.width, png.height, screens

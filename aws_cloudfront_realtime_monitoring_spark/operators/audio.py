@@ -24,11 +24,11 @@ an expensive model ever sees them.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .multimodal import map_payloads
 
 #: output schema of the audio feature step (integer-quantized features so
 #: cross-engine comparisons stay exact: rms/zcr scaled by 1e6)
@@ -292,39 +292,17 @@ def audio_meta_or_features(doc_id: int, payload: bytes) -> dict:
 def audio_feature_batches(
     docs_with_payload: DataFrame, skip_invalid: bool = True
 ) -> DataFrame:
-    """Arrow-batched feature extraction (the image decode_batches shape):
-    per-batch pandas processing, bounded memory, declared schema, no
-    driver involvement. Input: (doc_id BIGINT, payload BINARY).
+    """Arrow-batched feature extraction through the image tier's row loop
+    (:func:`multimodal.map_payloads`): per-batch pandas processing,
+    bounded memory, declared schema, no driver involvement. Input:
+    (doc_id BIGINT, payload BINARY).
 
     ``skip_invalid`` (default): undecodable payloads are DROPPED instead
     of failing the task -- the production curation behavior for corrupt
     records at 100 TB (count them via an input-vs-output row diff);
     ``skip_invalid=False`` propagates the ValueError for strict runs."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                # NULL payloads/doc_ids take the skip_invalid path
-                # explicitly (bytes(None) would TypeError past the
-                # handler; int(NaN) raised ValueError only by accident)
-                if pd.isna(r.doc_id):
-                    if skip_invalid:
-                        continue
-                    raise ValueError("NULL doc_id in audio batch")
-                payload = bytes(r.payload) if r.payload is not None else b""
-                try:
-                    rows.append(audio_meta_or_features(int(r.doc_id), payload))
-                except ValueError:
-                    if not skip_invalid:
-                        raise
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "sample_rate", "n_channels",
-                    "n_samples", "duration_ms", "rms_micro", "zcr_micro",
-                    "fmt",
-                ],
-            )
-
-    return docs_with_payload.mapInPandas(feats, AUDIO_SCHEMA)
+    return map_payloads(
+        docs_with_payload, AUDIO_SCHEMA,
+        lambda doc_id, payload: [audio_meta_or_features(doc_id, payload)],
+        skip_invalid,
+    )

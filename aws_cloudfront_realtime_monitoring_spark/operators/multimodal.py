@@ -12,35 +12,33 @@ SOF5/6/7/13/14/15 frames and EXP expansion (operators/jpeg.py +
 jpeg_arith.py + jpeg_hier.py, pure numpy -- r14 closed the matrix),
 for GIF87a/89a incl. animation (operators/gif.py) and APNG animation
 (operators/apng.py, r14), for lossless WebP/VP8L (operators/webp.py: prefix
-codes, color cache, LZ77, all four transforms), for lossy WebP/VP8 key
+codes, color cache, LZ77, all four transforms), and for lossy WebP/VP8 key
 frames (operators/vp8.py: boolean arithmetic decoder, intra
 prediction, IDCT, in-loop deblocking -- bit-exact vs libwebp in YUV,
-r9), and, when Pillow is present in the environment, for every format
-PIL opens (feature-flagged import; this build has no PIL). Payloads in
-any other format fall back to ``fake_decode`` -- a
-deterministic metadata fake derived from payload bytes -- unless
-``strict=True``, which raises instead. The Spark-side design is
-identical in all cases and is what matters at 100 TB of media: binary
-column handling, Arrow batch transfer, a declared output schema,
-per-partition batching -- a narrow map with no shuffle, payload bytes
-never leaving the executor.
+r9); MP4 and Matroska/WebM containers report real header metadata.
+Every payload is sniffed once against ONE format table (``_FORMATS``),
+which the metadata tier (:func:`decode_image`) and the pixel tier
+(:func:`decode_pixel_stats`, the resize operator) both read; a PNG's
+chunks are walked once (:class:`_PNGChunks`) for the static image and
+its APNG animation alike. Payloads in any other format fall back to
+``fake_decode`` -- a deterministic metadata fake derived from payload
+bytes. Every payload map runs through ONE Arrow row loop
+(:func:`map_payloads`). The Spark-side design is what matters at 100 TB
+of media: binary column handling, Arrow batch transfer, a declared
+output schema, per-partition batching -- a narrow map with no shuffle,
+payload bytes never leaving the executor.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # feature flag: real general-format decode iff Pillow exists
-    from PIL import Image as _PILImage  # pragma: no cover (absent here)
-except ImportError:
-    _PILImage = None
 
 #: output schema of the decode step
 DECODE_SCHEMA = (
@@ -226,66 +224,6 @@ def _unpack_samples(
     return samples[:, :pw].reshape(ph, pw, 1)  # depth<8 => ch == 1
 
 
-def _decode_subimage(
-    zdata: bytes, width: int, height: int, ch: int, depth: int,
-    interlace: int, bpp: int,
-) -> np.ndarray:
-    """One compressed PNG scanline stream -> ``(height, width, ch)``
-    sample array (uint16 at depth 16, uint8 otherwise): bounded inflate,
-    per-(sub-)image defilter, sample unpack, Adam7 reassembly. Shared by
-    the static decoder (the IDAT stream) and the APNG frame decoder
-    (each frame's concatenated fdAT stream -- per the APNG spec a frame
-    region is encoded exactly like a standalone image of its own
-    dimensions under the IHDR depth/color/interlace)."""
-
-    def rowbytes(pw: int) -> int:
-        return (pw * ch * depth + 7) // 8
-
-    if interlace == 0:
-        passes = [(0, 0, 1, 1, width, height)]
-    else:
-        passes = [
-            (x0, y0, dx, dy,
-             (width - x0 + dx - 1) // dx, (height - y0 + dy - 1) // dy)
-            for x0, y0, dx, dy in _ADAM7
-        ]
-    expected = sum(
-        ph * (rowbytes(pw) + 1) for *_xy, pw, ph in passes if pw and ph
-    )
-    try:
-        # BOUNDED inflate (r11 review): a plain zlib.decompress
-        # materializes the full output first, so a crafted tiny-IHDR
-        # payload with a ~1000:1 IDAT could allocate gigabytes before
-        # the length check ran -- cap at expected+1 and reject leftovers
-        dec = zlib.decompressobj()
-        raw = dec.decompress(zdata, expected + 1)
-    except zlib.error as exc:
-        raise ValueError(f"corrupt PNG pixel-data stream: {exc}") from exc
-    if len(raw) != expected or not dec.eof and dec.unconsumed_tail:
-        raise ValueError(
-            f"PNG scanline data is {len(raw)}+ bytes, expected {expected}"
-        )
-    buf = np.frombuffer(raw, np.uint8)
-    px = np.zeros((height, width, ch), np.uint16 if depth == 16 else np.uint8)
-    pos = 0
-    for x0, y0, dx, dy, pw, ph in passes:
-        if not pw or not ph:
-            continue  # empty passes carry no scanlines at all
-        rb = rowbytes(pw)
-        span = ph * (rb + 1)
-        lines = buf[pos : pos + span].reshape(ph, rb + 1)
-        pos += span
-        # ALIASING GUARD (r16 verdict): _defilter returns a POOLED buffer
-        # and _unpack_samples' depth==8 path is a view of it -- the view
-        # must be consumed (copied into px by this strided assignment)
-        # before the next loop iteration's _defilter call reuses the
-        # pool. Never hold it across iterations.
-        px[y0::dy, x0::dx] = _unpack_samples(
-            _defilter(lines, rb, bpp), pw, ch, depth
-        )
-    return px
-
-
 def _expand_png_samples(
     px: np.ndarray, color: int, depth: int,
     plte: bytes | None, trns: bytes | None,
@@ -293,7 +231,7 @@ def _expand_png_samples(
     """Shared PNG sample expansion for the static decoder AND the APNG
     frame path (r14 review: these rules lived in two lockstep copies).
 
-    Input is native-channel samples from :func:`_decode_subimage`;
+    Input is native-channel samples from :meth:`_PNGChunks.samples`;
     returns ``(px, alpha)`` where ``alpha`` is an (h, w) plane or None
     (fully opaque / channels already carry alpha):
 
@@ -346,15 +284,232 @@ def _expand_png_samples(
     return px, None  # color 4/6: alpha is already a channel
 
 
+#: the APNG animation chunks: ancillary to a static reader, which skips
+#: them, but a CRC or shape error in one spoils the ANIMATION -- recorded
+#: as the walk's ``anim_error``, never raised by the walk itself
+_ANIM_CHUNKS = (b"acTL", b"fcTL", b"fdAT")
+
+
+class _AnimFrame:
+    """One APNG frame: its fcTL fields plus its compressed pixel stream
+    (the IDAT chunks when its fcTL precedes the first IDAT, else its fdAT
+    payloads)."""
+
+    __slots__ = ("w", "h", "x", "y", "delay_num", "delay_den",
+                 "dispose", "blend", "data", "from_idat")
+
+    def __init__(self, fctl: bytes, from_idat: bool) -> None:
+        (_seq, self.w, self.h, self.x, self.y, self.delay_num,
+         self.delay_den, self.dispose, self.blend) = struct.unpack(
+            ">IIIIIHHBB", fctl)
+        self.data: list[bytes] = []
+        self.from_idat = from_idat
+
+
+class _PNGChunks:
+    """THE PNG chunk walk, shared by the static decoder and the APNG frame
+    path (operators.apng): an 8-byte signature, then chunks of (length
+    BE32, type, data, CRC32 over type+data), up to IEND.
+
+    One pass collects the validated IHDR fields (``width``, ``height``,
+    ``depth``, ``color``, ``interlace``), PLTE/tRNS, the static image's
+    IDAT stream (``idat``) and the APNG animation (``frames``). Static
+    defects raise ``ValueError``: a truncated chunk, a CRC mismatch in a
+    CRITICAL chunk (a corrupt ANCILLARY chunk is skipped per the spec's
+    recovery guidance -- aborting used to hand a fully decodable image to
+    the fake fallback, r11 review), missing IHDR/IDAT/IEND, or an invalid
+    IHDR. Animation defects (a corrupt acTL/fcTL/fdAT, out-of-order
+    sequence numbers, geometry outside the canvas, an fcTL count that is
+    not acTL's) are RECORDED: ``anim_error`` holds the first one, or "not
+    an APNG (no acTL)" for a static PNG, and is None only for a valid
+    animation. The static image stays decodable either way -- the spec's
+    fallback for an APNG-unaware reader -- and only the animation
+    consumers raise the recorded message."""
+
+    def __init__(self, payload: bytes) -> None:
+        if (len(payload) < len(_PNG_SIG) + 12
+                or payload[: len(_PNG_SIG)] != _PNG_SIG):
+            raise ValueError("not a PNG payload")
+        self.plte = self.trns = self.anim_error = None
+        self.idat: list[bytes] = []
+        self.frames: list[_AnimFrame] = []
+        self._actl = self._fctl = None  # acTL frame count, pending fcTL
+        self._next_seq = 0
+        pos, ihdr, ended = len(_PNG_SIG), None, False
+        while pos + 8 <= len(payload):
+            (length,) = struct.unpack_from(">I", payload, pos)
+            ctype = payload[pos + 4 : pos + 8]
+            data = payload[pos + 8 : pos + 8 + length]
+            if len(data) < length or pos + 12 + length > len(payload):
+                raise ValueError("truncated PNG chunk")
+            (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
+            pos += 12 + length
+            if crc != zlib.crc32(ctype + data) & 0xFFFFFFFF:
+                if ctype[:1].isupper():  # CRITICAL: uppercase first letter
+                    raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
+                if ctype in _ANIM_CHUNKS:
+                    self.anim_error = (self.anim_error
+                                       or f"PNG chunk {ctype!r} CRC mismatch")
+                continue
+            if ctype == b"IHDR":
+                ihdr = data
+            elif ctype == b"PLTE":
+                self.plte = data
+            elif ctype == b"tRNS":
+                self.trns = data
+            elif ctype == b"IEND":
+                ended = True
+                break
+            elif ctype == b"IDAT":
+                self.idat.append(data)
+            if self.anim_error is None and (
+                    ctype == b"IDAT" or ctype in _ANIM_CHUNKS):
+                self.anim_error = self._animate(ctype, data)
+        if ihdr is None or len(ihdr) != 13 or not self.idat or not ended:
+            raise ValueError("PNG missing IHDR/IDAT/IEND")
+        (self.width, self.height, self.depth, self.color, comp, filt,
+         self.interlace) = struct.unpack(">IIBBBBB", ihdr)
+        if self.width <= 0 or self.height <= 0:
+            raise ValueError("degenerate PNG dimensions")
+        from . import SLOW_PATH_MAX_PIXELS
+
+        # the stricter slow-path cap (not the shared MAX_PIXELS): Average /
+        # Paeth defiltering is per-pixel Python, so the hostile-input CPU
+        # ceiling must stay at tens of seconds per payload, the same
+        # rationale as the progressive-JPEG scan cap
+        if self.width * self.height > SLOW_PATH_MAX_PIXELS:
+            raise ValueError("PNG dimensions exceed the decode cap")
+        if (self.color not in _PNG_CHANNELS
+                or self.depth not in _PNG_DEPTHS[self.color]
+                or comp != 0 or filt != 0):
+            raise ValueError(
+                f"invalid PNG IHDR combination (depth={self.depth}, "
+                f"color={self.color})"
+            )
+        if self.interlace not in (0, 1):
+            raise ValueError(f"invalid PNG interlace method {self.interlace}")
+        self.anim_error = self.anim_error or self._check_animation()
+
+    def _animate(self, ctype: bytes, data: bytes) -> str | None:
+        """Advance the APNG state machine by one CRC-valid acTL, fcTL,
+        fdAT or IDAT chunk; returns the animation defect it finds."""
+        if ctype == b"acTL":
+            if self.idat or self._actl is not None or len(data) != 8:
+                return "misplaced or malformed acTL"
+            self._actl = struct.unpack_from(">I", data)[0]
+            return None
+        if ctype == b"IDAT":
+            if self._fctl is not None and not self.frames:
+                self.frames.append(_AnimFrame(self._fctl, from_idat=True))
+                self._fctl = None
+            if self.frames and self.frames[0].from_idat:
+                self.frames[0].data.append(data)
+            return None
+        # fcTL and fdAT share one sequence-number counter
+        if ctype == b"fcTL" and (len(data) != 26 or self._fctl is not None):
+            return "malformed or doubled fcTL"
+        if len(data) < 4:
+            return "malformed fdAT"
+        (seq,) = struct.unpack_from(">I", data)
+        if seq != self._next_seq:
+            return f"APNG sequence number {seq}, expected {self._next_seq}"
+        self._next_seq += 1
+        if ctype == b"fcTL":
+            self._fctl = data
+            return None
+        if self._fctl is not None:
+            self.frames.append(_AnimFrame(self._fctl, from_idat=False))
+            self._fctl = None
+        if not self.frames or self.frames[-1].from_idat:
+            return "fdAT with no owning fcTL"
+        self.frames[-1].data.append(data[4:])
+        return None
+
+    def _check_animation(self) -> str | None:
+        """The whole-stream APNG rules, checked once the IHDR is valid."""
+        if self._actl is None:
+            return "not an APNG (no acTL)"
+        if self._fctl is not None:
+            return "fcTL with no frame data"
+        if self._actl != len(self.frames) or self._actl < 1:
+            return (f"acTL declares {self._actl} frames, stream has "
+                    f"{len(self.frames)}")
+        for i, f in enumerate(self.frames):
+            if (f.w <= 0 or f.h <= 0 or f.x + f.w > self.width
+                    or f.y + f.h > self.height or f.dispose > 2
+                    or f.blend > 1):
+                return f"APNG frame {i} geometry/ops invalid"
+            if not f.data:
+                return f"APNG frame {i} has no pixel data"
+        first = self.frames[0]
+        if first.from_idat and (first.w != self.width
+                                or first.h != self.height
+                                or first.x or first.y):
+            return "APNG first (IDAT) frame must cover the canvas"
+        return None
+
+    def samples(self, stream: list[bytes], width: int,
+                height: int) -> np.ndarray:
+        """One compressed scanline stream -> ``(height, width, ch)``
+        native-channel samples (uint16 at depth 16, uint8 otherwise):
+        bounded inflate, per-(sub-)image defilter, sample unpack, Adam7
+        reassembly. The static image is the IDAT stream at the IHDR size;
+        an APNG frame is its own stream at its fcTL size -- per the APNG
+        spec a frame region is encoded exactly like a standalone image of
+        its own dimensions under the IHDR depth/color/interlace."""
+        ch, depth = _PNG_CHANNELS[self.color], self.depth
+        bpp = max(1, ch * depth // 8)  # filter "left" offset, bytes
+
+        def rowbytes(pw: int) -> int:
+            return (pw * ch * depth + 7) // 8
+
+        if self.interlace == 0:
+            passes = [(0, 0, 1, 1, width, height)]
+        else:
+            passes = [
+                (x0, y0, dx, dy,
+                 (width - x0 + dx - 1) // dx, (height - y0 + dy - 1) // dy)
+                for x0, y0, dx, dy in _ADAM7
+            ]
+        expected = sum(
+            ph * (rowbytes(pw) + 1) for *_xy, pw, ph in passes if pw and ph
+        )
+        try:
+            # BOUNDED inflate (r11 review): a plain zlib.decompress
+            # materializes the full output first, so a crafted tiny-IHDR
+            # payload with a ~1000:1 IDAT could allocate gigabytes before
+            # the length check ran -- cap at expected+1 and reject leftovers
+            dec = zlib.decompressobj()
+            raw = dec.decompress(b"".join(stream), expected + 1)
+        except zlib.error as exc:
+            raise ValueError(f"corrupt PNG pixel-data stream: {exc}") from exc
+        if len(raw) != expected or not dec.eof and dec.unconsumed_tail:
+            raise ValueError(
+                f"PNG scanline data is {len(raw)}+ bytes, expected {expected}"
+            )
+        buf = np.frombuffer(raw, np.uint8)
+        px = np.zeros((height, width, ch),
+                      np.uint16 if depth == 16 else np.uint8)
+        pos = 0
+        for x0, y0, dx, dy, pw, ph in passes:
+            if not pw or not ph:
+                continue  # empty passes carry no scanlines at all
+            rb = rowbytes(pw)
+            span = ph * (rb + 1)
+            lines = buf[pos : pos + span].reshape(ph, rb + 1)
+            pos += span
+            # ALIASING GUARD (r16 verdict): _defilter returns a POOLED
+            # buffer and _unpack_samples' depth==8 path is a view of it --
+            # the view must be consumed (copied into px by this strided
+            # assignment) before the next loop iteration's _defilter call
+            # reuses the pool. Never hold it across iterations.
+            px[y0::dy, x0::dx] = _unpack_samples(
+                _defilter(lines, rb, bpp), pw, ch, depth
+            )
+        return px
+
+
 def decode_png_pixels(payload: bytes) -> tuple[int, int, np.ndarray]:
-    try:
-        return _decode_png(payload)
-    except (struct.error, IndexError, TypeError) as exc:
-        # corrupt bytes surface as ValueError only (fallback contract)
-        raise ValueError(f"malformed PNG: {exc}") from exc
-
-
-def _decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
     """REAL decoder for every valid static-PNG profile (PNG spec table
     11.2.2): grayscale at depths 1/2/4/8/16, RGB / gray+alpha / RGBA at
     8/16, palette at 1/2/4/8 with optional tRNS alpha, each in both
@@ -365,265 +520,152 @@ def _decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
     present; a tRNS COLOR-KEY on gray/RGB synthesizes an alpha channel
     (r14 -- gray becomes GA, RGB becomes RGBA, key matched at source
     depth). Raises ``ValueError`` on anything malformed. APNG payloads
-    return the static first frame here -- animation frames and frame
-    counts live in :mod:`operators.apng` (decode_image reports their
-    real n_frames).
+    return the static image here -- animation frames live in
+    :mod:`operators.apng`.
 
-    Needs only stdlib ``zlib`` + numpy: an 8-byte signature, then chunks of
-    (length BE32, type, data, CRC32 over type+data); IHDR carries
-    width/height/bit-depth/color-type/interlace, the concatenated IDAT
-    data is one zlib stream of scanlines, each ``1 filter byte +
+    Needs only stdlib ``zlib`` + numpy: the concatenated IDAT data is one
+    zlib stream of scanlines, each ``1 filter byte +
     ceil(width*channels*depth/8)`` bytes, defiltered per the five standard
     predictors (None/Sub/Up/Average/Paeth) against the row above and the
     ``bpp`` bytes to the left; Adam7 splits the image into the seven
     fixed sub-grids of :data:`_ADAM7`, each defiltered independently."""
-    if len(payload) < len(_PNG_SIG) + 12 or payload[: len(_PNG_SIG)] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, idat, ended = len(_PNG_SIG), None, [], False
-    plte, trns = None, None
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack_from(">I", payload, pos)
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        if len(data) < length or pos + 12 + length > len(payload):
-            raise ValueError("truncated PNG chunk")
-        (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
-        if crc != zlib.crc32(ctype + data) & 0xFFFFFFFF:
-            # CRITICAL chunks (uppercase first letter) hard-fail; a
-            # corrupt ANCILLARY chunk (tEXt, pHYs, ...) is skipped per
-            # the PNG spec's recovery guidance -- aborting used to hand
-            # a fully decodable image to the fake fallback (r11 review)
-            if ctype[:1].isupper():
-                raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-            pos += 12 + length  # skip BEFORE the data is consumed
-            continue
-        if ctype == b"IHDR":
-            ihdr = data
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"tRNS":
-            trns = data
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            ended = True
-            break
-        pos += 12 + length
-    if ihdr is None or len(ihdr) != 13 or not idat or not ended:
-        raise ValueError("PNG missing IHDR/IDAT/IEND")
-    width, height, depth, color, comp, filt, interlace = struct.unpack(
-        ">IIBBBBB", ihdr
-    )
-    if width <= 0 or height <= 0:
-        raise ValueError("degenerate PNG dimensions")
-    from . import SLOW_PATH_MAX_PIXELS
-
-    # the stricter slow-path cap (not the shared MAX_PIXELS): Average /
-    # Paeth defiltering is per-pixel Python, so the hostile-input CPU
-    # ceiling must stay at tens of seconds per payload, the same
-    # rationale as the progressive-JPEG scan cap
-    if width * height > SLOW_PATH_MAX_PIXELS:
-        raise ValueError("PNG dimensions exceed the decode cap")
-    if (color not in _PNG_CHANNELS or depth not in _PNG_DEPTHS[color]
-            or comp != 0 or filt != 0):
-        raise ValueError(
-            f"invalid PNG IHDR combination (depth={depth}, color={color})"
-        )
-    if interlace not in (0, 1):
-        raise ValueError(f"invalid PNG interlace method {interlace}")
-    ch = _PNG_CHANNELS[color]
-    bpp = max(1, ch * depth // 8)  # filter "left" offset, bytes
-    px = _decode_subimage(
-        b"".join(idat), width, height, ch, depth, interlace, bpp
-    )
-    # expansion rules (color-key, sub-byte gray, palette) are shared
-    # with the APNG frame path -- see _expand_png_samples
-    px, alpha = _expand_png_samples(px, color, depth, plte, trns)
-    if alpha is not None:
-        return width, height, np.dstack([px, alpha])
+    _fmt, width, height, _n, px = _png(payload)
     return width, height, px
 
 
-def decode_image(doc_id: int, payload: bytes, strict: bool = False) -> dict:
-    """Decode an image payload into the :data:`DECODE_SCHEMA` metadata row.
-
-    Uncompressed BMP (:func:`decode_bmp_pixels`), every valid static-PNG
-    profile (:func:`decode_png_pixels`, stdlib zlib + numpy), baseline and
-    progressive JPEG (:func:`operators.jpeg.decode_jpeg_pixels`),
-    GIF87a/89a (:func:`operators.gif.decode_gif`) and WebP -- lossless
-    VP8L and lossy VP8 key frames alike
-    (:func:`operators.webp.decode_webp`) -- decode for real.
-    Other formats decode via Pillow when the environment has it, else
-    fall back to :func:`fake_decode` -- or raise
-    ``NotImplementedError`` under ``strict=True``."""
-    if payload[:2] == b"BM":
-        try:
-            width, height, _px = decode_bmp_pixels(payload)
-            return {
-                "doc_id": doc_id,
-                "n_bytes": len(payload),
-                "width": width,
-                "height": height,
-                "n_frames": 1,
-                "fmt": "bmp",
-            }
-        except ValueError:
-            # a "BM"-prefixed payload that is NOT a well-formed BMP (e.g.
-            # text bytes) is an unrecognized format, not an error: fall
-            # through to PIL/fake like any other payload; strict re-raises
-            if strict:
-                raise
-    if payload[: len(_PNG_SIG)] == _PNG_SIG:
-        try:
-            width, height, _px = decode_png_pixels(payload)
-            from .apng import apng_frame_count
-
-            # animation frame count is real DATA, like GIF's: a valid
-            # acTL/fcTL/fdAT chain reports its frame count and the
-            # payload identifies as APNG. MALFORMED animation chunks on
-            # a decodable static image take the spec's own fallback (an
-            # APNG-unaware viewer shows the static image) -- never the
-            # fake path.
-            try:
-                n_frames = apng_frame_count(payload)
-            except ValueError:
-                n_frames = None
-            return {
-                "doc_id": doc_id,
-                "n_bytes": len(payload),
-                "width": width,
-                "height": height,
-                "n_frames": n_frames if n_frames is not None else 1,
-                "fmt": "png" if n_frames is None else "apng",
-            }
-        except ValueError:
-            # signature-prefixed but malformed: same contract as BMP
-            if strict:
-                raise
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif
-
-        try:
-            width, height, n_frames, _px = decode_gif(payload)
-            return {
-                "doc_id": doc_id,
-                "n_bytes": len(payload),
-                "width": width,
-                "height": height,
-                # the one format whose frame count is real DATA (animation)
-                "n_frames": n_frames,
-                "fmt": "gif",
-            }
-        except ValueError:
-            if strict:
-                raise
-    if payload[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg_pixels
-
-        try:
-            width, height, _px = decode_jpeg_pixels(payload)
-            return {
-                "doc_id": doc_id,
-                "n_bytes": len(payload),
-                "width": width,
-                "height": height,
-                "n_frames": 1,
-                "fmt": "jpeg",
-            }
-        except ValueError:
-            # SOI-prefixed but malformed (the full T.81 frame matrix --
-            # sequential/progressive/lossless/hierarchical, Huffman and
-            # arithmetic -- decodes for real as of r14): fall through
-            # to PIL/fake, strict raises
-            if strict:
-                raise
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        try:
-            width, height, n_frames, _px, _codec = decode_webp(payload)
-            return {
-                "doc_id": doc_id,
-                "n_bytes": len(payload),
-                # VP8L and VP8 stills: real pixels (VP8 key-frame
-                # decoder added r9, bit-exact vs libwebp in YUV);
-                # animated VP8X: real header metadata + composited
-                # frames via webp.decode_webp_frames
-                "width": width,
-                "height": height,
-                "n_frames": n_frames,
-                "fmt": "webp",
-            }
-        except ValueError:
-            # RIFF-prefixed but malformed: same contract as the others
-            if strict:
-                raise
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        from .mp4 import is_mp4, parse_mp4_meta
-
-        if is_mp4(payload):
-            try:
-                # ISO-BMFF container METADATA is real (r11: box walk,
-                # pure stdlib -- dims from tkhd/stsd, frame count from
-                # the video track's stsz, like GIF's n_frames); the
-                # CODEC payload itself stays behind the ffmpeg flag
-                meta = parse_mp4_meta(payload)
-                return {
-                    "doc_id": doc_id,
-                    "n_bytes": len(payload),
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "n_frames": meta["n_frames"],
-                    "fmt": "mp4",
-                }
-            except ValueError:
-                if strict:
-                    raise
-    if payload[:4] == b"\x1a\x45\xdf\xa3":
-        from .mkv import parse_webm_meta
-
-        try:
-            # Matroska/WebM container metadata is real (r11: EBML walk,
-            # pure stdlib -- dims from TrackEntry/Video, codec id, mvhd-
-            # analog duration); codec payloads stay behind the ffmpeg
-            # flag, and n_frames is 0 (honest unknown without a cluster
-            # walk -- NOT fabricated)
-            meta = parse_webm_meta(payload)
-            return {
-                "doc_id": doc_id,
-                "n_bytes": len(payload),
-                "width": meta["width"],
-                "height": meta["height"],
-                "n_frames": meta["n_frames"],
-                "fmt": "webm" if meta["doctype"] == "webm" else "mkv",
-            }
-        except ValueError:
-            if strict:
-                raise
-    if _PILImage is not None:  # pragma: no cover (PIL absent in this build)
-        import io
-
-        try:
-            with _PILImage.open(io.BytesIO(payload)) as im:
-                return {
-                    "doc_id": doc_id,
-                    "n_bytes": len(payload),
-                    "width": im.width,
-                    "height": im.height,
-                    "n_frames": getattr(im, "n_frames", 1),
-                    "fmt": (im.format or "unknown").lower(),
-                }
-        except Exception:
-            # PIL raises UnidentifiedImageError (an OSError) on any
-            # non-image payload; the module contract says unknown
-            # formats FALL BACK, not crash the task (r11 review) --
-            # strict mode takes the NotImplementedError below
-            pass
-    if strict:
-        raise NotImplementedError(
-            "real decode of non-BMP formats requires Pillow/ffmpeg, not "
-            "present in this build"
+def _png(payload: bytes) -> tuple[str, int, int, int, np.ndarray]:
+    """The PNG entry of :data:`_FORMATS`: one chunk walk, the static
+    image, and the frame count of a valid animation (an APNG-unaware
+    viewer's static image when the animation is malformed)."""
+    try:
+        png = _PNGChunks(payload)
+        # expansion rules (color-key, sub-byte gray, palette) are shared
+        # with the APNG frame path -- see _expand_png_samples
+        px, alpha = _expand_png_samples(
+            png.samples(png.idat, png.width, png.height),
+            png.color, png.depth, png.plte, png.trns,
         )
+    except (struct.error, IndexError, TypeError) as exc:
+        # corrupt bytes surface as ValueError only (fallback contract)
+        raise ValueError(f"malformed PNG: {exc}") from exc
+    if alpha is not None:
+        px = np.dstack([px, alpha])
+    if png.anim_error is None:
+        return "apng", png.width, png.height, len(png.frames), px
+    return "png", png.width, png.height, 1, px
+
+
+def _bmp(payload: bytes) -> tuple[str, int, int, int, np.ndarray]:
+    width, height, px = decode_bmp_pixels(payload)
+    return "bmp", width, height, 1, px
+
+
+def _gif(payload: bytes) -> tuple[str, int, int, int, np.ndarray]:
+    from .gif import decode_gif
+
+    # the first frame's pixels; the frame count is real DATA (animation)
+    width, height, n_frames, px = decode_gif(payload)
+    return "gif", width, height, n_frames, px
+
+
+def _jpeg(payload: bytes) -> tuple[str, int, int, int, np.ndarray]:
+    from .jpeg import decode_jpeg_pixels
+
+    width, height, px = decode_jpeg_pixels(payload)
+    return "jpeg", width, height, 1, px
+
+
+def _webp(payload: bytes) -> tuple[str, int, int, int, np.ndarray | None]:
+    from .webp import decode_webp
+
+    # VP8L and VP8 stills: real pixels; animated VP8X: real header
+    # metadata, no single canvas (composited frames via
+    # webp.decode_webp_frames)
+    width, height, n_frames, px, _codec = decode_webp(payload)
+    return "webp", width, height, n_frames, px
+
+
+def _mp4(payload: bytes) -> tuple[str, int, int, int, None]:
+    from .mp4 import is_mp4, parse_mp4_meta
+
+    # ISO-BMFF container METADATA (r11: box walk -- dims from tkhd/stsd,
+    # frame count from the video track's stsz); the codec payload stays
+    # behind the ffmpeg flag
+    if not is_mp4(payload):
+        raise ValueError("ftyp box without a known MP4 brand")
+    meta = parse_mp4_meta(payload)
+    return "mp4", meta["width"], meta["height"], meta["n_frames"], None
+
+
+def _matroska(payload: bytes) -> tuple[str, int, int, int, None]:
+    from .mkv import parse_webm_meta
+
+    # Matroska/WebM container metadata (r11: EBML walk -- dims from
+    # TrackEntry/Video); n_frames is 0, the honest unknown without a
+    # cluster walk
+    meta = parse_webm_meta(payload)
+    fmt = "webm" if meta["doctype"] == "webm" else "mkv"
+    return fmt, meta["width"], meta["height"], meta["n_frames"], None
+
+
+#: THE format dispatch, read in order by both tiers: (signature test,
+#: fmt, decoder). A decoder returns (fmt, width, height, n_frames,
+#: pixels) or raises ``ValueError``. The fmt it returns names the
+#: payload in the metadata row (an animated PNG says "apng", a Matroska
+#: file its doctype); the table's fmt is the family the pixel tier
+#: reports. ``pixels`` is None only for the animated-WebP canvas.
+_IMAGE_FORMATS = (
+    (lambda p: p[:2] == b"BM", "bmp", _bmp),
+    (lambda p: p[: len(_PNG_SIG)] == _PNG_SIG, "png", _png),
+    (lambda p: p[:6] in (b"GIF87a", b"GIF89a"), "gif", _gif),
+    (lambda p: p[:2] == b"\xff\xd8", "jpeg", _jpeg),
+    (lambda p: p[:4] == b"RIFF" and p[8:12] == b"WEBP", "webp", _webp),
+)
+#: the image formats plus the containers: the metadata tier's table (the
+#: pixel tier decodes no container)
+_FORMATS = _IMAGE_FORMATS + (
+    (lambda p: p[4:8] == b"ftyp", "mp4", _mp4),
+    (lambda p: p[:4] == b"\x1a\x45\xdf\xa3", "mkv", _matroska),
+)
+
+
+def _family(payload: bytes) -> str | None:
+    """The table fmt of the first :data:`_FORMATS` entry whose signature
+    the payload carries."""
+    return next((fmt for sniff, fmt, _dec in _FORMATS if sniff(payload)),
+                None)
+
+
+def decode_image(doc_id: int, payload: bytes) -> dict:
+    """Decode a media payload into the :data:`DECODE_SCHEMA` metadata row.
+
+    Every :data:`_FORMATS` entry decodes for real: uncompressed BMP
+    (:func:`decode_bmp_pixels`), every valid static-PNG profile and APNG
+    (:func:`decode_png_pixels`, stdlib zlib + numpy), the full T.81 JPEG
+    frame matrix -- sequential, progressive, lossless and hierarchical,
+    Huffman and arithmetic (:func:`operators.jpeg.decode_jpeg_pixels`),
+    GIF87a/89a (:func:`operators.gif.decode_gif`), WebP -- lossless VP8L,
+    lossy VP8 key frames and animated VP8X
+    (:func:`operators.webp.decode_webp`) -- and the MP4 and Matroska/WebM
+    container headers. A payload that matches no signature, or whose
+    decoders all reject it, falls back to :func:`fake_decode`; this
+    function never raises ``ValueError``."""
+    for sniff, _, decode in _FORMATS:
+        if sniff(payload):
+            try:
+                fmt, width, height, n_frames, _px = decode(payload)
+            except ValueError:
+                # signature-prefixed but malformed (e.g. "BM"-prefixed
+                # text) is an unrecognized format, not an error
+                continue
+            return {
+                "doc_id": doc_id,
+                "n_bytes": len(payload),
+                "width": width,
+                "height": height,
+                "n_frames": n_frames,
+                "fmt": fmt,
+            }
     return fake_decode(doc_id, payload)
 
 
@@ -634,35 +676,57 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
 
 
-def decode_batches(docs_with_payload: DataFrame) -> DataFrame:
-    """Run the media decoder over Arrow batches via ``mapInPandas``
-    (REAL decode for BMP/PNG/JPEG/GIF/WebP, deterministic fake for the
-    rest;
-    batch sizing is Spark's ``arrow.maxRecordsPerBatch``, not a
-    parameter here).
+def map_payloads(
+    docs_with_payload: DataFrame, schema: str,
+    rows: Callable[[int | None, bytes], list[dict]],
+    skip_invalid: bool = True, keep_null_ids: bool = False,
+) -> DataFrame:
+    """THE Arrow row loop of every payload map (``mapInPandas`` over
+    ``(doc_id BIGINT, payload BINARY)``): per-batch pandas processing,
+    bounded memory, no driver involvement, output schema declared up
+    front; batch sizing is Spark's ``arrow.maxRecordsPerBatch``.
 
-    The iterator shape is the real pattern for media pipelines: per-batch
-    pandas processing, bounded memory, no driver involvement, output schema
-    declared up front.
-    """
+    ``rows(doc_id, payload)`` returns the payload's 0..n output rows as
+    dicts. NULL payloads (ingest gaps) arrive as ``b""``. A NULL doc_id
+    arrives in pandas as NaN, where int() raises; ``keep_null_ids``
+    passes it on as None, otherwise it counts as an invalid record (an
+    output row cannot be attributed to it). ``skip_invalid`` is the
+    corrupt-record contract: invalid records and payloads whose ``rows``
+    raise ``ValueError`` are DROPPED instead of failing the task (count
+    them via an input-vs-output row diff); ``skip_invalid=False``
+    propagates the ValueError. The column names come from ``schema``, so
+    an all-dropped batch still matches it."""
+    cols = [c.split()[0] for c in schema.split(",")]
 
-    def decode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = [
-                # NULL payloads/doc_ids (ingest gaps) stay inside the
-                # row contract -- empty bytes take the fake-fallback
-                # path, a NULL id propagates as NULL -- instead of
-                # TypeError/ValueError-killing the task (NULL int64
-                # arrives as pandas NaN, where int() raises)
-                decode_image(
-                    None if pd.isna(r.doc_id) else int(r.doc_id),
-                    bytes(r.payload) if r.payload is not None else b"",
-                )
-                for r in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out)
+            out: list[dict] = []
+            for r in pdf.itertuples(index=False):
+                doc_id = None if pd.isna(r.doc_id) else int(r.doc_id)
+                if doc_id is None and not keep_null_ids:
+                    if skip_invalid:
+                        continue
+                    raise ValueError("NULL doc_id in payload batch")
+                payload = b"" if r.payload is None else bytes(r.payload)
+                try:
+                    out += rows(doc_id, payload)
+                except ValueError:
+                    if not skip_invalid:
+                        raise
+            yield pd.DataFrame(out, columns=cols)
 
-    return docs_with_payload.mapInPandas(decode_iter, DECODE_SCHEMA)
+    return docs_with_payload.mapInPandas(run, schema)
+
+
+def decode_batches(docs_with_payload: DataFrame) -> DataFrame:
+    """:func:`decode_image` over Arrow batches: one metadata row per
+    input row. A NULL doc_id stays NULL and a NULL payload takes the
+    fake-fallback path, so every row survives."""
+    return map_payloads(
+        docs_with_payload, DECODE_SCHEMA,
+        lambda doc_id, payload: [decode_image(doc_id, payload)],
+        skip_invalid=False, keep_null_ids=True,
+    )
 
 
 def frame_offset_expr(n_samples: int = 4):
@@ -700,10 +764,21 @@ PIXEL_STATS_SCHEMA = (
     "n_ch BIGINT, sum_px BIGINT, wsum_px BIGINT, n_px BIGINT"
 )
 
-_PIXEL_STATS_COLS = [
-    "doc_id", "fmt", "width", "height", "n_ch", "sum_px", "wsum_px",
-    "n_px",
-]
+
+def _pixel_sums(px: np.ndarray) -> dict:
+    """(n_ch, sum_px, wsum_px, n_px) of an (h, w[, ch]) sample array:
+    ``sum_px`` is the int64 sum of EVERY sample, ``wsum_px`` the
+    POSITION-WEIGHTED sum Σ (y*w + x + 1) * channel_sum(y, x)."""
+    h, w = px.shape[:2]
+    p64 = px.astype(np.int64)
+    csum = p64.sum(axis=2) if p64.ndim == 3 else p64  # per-pixel channels
+    weights = np.arange(1, w * h + 1, dtype=np.int64).reshape(h, w)
+    return {
+        "n_ch": px.shape[2] if px.ndim == 3 else 1,
+        "sum_px": int(p64.sum()),
+        "wsum_px": int((weights * csum).sum()),
+        "n_px": w * h,
+    }
 
 
 def decode_pixel_stats(payload: bytes) -> dict:
@@ -719,55 +794,29 @@ def decode_pixel_stats(payload: bytes) -> dict:
     image (r15). Unlike :func:`decode_image` — whose metadata a header
     walk could fake — matching both requires the entire pixel pipeline
     (defilter/predict/expand/composite/placement) to be correct. BMP,
-    every static-PNG profile, the full T.81 JPEG frame matrix (incl.
-    hierarchical pyramids), GIF first frames, and static WebP (VP8 /
-    VP8L, r17) qualify — exactly the ``_decode_any_pixels`` dispatch
-    set, shared with the resize tier; other formats raise
-    ``ValueError`` (callers use the usual skip/propagate contract)."""
-    # one dispatch shared with the resize operator (_decode_any_pixels,
-    # r17): the two tiers can never recognize different format sets
+    every static-PNG profile (an APNG's static image, fmt "png"), the
+    full T.81 JPEG frame matrix (incl. hierarchical pyramids), GIF first
+    frames, and static WebP (VP8 / VP8L, r17) qualify — the
+    :data:`_IMAGE_FORMATS` entries, shared with the resize tier; other
+    formats raise ``ValueError`` (callers use the usual skip/propagate
+    contract)."""
     fmt, w, h, px = _decode_any_pixels(payload)
-    p64 = px.astype(np.int64)
-    csum = p64.sum(axis=2) if p64.ndim == 3 else p64  # per-pixel channels
-    weights = np.arange(1, w * h + 1, dtype=np.int64).reshape(h, w)
-    return {
-        "fmt": fmt, "width": w, "height": h,
-        "n_ch": px.shape[2] if px.ndim == 3 else 1,
-        "sum_px": int(p64.sum()),
-        "wsum_px": int((weights * csum).sum()),
-        "n_px": w * h,
-    }
+    return {"fmt": fmt, "width": w, "height": h, **_pixel_sums(px)}
 
 
 def image_pixel_stats_batches(
     docs_with_payload: DataFrame, skip_invalid: bool = True,
 ) -> DataFrame:
-    """REAL pixel statistics over Arrow batches (``mapInPandas``): the
-    same narrow zero-shuffle map shape as :func:`decode_batches`, but
-    emitting :func:`decode_pixel_stats`'s sample sums so a SQL oracle
-    can hash-check decode OUTPUT, not just header metadata.
-    ``skip_invalid`` follows the audio_feature_batches corrupt-record
-    contract (drop vs propagate)."""
-
-    def stats_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if pd.isna(r.doc_id):
-                    if skip_invalid:
-                        continue
-                    raise ValueError("NULL doc_id in pixel-stats batch")
-                payload = bytes(r.payload) if r.payload is not None else b""
-                try:
-                    st = decode_pixel_stats(payload)
-                except ValueError:
-                    if skip_invalid:
-                        continue
-                    raise
-                rows.append({"doc_id": int(r.doc_id), **st})
-            yield pd.DataFrame(rows, columns=_PIXEL_STATS_COLS)
-
-    return docs_with_payload.mapInPandas(stats_iter, PIXEL_STATS_SCHEMA)
+    """REAL pixel statistics over Arrow batches: the narrow zero-shuffle
+    :func:`map_payloads` shape of :func:`decode_batches`, but emitting
+    :func:`decode_pixel_stats`'s sample sums so a SQL oracle can
+    hash-check decode OUTPUT, not just header metadata."""
+    return map_payloads(
+        docs_with_payload, PIXEL_STATS_SCHEMA,
+        lambda doc_id, payload: [
+            {"doc_id": doc_id, **decode_pixel_stats(payload)}],
+        skip_invalid,
+    )
 
 
 #: output schema of REAL animation frame sampling (GIF): one row per
@@ -776,12 +825,6 @@ FRAME_SAMPLE_SCHEMA = (
     "doc_id BIGINT, frame_idx BIGINT, n_frames BIGINT, width BIGINT, "
     "height BIGINT, mean_r BIGINT, mean_g BIGINT, mean_b BIGINT"
 )
-
-
-_FRAME_SAMPLE_COLS = [
-    "doc_id", "frame_idx", "n_frames", "width", "height",
-    "mean_r", "mean_g", "mean_b",
-]
 
 
 def sample_animation_frames(
@@ -793,15 +836,13 @@ def sample_animation_frames(
     emit one feature row per frame (frame_sample_offsets is the
     byte-offset stand-in for containers this sandbox cannot decode; this
     is the genuine article for the format it can). One input row fans
-    out to <= n_samples output rows -- a generator-shaped narrow map,
-    same Arrow contract as decode_batches.
+    out to <= n_samples output rows -- a generator-shaped narrow map
+    through :func:`map_payloads`, dropping undecodable payloads under
+    ``skip_invalid``.
 
     Two passes per payload keep memory bounded at one screen plus the
     picked copies: a block-walk counts frames (no LZW, no buffers), then
     only the evenly-spaced picks are retained while compositing.
-    ``skip_invalid`` (default) drops undecodable payloads instead of
-    failing the task -- the audio_feature_batches corrupt-record
-    contract; ``skip_invalid=False`` propagates the ValueError.
 
     r14: APNG payloads sample through the same two-pass contract
     (operators.apng count + keep_indices decode); their RGBA screens
@@ -810,54 +851,35 @@ def sample_animation_frames(
     from .apng import count_apng_frames, decode_apng_frames
     from .gif import count_gif_frames, decode_gif_frames
 
-    def frames_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                # NULL payloads/doc_ids (ingest gaps) take the
-                # skip_invalid path -- bytes(None)/int(NaN) would raise
-                # TypeError/ValueError OUTSIDE the handler and kill the
-                # whole task (an output row cannot be attributed to a
-                # NULL id, so dropping is the only coherent shape here)
-                if pd.isna(r.doc_id):
-                    if skip_invalid:
-                        continue
-                    raise ValueError("NULL doc_id in animation batch")
-                payload = bytes(r.payload) if r.payload is not None else b""
-                is_png = payload[: len(_PNG_SIG)] == _PNG_SIG
-                count, fetch = (
-                    (count_apng_frames, decode_apng_frames) if is_png
-                    else (count_gif_frames, decode_gif_frames)
-                )
-                try:
-                    w, h, n = count(payload)
-                    k = min(n_samples, n)
-                    picks = sorted(
-                        {round(i * (n - 1) / (k - 1)) for i in range(k)}
-                        if k > 1 else ({0} if k == 1 else set())
-                    )
-                    _w, _h, screens = fetch(payload, keep_indices=set(picks))
-                except ValueError:
-                    if skip_invalid:
-                        continue
-                    raise
-                for fi, screen in zip(picks, screens):
-                    rgb = screen[:, :, :3]
-                    means = rgb.reshape(-1, 3).mean(axis=0)
-                    if rgb.dtype == np.uint16:
-                        means = means / 257.0  # exact 16->8-bit range
-                    mr, mg, mb = means.round()
-                    rows.append({
-                        "doc_id": int(r.doc_id), "frame_idx": fi,
-                        "n_frames": n, "width": w, "height": h,
-                        "mean_r": int(mr), "mean_g": int(mg),
-                        "mean_b": int(mb),
-                    })
-            # explicit columns: an all-skipped batch must still match
-            # FRAME_SAMPLE_SCHEMA
-            yield pd.DataFrame(rows, columns=_FRAME_SAMPLE_COLS)
+    def frames(doc_id: int, payload: bytes) -> list[dict]:
+        count, fetch = (
+            (count_apng_frames, decode_apng_frames)
+            if _family(payload) == "png"
+            else (count_gif_frames, decode_gif_frames)
+        )
+        w, h, n = count(payload)
+        k = min(n_samples, n)
+        picks = sorted(
+            {round(i * (n - 1) / (k - 1)) for i in range(k)}
+            if k > 1 else ({0} if k == 1 else set())
+        )
+        _w, _h, screens = fetch(payload, keep_indices=set(picks))
+        out = []
+        for fi, screen in zip(picks, screens):
+            rgb = screen[:, :, :3]
+            means = rgb.reshape(-1, 3).mean(axis=0)
+            if rgb.dtype == np.uint16:
+                means = means / 257.0  # exact 16->8-bit range
+            mr, mg, mb = means.round()
+            out.append({
+                "doc_id": doc_id, "frame_idx": fi, "n_frames": n,
+                "width": w, "height": h,
+                "mean_r": int(mr), "mean_g": int(mg), "mean_b": int(mb),
+            })
+        return out
 
-    return docs_with_payload.mapInPandas(frames_iter, FRAME_SAMPLE_SCHEMA)
+    return map_payloads(docs_with_payload, FRAME_SAMPLE_SCHEMA, frames,
+                        skip_invalid)
 
 
 # ------------------------------------------------- image resize (r17)
@@ -877,11 +899,6 @@ RESIZE_STATS_SCHEMA = (
     "out_w BIGINT, out_h BIGINT, n_ch BIGINT, sum_px BIGINT, "
     "wsum_px BIGINT, n_px BIGINT"
 )
-
-_RESIZE_STATS_COLS = [
-    "doc_id", "fmt", "width", "height", "out_w", "out_h", "n_ch",
-    "sum_px", "wsum_px", "n_px",
-]
 
 
 def resize_nearest(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -906,64 +923,31 @@ def resize_pixel_stats_batches(
     stats, per Arrow batch: the image_pixel_stats_batches discipline
     over the RESIZED raster (sum_px / position-weighted wsum_px in
     DESTINATION coordinates, so a resize that samples the wrong source
-    pixels or places them wrong cannot hash-match)."""
+    pixels or places them wrong cannot hash-match). A bad target raises
+    here, before any payload is read: it is no payload's fault, so
+    ``skip_invalid`` must not drop it."""
+    if out_h < 1 or out_w < 1:
+        raise ValueError(f"resize_nearest: bad target {out_h}x{out_w}")
 
-    def stats_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = np.arange(1, out_h * out_w + 1, dtype=np.int64).reshape(
-            out_h, out_w)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if pd.isna(r.doc_id):
-                    if skip_invalid:
-                        continue
-                    raise ValueError("NULL doc_id in resize batch")
-                payload = bytes(r.payload) if r.payload is not None else b""
-                try:
-                    fmt, w, h, px = _decode_any_pixels(payload)
-                except ValueError:
-                    if skip_invalid:
-                        continue
-                    raise
-                small = resize_nearest(px, out_h, out_w).astype(np.int64)
-                csum = small.sum(axis=2) if small.ndim == 3 else small
-                rows.append({
-                    "doc_id": int(r.doc_id), "fmt": fmt,
-                    "width": w, "height": h,
-                    "out_w": out_w, "out_h": out_h,
-                    "n_ch": px.shape[2] if px.ndim == 3 else 1,
-                    "sum_px": int(small.sum()),
-                    "wsum_px": int((weights * csum).sum()),
-                    "n_px": out_h * out_w,
-                })
-            yield pd.DataFrame(rows, columns=_RESIZE_STATS_COLS)
+    def stats(doc_id: int, payload: bytes) -> list[dict]:
+        fmt, w, h, px = _decode_any_pixels(payload)
+        return [{"doc_id": doc_id, "fmt": fmt, "width": w, "height": h,
+                 "out_w": out_w, "out_h": out_h,
+                 **_pixel_sums(resize_nearest(px, out_h, out_w))}]
 
-    return docs_with_payload.mapInPandas(stats_iter, RESIZE_STATS_SCHEMA)
+    return map_payloads(docs_with_payload, RESIZE_STATS_SCHEMA, stats,
+                        skip_invalid)
 
 
 def _decode_any_pixels(payload: bytes) -> tuple[str, int, int, np.ndarray]:
-    """(fmt, width, height, sample array) for every static format the
-    pixel-stats tier decodes — the decode_pixel_stats dispatch, shared
-    so resize and stats can never recognize different formats."""
-    if payload[:2] == b"BM":
-        fmt, (w, h, px) = "bmp", decode_bmp_pixels(payload)
-    elif payload[: len(_PNG_SIG)] == _PNG_SIG:
-        fmt, (w, h, px) = "png", decode_png_pixels(payload)
-    elif payload[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg_pixels
-
-        fmt, (w, h, px) = "jpeg", decode_jpeg_pixels(payload)
-    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif
-
-        fmt, (w, h, _n, px) = "gif", decode_gif(payload)
-    elif payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        w, h, _n, px, _codec = decode_webp(payload)
-        if px is None:
-            raise ValueError("pixel decode: animated WebP canvas")
-        fmt = "webp"
-    else:
-        raise ValueError("pixel decode: unrecognized image signature")
-    return fmt, w, h, px
+    """(fmt, width, height, sample array) through the
+    :data:`_IMAGE_FORMATS` entries -- the pixel tier's dispatch, shared
+    by the stats and resize operators. The first entry whose signature
+    matches decides; its ``ValueError`` propagates."""
+    for sniff, fmt, decode in _IMAGE_FORMATS:
+        if sniff(payload):
+            _variant, w, h, _n, px = decode(payload)
+            if px is None:
+                raise ValueError("pixel decode: animated WebP canvas")
+            return fmt, w, h, px
+    raise ValueError("pixel decode: unrecognized image signature")

@@ -2,11 +2,11 @@
 (operators.multimodal), verified end-to-end against an arithmetic oracle.
 
 The decoder is REAL for BMP, every valid static-PNG profile (depths
-1/2/4/8/16, Adam7 interlace -- r13), baseline +
-progressive JPEG, GIF (incl. animation) and lossless WebP/VP8L (pure
-numpy + stdlib zlib, each golden-bytes-tested against independent
-spec-written encoders in tests/test_{multimodal,jpeg,gif,webp}.py) and
-PIL-backed when the environment has Pillow; this registry query feeds
+1/2/4/8/16, Adam7 interlace -- r13) and APNG, the full T.81 JPEG
+matrix, GIF (incl. animation) and WebP (VP8L and VP8), with real MP4
+and Matroska header metadata (pure numpy + stdlib, each
+golden-bytes-tested against independent spec-written encoders in
+tests/test_{multimodal,jpeg,gif,webp}.py); this registry query feeds
 utf-8 TEXT payloads, which take the documented deterministic fake path
 (fmt values 'fake-*' so fabricated rows can never be confused with real
 decodes) -- so the oracle below replicates the fake's arithmetic, and

@@ -10,6 +10,7 @@ joins, windows, rollup, dedup (exact + minhash-lsh + simhash), similarity
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -100,6 +101,10 @@ RERUN_FACTOR = 1.3
 #: the flagship ingest path (README's headline number) must never record
 #: a single noisy min-of-3
 ALWAYS_RERUN = {"cf_parse_wire_roundtrip"}
+#: timed runs per row, min-of-N: headline rows (after one untimed
+#: warm-up) and the sidecar-only EXTRA_QUERIES rows
+TIMED_RUNS = 3
+EXTRA_TIMED_RUNS = 2
 
 
 #: day-factor calibration kernel: the box's quiet-load throughput drifts
@@ -659,7 +664,8 @@ def main() -> None:
     codegen_compiles: dict[str, int] = {}
     layers: dict[str, dict] = {}
 
-    def timed_runs(name: str, n_runs: int = 3) -> tuple[list[float], float]:
+    def timed_runs(name: str,
+                   n_runs: int = TIMED_RUNS) -> tuple[list[float], float]:
         """min-of-N timing; also returns the MAX external-cores figure
         sampled across the runs, so a neighbor burst that lands mid-query
         (invisible to the start-only gate -- r8 recorded a phantom +5%
@@ -799,7 +805,7 @@ def main() -> None:
         # series whose job is drift detection, not precision; worker
         # spinup is already warm after the 29 headline rows.
         for name in EXTRA_QUERIES:
-            per_run, _ext = timed_runs(name, n_runs=2)
+            per_run, _ext = timed_runs(name, n_runs=EXTRA_TIMED_RUNS)
             extra_times[name] = min(extra_times.get(name, float("inf")),
                                     round(min(per_run), 3))
             print(f"# extra {name}: {extra_times[name]}s "
@@ -885,6 +891,22 @@ STDOUT_LINE_BUDGET = 1900
 SIDECAR = "BENCH_DETAIL.json"
 
 
+def methodology() -> str:
+    """Hash of what defines the bench numbers -- the query set and the
+    timed-loop constants -- so a harness change shows in the JSON line
+    as a changed value instead of as a phantom speed-up or regression."""
+    spec = {
+        "headline": HEADLINE, "extra": EXTRA_QUERIES,
+        "timed_runs": [TIMED_RUNS, EXTRA_TIMED_RUNS],
+        "rerun": [RERUN_FACTOR, sorted(ALWAYS_RERUN), MAX_EXTERNAL_CORES,
+                  REGIME_RETRIES],
+        "calibration": [CALIBRATION_ROWS, CALIBRATION_SPLITS,
+                        CALIBRATION_REF_SEC],
+    }
+    blob = json.dumps(spec, sort_keys=True).encode()
+    return hashlib.sha256(blob).hexdigest()[:16]
+
+
 def _render_output(
     *,
     times: dict[str, float],
@@ -928,6 +950,9 @@ def _render_output(
         # or mid-run neighbor burst); the list itself is in the sidecar
         "n_reran": len(reran),
         "detail": SIDECAR,
+        # query set + timed-loop constants (methodology()): rounds
+        # with different values are not comparable
+        "methodology": methodology(),
     }
     if calib_start is not None and calib_end is not None:
         # best observed kernel time = the day's CPU factor in one number
@@ -1023,7 +1048,7 @@ def _render_output(
     for drop in ("detail", "n_reran", "load_flagged", "load_avg",
                  "load_avg_start", "regime_wait_s", "regime_end_ok",
                  "fault_mbps", "bw_gbps", "calib_norm_total",
-                 "calib_sec", "regime_ok"):
+                 "calib_sec", "regime_ok", "methodology"):
         if len(line) <= STDOUT_LINE_BUDGET:
             break
         headline.pop(drop, None)

@@ -24,7 +24,6 @@ from test_png_full import _chunk, _serialize, _rng, make_png, _SIG
 
 from aws_cloudfront_realtime_monitoring_spark.operators.apng import (
     DEFAULT_MAX_FRAMES,
-    apng_frame_count,
     count_apng_frames,
     decode_apng_frames,
 )
@@ -352,16 +351,28 @@ def test_decode_image_reports_apng_and_falls_back_when_malformed():
                     actl_frames=9)
     row = decode_image(2, bad)
     assert (row["fmt"], row["n_frames"]) == ("png", 1)
+    # a corrupt ANIMATION chunk (bad fcTL CRC): the one chunk walk records
+    # the defect instead of raising it -- the static image still decodes,
+    # and only the animation consumers raise it
+    at = good.index(b"fcTL") + 4 + 26  # the first fcTL's CRC
+    bad_crc = good[:at] + bytes(b ^ 0xFF for b in good[at : at + 4]) \
+        + good[at + 4 :]
+    row = decode_image(4, bad_crc)
+    assert (row["fmt"], row["n_frames"]) == ("png", 1)
+    with pytest.raises(ValueError, match="CRC mismatch"):
+        decode_apng_frames(bad_crc)
     # a plain static PNG still reports png/1
     row = decode_image(3, make_png(np.full((2, 2, 3), 5, np.uint8)))
     assert (row["fmt"], row["n_frames"]) == ("png", 1)
 
 
-def test_apng_frame_count_hook_contract():
-    assert apng_frame_count(make_png(np.full((1, 1, 3), 5, np.uint8))) is None
+def test_decode_image_apng_frame_count_contract():
+    row = decode_image(1, make_png(np.full((1, 1, 3), 5, np.uint8)))
+    assert (row["fmt"], row["n_frames"]) == ("png", 1)
     f0 = np.full((1, 1, 4), 1, np.uint8)
     data = make_apng((1, 1), [(f0, 0, 0, 0, 0)])
-    assert apng_frame_count(data) == 1
+    row = decode_image(2, data)
+    assert (row["fmt"], row["n_frames"]) == ("apng", 1)
 
 
 def test_apng_adam7_interlaced_frames_roundtrip():

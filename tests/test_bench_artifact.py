@@ -109,6 +109,22 @@ def test_sidecar_carries_verbose_diagnostics(tmp_path):
         assert detail[k] == rec[k]
 
 
+def test_methodology_hash_is_stable_and_tracks_the_harness(
+        tmp_path, monkeypatch):
+    """The JSON line carries a hash of the query set and the timed-loop
+    constants: the same harness gives the same value, and changing any
+    of them changes it."""
+    first = bench.methodology()
+    assert first == bench.methodology()
+    assert json.loads(_fake_run(tmp_path)[0])["methodology"] == first
+    for name, value in (("TIMED_RUNS", 5), ("RERUN_FACTOR", 1.5),
+                        ("EXTRA_QUERIES", bench.EXTRA_QUERIES[:-1])):
+        with monkeypatch.context() as m:
+            m.setattr(bench, name, value)
+            assert bench.methodology() != first, name
+    assert bench.methodology() == first
+
+
 def test_field_shedding_never_drops_required_fields(tmp_path):
     # force shedding by shrinking the budget to just above the minimal form
     orig = bench.STDOUT_LINE_BUDGET

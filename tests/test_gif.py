@@ -181,7 +181,7 @@ def test_gif_through_decode_image_and_mapinpandas(spark):
         for _ in range(4)
     ]
     blob = _make_gif(frames, pal, 9, 7, with_ext=True)
-    meta = decode_image(2, blob, strict=True)
+    meta = decode_image(2, blob)
     assert meta == {
         "doc_id": 2, "n_bytes": len(blob), "width": 9, "height": 7,
         "n_frames": 4, "fmt": "gif",

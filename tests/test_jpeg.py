@@ -386,7 +386,7 @@ def test_jpeg_through_decode_image_and_mapinpandas(spark):
     rng = np.random.RandomState(43)
     px = rng.randint(100, 156, size=(10, 14, 3), dtype=np.uint8)
     blob = make_jpeg(px)
-    meta = decode_image(7, blob, strict=True)
+    meta = decode_image(7, blob)
     assert meta == {
         "doc_id": 7, "n_bytes": len(blob), "width": 14, "height": 10,
         "n_frames": 1, "fmt": "jpeg",

@@ -544,7 +544,7 @@ def test_arith_through_decode_image_metadata(spark):
     rng = np.random.RandomState(31)
     px = rng.randint(0, 256, size=(24, 17, 3), dtype=np.uint8)
     blob = make_arith_jpeg(px, quant=2)
-    meta = decode_image(4, blob, strict=True)
+    meta = decode_image(4, blob)
     assert meta == {
         "doc_id": 4, "n_bytes": len(blob), "width": 17, "height": 24,
         "n_frames": 1, "fmt": "jpeg",

@@ -260,7 +260,7 @@ def test_arith_lossless_through_decode_image_metadata():
     rng = np.random.RandomState(31)
     px = rng.randint(0, 256, size=(12, 20, 3), dtype=np.uint8)
     blob = make_arith_lossless_jpeg(px)
-    meta = decode_image(9, blob, strict=True)
+    meta = decode_image(9, blob)
     assert meta == {
         "doc_id": 9, "n_bytes": len(blob), "width": 20, "height": 12,
         "n_frames": 1, "fmt": "jpeg",

@@ -123,12 +123,12 @@ def test_webm_through_decode_image_surface():
     from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import decode_image
 
     blob = make_webm([_video_track(b"V_VP9", 1280, 720)])
-    meta = decode_image(11, blob, strict=True)
+    meta = decode_image(11, blob)
     assert meta == {"doc_id": 11, "n_bytes": len(blob), "width": 1280,
                     "height": 720, "n_frames": 0, "fmt": "webm"}
     mkv = make_webm([_video_track(b"V_MPEG4/ISO/AVC", 320, 240)],
                     doctype=b"matroska")
-    assert decode_image(12, mkv, strict=True)["fmt"] == "mkv"
+    assert decode_image(12, mkv)["fmt"] == "mkv"
 
 
 def test_webm_mutation_fuzz_valueerror_only():

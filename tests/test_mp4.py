@@ -200,7 +200,7 @@ def test_mp4_through_decode_image_surface():
     blob = make_mp4(
         [_trak(b"vide", _visual_entry(b"avc1", 640, 360), 123, 640, 360)]
     )
-    meta = decode_image(7, blob, strict=True)
+    meta = decode_image(7, blob)
     assert meta == {"doc_id": 7, "n_bytes": len(blob), "width": 640,
                     "height": 360, "n_frames": 123, "fmt": "mp4"}
 

@@ -14,6 +14,7 @@ from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
     decode_batches,
     decode_bmp_pixels,
     decode_image,
+    fake_decode,
     frame_sample_offsets,
 )
 from aws_cloudfront_realtime_monitoring_spark.sources.tables import load_table
@@ -39,12 +40,14 @@ def _make_bmp(pixels: np.ndarray, top_down: bool = False) -> bytes:
     return hdr + info + pix
 
 
-def test_strict_decode_raises_for_undectable_formats():
-    with pytest.raises(NotImplementedError):
-        decode_image(1, b"abc", strict=True)
-    # a "BM"-prefixed non-BMP must raise under strict, fall back otherwise
+def test_undecodable_payloads_fall_back_to_fake():
+    """An unrecognized payload, and one whose signature matches but whose
+    decoder rejects it, both take the fake fallback."""
+    assert decode_image(1, b"abc") == fake_decode(1, b"abc")
+    # a "BM"-prefixed non-BMP: the BMP decoder rejects it, decode_image
+    # falls back
     with pytest.raises(ValueError):
-        decode_image(1, b"BMnot really a bitmap", strict=True)
+        decode_bmp_pixels(b"BMnot really a bitmap")
     meta = decode_image(1, b"BMnot really a bitmap")
     assert meta["fmt"] in ("fake-jpeg", "fake-png", "fake-webp")  # fake fallback
 
@@ -61,7 +64,7 @@ def test_bmp_decodes_for_real():
         w, h, got = decode_bmp_pixels(payload)
         assert (w, h) == (5, 3)
         np.testing.assert_array_equal(got, px)
-        meta = decode_image(9, payload, strict=True)
+        meta = decode_image(9, payload)
         assert meta == {
             "doc_id": 9, "n_bytes": len(payload), "width": 5, "height": 3,
             "n_frames": 1, "fmt": "bmp",
@@ -191,7 +194,7 @@ def test_png_decodes_for_real_all_filters_and_channels():
             w, h, got = decode_png_pixels(_make_png(px, filters=filters))
             assert (w, h) == (4, 6)
             np.testing.assert_array_equal(got, px)
-    meta = decode_image(3, _make_png(px), strict=True)
+    meta = decode_image(3, _make_png(px))
     assert meta == {
         "doc_id": 3, "n_bytes": len(_make_png(px)), "width": 4, "height": 6,
         "n_frames": 1, "fmt": "png",
@@ -224,9 +227,7 @@ def test_png_rejects_malformed_and_unsupported():
     )
     with pytest.raises(ValueError):
         decode_png_pixels(interlaced)
-    # strict decode_image surfaces the rejection; non-strict falls back
-    with pytest.raises(ValueError):
-        decode_image(1, bytes(bad_crc), strict=True)
+    # decode_image falls back on the rejected payload
     assert decode_image(1, bytes(bad_crc))["fmt"] in ("fake-jpeg", "fake-png", "fake-webp")
 
 
@@ -326,7 +327,7 @@ def test_png_palette_decodes_through_plte_and_trns():
     with pytest.raises(ValueError):
         decode_png_pixels(_make_palette_png(bad, pal))
     # and the metadata path reports palette PNGs like any other
-    meta = decode_image(4, _make_palette_png(idx, pal), strict=True)
+    meta = decode_image(4, _make_palette_png(idx, pal))
     assert (meta["fmt"], meta["width"], meta["height"]) == ("png", 6, 4)
 
 
@@ -364,15 +365,21 @@ def test_png_roundtrip_property():
 
 
 def test_decoders_never_crash_on_mutated_payloads():
-    """Production contract under corrupt data: decode_image(strict=False)
+    """Production contract under corrupt data: decode_image
     must NEVER raise for any bytes -- every decoder maps malformed input
     (truncations, bit flips, garbage) to ValueError internally and the
-    fallback engages. Hypothesis mutates valid payloads of every format
-    plus pure garbage; one surviving non-ValueError would kill a 100 TB
+    fallback engages. Hypothesis mutates a valid payload of every
+    format-table entry; one surviving non-ValueError would kill a 100 TB
     executor task instead of skipping one bad record."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from aws_cloudfront_realtime_monitoring_spark.operators.media_synth import (
+        apng_payload,
+        mp4_payload,
+        vp8l_webp_payload,
+        webm_payload,
+    )
     from tests.test_gif import _frame as _gif_frame
     from tests.test_gif import _make_gif
     from tests.test_jpeg import make_jpeg
@@ -386,6 +393,11 @@ def test_decoders_never_crash_on_mutated_payloads():
         make_jpeg(px3),
         _make_gif([_gif_frame(rng.randint(0, 4, (6, 5), dtype=np.uint8))],
                   pal, 5, 6),
+        # one seed per remaining format-table entry
+        vp8l_webp_payload(3),
+        apng_payload(3),
+        mp4_payload(3),
+        webm_payload(3),
     ]
 
     @settings(max_examples=250, deadline=None)
@@ -416,22 +428,54 @@ def test_decoders_never_crash_on_mutated_payloads():
 def test_null_doc_id_rows_stay_inside_the_contract(spark):
     """NULL int64 doc_ids arrive in pandas as NaN, where int() raises
     ValueError OUTSIDE the payload try-block; every batch surface must
-    honor its contract anyway -- decode_batches keeps the row with a
-    NULL id, the dropping surfaces skip it under skip_invalid."""
-    df = spark.createDataFrame(
-        [(None, bytearray(b"not media")), (7, bytearray(b"also not"))],
-        "doc_id BIGINT, payload BINARY",
+    honor its contract anyway. decode_batches keeps every row: a NULL id
+    stays NULL, a NULL or corrupt payload takes the fake fallback. The
+    four dropping surfaces skip a NULL id, a NULL payload and a corrupt
+    payload under skip_invalid, and raise on each of them otherwise."""
+    from aws_cloudfront_realtime_monitoring_spark.operators.audio import (
+        audio_feature_batches,
     )
-    rows = decode_batches(df).collect()
-    assert len(rows) == 2
-    assert sorted([r.doc_id for r in rows], key=lambda x: (x is None, x)) \
-        == [7, None]
-
+    from aws_cloudfront_realtime_monitoring_spark.operators.media_synth import (
+        apng_payload,
+        bmp_payload,
+        wav_payload,
+    )
     from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
+        image_pixel_stats_batches,
+        resize_pixel_stats_batches,
         sample_animation_frames,
     )
 
-    assert sample_animation_frames(df).collect() == []  # dropped, no crash
+    schema = "doc_id BIGINT, payload BINARY"
+    df = spark.createDataFrame(
+        [(None, bytearray(b"not media")), (7, bytearray(b"also not")),
+         (8, None), (9, bytearray(bmp_payload(1)[:40]))],
+        schema,
+    )
+    rows = decode_batches(df).collect()
+    assert sorted([r.doc_id for r in rows], key=lambda x: (x is None, x)) \
+        == [7, 8, 9, None]
+    by_id = {r.doc_id: r for r in rows}
+    assert by_id[8].n_bytes == 0 and by_id[9].n_bytes == 40
+    assert all(r.fmt.startswith("fake-") for r in rows)
+
+    def resize(docs, **kw):
+        return resize_pixel_stats_batches(docs, 2, 3, **kw)
+
+    for run, good in ((image_pixel_stats_batches, bmp_payload(1)),
+                      (resize, bmp_payload(2)),
+                      (sample_animation_frames, apng_payload(3)),
+                      (audio_feature_batches, wav_payload(4))):
+        bad = [(None, bytearray(good)), (2, None),
+               (3, bytearray(good[: len(good) // 2]))]
+        docs = spark.createDataFrame([(1, bytearray(good))] + bad, schema)
+        assert {r.doc_id for r in run(docs).collect()} == {1}
+        assert {r.doc_id for r in run(docs, skip_invalid=True).collect()} \
+            == {1}
+        for case in bad:
+            one = spark.createDataFrame([case], schema)
+            with pytest.raises(Exception, match="ValueError"):  # Py4J-wrapped
+                run(one, skip_invalid=False).collect()
 
 
 def test_png_ancillary_crc_corruption_is_recoverable():

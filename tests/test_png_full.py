@@ -239,7 +239,7 @@ def test_decode_image_reports_real_meta_for_interlaced_png():
     # pre-r13 this fell to the fake path; now it is a real decode
     px = _rng(11).randint(0, 256, (12, 20, 3), np.int64)
     blob = make_png(px, interlace=1, filters=(3,))
-    meta = decode_image(5, blob, strict=True)
+    meta = decode_image(5, blob)
     assert meta == {
         "doc_id": 5, "n_bytes": len(blob), "width": 20, "height": 12,
         "n_frames": 1, "fmt": "png",

@@ -945,17 +945,17 @@ def test_webp_through_decode_image_and_mapinpandas(spark):
     rgba = rng.randint(0, 256, size=(6, 8, 4), dtype=np.uint8)
     data, _ = _encode_vp8l(rgba, transforms=("subgreen",))
     blob = _wrap_riff(data)
-    meta = decode_image(3, blob, strict=True)
+    meta = decode_image(3, blob)
     assert meta == {
         "doc_id": 3, "n_bytes": len(blob), "width": 8, "height": 6,
         "n_frames": 1, "fmt": "webp",
     }
     # a lossy file still yields REAL header metadata through the same path
     lossy = _wrap_riff(_vp8_lossy_chunk(64, 32), b"VP8 ")
-    meta = decode_image(4, lossy, strict=True)
+    meta = decode_image(4, lossy)
     assert (meta["width"], meta["height"], meta["fmt"]) == (64, 32, "webp")
-    # RIFF-prefixed garbage falls back (non-strict) instead of erroring
-    fake = decode_image(5, b"RIFF" + b"\x00" * 30, strict=False)
+    # RIFF-prefixed garbage falls back instead of erroring
+    fake = decode_image(5, b"RIFF" + b"\x00" * 30)
     assert fake["doc_id"] == 5
     df = spark.createDataFrame(
         [(1, bytearray(blob))], "doc_id BIGINT, payload BINARY"
