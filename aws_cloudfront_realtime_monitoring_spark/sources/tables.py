@@ -13,27 +13,40 @@ caps every scan at one task regardless of core count -- a narrow map over
 600k lineitem rows would use 1 of 32 local cores. A real deployment never
 has this problem (ingest writes many files/row groups; see the partitioned
 streaming sink, D6), so the loader reproduces that layout once per
-(sf_dir, table): large tables are rewritten into a multi-file parquet
-directory under ``.layout_cache/`` (keyed by source size+mtime, atomic
-rename, safe under concurrent runs) and every later read scans the
-partitioned copy in parallel. Data is byte-identical row-for-row; only the
-physical file layout changes -- exactly what an ingest/compaction step does
-at cluster scale.
+(sf_dir, table) with the target-file-size rule a compaction job applies:
+a table is cut into ``ceil(uncompressed bytes / _TARGET_FILE_BYTES)``
+files. The uncompressed bytes are the row groups' ``total_byte_size``
+from the source footer, read on the driver with pyarrow (no Spark job).
+Scan work grows with uncompressed bytes, not on-disk ones: the regex and
+shingling over ``documents.text`` see text that compresses 2.65x on disk,
+and an on-disk rule would leave that table one task.
+
+A table the rule gives one file is read in place: no rewrite, no second
+copy. Larger ones are rewritten into a multi-file parquet directory
+under ``.layout_cache/`` (keyed by layout version, file count and source
+size+mtime, atomic rename, safe under concurrent runs) and every later
+read scans the partitioned copy in parallel. Data is row-for-row
+identical; only the physical file layout changes. Sources that are not
+a local file -- a parquet directory, a non-local path -- are always read
+in place. A file-stream source needs a directory, so :func:`stream_dir`
+materializes every table, a one-file table as one file.
 
 Scan tasks are sized by Spark's byte rule, not one per file: a split
 holds ``min(maxPartitionBytes, max(openCostInBytes, total / cores))``
-bytes, each file counted as its size plus the open cost, so the
-``_CACHE_FILES`` small files pack into about one task per core, one file
-per task once there are as many cores as files.
+bytes, each file counted as its size plus the open cost, so the layout's
+files pack into about one task per core, one file per task once there
+are as many cores as files.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
@@ -62,14 +75,13 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__f
 LAYOUT_CACHE_DIR = os.environ.get(
     "SPARK_GRAFT_LAYOUT_CACHE", os.path.join(_REPO_ROOT, ".layout_cache")
 )
-#: only re-layout tables big enough for parallelism to matter
-_CACHE_MIN_BYTES = 100_000
-#: target file count == default local core count
-_CACHE_FILES = 32
-#: bump when _read_raw normalization changes so stale cached layouts rebuild
-#: (v2: TIMESTAMP_NTZ -> TIMESTAMP normalization; v3: nanos -> micros now
-#: FLOORS like DuckDB instead of truncating toward zero, r12)
-_LAYOUT_VERSION = 3
+#: uncompressed bytes per layout file; a table under it is read in place
+_TARGET_FILE_BYTES = 512 * 1024
+#: bump when _read_raw normalization or the layout rule changes so stale
+#: cached layouts rebuild (v2: TIMESTAMP_NTZ -> TIMESTAMP normalization;
+#: v3: nanos -> micros now FLOORS like DuckDB instead of truncating toward
+#: zero, r12; v4: file count from uncompressed bytes, not a constant 32)
+_LAYOUT_VERSION = 4
 #: stale-layout dirs younger than this are never deleted (another live
 #: process may have just written them)
 _RETIRE_GRACE_S = 15 * 60
@@ -107,29 +119,43 @@ def _read_raw(spark: SparkSession, src: str) -> DataFrame:
     return df
 
 
+def layout_files(src: str) -> int:
+    """Files the layout rule cuts a parquet source (a file, or a directory
+    of part files) into: ``ceil(uncompressed bytes / _TARGET_FILE_BYTES)``,
+    at least one. Footers only, no Spark job."""
+    files = [src] if os.path.isfile(src) else glob.glob(os.path.join(src, "*.parquet"))
+    raw = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        raw += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    return max(1, -(-raw // _TARGET_FILE_BYTES))
+
+
 def layout_dir(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     """Materialize (once) and return the multi-file layout directory for a
-    table, or ``None`` if the table stays on its raw single-file path.
-    Streaming sources need a directory -- pass ``force=True`` semantics by
-    calling :func:`stream_dir` instead."""
+    table, or ``None`` if the table is read in place: it is not a local
+    file, or the layout rule gives it one file. Streaming sources need a
+    directory whatever the size -- call :func:`stream_dir` for those."""
     src = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(src)
-    except OSError:
-        return None  # non-local path: let Spark handle it
-    if st.st_size < _CACHE_MIN_BYTES:
+    if not os.path.isfile(src):
+        return None  # a parquet directory or a non-local path
+    n_files = layout_files(src)
+    if n_files == 1:
         return None
-    return _materialize(spark, src, sf_dir, name, st)
+    return _materialize(spark, src, sf_dir, name, n_files)
 
 
 def stream_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Layout directory for use as a file-stream source (always
-    materialized, regardless of size -- streaming sources list a dir)."""
+    """Layout directory for use as a file-stream source: always
+    materialized, with at least one file -- streaming sources list a
+    dir."""
     src = os.path.join(sf_dir, f"{name}.parquet")
-    return _materialize(spark, src, sf_dir, name, os.stat(src))
+    return _materialize(spark, src, sf_dir, name, layout_files(src))
 
 
-def _materialize(spark: SparkSession, src: str, sf_dir: str, name: str, st) -> str:
+def _materialize(spark: SparkSession, src: str, sf_dir: str, name: str,
+                 n_files: int) -> str:
+    st = os.stat(src)
     # the cache parent keys on basename PLUS a digest of the absolute
     # source dir: two processes over different testdata roots that share
     # a basename ('sf0.1') used to share one parent, and A's retirement
@@ -141,19 +167,20 @@ def _materialize(spark: SparkSession, src: str, sf_dir: str, name: str, st) -> s
     sf_tag = f"{os.path.basename(norm)}-{digest}"
     # st_mtime_ns, not whole seconds: a same-size rewrite landing in
     # the same second must not serve the previous corpus (r8 review)
-    key = f"{name}-v{_LAYOUT_VERSION}-{st.st_size}-{st.st_mtime_ns}"
+    key = f"{name}-v{_LAYOUT_VERSION}-{n_files}f-{st.st_size}-{st.st_mtime_ns}"
     cache = os.path.join(LAYOUT_CACHE_DIR, sf_tag, key)
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
-        # a new key means the source (or the normalization version) changed:
-        # retire this table's stale layouts so the cache doesn't grow
-        # unboundedly across testdata regenerations. Deletion is deliberately
-        # conservative: only `{name}-v` keys (never another table's), only
-        # keys whose recorded source stat no longer matches the CURRENT
-        # source file (a concurrent process on a different-but-same-basename
-        # sf_dir, or a different _LAYOUT_VERSION over an unchanged source,
-        # records the same stat and is left alone), and only dirs untouched
-        # for _RETIRE_GRACE_S (a layout another live process just wrote or
-        # is mid-write keeps its files).
+        # a new key means the source, the layout version or the file
+        # count changed: retire this table's stale layouts so the cache
+        # doesn't grow unboundedly across testdata regenerations. Deletion
+        # is deliberately conservative: only `{name}-v` keys (never another
+        # table's), only keys whose recorded source stat no longer matches
+        # the CURRENT source file (a concurrent process on a
+        # different-but-same-basename sf_dir, or a different
+        # _LAYOUT_VERSION or file count over an unchanged source, records
+        # the same stat and is left alone), and only dirs untouched for
+        # _RETIRE_GRACE_S (a layout another live process just wrote or is
+        # mid-write keeps its files).
         parent = os.path.dirname(cache)
         cur_stat = f"-{st.st_size}-{st.st_mtime_ns}"
         if os.path.isdir(parent):
@@ -198,7 +225,7 @@ def _materialize(spark: SparkSession, src: str, sf_dir: str, name: str, st) -> s
                 # (session, layout) leases instead.
                 shutil.rmtree(path, ignore_errors=True)
         tmp = f"{cache}.tmp-{os.getpid()}"
-        _read_raw(spark, src).repartition(_CACHE_FILES).write.mode(
+        _read_raw(spark, src).repartition(n_files).write.mode(
             "overwrite"
         ).parquet(tmp)
         try:

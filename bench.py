@@ -22,6 +22,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from aws_cloudfront_realtime_monitoring_spark.plans import load_full
 from aws_cloudfront_realtime_monitoring_spark.session import get_spark
+from aws_cloudfront_realtime_monitoring_spark.sources import tables
 
 HEADLINE = [
     "cf_parse_wire_roundtrip",
@@ -644,10 +645,8 @@ def main() -> None:
     # warm the JVM/codegen path once so per-query numbers measure the
     # queries, not session bring-up; also materialize every table's layout
     # cache up front so no timed query pays the one-time re-layout cost
-    from aws_cloudfront_realtime_monitoring_spark.sources.tables import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t)
+    for t in tables.TABLES:
+        tables.load_table(spark, sf_dir, t)
     registry["q2_create_time_series"].build(spark, sf_dir).collect()
 
     # regime gate (r16): probe-until-healthy, bounded; its final probe
@@ -878,6 +877,7 @@ def main() -> None:
         passes=passes,
         codegen_compiles=codegen_compiles,
         layers=layers,
+        layout=table_layouts(sf_dir),
     ))
     spark.stop()
 
@@ -892,9 +892,10 @@ SIDECAR = "BENCH_DETAIL.json"
 
 
 def methodology() -> str:
-    """Hash of what defines the bench numbers -- the query set and the
-    timed-loop constants -- so a harness change shows in the JSON line
-    as a changed value instead of as a phantom speed-up or regression."""
+    """Hash of what defines the bench numbers -- the query set, the
+    timed-loop constants and the tables' file-layout rule -- so a harness
+    or layout change shows in the JSON line as a changed value instead of
+    as a phantom speed-up or regression."""
     spec = {
         "headline": HEADLINE, "extra": EXTRA_QUERIES,
         "timed_runs": [TIMED_RUNS, EXTRA_TIMED_RUNS],
@@ -902,9 +903,23 @@ def methodology() -> str:
                   REGIME_RETRIES],
         "calibration": [CALIBRATION_ROWS, CALIBRATION_SPLITS,
                         CALIBRATION_REF_SEC],
+        "layout": [tables._TARGET_FILE_BYTES, tables._LAYOUT_VERSION],
     }
     blob = json.dumps(spec, sort_keys=True).encode()
     return hashlib.sha256(blob).hexdigest()[:16]
+
+
+def table_layouts(sf_dir: str) -> dict[str, dict]:
+    """The file layout the scans of each table read: the files the layout
+    rule cuts it into, and whether it is read in place (one file). Tables
+    that are not a local file are always read in place and are left out."""
+    out = {}
+    for t in tables.TABLES:
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isfile(src):
+            n = tables.layout_files(src)
+            out[t] = {"files": n, "in_place": n == 1}
+    return out
 
 
 def _render_output(
@@ -926,6 +941,7 @@ def _render_output(
     passes: list[dict] | None = None,
     codegen_compiles: dict[str, int] | None = None,
     layers: dict[str, dict] | None = None,
+    layout: dict[str, dict] | None = None,
     sidecar_dir: Path | None = None,
 ) -> str:
     """Write full diagnostics to the sidecar, return the compact stdout
@@ -1035,6 +1051,10 @@ def _render_output(
         # run and CPU seconds, input, shuffle and spill bytes, straggler
         # task and top stage (_layer_profile)
         layers=layers or {},
+        # per table: the files its scans read and whether it is read in
+        # place (table_layouts); the layout moves every row, so compare
+        # totals only across runs with the same layout
+        layout=layout or {},
     )
     try:
         ((sidecar_dir or Path(__file__).resolve().parent) / SIDECAR).write_text(

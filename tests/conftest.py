@@ -18,3 +18,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def private_layout_cache(tmp_path, monkeypatch):
+    """Point the layout cache at the test's own ``tmp_path``: a test over a
+    ``tmp_path`` sf_dir would otherwise add a parent dir to the shared
+    cache on every run, and nothing retires those. Yields a function that
+    returns the parent dirs the shared cache gained since."""
+    from aws_cloudfront_realtime_monitoring_spark.sources import tables
+
+    shared = tables.LAYOUT_CACHE_DIR
+
+    def parents() -> set[str]:
+        return set(os.listdir(shared)) if os.path.isdir(shared) else set()
+
+    before = parents()
+    monkeypatch.setattr(tables, "LAYOUT_CACHE_DIR", str(tmp_path / "layout_cache"))
+    yield lambda: parents() - before

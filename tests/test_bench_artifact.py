@@ -125,6 +125,38 @@ def test_methodology_hash_is_stable_and_tracks_the_harness(
     assert bench.methodology() == first
 
 
+def test_methodology_hash_tracks_the_layout_rule(monkeypatch):
+    """The tables' file layout moves every row, so the layout rule is
+    part of what defines the bench numbers."""
+    first = bench.methodology()
+    for name, value in (("_TARGET_FILE_BYTES", 1024 * 1024),
+                        ("_LAYOUT_VERSION", 0)):
+        with monkeypatch.context() as m:
+            m.setattr(bench.tables, name, value)
+            assert bench.methodology() != first, name
+    assert bench.methodology() == first
+
+
+def test_sidecar_records_each_tables_layout(tmp_path, monkeypatch, sf_dir):
+    """BENCH_DETAIL.json names the layout a run measured: each table's
+    file count and whether it is read in place."""
+    monkeypatch.setattr(bench.tables, "_TARGET_FILE_BYTES", 100_000)
+    layout = bench.table_layouts(sf_dir)
+    assert set(layout) == set(bench.tables.TABLES)
+    assert layout["region"] == {"files": 1, "in_place": True}
+    assert layout["embeddings"]["files"] >= 2
+    assert layout["embeddings"]["in_place"] is False
+    line = bench._render_output(
+        times={name: 1.0 for name in bench.HEADLINE}, sf=0.001,
+        load_start=1.0, load_end=1.0, load_flagged=False, reran=[],
+        query_ext_cores={}, wait_budget_left=0.0, layout=layout,
+        sidecar_dir=tmp_path,
+    )
+    assert "layout" not in json.loads(line)
+    detail = json.loads((tmp_path / bench.SIDECAR).read_text())
+    assert detail["layout"] == layout
+
+
 def test_field_shedding_never_drops_required_fields(tmp_path):
     # force shedding by shrinking the budget to just above the minimal form
     orig = bench.STDOUT_LINE_BUDGET

@@ -351,16 +351,80 @@ def test_small_file_scan_packs_by_bytes(spark, tmp_path):
     assert parts <= spark.sparkContext.defaultParallelism
 
 
-def test_layout_cached_table_keeps_scan_width(spark, sf_dir):
-    """The other direction of the bytes rule: a layout-cached table (one
-    of the CPU-heavy ones) still scans at least one task per core, up
-    to its _CACHE_FILES files."""
+def test_sf0001_tables_are_read_in_place(spark, sf_dir):
+    """The layout rule gives every sf0.001 table one file, so each is
+    read in place: no rewrite, no second copy in the layout cache."""
     from aws_cloudfront_realtime_monitoring_spark.sources import tables
 
-    assert tables.layout_dir(spark, sf_dir, "embeddings") is not None
-    parts = tables.load_table(spark, sf_dir, "embeddings").rdd.getNumPartitions()
-    assert parts >= min(tables._CACHE_FILES,
-                        spark.sparkContext.defaultParallelism)
+    for name in tables.TABLES:
+        assert tables.layout_dir(spark, sf_dir, name) is None, name
+
+
+def test_layout_rule_cuts_by_uncompressed_bytes(spark, tmp_path,
+                                                private_layout_cache):
+    """A single-file table over the target is cut into
+    ceil(uncompressed bytes / target) files, scans at least one task per
+    file up to the core count, and reads back the source's rows, row for
+    row."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_cloudfront_realtime_monitoring_spark.sources import tables
+
+    n = 5 * tables._TARGET_FILE_BYTES // 200
+    src = pa.table({"id": list(range(n)),
+                    "text": [f"{i:08d}" + "x" * 92 for i in range(n)]})
+    pq.write_table(src, str(tmp_path / "events.parquet"))
+    md = pq.read_metadata(str(tmp_path / "events.parquet"))
+    raw = sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    want = math.ceil(raw / tables._TARGET_FILE_BYTES)
+    assert want >= 2
+
+    cache = tables.layout_dir(spark, str(tmp_path), "events")
+    assert cache is not None and cache.startswith(tables.LAYOUT_CACHE_DIR)
+    parts = [f for f in os.listdir(cache) if f.endswith(".parquet")]
+    assert len(parts) == want
+    df = tables.load_table(spark, str(tmp_path), "events")
+    # the files keep the scan width: one task per file up to the cores
+    assert df.rdd.getNumPartitions() >= min(
+        want, spark.sparkContext.defaultParallelism)
+    got = sorted(map(tuple, df.collect()))
+    assert got == sorted(zip(src["id"].to_pylist(), src["text"].to_pylist()))
+    assert not private_layout_cache()
+
+
+def test_stream_dir_of_one_file_table_holds_one_file(spark, sf_dir,
+                                                     private_layout_cache):
+    """A file-stream source needs a directory: a table read in place
+    still gets one, holding a single data file."""
+    from aws_cloudfront_realtime_monitoring_spark.sources import tables
+
+    assert tables.layout_dir(spark, sf_dir, "region") is None
+    d = tables.stream_dir(spark, sf_dir, "region")
+    assert os.path.isdir(d)
+    assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1
+    assert spark.read.parquet(d).count() == 5
+    assert not private_layout_cache()
+
+
+def test_directory_source_is_read_in_place(spark, tmp_path, monkeypatch,
+                                           private_layout_cache):
+    """A parquet directory is never rewritten, whatever its bytes: the
+    check is that the source is not a file, not its st_size."""
+    from aws_cloudfront_realtime_monitoring_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_TARGET_FILE_BYTES", 1)
+    src = str(tmp_path / "orders.parquet")
+    spark.range(0, 100, 1, 4).toDF("o_orderkey").write.parquet(src)
+    assert tables.layout_files(src) > 1
+    assert tables.layout_dir(spark, str(tmp_path), "orders") is None
+    df = tables.load_table(spark, str(tmp_path), "orders")
+    assert all(src in f for f in df.inputFiles())
+    assert df.count() == 100
+    assert not os.path.exists(tables.LAYOUT_CACHE_DIR)
+    assert not private_layout_cache()
 
 
 def test_register_views_pins_utc_on_memo_hit(spark, sf_dir):

@@ -1201,7 +1201,8 @@ def test_connector_overrides_normalize_and_reject_identity_conflicts(
         ingest.stream_kafka_lines(spark, "b:9092", "t", subscribe="other")
 
 
-def test_stream_hourly_equiv_drops_null_ts_like_its_oracle(spark, tmp_path):
+def test_stream_hourly_equiv_drops_null_ts_like_its_oracle(spark, tmp_path,
+                                                           private_layout_cache):
     """r13 review: Spark's window() silently drops NULL-event-time rows
     (Catalyst injects an IsNotNull filter) while the DuckDB oracle's
     make_timestamp grouped them into a NULL window_start -- plant a NULL
@@ -1237,9 +1238,11 @@ def test_stream_hourly_equiv_drops_null_ts_like_its_oracle(spark, tmp_path):
     want = {(ws, et): (int(n), float(sv))
             for ws, et, n, sv in con.execute(q.oracle).fetchall()}
     assert want == got
+    assert not private_layout_cache()
 
 
-def test_stream_dedup_equiv_counts_null_ids_once(spark, tmp_path):
+def test_stream_dedup_equiv_counts_null_ids_once(spark, tmp_path,
+                                                 private_layout_cache):
     """r14 advice: the NULL-id passthrough used to branch off the
     at-least-once union, so every id-less row was emitted TWICE while
     the oracle counts the table once -- a latent divergence (fixtures
@@ -1274,6 +1277,7 @@ def test_stream_dedup_equiv_counts_null_ids_once(spark, tmp_path):
     want = {et: (int(n), float(sv))
             for et, n, sv in con.execute(q.oracle).fetchall()}
     assert want == got  # pre-fix: click counted 4, not 2
+    assert not private_layout_cache()
 
 
 def test_stateful_running_totals_bigint_key(spark, replay_dir):
