@@ -565,6 +565,66 @@ def _layer_profile(spark, mark: tuple[int, int], n_runs: int = 1) -> dict:
     }
 
 
+def noop_sink(df) -> None:
+    """Evaluate every output column of ``df`` without collecting it on the
+    driver (count() would let Catalyst prune the expensive projections
+    away)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def timed_runs(spark, build, n_runs: int = TIMED_RUNS, *,
+               warmup: bool = False, ext_cpu: _ExternalCpu | None = None,
+               run=noop_sink) -> dict:
+    """Min-of-N timing of ``run(build())``, the one timed loop of the
+    bench and of ``tools/scale.py``. ``build`` makes a fresh plan per run
+    (its seconds are the driver build); ``run`` executes it (the noop
+    sink by default). Returns:
+
+    - ``sec`` (the fastest run) and ``runs`` (every run's wall seconds);
+    - ``build_s`` / ``exec_s``: the fastest run's build / execute split;
+    - ``ext_cores``: the MAX external-cores figure sampled after each
+      run, so a neighbor burst that lands mid-cell (invisible to a
+      start-only gate -- r8 recorded a phantom +5% that way) is seen
+      per cell, not discovered after the round;
+    - ``compiles``: classes codegen compiled across the runs;
+    - ``layers``: the runs' per-run ``_layer_profile``.
+
+    ``compiles`` and ``layers`` are read outside the timed intervals.
+    ``warmup`` adds one untimed run first: Python-worker spinup (pandas
+    UDF queries) and first-touch file listing are process effects, not
+    plan cost."""
+    if warmup:
+        run(build())
+        spark.catalog.clearCache()
+    ext_cpu = ext_cpu or _ExternalCpu()
+    per_run, splits = [], []
+    compiles0 = _codegen_compiles(spark)
+    mark = _status_mark(spark)
+    # close out the idle/warm-up gap for its baseline-RESET side effect
+    # only: a neighbor burst that ended before the timed window must not
+    # count toward this cell's max (it would cause spurious re-runs and
+    # overstate query_ext_cores), so start the max at 0
+    ext_cpu.sample()
+    ext_max = 0.0
+    for _ in range(n_runs):
+        t0 = time.time()
+        planned = build()
+        t_built = time.time()
+        run(planned)
+        t1 = time.time()
+        per_run.append(t1 - t0)
+        splits.append((t_built - t0, t1 - t_built))
+        ext_max = max(ext_max, ext_cpu.sample())
+        # drop persisted intermediates (e.g. minhash signatures) so one
+        # cell's cache does not occupy memory during the next
+        spark.catalog.clearCache()
+    build_s, exec_s = min(splits, key=sum)
+    return {"sec": min(per_run), "runs": per_run, "build_s": build_s,
+            "exec_s": exec_s, "ext_cores": ext_max,
+            "compiles": _codegen_compiles(spark) - compiles0,
+            "layers": _layer_profile(spark, mark, n_runs)}
+
+
 def _prior_round_times(
     sf: float | None, calib_now: float | None = None
 ) -> dict[str, float]:
@@ -663,54 +723,25 @@ def main() -> None:
     codegen_compiles: dict[str, int] = {}
     layers: dict[str, dict] = {}
 
-    def timed_runs(name: str,
-                   n_runs: int = TIMED_RUNS) -> tuple[list[float], float]:
-        """min-of-N timing; also returns the MAX external-cores figure
-        sampled across the runs, so a neighbor burst that lands mid-query
-        (invisible to the start-only gate -- r8 recorded a phantom +5%
-        that way) is detected per query, not discovered after the round.
-        Adds the classes codegen compiled across the runs to
-        ``codegen_compiles``, read outside the timed intervals: a warm
-        row that still compiles is re-paying Janino and the JIT.
-
-        ``layers[name]`` gets the fastest run's driver build / execute
-        split plus the status store's per-run profile of these runs
-        (``_layer_profile``), also read outside the timed intervals; a
-        later call replaces it only when its fastest run is faster, so
-        the profile always describes the recorded time."""
-        per_run, splits = [], []
-        compiles0 = _codegen_compiles(spark)
-        mark = _status_mark(spark)
-        # close out the idle/warm-up gap for its baseline-RESET side effect
-        # only: a neighbor burst that ended before the timed window must not
-        # count toward this query's max (it would cause spurious re-runs and
-        # overstate query_ext_cores), so start the max at 0
-        ext_cpu.sample()
-        ext_max = 0.0
-        for _ in range(n_runs):
-            t0 = time.time()
-            df = registry[name].build(spark, sf_dir)
-            t_built = time.time()
-            # noop sink: forces full evaluation of every output column
-            # without driver-side collection (count() would let Catalyst
-            # prune the expensive projections away)
-            df.write.format("noop").mode("overwrite").save()
-            t1 = time.time()
-            per_run.append(t1 - t0)
-            splits.append((t_built - t0, t1 - t_built))
-            ext_max = max(ext_max, ext_cpu.sample())
-            # drop persisted intermediates (e.g. minhash signatures) so one
-            # query's cache does not occupy memory during the next
-            spark.catalog.clearCache()
-        codegen_compiles[name] = (codegen_compiles.get(name, 0)
-                                  + _codegen_compiles(spark) - compiles0)
-        build_s, exec_s = min(splits, key=sum)
+    def time_row(name: str, n_runs: int = TIMED_RUNS,
+                 warmup: bool = False) -> tuple[list[float], float]:
+        """``timed_runs`` over one registry row. Adds the classes codegen
+        compiled across the runs to ``codegen_compiles``: a warm row that
+        still compiles is re-paying Janino and the JIT. ``layers[name]``
+        gets the fastest run's driver build / execute split plus the
+        runs' layer profile; a later call replaces it only when its
+        fastest run is faster, so the profile always describes the
+        recorded time."""
+        cell = timed_runs(spark, lambda: registry[name].build(spark, sf_dir),
+                          n_runs, warmup=warmup, ext_cpu=ext_cpu)
+        codegen_compiles[name] = codegen_compiles.get(name, 0) + cell["compiles"]
         prev = layers.get(name)
-        if prev is None or build_s + exec_s < prev["build_s"] + prev["exec_s"]:
-            layers[name] = {"build_s": round(build_s, 3),
-                            "exec_s": round(exec_s, 3),
-                            **_layer_profile(spark, mark, n_runs)}
-        return per_run, ext_max
+        if prev is None or (cell["build_s"] + cell["exec_s"]
+                            < prev["build_s"] + prev["exec_s"]):
+            layers[name] = {"build_s": round(cell["build_s"], 3),
+                            "exec_s": round(cell["exec_s"], 3),
+                            **cell["layers"]}
+        return cell["runs"], cell["ext_cores"]
 
     wait_budget = float(MID_RUN_WAIT_BUDGET_SEC)
 
@@ -742,14 +773,7 @@ def main() -> None:
         regress it -- degraded windows inflate wall, so min-over-passes
         is the min-of-N methodology with more N)."""
         for name in HEADLINE:
-            # one untimed warm-up: Python-worker spinup (pandas UDF
-            # queries) and first-touch file listing are process effects,
-            # not plan cost
-            registry[name].build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            spark.catalog.clearCache()
-            per_run, ext_max = timed_runs(name)
+            per_run, ext_max = time_row(name, warmup=True)
             # re-run triggers, most-specific first: the flagship always
             # gets an extra min-of-3; a min that drifts past RERUN_FACTOR
             # x the best prior round is far more often a neighbor's CPU
@@ -774,7 +798,7 @@ def main() -> None:
                     # extra runs still happen -- the min can only improve
                     # the number
                     quiet_down()
-                extra, extra_ext = timed_runs(name)
+                extra, extra_ext = time_row(name)
                 per_run += extra
                 ext_max = max(ext_max, extra_ext)
                 if name not in reran:
@@ -804,7 +828,7 @@ def main() -> None:
         # series whose job is drift detection, not precision; worker
         # spinup is already warm after the 29 headline rows.
         for name in EXTRA_QUERIES:
-            per_run, _ext = timed_runs(name, n_runs=EXTRA_TIMED_RUNS)
+            per_run, _ext = time_row(name, n_runs=EXTRA_TIMED_RUNS)
             extra_times[name] = min(extra_times.get(name, float("inf")),
                                     round(min(per_run), 3))
             print(f"# extra {name}: {extra_times[name]}s "

@@ -9,9 +9,9 @@ when someone next runs them. This test reads their source with ``ast``
 - each ``from aws_cloudfront_realtime_monitoring_spark... import X``
   against the package;
 - each import of a sibling script (``from bench import X``,
-  ``import measure_skew_scale as mss``, ``from test_jpeg import ...``)
+  ``import scale as sc``, ``from test_jpeg import ...``)
   against that script's file and top-level names, including the
-  ``mss.X`` attributes read through a module alias. A module that is
+  ``sc.X`` attributes read through a module alias. A module that is
   neither installed nor a script in ``tools/``, the repo root or
   ``tests/`` is reported as missing.
 """
@@ -141,13 +141,13 @@ def test_local_import_scan_sees_function_level_imports(tmp_path):
     and reports a sibling script that does not exist."""
     probe = tmp_path / "probe.py"
     probe.write_text(
-        "import measure_skew_scale as mss\n"
+        "import scale as sc\n"
         "def f():\n"
         "    from bench import _status_mark, _no_such_helper\n"
         "    from measure_gone import mem_probe\n"
-        "    return mss.timed, mss.NO_SUCH_CONSTANT\n")
+        "    return sc.run_family, sc.NO_SUCH_CONSTANT\n")
     assert _missing_local_imports(probe) == [
         "probe.py:3: bench._no_such_helper",
         "probe.py:4: no module measure_gone",
-        "probe.py:5: measure_skew_scale.NO_SUCH_CONSTANT",
+        "probe.py:5: scale.NO_SUCH_CONSTANT",
     ]
