@@ -275,9 +275,10 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     # measured ~2x the whole operator's wall clock at sf0.1. Size-based
     # coalescing gives 1 partition for kB-sized label tables and grows to
     # hundreds at 1e9 nodes: exactly the scaling an iterative graph job
-    # wants. Restored on exit; per-query compile picks it up immediately.
+    # wants. Restored on exit (unset again if the session had no value);
+    # per-query compile picks it up immediately.
     _PFIRST = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    old_pfirst = spark.conf.get(_PFIRST, "true")
+    old_pfirst = spark.conf.get(_PFIRST, None)
     spark.conf.set(_PFIRST, "false")
 
     # localCheckpoint-vs-parquet bookkeeping: lc_streak counts consecutive
@@ -640,7 +641,10 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
             f"connected_components did not converge in {max_rounds} hook rounds"
         )
     finally:
-        spark.conf.set(_PFIRST, old_pfirst)
+        if old_pfirst is None:
+            spark.conf.unset(_PFIRST)
+        else:
+            spark.conf.set(_PFIRST, old_pfirst)
         edges.unpersist()
         if own_tmp:
             shutil.rmtree(tmp, ignore_errors=True)

@@ -37,10 +37,10 @@ Scale shape:
   deterministic <= FIT_SAMPLE_TARGET sample as the coarse quantizer
   (r16's measured 5.8x fit amortization), collected once to the driver
   — a bounded, model-training-sized collect (20k x dim int64 ~ 10 MB,
-  the documented kmeans/CC O(small) contract), after which Lloyd runs
-  in numpy with the SAME determinism rules as the distributed fit
-  (h60-ordered init, first-min argmin, half-away-from-zero integer
-  means, integer-equality convergence);
+  the documented kmeans/CC O(small) contract), after which each
+  subspace runs ``kmeans.lloyd``, the coarse quantizer's own numpy
+  Lloyd (h60-ordered init, first-min argmin, half-away-from-zero
+  integer means, integer-equality convergence);
 - encoding is a narrow Arrow map (``mapInPandas``): vectors never
   shuffle, centroids + codebooks ride the closure (k*dim + M*ksub*dsub
   integers);
@@ -51,62 +51,11 @@ Scale shape:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 
 from ..functions.hashing import h60
-
-
-def _np():
-    import numpy as np
-
-    return np
-
-
-def _argmin_codes(sub: "object", cb: "object") -> "object":
-    """Nearest-codebook-entry index per row of ``sub`` ((n, dsub) int64)
-    against ``cb`` ((ksub, dsub) int64): exact int64 expansion
-    d_j = |r|^2 - 2 r.c_j + |c_j|^2, first-minimum tiebreak (np.argmin)
-    — the same arithmetic and tie rule as assign_clusters_batches."""
-    np = _np()
-    d = sub @ cb.T
-    np.multiply(d, -2, out=d)
-    d += np.einsum("ij,ij->i", sub, sub)[:, None]
-    d += np.einsum("ij,ij->i", cb, cb)[None, :]
-    return np.argmin(d, axis=1)
-
-
-def _lloyd_int(sub: "object", ksub: int, max_iters: int) -> "object":
-    """Deterministic integer Lloyd over one subspace's residual sample
-    ((n, dsub) int64, rows already in the h60-sample order): init = the
-    first ksub rows (the numpy analog of init_centroids' smallest-
-    (h60(id), id) rule — the sample arrives sorted by exactly that
-    key), argmin with the first-min tiebreak, centroid update by
-    integer mean rounded half away from zero, convergence on integer
-    equality. Returns (ksub', dsub) int64 (ksub' < ksub when the
-    sample has fewer rows). Pure integer ops end to end — bit-stable
-    across runs and replicas."""
-    np = _np()
-
-    cb = sub[: min(ksub, len(sub))].copy()
-    for _ in range(max_iters):
-        codes = _argmin_codes(sub, cb)
-        # vectorized integer-mean update (r17: the per-cluster Python
-        # loop was ~0.11 s per subspace at ksub=256 — 0.9 s of the PQ
-        # fit): per-cluster sums via one scatter-add, then the exact
-        # _round_div arithmetic elementwise in int64 (numerator and
-        # denominator are nonnegative, so numpy floor-div == Python
-        # floor-div; |sums| <= sample_n * 2e6 keeps 2*|s|+n far inside
-        # int64). Empty cells keep their centroid (the fit_kmeans rule).
-        counts = np.bincount(codes, minlength=len(cb))
-        sums = np.zeros_like(cb)
-        np.add.at(sums, codes, sub)
-        n = np.maximum(counts, 1)[:, None]
-        means = np.sign(sums) * ((np.abs(sums) * 2 + n) // (2 * n))
-        new_cb = np.where(counts[:, None] > 0, means, cb)
-        if np.array_equal(new_cb, cb):
-            break
-        cb = new_cb
-    return cb
+from . import kmeans as km
 
 
 def fit_pq(
@@ -131,8 +80,8 @@ def fit_pq(
     centroids are computed driver-side on the collected sample — a
     bounded model-training collect (sample x dim int64, ~10 MB at the
     default), NOT a data collect — and each subspace trains an
-    independent integer Lloyd (see ``_lloyd_int`` for the determinism
-    rules).
+    independent integer Lloyd (``kmeans.lloyd``: the first ksub sample
+    rows seed it, which is init_centroids' rule on this sorted sample).
 
     Returns ``codebooks``: M lists of <= ksub centroids of dim/M ints
     each. Raises when dim is not divisible by ``m`` (the standard PQ
@@ -148,9 +97,6 @@ def fit_pq(
     completeness, same order by the shared ``_h60_sort_key``), so the
     codebooks are bit-identical and the composed coarse+PQ fit pays ONE
     corpus collect instead of two."""
-    np = _np()
-    from .kmeans import FIT_SAMPLE_TARGET, _h60_sort_key
-
     if m < 1:
         raise ValueError(f"fit_pq: m must be >= 1, got {m}")
     if ksub < 1:
@@ -165,14 +111,14 @@ def fit_pq(
             f"got {ksub}")
     if not coarse_centroids:
         raise ValueError("fit_pq: coarse_centroids must be non-empty")
-    target = FIT_SAMPLE_TARGET if sample_target is None else sample_target
+    target = km.FIT_SAMPLE_TARGET if sample_target is None else sample_target
     from pyspark.sql import functions as F
 
     if sample_rows is not None:
         # shared-sample path (docstring): sort the complete clean rows
         # by the same key the JVM orderBy would use and keep the first
         # `target` — identical rows to the collect below
-        rows = sorted(sample_rows, key=_h60_sort_key(id_col))[:target]
+        rows = sorted(sample_rows, key=km._h60_sort_key(id_col))[:target]
     else:
         # the fit_kmeans dirty-row guard: NULL vectors / NULL elements
         # would otherwise surface as an opaque object-dtype numpy error
@@ -201,13 +147,11 @@ def fit_pq(
     if cmat.shape[1] != dim:
         raise ValueError(
             f"fit_pq: coarse centroid dim {cmat.shape[1]} != vector dim {dim}")
-    res = x - cmat[_argmin_codes(x, cmat)]
+    res = x - cmat[km.nearest(x, cmat)[0]]
     dsub = dim // m
     return [
-        [[int(v) for v in row]
-         for row in _lloyd_int(
-             np.ascontiguousarray(res[:, s * dsub:(s + 1) * dsub]),
-             ksub, max_iters)]
+        km.lloyd(np.ascontiguousarray(res[:, s * dsub:(s + 1) * dsub]),
+                 ksub, max_iters)[0].tolist()
         for s in range(m)
     ]
 
@@ -224,10 +168,9 @@ def encode_pq(
     ride the closure. The output DROPS the vector column — the index
     carries codes only, which is the compression (dim*8 bytes -> M
     smallint codes + one int); callers keep their own raw relation for
-    the exact re-rank. Exact int64 arithmetic, first-min tiebreaks —
-    bit-stable, pinned against a numpy replica in tests."""
-    np = _np()
-    import pandas as pd  # noqa: F401 (mapInPandas batches)
+    the exact re-rank. Both assignments (coarse cluster, then one code
+    per subspace) are ``kmeans.nearest``: exact int64, first-min
+    tiebreaks, pinned against a numpy replica in tests."""
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -286,14 +229,14 @@ def encode_pq(
                     f"encode_pq: {vec_col} has NULL elements or ragged "
                     f"lengths (expected dim {cmat.shape[1]}): {e}"
                 ) from e
-            cl = _argmin_codes(x, cmat)
+            cl, _ = km.nearest(x, cmat)
             r = scratch("pq.res", (n, cmat.shape[1]), np.int64)
             np.subtract(x, cmat[cl], out=r)
             codes = scratch("pq.codes", (n, m), np.int16)
             for s in range(m):
-                codes[:, s] = _argmin_codes(
+                codes[:, s] = km.nearest(
                     np.ascontiguousarray(r[:, s * dsub:(s + 1) * dsub]),
-                    cbs[s])
+                    cbs[s])[0]
             out = pdf.drop(columns=[vec_col])
             out["cluster"] = cl.astype(np.int32)
             # per-row copies: the Arrow serializer holds the lists past
@@ -314,7 +257,6 @@ def adc_tables(
     all exact int64 — a candidate's approximate score is
     base[cluster] + sum_s lut[s][codes[s]] = dot(q, reconstruction).
     O(k*dim + M*ksub*dsub) integer work per probe, done once."""
-    np = _np()
     q = np.asarray(query_vec, dtype=np.int64)
     cmat = np.asarray(coarse_centroids, dtype=np.int64)
     base = (cmat @ q).tolist()

@@ -1002,6 +1002,44 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with the exact output contract of the sign-LSH siblings, so the same
 # recall audit runs against either index.
 
+def _probe_fanout(fn: str, probes: DataFrame, centroids: list[list[int]],
+                  nprobe: int | None):
+    """The probe side of both trained searches: ``[(query_id, q,
+    clusters)]`` in query_id order, where ``q`` is the probe's int64
+    vector and ``clusters`` its ``nprobe`` nearest centroids by
+    ``kmeans.nearest``'s exact distances (a stable sort, so ties go to
+    the lowest index, the argmin rule). The probe set is N_QUERIES rows
+    by construction: a bounded model-state collect, fanned out in one
+    numpy pass.
+
+    ``nprobe=None`` resolves to the measured default ``max(2, k // 8)``
+    (never more lists than exist); an explicit value outside [1, k]
+    raises, since 0 would return nothing and a negative value would
+    silently probe k - |nprobe| lists."""
+    import numpy as np
+
+    from ..operators.kmeans import nearest
+
+    k = len(centroids)
+    if nprobe is None:
+        nprobe = min(k, max(2, k // 8))
+    elif not 1 <= nprobe <= k:
+        raise ValueError(f"{fn}: nprobe must be in [1, {k}], got {nprobe}")
+    rows = sorted(probes.collect(), key=lambda r: r["vec_id"])
+    for r in rows:
+        if r["qv"] is None or any(v is None for v in r["qv"]):
+            # the fit_kmeans dirty-row discipline: a NULL probe vector
+            # is the caller's skip case, not an opaque numpy cast error
+            raise ValueError(f"{fn}: probe vector {r['vec_id']} is NULL "
+                             f"or has NULL elements")
+    cmat = np.asarray(centroids, dtype=np.int64)
+    q = np.array([r["qv"] for r in rows], dtype=np.int64).reshape(
+        len(rows), cmat.shape[1])
+    near = np.argsort(nearest(q, cmat)[1], axis=1, kind="stable")
+    return [(int(r["vec_id"]), qi, near[i, :nprobe])
+            for i, (r, qi) in enumerate(zip(rows, q))]
+
+
 def ann_topk_trained(
     spark: SparkSession, sf_dir: str, k: int = 16, nprobe: int | None = None,
     max_iters: int = 8, top_k: int = 3,
@@ -1022,7 +1060,8 @@ def ann_topk_trained(
     fit centroids at k=64/nprobe=8, vs 0.467 at nprobe=1), while below
     2 probes recall collapses at every k; candidate volume stays
     ~nprobe/k of the corpus, so the default scans ~12.5%. At k=16 the
-    rule reproduces the pre-r16 default of 2 unchanged.
+    rule reproduces the pre-r16 default of 2 unchanged. An explicit
+    ``nprobe`` must lie in [1, k].
 
     Pass ``centroids`` to search with a pre-trained index (the
     production shape: train once, search many); otherwise the quantizer
@@ -1031,62 +1070,31 @@ def ann_topk_trained(
     5.8x fit amortization with recall at-or-above full-fit; sub-20k
     corpora (every registry sf) fit in full, unchanged. Pass
     ``fit_fraction=None`` to force a full-corpus fit, or a float to pin
-    the sample. Scale note: centroids ride the
-    plan as literals, so the assignment stage is a narrow map with k
-    distance expressions — fine through k of a few hundred; past that
-    the distance map belongs in a Pandas UDF (documented ceiling, same
-    class as the kmeans driver-side k x dim model state)."""
-    import numpy as np
-
+    the sample. The corpus assignment is ``assign_clusters_batches``, a
+    narrow Arrow map whose cost grows with k x dim per row."""
     from ..operators.kmeans import assign_clusters_batches, fit_kmeans
 
     emb = load_table(spark, sf_dir, "embeddings")
     if centroids is None:
         centroids, _, _ = fit_kmeans(emb, k=k, max_iters=max_iters,
                                      fit_fraction=fit_fraction)
-    if nprobe is None:
-        # measured default (docstring): knee at ~k/8 probed lists,
-        # floor of 2; never more lists than exist
-        nprobe = min(len(centroids), max(2, len(centroids) // 8))
-    # Arrow-batch assignment on the (big) corpus side: the Column form's
-    # k-way when-chain join key sent constraint propagation into a
-    # measured 200+ s combinatorial rebuild (see
-    # kmeans.assign_clusters_batches); the batch form's cluster column
-    # is a plain attribute
     corpus = assign_clusters_batches(
         emb.select("vec_id", qvec().alias("qv")), centroids, "qv"
     ).select(
         F.col("vec_id").alias("cand_id"), F.col("qv").alias("c_qv"),
         qnorm("qv").alias("c_nrm"), "cluster",
     )
-    # probe models built DRIVER-side (r17, the ann_topk_pq shape): the
-    # probe set is N_QUERIES rows by construction — a bounded
-    # model-state collect — so the nprobe-nearest-centroid fanout is
-    # one numpy pass instead of k ~200-node _sq_dist Catalyst trees +
-    # array_sort/explode + the localCheckpoint barrier those trees
-    # forced (the pre-r17 spelling; see probe_clusters for the
-    # distributed form ivf_search still uses on unbounded probe sets).
-    # The quantized vectors come back from the JVM's own qvec()
-    # projection, distances use the pinned exact int64 expansion, and
-    # ties break by lowest centroid index (np.lexsort minor key) —
-    # identical rows to the old probe relation.
-    cmat = np.asarray(centroids, dtype=np.int64)
-    probe_rows = emb.select(
-        "vec_id", qvec().alias("qv")
-    ).where(F.col("vec_id") < N_QUERIES).collect()
-    model_rows = []
-    for r in sorted(probe_rows, key=lambda r: r["vec_id"]):
-        if r["qv"] is None or any(v is None for v in r["qv"]):
-            raise ValueError(
-                f"ann_topk_trained: probe vector {r['vec_id']} is NULL "
-                f"or has NULL elements")
-        q = np.asarray(list(r["qv"]), dtype=np.int64)
-        d = np.einsum("ij,ij->i", cmat - q, cmat - q)
-        order = np.lexsort((np.arange(len(cmat)), d))[:nprobe]
-        nrm = int(q @ q)
-        for c in order:
-            model_rows.append(
-                ([int(v) for v in q], int(c), int(r["vec_id"]), nrm))
+    # the quantized probe vectors come back from the JVM's own qvec()
+    # projection, so each probe row carries exactly the corpus values
+    model_rows = [
+        (q.tolist(), int(c), query_id, int(q @ q))
+        for query_id, q, clusters in _probe_fanout(
+            "ann_topk_trained",
+            emb.select("vec_id", qvec().alias("qv"))
+            .where(F.col("vec_id") < N_QUERIES),
+            centroids, nprobe)
+        for c in clusters
+    ]
     probes = spark.createDataFrame(
         model_rows,
         "p_qv ARRAY<BIGINT>, cluster INT, query_id BIGINT, p_nrm BIGINT",
@@ -1179,8 +1187,6 @@ def ann_topk_pq(
     (recall@3 equal to ann_topk_trained at every swept nprobe); the
     on-disk index measured 33x smaller than the raw quantized vectors
     at m=8 (parquet-encoded, SCALE.md)."""
-    import numpy as np
-
     from ..operators.kmeans import fit_kmeans
     from ..operators.pq import adc_tables, encode_pq, fit_pq
 
@@ -1200,16 +1206,6 @@ def ann_topk_pq(
     if codebooks is None:
         codebooks = fit_pq(qvecs, centroids, m=m, ksub=ksub,
                            max_iters=max_iters, sample_rows=fit_sample)
-    if nprobe is None:
-        # the ann_topk_trained measured default: knee at ~k/8 lists
-        nprobe = min(len(centroids), max(2, len(centroids) // 8))
-    elif not 1 <= nprobe <= len(centroids):
-        # mirror probe_clusters' guard: nprobe=0 would silently return
-        # an EMPTY result (no probe model rows) and a negative value
-        # would silently probe k-|nprobe| lists via the [:nprobe] slice
-        raise ValueError(
-            f"ann_topk_pq: nprobe must be in [1, {len(centroids)}], "
-            f"got {nprobe}")
     if index is None:
         index = encode_pq(qvecs, centroids, codebooks)
     else:
@@ -1218,36 +1214,18 @@ def ann_topk_pq(
             raise ValueError(
                 f"ann_topk_pq: pre-encoded index is missing {sorted(missing)}")
 
-    # probe models: nprobe nearest centroids per probe (the
-    # probe_clusters (dist, idx) tie rule, in numpy: lexsort minor key
-    # = centroid index) + per-(probe, cluster) ADC rows. N_QUERIES
-    # vectors collected — bounded by the probe set, not the corpus.
-    cmat = np.asarray(centroids, dtype=np.int64)
-    probe_rows = qvecs.where(F.col("vec_id") < N_QUERIES).collect()
+    # probe models: per-(probe, probed cluster) ADC rows, plus the
+    # exact-re-rank probe relation from the SAME collected rows (r18): q
+    # is the JVM's own qvec() projection handed back verbatim, so the
+    # re-rank needs no third corpus scan to re-fetch N_QUERIES rows
     model_rows = []
     rerank_rows = []
-    for r in sorted(probe_rows, key=lambda r: r["vec_id"]):
-        if r["qv"] is None or any(v is None for v in r["qv"]):
-            # the fit_kmeans dirty-row discipline: a NULL probe vector
-            # is the caller's skip case, not an opaque numpy cast error
-            raise ValueError(
-                f"ann_topk_pq: probe vector {r['vec_id']} is NULL or "
-                f"has NULL elements")
-        q = np.asarray(list(r["qv"]), dtype=np.int64)
-        d = np.einsum("ij,ij->i", cmat - q, cmat - q)
-        order = np.lexsort((np.arange(len(cmat)), d))[:nprobe]
-        base, lut = adc_tables([int(v) for v in q], centroids, codebooks)
-        for c in order:
-            model_rows.append(
-                (int(r["vec_id"]), int(c), int(base[c]), lut))
-        # the exact-re-rank probe relation, from the SAME collected rows
-        # (r18): qqe is the JVM's own qvec() projection handed back
-        # verbatim and qnrm its exact int64 self-dot — identical values
-        # to the pre-r18 `base_rel.where(vec_id < N_QUERIES)` subtree,
-        # which cost one more corpus scan per run just to rebuild rows
-        # this collect already fetched
-        rerank_rows.append(
-            (int(r["vec_id"]), [int(v) for v in q], int(q @ q)))
+    for query_id, q, clusters in _probe_fanout(
+            "ann_topk_pq", qvecs.where(F.col("vec_id") < N_QUERIES),
+            centroids, nprobe):
+        base, lut = adc_tables(q.tolist(), centroids, codebooks)
+        model_rows += [(query_id, int(c), base[c], lut) for c in clusters]
+        rerank_rows.append((query_id, q.tolist(), int(q @ q)))
     probes = spark.createDataFrame(
         model_rows,
         "query_id BIGINT, cluster INT, base_dot BIGINT, "

@@ -1,9 +1,13 @@
 """k-means / trained-centroid IVF: exact numpy replication + invariants.
 
-The operator does ALL arithmetic in int64 on 1e6-quantized vectors, so an
-independent numpy implementation of the same algorithm must produce
-IDENTICAL centroids and assignments — a bit-exact oracle for an iterative
-distributed algorithm (no tolerance, no flakiness).
+operators/kmeans.py has one kernel: ``nearest`` (the exact int64
+distance expansion, lowest index on ties) and ``lloyd_update`` (the
+half-away-from-zero integer mean). The driver-side loop (``lloyd``, any
+training set of at most FIT_SAMPLE_TARGET rows) and the distributed loop
+(larger ones; the tests force it by patching FIT_SAMPLE_TARGET down)
+both run it, so an independent numpy implementation of the algorithm
+must produce IDENTICAL centroids and assignments from either loop: a
+bit-exact oracle for an iterative algorithm (no tolerance, no flakiness).
 """
 
 from __future__ import annotations
@@ -14,10 +18,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import aws_cloudfront_realtime_monitoring_spark.operators.kmeans as km
 from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
     QUANT,
     fit_kmeans,
-    ivf_search,
     quantize,
 )
 from aws_cloudfront_realtime_monitoring_spark.sources.tables import load_table
@@ -54,8 +58,13 @@ def _numpy_kmeans(ids: np.ndarray, vecs: np.ndarray, k: int, max_iters: int):
 
 @pytest.fixture(scope="module")
 def fitted(spark, sf_dir):
+    """The distributed loop's fit: a training-set cap below the corpus
+    size sends the full-corpus fit past the driver-side loop."""
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids, assignments, n_iters = fit_kmeans(emb, k=K, max_iters=MAX_ITERS)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(km, "FIT_SAMPLE_TARGET", 100)
+        centroids, assignments, n_iters = fit_kmeans(
+            emb, k=K, max_iters=MAX_ITERS)
     return emb, centroids, assignments.collect(), n_iters
 
 
@@ -96,36 +105,40 @@ def test_kmeans_partitions_all_vectors(fitted):
 
 
 def test_ivf_search_ranks_within_cluster(fitted, spark, sf_dir):
-    """IVF candidates all share the probe's cluster; ranking is exact dot
-    product with deterministic tiebreak, verified against a brute-force
-    rescan restricted to the same inverted list."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
-        assign_clusters,
+    """With nprobe=1 the trained IVF search's candidates all share the
+    probe's cluster, ranked by exact cosine with the cand_id tiebreak:
+    ids and cos6 verified against a brute-force rescan restricted to
+    the same inverted list."""
+    from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
+        N_QUERIES,
+        ann_topk_trained,
     )
 
-    emb, centroids, _, _ = fitted
-    qvecs = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    probes = qvecs.orderBy("vec_id").limit(3)
-    out = ivf_search(qvecs, centroids, probes, top_k=5).collect()
-    assigned = {
-        r.vec_id: (r.cluster, tuple(r.qv))
-        for r in assign_clusters(qvecs, centroids).collect()
-    }
+    emb, centroids, assign_rows, _ = fitted
+    out = ann_topk_trained(spark, sf_dir, centroids=centroids, nprobe=1,
+                           top_k=5).collect()
+    cluster = {r.vec_id: r.cluster for r in assign_rows}
+    vec = {r.vec_id: np.array(r.qv, dtype=np.int64) for r in emb.select(
+        "vec_id", quantize(F.col("embedding")).alias("qv")).collect()}
     by_probe: dict[int, list] = {}
     for r in out:
-        by_probe.setdefault(r.p_id, []).append(r)
+        by_probe.setdefault(r.query_id, []).append(r)
+    assert sorted(by_probe) == list(range(N_QUERIES))
     for p_id, rows in by_probe.items():
         rows.sort(key=lambda r: r.rnk)
-        p_cluster, p_vec = assigned[p_id]
-        # exact expected list: same cluster, ranked by integer dot
+        p = vec[p_id]
+        # exact expected list: same cluster, ranked by the engine's
+        # cosine op order (dot / sqrt(|p|^2) / sqrt(|c|^2))
         cand = [
-            (sum(a * b for a, b in zip(p_vec, vec)), cid)
-            for cid, (cl, vec) in assigned.items()
-            if cl == p_cluster and cid != p_id
+            (float(p @ v) / np.sqrt(float(p @ p)) / np.sqrt(float(v @ v)),
+             cid)
+            for cid, v in vec.items()
+            if cluster[cid] == cluster[p_id] and cid != p_id
         ]
         cand.sort(key=lambda t: (-t[0], t[1]))
-        expect = [(cid, dot) for dot, cid in cand[:5]]
-        assert [(r.c_id, r.dot) for r in rows] == expect
+        expect = [(cid, np.floor(cos * 1e6 + 0.5) / 1e6)
+                  for cos, cid in cand[:5]]
+        assert [(r.cand_id, r.cos6) for r in rows] == expect
 
 
 def test_fit_kmeans_rejects_ragged_vectors(spark):
@@ -139,57 +152,20 @@ def test_fit_kmeans_rejects_ragged_vectors(spark):
         fit_kmeans(df, k=1)
 
 
-def test_ivf_search_exclude_self_is_optional(spark):
-    """External probes whose id space overlaps the corpus must be able
-    to keep an id-equal corpus candidate (r12 review: the unconditional
-    self-exclusion silently dropped a legitimate neighbor)."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
-        ivf_search, quantize,
-    )
-
-    corpus = spark.createDataFrame(
-        [(7, [1.0, 0.0]), (8, [0.9, 0.1])],
-        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
-    ).select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    # probe id 7 is an EXTERNAL vector, not corpus item 7
-    probes = spark.createDataFrame(
-        [(7, [1.0, 0.05])], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
-    ).select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    cents = [[1_000_000, 0]]
-    with_self = ivf_search(corpus, cents, probes, top_k=2,
-                           exclude_self=False)
-    ids = {r.c_id for r in with_self.collect()}
-    assert ids == {7, 8}
-    without = ivf_search(corpus, cents, probes, top_k=2)
-    assert {r.c_id for r in without.collect()} == {8}
-
-
 def test_assign_clusters_rejects_colliding_columns(spark):
-    """r13 review: feeding a prior assign_clusters output back in created
+    """r13 review: feeding a prior assignment output back in created
     duplicate cluster/dist columns and AMBIGUOUS_REFERENCE downstream."""
     import pytest as _pytest
 
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import assign_clusters
+    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
+        assign_clusters_batches,
+    )
 
-    df = spark.createDataFrame([(1, [1, 2])], "vec_id long, qv array<int>")
-    once = assign_clusters(df, [[0, 0]])
+    df = spark.createDataFrame([(1, [1, 2])], "vec_id long, qv array<bigint>")
+    once = assign_clusters_batches(df, [[0, 0]])
     assert set(once.columns) == {"vec_id", "qv", "cluster", "dist"}
     with _pytest.raises(ValueError, match="cluster"):
-        assign_clusters(once, [[0, 0]])
-
-
-def test_assign_clusters_backtick_column_name(spark):
-    """r15 ADVICE: a legal-but-hostile column name containing a backtick
-    must be escaped into the SQL-string distance expression, not produce
-    a malformed expression."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import assign_clusters
-
-    df = spark.createDataFrame([(1, [3, 4]), (2, [10, 0])],
-                               "vec_id long, `q``v` array<int>")
-    out = assign_clusters(df, [[0, 0], [10, 0]], vec_col="q`v")
-    got = {r["vec_id"]: (r["cluster"], r["dist"])
-           for r in out.collect()}
-    assert got == {1: (0, 25), 2: (1, 0)}
+        assign_clusters_batches(once, [[0, 0]])
 
 
 def test_assign_clusters_batches_rejects_empty_centroids(spark):
@@ -225,25 +201,7 @@ def test_fit_kmeans_validates_k_and_warns_on_short_corpus(spark, caplog):
                for r in caplog.records)
 
 
-def test_ivf_search_duplicate_external_probe_ids_keep_separate_pools(spark):
-    """r13 review: the top-k window partitioned by p_id alone, so two
-    DISTINCT external probes sharing a vec_id merged their candidate
-    pools into one budget (exactly the overlapping-id-space case
-    exclude_self=False exists for)."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import ivf_search
-
-    corpus = spark.createDataFrame(
-        [(i, [100 - i, 0]) for i in range(4)], "vec_id long, qv array<int>")
-    # one centroid: every candidate is in every probe's pool
-    probes = spark.createDataFrame(
-        [(42, [1, 0]), (42, [0, 1])], "vec_id long, qv array<int>")
-    got = ivf_search(corpus, [[50, 0]], probes, top_k=2,
-                     exclude_self=False).collect()
-    # two distinct probes must EACH get top_k rows, not share one budget
-    assert len(got) == 4
-
-
-def test_trained_quantizer_rescues_skewed_sign_buckets(spark):
+def test_trained_quantizer_rescues_skewed_sign_buckets(spark, tmp_path):
     """SCALE.md's similarity regime claim, MEASURED (r14): 'trained
     k-means centroids remain the swap-in for corpora whose sign-pattern
     buckets skew'. Build a corpus of 8 well-separated blobs whose
@@ -256,11 +214,17 @@ def test_trained_quantizer_rescues_skewed_sign_buckets(spark):
     DETERMINISTIC h60 seeding starts one centroid per blob (Lloyd from
     a 2-seeds-in-one-blob start converges to a blob-splitting local
     optimum -- real k-means behavior, not what this test pins; the
-    first attempt measured recall 0.675 from exactly that)."""
+    first attempt measured recall 0.675 from exactly that). The search
+    is ann_topk_trained over the corpus written as a table, one probed
+    list per probe; its probes are vec_id < N_QUERIES, and blob
+    membership is round-robin by id so they spread over the blobs."""
     from aws_cloudfront_realtime_monitoring_spark.functions.hashing import h60
-    from aws_cloudfront_realtime_monitoring_spark.functions.quantize import qvec_numpy
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import ivf_search
-    from aws_cloudfront_realtime_monitoring_spark.plans.similarity import IVF_BITS
+    from aws_cloudfront_realtime_monitoring_spark.functions.quantize import qvec
+    from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
+        IVF_BITS,
+        N_QUERIES,
+        ann_topk_trained,
+    )
 
     rng = np.random.RandomState(23)
     k, n_per, dim = 8, 64, 16
@@ -272,7 +236,7 @@ def test_trained_quantizer_rescues_skewed_sign_buckets(spark):
         h60(F.col("id").cast("string")).alias("h"))
     seeds = [r.vec_id for r in
              ids_df.orderBy("h", "vec_id").limit(k).collect()]
-    membership = np.repeat(np.arange(k), n_per)
+    membership = np.arange(n) % k
     for j, sid in enumerate(sorted(seeds)):
         if membership[sid] != j:
             for t in range(n):
@@ -283,9 +247,9 @@ def test_trained_quantizer_rescues_skewed_sign_buckets(spark):
 
     centers = rng.normal(0.0, 1.0, (k, dim))
     centers[:, :IVF_BITS] = np.abs(centers[:, :IVF_BITS]) + 1.0
-    # EQUAL-norm centers: ivf_search assigns by euclidean distance but
-    # ranks by raw dot, so unequal blob norms would make a weak blob's
-    # true dot-nearest neighbors live in a strong blob -- a metric
+    # EQUAL-norm centers: the search assigns by euclidean distance but
+    # ranks by cosine, so unequal blob norms would make a weak blob's
+    # true nearest neighbors live in a strong blob -- a metric
     # mismatch, not a quantizer property (the first draft measured
     # recall 0.8 from exactly that)
     centers = centers / np.linalg.norm(centers, axis=1, keepdims=True) * 20.0
@@ -294,9 +258,11 @@ def test_trained_quantizer_rescues_skewed_sign_buckets(spark):
     # the first IVF_BITS dims -> ONE sign bucket holds 100% of the mass
     assert (pts[:, :IVF_BITS] > 0).all()
 
-    emb = spark.createDataFrame(
+    spark.createDataFrame(
         [(i, [float(x) for x in pts[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>")
+        "vec_id long, embedding array<float>",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    emb = load_table(spark, str(tmp_path), "embeddings")
     centroids, assignments, _ = fit_kmeans(emb, k=k)
     sizes = [r["n"] for r in assignments.groupBy("cluster")
              .agg(F.count("*").alias("n")).collect()]
@@ -304,28 +270,23 @@ def test_trained_quantizer_rescues_skewed_sign_buckets(spark):
     # of the corpus (vs the sign quantizer's 100%-in-one-bucket)
     assert max(sizes) / n < 0.30, sizes
 
-    qv = qvec_numpy([list(v) for v in pts])
-    # one probe per blob: the smallest non-seed id of each blob
-    probe_ids = [min(i for i in range(n)
-                     if membership[i] == b and i not in seeds)
-                 for b in range(k)]
-    # exact brute-force top-5 on the same quantized ints, same
-    # (-dot, id) tie rule as the engine
+    qv = np.array([r.qv for r in emb.select("vec_id", qvec().alias("qv"))
+                   .orderBy("vec_id").collect()], dtype=np.int64)
+    probe_ids = list(range(N_QUERIES))
+    # exact brute-force top-5 on the same quantized ints, by the
+    # engine's cosine op order and (-cos, id) tie rule
     want = {}
     for pid in probe_ids:
-        dots = qv @ qv[pid]
-        order = sorted((int(-d), i) for i, d in enumerate(dots) if i != pid)
+        cos = (qv @ qv[pid]).astype(np.float64) / np.sqrt(
+            float(qv[pid] @ qv[pid])) / np.sqrt(
+            np.einsum("ij,ij->i", qv, qv).astype(np.float64))
+        order = sorted((-c, i) for i, c in enumerate(cos) if i != pid)
         want[pid] = {i for _, i in order[:5]}
 
-    qdf = spark.createDataFrame(
-        [(i, [int(x) for x in qv[i]]) for i in range(n)],
-        "vec_id long, qv array<long>")
-    got_rows = ivf_search(
-        qdf, centroids, qdf.where(F.col("vec_id").isin(probe_ids)),
-        top_k=5).collect()
     got: dict[int, set] = {}
-    for r in got_rows:
-        got.setdefault(r.p_id, set()).add(r.c_id)
+    for r in ann_topk_trained(spark, str(tmp_path), centroids=centroids,
+                              nprobe=1, top_k=5).collect():
+        got.setdefault(r.query_id, set()).add(r.cand_id)
     hits = sum(len(got.get(p, set()) & want[p]) for p in probe_ids)
     recall = hits / (5 * len(probe_ids))
     # blob-aligned centroids on well-separated blobs: no misses
@@ -333,40 +294,35 @@ def test_trained_quantizer_rescues_skewed_sign_buckets(spark):
         recall, {p: sorted(got.get(p, set())) for p in probe_ids})
 
 
-def test_assign_clusters_batches_matches_column_form(spark, sf_dir):
-    """r15: the Arrow-batch assignment (the search-path spelling that
-    sidesteps the measured constraint-propagation blowup) must produce
-    IDENTICAL (cluster, dist) to the Column form — same exact int64
-    arithmetic, same lowest-index tiebreak."""
+def test_assign_clusters_batches_matches_numpy_replica(spark, sf_dir):
+    """The Arrow-batch assignment (kmeans.nearest per batch) gives the
+    (cluster, dist) of an independent numpy replica, sum((x - c)^2) and
+    a first-minimum argmin, on a centroid set with duplicate rows, so
+    every vector has a tie and the lowest index must win it."""
     from aws_cloudfront_realtime_monitoring_spark.functions.quantize import (
         qvec,
     )
     from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
-        assign_clusters,
         assign_clusters_batches,
-        fit_kmeans,
-    )
-    from aws_cloudfront_realtime_monitoring_spark.sources.tables import (
-        load_table,
+        init_centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvecs = emb.select("vec_id", qvec(F.col("embedding")).alias("qv"))
-    # deterministic k=16 centroids WITHOUT a Lloyd fit (r18 suite-wall
-    # trim): the subject is assignment-form equality, which holds for
-    # ANY centroid set — init_centroids gives 16 real data vectors in
-    # one top-k job instead of a 4-iteration distributed fit
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
-        init_centroids,
-    )
-
+    # deterministic centroids WITHOUT a Lloyd fit: the subject is the
+    # assignment, which must hold for ANY centroid set -- 16 real data
+    # vectors from one top-k job, each listed twice
     cents = init_centroids(qvecs, 16, vec_col="qv")
-    col_form = {r.vec_id: (r.cluster, r.dist)
-                for r in assign_clusters(qvecs, cents).collect()}
-    batch_form = {r.vec_id: (r.cluster, r.dist)
-                  for r in assign_clusters_batches(qvecs, cents).collect()}
-    assert col_form == batch_form and len(col_form) > 0
-    # duplicate-vector ties must break to the same (lowest) index
+    cents = [c for c in cents for _ in range(2)]
+    got = {r.vec_id: (r.cluster, r.dist)
+           for r in assign_clusters_batches(qvecs, cents).collect()}
+    rows = qvecs.collect()
+    x = np.array([r.qv for r in rows], dtype=np.int64)
+    d = ((x[:, None, :] - np.array(cents, dtype=np.int64)[None]) ** 2).sum(2)
+    cl = d.argmin(axis=1)
+    assert got == {r.vec_id: (int(cl[i]), int(d[i, cl[i]]))
+                   for i, r in enumerate(rows)}
+    assert all(c % 2 == 0 for c, _ in got.values())
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="cluster"):
@@ -451,10 +407,10 @@ def test_fit_kmeans_auto_driver_path_matches_distributed(fitted, spark):
     """r17 optimization: fit_fraction='auto' runs the whole Lloyd loop
     driver-side in numpy on the collected bounded sample. On a corpus
     at or under FIT_SAMPLE_TARGET the auto training set IS the full
-    corpus, so the driver path must reproduce the distributed
-    (fit_fraction=None) loop bit-for-bit: centroids, iteration count,
-    and full-corpus assignments. The distributed arm is the module
-    ``fitted`` fixture (same corpus, same k, same max_iters) — r18
+    corpus, so the driver path must reproduce the distributed loop
+    bit-for-bit: centroids, iteration count, and full-corpus
+    assignments. The distributed arm is the module ``fitted`` fixture
+    (same corpus, same k, same max_iters, a lowered cap) — r18
     suite-wall trim: re-fitting the identical model here doubled the
     most expensive fixture for no extra coverage."""
     emb, c_dist, a_dist_rows, i_dist = fitted
@@ -472,52 +428,61 @@ def test_fit_kmeans_auto_sampled_driver_matches_explicit_fraction(spark):
     on exactly the hash sample the distributed sampled path uses: pin
     auto (sample_target < corpus) against the explicit-fraction
     distributed loop with the same fraction."""
-    import aws_cloudfront_realtime_monitoring_spark.operators.kmeans as km
-
     df = spark.createDataFrame(
         [(i, [float(i % 7), float((3 * i) % 5)]) for i in range(400)],
         "vec_id long, embedding array<double>")
-    old_target = km.FIT_SAMPLE_TARGET
-    km.FIT_SAMPLE_TARGET = 200
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(km, "FIT_SAMPLE_TARGET", 200)
         c_auto, a_auto, i_auto = fit_kmeans(
             df, k=3, max_iters=4, fit_fraction="auto")
-    finally:
-        km.FIT_SAMPLE_TARGET = old_target
-    c_frac, a_frac, i_frac = fit_kmeans(
-        df, k=3, max_iters=4, fit_fraction=200 / 400)
+        # the explicit fraction's ~200-row sample runs the distributed
+        # loop under a 100-row cap
+        mp.setattr(km, "FIT_SAMPLE_TARGET", 100)
+        c_frac, a_frac, i_frac = fit_kmeans(
+            df, k=3, max_iters=4, fit_fraction=200 / 400)
     assert c_auto == c_frac
     assert i_auto == i_frac
     assert a_auto.count() == 400
 
 
-def test_fit_kmeans_auto_capped_probe_boundary(spark):
-    """r17 continuation: the auto fit's capped probe collect serves as
-    BOTH the stats pass and the training sample when the corpus fits
-    under FIT_SAMPLE_TARGET. Pin the boundary on both sides: at
-    n == target the fused single-job path must match the distributed
-    full fit bit-for-bit; at n == target + 1 the fallback must match
-    the explicit hash-fraction fit the old path would have run."""
-    import aws_cloudfront_realtime_monitoring_spark.operators.kmeans as km
-
+def test_fit_kmeans_auto_capped_probe_boundary(spark, monkeypatch):
+    """The capped collect (FIT_SAMPLE_TARGET + 1 rows) decides the loop.
+    Pin the boundary on both sides for "auto" and for the full-corpus
+    ``None``: at n == target both run driver-side on the collected
+    rows and match the fit under the default cap; at n == target + 1
+    "auto" falls back to the hash-sampled collect and matches the
+    explicit-fraction fit, and ``None`` runs the distributed loop and
+    matches the driver-side fit of the same corpus bit for bit."""
     def corpus(n):
         return spark.createDataFrame(
             [(i, [float(i % 11), float((7 * i) % 13)]) for i in range(n)],
             "vec_id long, embedding array<double>")
 
-    old_target = km.FIT_SAMPLE_TARGET
-    km.FIT_SAMPLE_TARGET = 150
-    try:
-        # n == target: fused path, fraction 1.0
+    distributed = []
+    loop = km._lloyd_distributed
+    monkeypatch.setattr(km, "_lloyd_distributed",
+                        lambda *a: distributed.append(1) or loop(*a))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(km, "FIT_SAMPLE_TARGET", 150)
+        # n == target: one collect, fraction 1.0
         c_auto, _, i_auto = fit_kmeans(
             corpus(150), k=3, max_iters=4, fit_fraction="auto")
-        # n == target + 1: fallback agg + hash-sampled collect
+        c_none, _, i_none = fit_kmeans(corpus(150), k=3, max_iters=4)
+        assert not distributed
+        # n == target + 1: auto's agg + hash-sampled collect, and the
+        # distributed loop for the full corpus
         c_auto2, _, i_auto2 = fit_kmeans(
             corpus(151), k=3, max_iters=4, fit_fraction="auto")
-    finally:
-        km.FIT_SAMPLE_TARGET = old_target
+        assert not distributed
+        c_none2, a_none2, i_none2 = fit_kmeans(corpus(151), k=3, max_iters=4)
+        assert distributed == [1]
     c_full, _, i_full = fit_kmeans(corpus(150), k=3, max_iters=4)
-    assert (c_auto, i_auto) == (c_full, i_full)
+    assert (c_auto, i_auto) == (c_none, i_none) == (c_full, i_full)
+    c_full2, a_full2, i_full2 = fit_kmeans(corpus(151), k=3, max_iters=4)
+    assert distributed == [1]
+    assert (c_none2, i_none2) == (c_full2, i_full2)
+    assert sorted(map(tuple, a_none2.collect())) == sorted(
+        map(tuple, a_full2.collect()))
     c_frac, _, i_frac = fit_kmeans(
         corpus(151), k=3, max_iters=4, fit_fraction=150 / 151)
     assert (c_auto2, i_auto2) == (c_frac, i_frac)

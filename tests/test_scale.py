@@ -56,12 +56,8 @@ def test_family_smallest_cell_is_exact(spark, sf_dir, small_units, family):
     before = spark.conf.getAll
     results = scale.run_family(spark, family, copies=[2], runs=1,
                                base=Path(sf_dir), fixed=())
-    after, fresh = spark.conf.getAll, spark.newSession().conf
-    # a key set during the family must be back at the session default
-    # (an operator may restore by setting the default explicitly)
-    assert {k: after.get(k, fresh.get(k, None)) for k in before} == before
-    assert {k: v for k, v in after.items() if k not in before} == {
-        k: fresh.get(k) for k in after if k not in before}
+    # every key set during the family is restored, or unset again
+    assert spark.conf.getAll == before
     checks = {f"{cell}: {check}": ok for cell, r in results.items()
               for check, ok in r.get("exact", {}).items()}
     assert checks, f"{family} checks nothing"

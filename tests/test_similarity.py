@@ -459,28 +459,26 @@ def test_trained_ann_accepts_pretrained_centroids(spark, sf_dir):
 
 
 def test_probe_clusters_fanout_and_guards(spark):
+    """The trained searches' probe fan-out: each probe's nprobe nearest
+    centroids by exact distance, in query_id order; nprobe outside
+    [1, k] raises."""
     import pytest as _pytest
 
-    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
-        probe_clusters,
+    from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
+        _probe_fanout,
     )
 
     df = spark.createDataFrame(
-        [(1, [0, 0]), (2, [100, 100])], "vec_id BIGINT, qv ARRAY<BIGINT>")
+        [(2, [100, 100]), (1, [0, 0])], "vec_id BIGINT, qv ARRAY<BIGINT>")
     cents = [[0, 0], [100, 100], [50, 50]]
-    got = {(r.vec_id, r.cluster)
-           for r in probe_clusters(df, cents, nprobe=2).collect()}
+    got = [(qid, q.tolist(), sorted(c.tolist()))
+           for qid, q, c in _probe_fanout("t", df, cents, nprobe=2)]
     # nearest two centroids per probe, exact distances: (0,0) -> {0, 2};
     # (100,100) -> {1, 2}
-    assert got == {(1, 0), (1, 2), (2, 1), (2, 2)}
-    with _pytest.raises(ValueError, match="nprobe"):
-        probe_clusters(df, cents, nprobe=0)
-    with _pytest.raises(ValueError, match="nprobe"):
-        probe_clusters(df, cents, nprobe=4)
-    from pyspark.sql import functions as F
-
-    with _pytest.raises(ValueError, match="cluster"):
-        probe_clusters(df.withColumn("cluster", F.lit(1)), cents)
+    assert got == [(1, [0, 0], [0, 2]), (2, [100, 100], [1, 2])]
+    for bad in (0, 4):
+        with _pytest.raises(ValueError, match=r"t: nprobe must be in \[1, 3\]"):
+            _probe_fanout("t", df, cents, nprobe=bad)
 
 
 def test_pq_saturated_shortlist_equals_trained_path(spark, sf_dir):
@@ -725,24 +723,26 @@ def test_pq_adc_tables_reconstruction_property():
 
 
 def test_pq_lloyd_matches_pure_python_replica():
-    """_lloyd_int pinned against an INDEPENDENT pure-Python-int Lloyd
-    (the fit_kmeans numpy-replica discipline): same init (first ksub
-    sample rows), first-min argmin tiebreak, half-away-from-zero
-    integer means, integer-equality convergence — any drift in the
-    rules is a cross-run determinism break."""
+    """kmeans.lloyd, the numpy loop PQ codebooks train with, pinned
+    against an INDEPENDENT pure-Python-int Lloyd (the fit_kmeans
+    numpy-replica discipline): same init (first ksub sample rows),
+    first-min argmin tiebreak, half-away-from-zero integer means,
+    integer-equality convergence — any drift in the rules is a
+    cross-run determinism break."""
     import numpy as np
 
     from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
-        _round_div,
+        lloyd,
     )
-    from aws_cloudfront_realtime_monitoring_spark.operators.pq import (
-        _lloyd_int,
-    )
+
+    def round_div(s, n):
+        sign = 1 if s >= 0 else -1
+        return sign * ((abs(s) * 2 + n) // (2 * n))
 
     rng = np.random.RandomState(23)
     sub = rng.randint(-2_000_000, 2_000_001, size=(60, 3)).astype(np.int64)
     ksub, iters = 5, 7
-    got = _lloyd_int(sub.copy(), ksub, iters)
+    got, _ = lloyd(sub.copy(), ksub, iters)
 
     rows = [[int(v) for v in r] for r in sub]
     cb = [list(r) for r in rows[:ksub]]
@@ -760,7 +760,7 @@ def test_pq_lloyd_matches_pure_python_replica():
             members = [rows[i] for i, a in enumerate(assign) if a == j]
             if members:
                 new_cb[j] = [
-                    _round_div(sum(col), len(members))
+                    round_div(sum(col), len(members))
                     for col in zip(*members)
                 ]
         if new_cb == cb:
@@ -818,58 +818,67 @@ def test_encode_pq_rejects_dirty_vectors(spark):
 
 
 def test_ann_topk_pq_rejects_bad_nprobe(spark, sf_dir):
-    """Explicit nprobe outside [1, k] raises the probe_clusters guard
-    message instead of silently returning empty (nprobe=0) or probing
-    k-|n| lists (negative) -- r17 review parity with the uncompressed
-    trained path."""
+    """Explicit nprobe outside [1, k] raises in both trained searches
+    instead of silently returning empty (nprobe=0), probing k-|n| lists
+    (negative) or clipping to k (too large): one guard in the shared
+    probe fan-out."""
     import pytest as _pytest
 
-    from aws_cloudfront_realtime_monitoring_spark.plans.similarity import ann_topk_pq
+    from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
+        ann_topk_pq,
+        ann_topk_trained,
+    )
 
     cents = [[0] * 64, [1_000_000] * 64]
     cbs = [[[0] * 8, [500_000] * 8] for _ in range(8)]
-    for bad in (0, -1, 3):
-        with _pytest.raises(ValueError, match=r"nprobe must be in \[1, 2\]"):
+    for bad in (0, -1, 3, 99):
+        with _pytest.raises(ValueError, match=r"ann_topk_pq: nprobe must "
+                                              r"be in \[1, 2\]"):
             ann_topk_pq(spark, sf_dir, centroids=cents, codebooks=cbs,
                         nprobe=bad)
+        with _pytest.raises(ValueError, match=r"ann_topk_trained: nprobe "
+                                              r"must be in \[1, 2\]"):
+            ann_topk_trained(spark, sf_dir, centroids=cents, nprobe=bad)
 
 
-def test_trained_probe_fanout_matches_probe_clusters(spark, sf_dir):
-    """r17: ann_topk_trained builds its probe->cluster fanout driver-side
-    (numpy lexsort over the exact int64 distances, the ann_topk_pq
-    shape). Pin it against the distributed probe_clusters spelling on
-    the same centroids: identical (query_id, cluster) fanout rows for
-    every nprobe."""
+def test_trained_probe_fanout_matches_numpy_replica(spark, sf_dir):
+    """The probe fan-out both trained searches share, pinned against an
+    independent numpy replica (direct sum((q - c)^2), lexsort with the
+    centroid index as minor key) for every nprobe, on trained centroids
+    with two of them duplicated so the tie rule (lowest index first) is
+    exercised on every probe."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
-        fit_kmeans, probe_clusters)
+        fit_kmeans)
     from aws_cloudfront_realtime_monitoring_spark.plans.similarity import (
-        N_QUERIES, qvec)
+        N_QUERIES, _probe_fanout, qvec)
     from aws_cloudfront_realtime_monitoring_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids, _, _ = fit_kmeans(emb, k=8, max_iters=4, fit_fraction="auto")
+    centroids = centroids + [centroids[0], centroids[5]]
     cmat = np.asarray(centroids, dtype=np.int64)
-    probe_rows = emb.select("vec_id", qvec().alias("qv")).where(
-        F.col("vec_id") < N_QUERIES).collect()
-    for nprobe in (1, 2, 5):
-        distributed = sorted(
-            (r.query_id, r.cluster)
-            for r in probe_clusters(
-                emb.where(F.col("vec_id") < N_QUERIES).select(
-                    F.col("vec_id").alias("query_id"),
-                    qvec().alias("p_qv")),
-                centroids, nprobe=nprobe, vec_col="p_qv",
-            ).collect())
+    probes = emb.select("vec_id", qvec().alias("qv")).where(
+        F.col("vec_id") < N_QUERIES)
+    probe_rows = probes.collect()
+    for nprobe in (1, 2, 5, len(centroids)):
+        got = sorted((qid, int(c)) for qid, _, cs in _probe_fanout(
+            "t", probes, centroids, nprobe) for c in cs)
         local = []
         for r in probe_rows:
             q = np.asarray(list(r["qv"]), dtype=np.int64)
-            d = np.einsum("ij,ij->i", cmat - q, cmat - q)
+            d = ((cmat - q) ** 2).sum(axis=1)
             for c in np.lexsort((np.arange(len(cmat)), d))[:nprobe]:
                 local.append((r["vec_id"], int(c)))
-        assert sorted(local) == distributed
+        assert got == sorted(local)
+        # a duplicate centroid never outranks its lower-index original
+        for qid, _, cs in _probe_fanout("t", probes, centroids, nprobe):
+            cs = cs.tolist()
+            for orig, dup in ((0, 8), (5, 9)):
+                if dup in cs:
+                    assert orig in cs and cs.index(orig) < cs.index(dup)
 
 
 def test_fit_pq_shared_sample_matches_own_collect(spark):
