@@ -118,11 +118,16 @@ def assign_clusters_batches(qvecs: DataFrame, centroids: list[list[int]],
     )
 
     cmat = np.asarray(centroids, dtype=np.int64)
-    # fresh StructType: StructType.add MUTATES the receiver, and
-    # qvecs.schema is the live schema object of the input DataFrame --
-    # chaining .add on it grew the INPUT's column list and mapInPandas
-    # then tried to resolve the output-only columns against it (r15)
-    out_schema = StructType(list(qvecs.schema.fields) + [
+    # the map runs over positional column names and the result takes the
+    # input's names back: mapInPandas resolves each input column by name,
+    # and a name holding a backtick does not parse
+    names = qvecs.columns
+    pos = [f"_{i}" for i in range(len(names))]
+    vec_pos = pos[names.index(vec_col)]
+    out_schema = StructType([
+        StructField(p, f.dataType, f.nullable)
+        for p, f in zip(pos, qvecs.schema.fields)
+    ] + [
         StructField("cluster", IntegerType()),
         StructField("dist", LongType()),
     ])
@@ -139,7 +144,7 @@ def assign_clusters_batches(qvecs: DataFrame, centroids: list[list[int]],
                                  dist=pd.Series(dtype="int64"))
                 continue
             x = scratch("kmeans.x", (n, cmat.shape[1]), np.int64)
-            np.stack(pdf[vec_col].to_numpy(), axis=0, out=x)
+            np.stack(pdf[vec_pos].to_numpy(), axis=0, out=x)
             cl, d = nearest(
                 x, cmat, out=scratch("kmeans.d", (n, len(cmat)), np.int64))
             yield pdf.assign(
@@ -147,7 +152,8 @@ def assign_clusters_batches(qvecs: DataFrame, centroids: list[list[int]],
                 dist=d[np.arange(n), cl],
             )
 
-    return qvecs.mapInPandas(assign_iter, out_schema)
+    return qvecs.toDF(*pos).mapInPandas(assign_iter, out_schema).toDF(
+        *names, "cluster", "dist")
 
 
 def init_centroids(qvecs: DataFrame, k: int, vec_col: str = "qv",

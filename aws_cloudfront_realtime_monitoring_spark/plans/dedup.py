@@ -272,13 +272,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(minhash_pairs_stmt("minhash_sigs_tmp"))
 
 
-def minhash_sigs_stmt(band_sigs: str | None = None) -> str:
+def minhash_sigs_stmt() -> str:
     """Spark-SQL statement computing the checkpointable signature
     relation ``(doc_id, sh, s0..s{LSH_BANDS-1})`` from the registered
-    ``documents`` view. Module-level (r11) so the stage-measurement
-    tool times the exact statements the registry row runs;
-    ``band_sigs`` overrides the band-signature select list (the tool
-    passes the r10 md5 spelling as its comparator)."""
+    ``documents`` view."""
     perms = ", ".join(
         f"array_min(transform(hm, h -> ({a} * h + {b}) % {HASH_PRIME})) AS m{j}"
         for j, (a, b) in enumerate(_PERMS)
@@ -286,10 +283,9 @@ def minhash_sigs_stmt(band_sigs: str | None = None) -> str:
     # band signatures computed BEFORE the checkpoint: the post-barrier band
     # relation is a pure column unpivot (stack), so each join side is one
     # scan of checkpoint blocks with no signature recompute
-    if band_sigs is None:
-        band_sigs = ", ".join(
-            f"{_band_int64_expr(b)} AS s{b}" for b in range(LSH_BANDS)
-        )
+    band_sigs = ", ".join(
+        f"{_band_int64_expr(b)} AS s{b}" for b in range(LSH_BANDS)
+    )
     return f"""
         WITH wz AS (
           SELECT doc_id, {words_spark_sql()} AS w

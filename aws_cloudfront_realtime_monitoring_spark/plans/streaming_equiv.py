@@ -12,28 +12,19 @@ hash compare proves the streaming pipeline (windowed aggregation / stateful
 dedup, watermarks, sink semantics) computes exactly the batch answer on
 bounded input.
 
-Materialization is scale-clean end to end: the stream drains through
-``foreachBatch`` into a parquet directory (complete-mode batches
-overwrite, so the final micro-batch leaves the final table; append-mode
-batches accumulate), and the returned DataFrame reads those files back.
-Nothing ever lands on the driver -- unlike a memory sink, whose store is
-driver-resident, this is the exact production sink shape at any scale
-(on a cluster the directory lives on shared storage).
+Every row drains its stream with ``streaming.ingest.drain_to_parquet``
+(``foreachBatch`` into a parquet directory, read back as a batch
+relation), so nothing ever lands on the driver, at any scale.
 """
 
 from __future__ import annotations
-
-import atexit
-import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import pin_session
 from ..sources.tables import stream_dir
+from ..streaming.ingest import drain_to_parquet
 from . import register
 from .core import _BIN_1H_SQL, dsum, dsum_sql, session_cte_sql
 
@@ -41,48 +32,26 @@ from .core import _BIN_1H_SQL, dsum, dsum_sql, session_cte_sql
 #: and streaming oracles can never drift apart
 _BIN_1H = _BIN_1H_SQL
 
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream replay of the events table: schema from the batch
-    reader, data from the multi-file layout dir (a streaming source lists a
-    directory, exactly like a production landing zone)."""
-    return _table_stream(spark, sf_dir, "events")
+_STREAM_SCHEMAS: dict = {}
 
 
-def _run_to_parquet(df: DataFrame, output_mode: str) -> DataFrame:
-    """Drain a bounded stream through ``foreachBatch`` into a parquet
-    directory and return the file-backed batch relation.
-
-    ``complete`` mode rewrites the whole result per micro-batch (overwrite
-    write), so the final batch leaves exactly the final table; ``append``
-    mode accumulates each batch's new rows. The result DataFrame is a
-    plain parquet scan — never a driver-side row copy — so the harness
-    itself holds at any result size."""
-    path = os.path.join(
-        tempfile.gettempdir(), f"stream_equiv_{uuid.uuid4().hex[:12]}"
-    )
-    # the returned DataFrame pins these files for the caller's lifetime;
-    # reclaim them at process exit so repeated runs don't grow /tmp
-    # without bound (r7 review)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    write_mode = "overwrite" if output_mode == "complete" else "append"
-
-    def _write(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode(write_mode).parquet(path)
-
-    q = df.writeStream.foreachBatch(_write).outputMode(output_mode).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        # always stop: a failing micro-batch would otherwise leak a
-        # running query (and its file-source listing state) into every
-        # later equivalence row of the session (r8 review)
-        q.stop()
-    # explicit schema: a legitimately EMPTY result writes only _SUCCESS,
-    # and a schema-less read.parquet would fail with
-    # UNABLE_TO_INFER_SCHEMA instead of returning the empty relation the
-    # batch oracle would also produce (r8 review)
-    return df.sparkSession.read.schema(df.schema).parquet(path)
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-stream reader over a table's layout dir (one spelling; the
+    per-table copies and their redundant schema reads were drift bait --
+    r8 review). The schema comes from one cached batch read per path."""
+    # the UTC session-timezone pin must hold on this path too: a warm
+    # layout cache means load_table's pin may never have run in this
+    # session, and a user-built session in a non-UTC host tz would
+    # shift every window/session timestamp away from the DuckDB
+    # oracle's naive-as-UTC reading (r13 review; the load_table twin of
+    # this guard is sources/tables.py's r11 fix)
+    pin_session(spark)
+    path = stream_dir(spark, sf_dir, name)
+    schema = _STREAM_SCHEMAS.get(path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _STREAM_SCHEMAS[path] = schema
+    return spark.readStream.schema(schema).parquet(path)
 
 
 @register(
@@ -103,7 +72,7 @@ def _run_to_parquet(df: DataFrame, output_mode: str) -> DataFrame:
     tags=("streaming", "window"),
 )
 def stream_hourly_bytes_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _events_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "events")
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum(F.col("value"), 2).alias("sum_value"))
@@ -111,7 +80,7 @@ def stream_hourly_bytes_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", "sum_value"
         )
     )
-    return _run_to_parquet(agg, "complete")
+    return drain_to_parquet(agg, "complete")
 
 
 @register(
@@ -140,7 +109,7 @@ def stream_hourly_bytes_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "sliding"),
 )
 def stream_sliding_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _events_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "events")
     agg = (
         stream.groupBy(
             F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
@@ -150,7 +119,7 @@ def stream_sliding_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", "sum_value"
         )
     )
-    return _run_to_parquet(agg, "complete")
+    return drain_to_parquet(agg, "complete")
 
 
 @register(
@@ -170,7 +139,7 @@ def stream_sliding_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup"),
 )
 def stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _events_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "events")
     watermarked = stream.withWatermark("ts", "24 hours")
     duplicated = watermarked.union(watermarked)  # at-least-once delivery
     # NULL event_ids pass through un-deduped, mirroring the production
@@ -191,36 +160,10 @@ def stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(no_id)
         .select("event_type", "value")
     )
-    survivors = _run_to_parquet(deduped, "append")
+    survivors = drain_to_parquet(deduped, "append")
     return survivors.groupBy("event_type").agg(
         F.count("*").alias("n"), dsum(F.col("value"), 2).alias("sum_value")
     )
-
-
-def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """File-stream reader over a table's layout dir (one spelling; the
-    per-table copies and their redundant schema reads were drift bait --
-    r8 review). The schema comes from one cached batch read per path."""
-    # the UTC session-timezone pin must hold on this path too: a warm
-    # layout cache means load_table's pin may never have run in this
-    # session, and a user-built session in a non-UTC host tz would
-    # shift every window/session timestamp away from the DuckDB
-    # oracle's naive-as-UTC reading (r13 review; the load_table twin of
-    # this guard is sources/tables.py's r11 fix)
-    pin_session(spark)
-    path = stream_dir(spark, sf_dir, name)
-    schema = _STREAM_SCHEMAS.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _STREAM_SCHEMAS[path] = schema
-    return spark.readStream.schema(schema).parquet(path)
-
-
-_STREAM_SCHEMAS: dict = {}
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _table_stream(spark, sf_dir, "documents")
 
 
 from .curation import (  # noqa: E402
@@ -269,8 +212,8 @@ def stream_bigram_filter_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     lpu, lpb = lm_bigram_models(
         lm_bigram_base(load_table(spark, sf_dir, "documents")))
     scored = lm_bigram_score(
-        lm_bigram_base(_documents_stream(spark, sf_dir)), lpu, lpb)
-    return _run_to_parquet(scored, "complete")
+        lm_bigram_base(_table_stream(spark, sf_dir, "documents")), lpu, lpb)
+    return drain_to_parquet(scored, "complete")
 
 
 @register(
@@ -301,8 +244,8 @@ def stream_bpe_tokens_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import bpe_stats_cols
 
     merges = fit_bpe(load_table(spark, sf_dir, "documents"))
-    enc = encode_bpe_batches(_documents_stream(spark, sf_dir), merges)
-    return _run_to_parquet(bpe_stats_cols(enc), "append")
+    enc = encode_bpe_batches(_table_stream(spark, sf_dir, "documents"), merges)
+    return drain_to_parquet(bpe_stats_cols(enc), "append")
 
 
 @register(
@@ -330,8 +273,9 @@ def stream_lm_filter_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
     lp = lm_unigram_lp(lm_toks(load_table(spark, sf_dir, "documents")))
-    scored = lm_unigram_score(lm_toks(_documents_stream(spark, sf_dir)), lp)
-    return _run_to_parquet(scored, "complete")
+    scored = lm_unigram_score(
+        lm_toks(_table_stream(spark, sf_dir, "documents")), lp)
+    return drain_to_parquet(scored, "complete")
 
 
 @register(
@@ -352,9 +296,9 @@ def stream_lm_filter_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver_slot=False,
 )
 def stream_pii_redact_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _documents_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
     planted = stream.select("doc_id", _planted_col().alias("pii_text"))
-    return _run_to_parquet(pii_projection(planted), "append")
+    return drain_to_parquet(pii_projection(planted), "append")
 
 
 @register(
@@ -386,9 +330,9 @@ def stream_decontaminate_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         decon_grams(load_table(spark, sf_dir, "documents"))
     )
     hits = decon_corpus_hits(
-        decon_grams(_documents_stream(spark, sf_dir)), bench_ngrams
+        decon_grams(_table_stream(spark, sf_dir, "documents")), bench_ngrams
     )
-    return _run_to_parquet(decon_count(hits), "complete")
+    return drain_to_parquet(decon_count(hits), "complete")
 
 
 @register(
@@ -417,7 +361,7 @@ def stream_decontaminate_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session"),
 )
 def stream_session_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _events_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "events")
     agg = (
         stream.withWatermark("ts", "24 hours")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -430,7 +374,7 @@ def stream_session_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark at end-of-stream (the bounded-replay analog of "not yet
     # finalized"); complete emits the full merged state each batch, so
     # the final batch IS the batch answer
-    return _run_to_parquet(agg, "complete")
+    return drain_to_parquet(agg, "complete")
 
 
 from . import EXTRAS  # noqa: E402
@@ -460,8 +404,8 @@ from . import EXTRAS  # noqa: E402
 def stream_chunk_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import chunk_projection
 
-    return _run_to_parquet(
-        chunk_projection(_documents_stream(spark, sf_dir)), "append"
+    return drain_to_parquet(
+        chunk_projection(_table_stream(spark, sf_dir, "documents")), "append"
     )
 
 
@@ -504,7 +448,7 @@ EXTRAS["stream_chunk_equiv"].oracle = EXTRAS["chunk_documents"].oracle
 )
 def stream_stream_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = (
-        _events_stream(spark, sf_dir)
+        _table_stream(spark, sf_dir, "events")
         .where(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -514,7 +458,7 @@ def stream_stream_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "24 hours")
     )
     views = (
-        _events_stream(spark, sf_dir)
+        _table_stream(spark, sf_dir, "events")
         .where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -535,4 +479,4 @@ def stream_stream_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    return _run_to_parquet(joined, "append")
+    return drain_to_parquet(joined, "append")

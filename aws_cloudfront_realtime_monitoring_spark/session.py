@@ -60,13 +60,12 @@ def pin_session(spark: SparkSession) -> None:
 
 def get_spark(app_name: str = "aws_cloudfront_realtime_monitoring_spark",
               cpus: str | int | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
 
     - AQE on (runtime coalesce + skew-join handling) -- our scale posture.
-    - ``spark.sql.shuffle.partitions`` defaults to the core count locally; on
-      a cluster AQE coalesces from a deliberately-high initial number.
+    - ``spark.sql.shuffle.partitions`` equals the core count locally; on a
+      cluster AQE coalesces from a deliberately-high initial number.
     - Session timezone pinned UTC so timestamp semantics match the DuckDB
       oracle (naive-UTC parquet timestamps).
     - Arrow on for every pandas interchange (Pandas UDFs, toPandas).
@@ -79,7 +78,7 @@ def get_spark(app_name: str = "aws_cloudfront_realtime_monitoring_spark",
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -9,6 +9,6 @@ from .ingest import (  # noqa: F401
     with_time_partitions,
     write_partitioned_parquet,
     write_foreach_batch_grouped,
-    run_to_memory_sink,
+    drain_to_parquet,
 )
 from .stateful import chunked_flush_stream, running_totals_stream  # noqa: F401

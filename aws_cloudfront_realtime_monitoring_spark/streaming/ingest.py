@@ -25,6 +25,12 @@ parallelism (template.yaml:191) becomes source partitions -> tasks.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -378,17 +384,41 @@ def write_partitioned_parquet(
     )
 
 
-def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
-    """Synchronously drain a bounded stream into an in-memory table (test
-    harness): returns the started query after processing all available."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
+def drain_to_parquet(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run a bounded stream to completion through ``foreachBatch`` into a
+    parquet directory and return the file-backed batch relation.
+
+    ``complete`` mode rewrites the whole result per micro-batch (overwrite
+    write), so the final batch leaves exactly the final table; ``append``
+    and ``update`` modes accumulate each batch's emitted rows. The result
+    is a plain parquet scan, never a driver-side row copy, so the helper
+    holds at any result size (on a cluster the directory lives on shared
+    storage)."""
+    path = os.path.join(
+        tempfile.gettempdir(), f"stream_drain_{uuid.uuid4().hex[:12]}"
     )
-    q.processAllAvailable()
-    return q
+    # the returned DataFrame pins these files for the caller's lifetime;
+    # reclaim them at process exit so repeated runs don't grow /tmp
+    # without bound (r7 review)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    write_mode = "overwrite" if output_mode == "complete" else "append"
+
+    def _write(batch_df: DataFrame, _batch_id: int) -> None:
+        batch_df.write.mode(write_mode).parquet(path)
+
+    q = df.writeStream.foreachBatch(_write).outputMode(output_mode).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        # always stop: a failing micro-batch would otherwise leak a
+        # running query (and its file-source listing state) into every
+        # later drain of the session (r8 review)
+        q.stop()
+    # explicit schema: a legitimately EMPTY result writes only _SUCCESS,
+    # and a schema-less read.parquet would fail with
+    # UNABLE_TO_INFER_SCHEMA instead of returning the empty relation the
+    # batch oracle would also produce (r8 review)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def write_foreach_batch_grouped(

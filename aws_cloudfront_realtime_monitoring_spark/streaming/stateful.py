@@ -1,23 +1,24 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``:
-running per-key totals maintained across micro-batches.
+"""Keyed streaming state for the reference Lambda's two stateful jobs.
 
-This is the pattern for operators Spark's built-in streaming aggregates
-can't express (custom state transitions, EWMA, anomaly scores, rate
-limiting): state lives in the state store per group, each micro-batch
-delivers that group's new rows as pandas batches, and the function emits
-updated rows. State is checkpointed with the query -- exactly-once across
-restarts. At scale, state is hash-partitioned by the group key; memory is
-bounded by (keys x state row), independent of stream length.
+- Record counting (lambda_function.py:64,119), generalized per key:
+  :func:`running_totals_stream` is Spark's built-in update-mode
+  aggregate. It runs in the JVM, with no Python worker.
+- The buffered 100-record flush (lambda_function.py:103-126):
+  :func:`chunked_flush_stream` is the one arbitrary-state operator, a
+  ``groupBy(...).applyInPandasWithState`` that carries each key's
+  partial chunk in the state store across micro-batches.
+
+Both keep their state in the default state store, checkpointed with the
+query, so it survives restarts exactly once. State is hash-partitioned by
+the group key; its size is bounded by key cardinality, not stream length.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 
 def running_totals_stream(
@@ -25,37 +26,12 @@ def running_totals_stream(
     group_col: str = "x_edge_location",
     bytes_col: str = "sc_bytes",
 ) -> DataFrame:
-    """Cumulative (count, byte-total) per key, updated every micro-batch --
-    the streaming analog of the reference's per-edge monitoring counters
-    (lambda_function.py:64,119 record counting, generalized per key)."""
-    # key column DDL from the INPUT schema, not a hardcoded STRING: a
-    # non-string grouping key (e.g. sc_status BIGINT) would otherwise
-    # mislabel the emitted pandas key column and break or silently
-    # stringify at the Arrow boundary (r13 review)
-    key_ddl = parsed.schema[group_col].dataType.simpleString()
-    out_schema = f"{group_col} {key_ddl}, n BIGINT, total_bytes BIGINT"
-    state_schema = "n BIGINT, total BIGINT"
-
-    def update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0)
-        for pdf in batches:
-            n += len(pdf)
-            # astype first: a nullable column arrives as float64 and a
-            # float reduction loses integer exactness past 2^53
-            total += int(pdf[bytes_col].fillna(0).astype('int64').sum())
-        state.update((n, total))
-        yield pd.DataFrame([{group_col: key[0], "n": n, "total_bytes": total}])
-
-    return parsed.groupBy(group_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """Cumulative ``(n, total_bytes)`` per key, for ``outputMode("update")``:
+    each micro-batch emits the keys it touched with their running totals.
+    A NULL byte count adds 0, so ``total_bytes`` is never NULL."""
+    return parsed.groupBy(group_col).agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(bytes_col), F.lit(0)).alias("total_bytes"),
     )
 
 
@@ -65,81 +41,46 @@ def chunked_flush_stream(
     bytes_col: str = "sc_bytes",
     chunk_size: int = 100,
 ) -> DataFrame:
-    """Per-key buffered chunk flush via ``transformWithStateInPandas`` —
-    the reference's accumulate-then-flush write loop (lambda_function.py:
-    103-116 buffers records and flushes every 100) as a first-class keyed
-    streaming operator: one output row per COMPLETED chunk
-    ``(key, chunk_id, n_records, chunk_bytes)``, with partial chunks
-    carried in the state store across micro-batches (and across restarts —
-    state checkpoints with the query).
-
-    Uses the Spark 4 arbitrary-state API (``StatefulProcessor`` +
-    ``ValueState``) rather than ``applyInPandasWithState`` — the two APIs
-    cover the same operator class; this demonstrates the newer extension
-    point alongside :func:`running_totals_stream`'s older one. Arithmetic
-    over each pandas batch is vectorized (cumsum + reduce-at-boundaries),
-    not per-record Python. State per key is three BIGINTs — memory bounds
-    by key cardinality, never stream length.
-
-    PRECONDITION: the transformWithState family runs only on the
-    RocksDB state-store provider; set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...RocksDBStateStoreProvider`` before starting the query (checked
-    here with a clear error -- the default HDFS-backed provider fails
-    at query start with an obscure provider exception otherwise; r11
-    review moved this knowledge out of the test file into the
-    operator)."""
+    """Per-key buffered chunk flush, for ``outputMode("append")``: one
+    output row per COMPLETED chunk ``(key, chunk_id, n_records,
+    chunk_bytes)``. A key's partial chunk is carried in its state, three
+    BIGINTs ``(pending, pending_bytes, chunks)``, across micro-batches and
+    restarts, so the chunks do not depend on how batches split the
+    records. Each pandas batch is cut by :func:`_cut_chunks` (cumsum and
+    reduce at the boundaries), not per-record Python."""
     if chunk_size < 1:
         # the module's loud-early-error contract (the r11 flush_size
         # check in ingest.py): without this the ValueError surfaces
         # executor-side inside _cut_chunks on the first micro-batch of
         # an already-running query (r12 review)
         raise ValueError("chunked_flush_stream: chunk_size must be >= 1")
-    provider = parsed.sparkSession.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    ) or ""
-    if "RocksDB" not in provider:
-        raise ValueError(
-            "chunked_flush_stream needs the RocksDB state store: set "
-            "spark.sql.streaming.stateStore.providerClass to org.apache."
-            "spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider before building the query"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_ddl = parsed.schema[group_col].dataType.simpleString()  # r13: see above
+    # key column DDL from the INPUT schema, not a hardcoded STRING: a
+    # non-string grouping key (e.g. sc_status BIGINT) would otherwise
+    # mislabel the emitted pandas key column at the Arrow boundary
+    key_ddl = parsed.schema[group_col].dataType.simpleString()
     out_schema = (
         f"{group_col} {key_ddl}, chunk_id BIGINT, n_records BIGINT, "
         "chunk_bytes BIGINT"
     )
 
-    class _ChunkFlush(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._carry = handle.getValueState(
-                "carry", "pending BIGINT, pending_bytes BIGINT, chunks BIGINT"
+    def flush(key, batches, state):
+        carry = state.get if state.exists else (0, 0, 0)
+        for pdf in batches:
+            out, carry = _cut_chunks(
+                key[0], pdf[bytes_col], carry, chunk_size, group_col
             )
+            if out is not None:
+                yield out
+        state.update(carry)
 
-        def handleInputRows(self, key, rows, timer_values):
-            carry = self._carry.get() or (0, 0, 0)
-            for pdf in rows:
-                out, carry = _cut_chunks(
-                    key[0], pdf[bytes_col], carry, chunk_size, group_col
-                )
-                if out is not None:
-                    yield out
-            self._carry.update(carry)
-
-        def close(self) -> None:
-            pass
-
-    return parsed.groupBy(group_col).transformWithStateInPandas(
-        _ChunkFlush(),
+    return parsed.select(group_col, bytes_col).groupBy(
+        group_col
+    ).applyInPandasWithState(
+        flush,
         outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="none",
+        stateStructType="pending BIGINT, pending_bytes BIGINT, chunks BIGINT",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -153,7 +94,7 @@ def _cut_chunks(
     """One pandas batch of a key's byte counts -> (completed-chunk frame or
     None, new (pending, pending_bytes, chunks) carry). Vectorized: cumsum +
     slice at chunk boundaries; pure function so the boundary arithmetic is
-    unit-testable without the streaming state server."""
+    unit-testable without a streaming query."""
     import numpy as np
 
     pending, pbytes, chunks = carry

@@ -100,6 +100,9 @@ def test_streaming_cube_equals_batch(spark, sf_dir):
     from aws_cloudfront_realtime_monitoring_spark.sources.tables import (
         stream_dir,
     )
+    from aws_cloudfront_realtime_monitoring_spark.streaming import (
+        drain_to_parquet,
+    )
 
     path = stream_dir(spark, sf_dir, "events")
     schema = spark.read.parquet(path).schema
@@ -111,20 +114,10 @@ def test_streaming_cube_equals_batch(spark, sf_dir):
             "bucket_start", F.hll_sketch_estimate("sketch").alias("est")
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("hll_cube_stream")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r.bucket_start: r.est
-            for r in spark.table("hll_cube_stream").collect()
-        }
-    finally:
-        q.stop()
+    got = {
+        r.bucket_start: r.est
+        for r in drain_to_parquet(agg, "complete").collect()
+    }
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     batch = hourly_distinct_cube(events, "ts", "user_id")

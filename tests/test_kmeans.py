@@ -168,6 +168,26 @@ def test_assign_clusters_rejects_colliding_columns(spark):
         assign_clusters_batches(once, [[0, 0]])
 
 
+def test_assign_clusters_backtick_column_names(spark):
+    """Column names holding a backtick (which mapInPandas cannot resolve
+    by name) come back unchanged, the vector column included, with the
+    same assignment as plain names."""
+    from aws_cloudfront_realtime_monitoring_spark.operators.kmeans import (
+        assign_clusters_batches,
+    )
+
+    rows = [(1, [1, 2]), (2, [9, 9]), (3, [5, 5])]
+    cents = [[0, 0], [10, 10]]
+    plain = assign_clusters_batches(
+        spark.createDataFrame(rows, "vec_id long, qv array<bigint>"), cents)
+    odd = assign_clusters_batches(
+        spark.createDataFrame(rows, "`i``d` long, `q``v` array<bigint>"),
+        cents, vec_col="q`v")
+    assert odd.columns == ["i`d", "q`v", "cluster", "dist"]
+    assert sorted(map(tuple, odd.collect())) == \
+        sorted(map(tuple, plain.collect()))
+
+
 def test_assign_clusters_batches_rejects_empty_centroids(spark):
     """r15 ADVICE: empty centroid list fails driver-side with a clear
     message, not as an executor IndexError."""

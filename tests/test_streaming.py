@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from aws_cloudfront_realtime_monitoring_spark.streaming import (
     dedup_stream,
+    drain_to_parquet,
     hourly_bytes_stream,
-    run_to_memory_sink,
     stream_log_lines,
     write_partitioned_parquet,
 )
@@ -54,14 +54,10 @@ def replay_dir():
 def test_streaming_windowed_aggregate(spark, replay_dir):
     parsed = stream_log_lines(spark, replay_dir)
     agg = hourly_bytes_stream(parsed)
-    q = run_to_memory_sink(agg, "hourly_out", output_mode="complete")
-    try:
-        rows = {
-            (r.binned_time.isoformat(), r.x_edge_location): r.sum_bytes_downloaded
-            for r in spark.sql("SELECT * FROM hourly_out").collect()
-        }
-    finally:
-        q.stop()
+    rows = {
+        (r.binned_time.isoformat(), r.x_edge_location): r.sum_bytes_downloaded
+        for r in drain_to_parquet(agg, "complete").collect()
+    }
     assert rows[("2020-10-13T23:00:00", "IAD66-C1")] == 1000
     assert rows[("2020-10-14T00:00:00", "FRA56-P2")] == 550  # incl. duplicate
     assert any(k[1] == "SIN2-C1" for k in rows)  # late row still in complete mode
@@ -70,11 +66,7 @@ def test_streaming_windowed_aggregate(spark, replay_dir):
 def test_streaming_dedup_within_watermark(spark, replay_dir):
     parsed = stream_log_lines(spark, replay_dir)
     deduped = dedup_stream(parsed)
-    q = run_to_memory_sink(deduped, "dedup_out")
-    try:
-        ids = [r.x_edge_request_id for r in spark.sql("SELECT * FROM dedup_out").collect()]
-    finally:
-        q.stop()
+    ids = [r.x_edge_request_id for r in drain_to_parquet(deduped).collect()]
     # the duplicated req-b-0 appears exactly once
     assert ids.count("req-b-0") == 1
     assert len(ids) == len(set(ids))
@@ -143,41 +135,28 @@ def test_ago_filters_a_stream(spark):
             for i, hours in enumerate((1, 2, 48)):
                 f.write(make_line(now - hours * 3600, f"req-{i}", "IAD66-C1", 100) + "\n")
         recent = stream_log_lines(spark, d).where(F.col("timestamp") >= ago("24h"))
-        q = run_to_memory_sink(recent.select("x_edge_request_id"), "ago_out")
-        try:
-            got = {r.x_edge_request_id for r in spark.sql("SELECT * FROM ago_out").collect()}
-        finally:
-            q.stop()
+        got = {r.x_edge_request_id
+               for r in drain_to_parquet(recent.select("x_edge_request_id")).collect()}
     assert got == {"req-0", "req-1"}
 
 
 def test_streaming_source_sampling(spark, replay_dir):
     parsed = stream_log_lines(spark, replay_dir, sample_fraction=0.5)
-    q = run_to_memory_sink(parsed.select("x_edge_request_id"), "sampled_out")
-    try:
-        n = spark.sql("SELECT count(*) c FROM sampled_out").collect()[0].c
-    finally:
-        q.stop()
+    n = drain_to_parquet(parsed.select("x_edge_request_id")).count()
     assert 0 < n < 22
 
 
 def test_stateful_running_totals_across_batches(spark, replay_dir):
-    """applyInPandasWithState: state must carry across micro-batches
+    """Update-mode aggregate state must carry across micro-batches
     (maxFilesPerTrigger=1 -> one batch per file)."""
     from aws_cloudfront_realtime_monitoring_spark.streaming.stateful import (
         running_totals_stream,
     )
 
     parsed = stream_log_lines(spark, replay_dir, max_files_per_trigger=1)
-    totals = running_totals_stream(parsed)
-    q = run_to_memory_sink(totals, "totals_out", output_mode="update")
-    try:
-        rows = spark.sql(
-            "SELECT x_edge_location, max(n) n, max(total_bytes) t "
-            "FROM totals_out GROUP BY x_edge_location"
-        ).collect()
-    finally:
-        q.stop()
+    totals = drain_to_parquet(running_totals_stream(parsed), "update")
+    rows = totals.groupBy("x_edge_location").agg(
+        F.max("n").alias("n"), F.max("total_bytes").alias("t")).collect()
     got = {r.x_edge_location: (r.n, r.t) for r in rows}
     assert got["IAD66-C1"] == (10, 1000)
     assert got["FRA56-P2"] == (11, 550)  # includes the duplicate record
@@ -223,13 +202,9 @@ def test_streaming_sliding_window(spark, replay_dir):
         .groupBy(F.window("timestamp", "1 hour", "15 minutes"), "x_edge_location")
         .agg(F.count("*").alias("n"))
     )
-    q = run_to_memory_sink(agg, "slide_out", output_mode="complete")
-    try:
-        rows = spark.sql(
-            "SELECT window.start s, x_edge_location e, n FROM slide_out"
-        ).collect()
-    finally:
-        q.stop()
+    rows = drain_to_parquet(agg, "complete").select(
+        F.col("window.start").alias("s"), F.col("x_edge_location").alias("e"),
+        "n").collect()
     iad = [r for r in rows if r.e == "IAD66-C1"]
     # 10 IAD records spread over 9 min starting 23:00 -> windows starting
     # 22:15..23:00; the 23:00 window holds all 10
@@ -247,14 +222,8 @@ def test_streaming_session_window(spark, replay_dir):
         .groupBy(F.session_window("timestamp", "30 minutes"), "x_edge_location")
         .agg(F.count("*").alias("n"))
     )
-    q = run_to_memory_sink(agg, "sess_out", output_mode="complete")
-    try:
-        rows = spark.sql(
-            "SELECT x_edge_location e, n FROM sess_out"
-        ).collect()
-    finally:
-        q.stop()
-    got = {(r.e, r.n) for r in rows}
+    rows = drain_to_parquet(agg, "complete").collect()
+    got = {(r.x_edge_location, r.n) for r in rows}
     # IAD burst (10 within 9 min) = one session; FRA 11 (incl dup) = one
     assert ("IAD66-C1", 10) in got
     assert ("FRA56-P2", 11) in got
@@ -342,30 +311,6 @@ def test_foreach_batch_grouped_rejects_zero_flush_size(spark):
         )
 
 
-def test_chunked_flush_stream_requires_rocksdb_conf(spark):
-    """r11 review: the transformWithState family needs the RocksDB
-    state store; the operator must say so clearly instead of failing at
-    query start with an obscure provider exception."""
-    import pytest
-
-    from aws_cloudfront_realtime_monitoring_spark.streaming.stateful import (
-        chunked_flush_stream,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, "")
-    try:
-        spark.conf.unset(key)
-        df = spark.createDataFrame(
-            [("LAX1", 10)], "x_edge_location string, sc_bytes long"
-        )
-        with pytest.raises(ValueError, match="RocksDB"):
-            chunked_flush_stream(df)
-    finally:
-        if old:
-            spark.conf.set(key, old)
-
-
 def test_kinesis_source_options_reference_parity():
     """Config-level parity with the reference's ACTUAL transport, the
     Kinesis event-source mapping (template.yaml:26-33): per-shard
@@ -417,20 +362,10 @@ def test_sliding_window_stream_equals_batch(spark, sf_dir):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "event_type", "n")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("slide_equiv")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.ws, r.event_type): r.n
-            for r in spark.table("slide_equiv").collect()
-        }
-    finally:
-        q.stop()
+    got = {
+        (r.ws, r.event_type): r.n
+        for r in drain_to_parquet(agg, "complete").collect()
+    }
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
@@ -441,74 +376,102 @@ def test_sliding_window_stream_equals_batch(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_chunked_flush_spans_micro_batches(spark):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): chunk
-    boundaries must span micro-batch boundaries via the state store —
-    9 records for one key over three single-file batches with chunk_size=4
-    yield exactly chunks (4, 4) and a 1-record carry that never emits."""
-    # the transformWithState state-server protocol speaks protobuf; the
-    # operator is plain public-API Spark but cannot RUN without the lib.
-    # The dependency is unobtainable in this sandbox, not merely missing:
-    # `pip download protobuf --no-deps` fails with DNS resolution errors
-    # (no network egress), and the environment forbids installs anyway --
-    # so this environmental skip is the honest maximum; the chunk-boundary
-    # arithmetic is property-tested below without the state server.
-    pytest.importorskip("google.protobuf")
+def _write_chunk_files(d, keys_per_file):
+    """One wire file per micro-batch: file ``b`` holds one record per
+    ``(edge, sc_bytes)`` pair in ``keys_per_file[b]``. The file source
+    takes files oldest first, so each file gets its own modification
+    time: files written within one clock tick would arrive in any
+    order."""
+    seq = 0
+    for b, recs in enumerate(keys_per_file):
+        path = os.path.join(d, f"b{b}.txt")
+        with open(path, "w") as f:
+            for edge, nbytes in recs:
+                f.write(make_line(BASE_TS + seq * 60, f"req-c-{seq}", edge,
+                                  nbytes) + "\n")
+                seq += 1
+        mtime = time.time() - 60 + b
+        os.utime(path, (mtime, mtime))
+
+
+def _flushed_chunks(spark, d, max_files_per_trigger, chunk_size=4):
     from aws_cloudfront_realtime_monitoring_spark.streaming.stateful import (
         chunked_flush_stream,
     )
 
-    with tempfile.TemporaryDirectory() as d:
-        for b in range(3):
-            with open(os.path.join(d, f"b{b}.txt"), "w") as f:
-                for i in range(3):
-                    seq = b * 3 + i
-                    f.write(
-                        make_line(
-                            BASE_TS + seq * 60, f"req-c-{seq}", "E1", seq + 1
-                        )
-                        + "\n"
-                    )
-        # the transformWithState family requires the RocksDB state store
-        # (the default HDFS-backed provider does not implement its
-        # multi-state/timer layout); scoped to this query, then restored
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        old_provider = spark.conf.get(provider_key, None)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            parsed = stream_log_lines(spark, d, max_files_per_trigger=1)
-            chunks = chunked_flush_stream(parsed, chunk_size=4)
-            q = run_to_memory_sink(chunks, "chunks_out", output_mode="append")
-            try:
-                rows = spark.sql(
-                    "SELECT * FROM chunks_out ORDER BY chunk_id"
-                ).collect()
-            finally:
-                q.stop()
-        finally:
-            if old_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, old_provider)
-    got = [
+    parsed = stream_log_lines(spark, d, max_files_per_trigger=max_files_per_trigger)
+    chunks = drain_to_parquet(chunked_flush_stream(parsed, chunk_size=chunk_size))
+    return sorted(
         (r.x_edge_location, r.chunk_id, r.n_records, r.chunk_bytes)
-        for r in rows
-    ]
+        for r in chunks.collect()
+    )
+
+
+def test_chunked_flush_spans_micro_batches(spark):
+    """Chunk boundaries must span micro-batch boundaries via the state
+    store: 9 records for one key over three single-file batches with
+    chunk_size=4 yield exactly chunks (4, 4) and a 1-record carry that
+    never emits."""
+    with tempfile.TemporaryDirectory() as d:
+        _write_chunk_files(
+            d, [[("E1", b * 3 + i + 1) for i in range(3)] for b in range(3)])
+        got = _flushed_chunks(spark, d, max_files_per_trigger=1)
     # bytes are 1..9 per record: chunk1 = 1+2+3+4, chunk2 = 5+6+7+8; the
     # 9th record stays pending in state
     assert got == [("E1", 1, 4, 10), ("E1", 2, 4, 26)]
 
 
+def test_chunked_flush_same_chunks_however_batched(spark):
+    """The same records give the same chunks as three single-file
+    micro-batches or as one batch. No file holds a whole chunk of any
+    key, so the split run emits only through the state-store carry.
+    Each key's records carry one byte count, so the chunks cannot depend
+    on the order rows reach the state function within a batch."""
+    files = [
+        [("E1", 5)] * 3 + [("E2", 2)] * 2,
+        [("E2", 2)] * 3 + [("E1", 5)] * 3,
+        [("E1", 5)] * 3 + [("E2", 2)] * 2,
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        _write_chunk_files(d, files)
+        split = _flushed_chunks(spark, d, max_files_per_trigger=1)
+        whole = _flushed_chunks(spark, d, max_files_per_trigger=None)
+    assert split == whole == [
+        ("E1", 1, 4, 20), ("E1", 2, 4, 20), ("E2", 1, 4, 8),
+    ]
+
+
+def test_running_totals_plan_has_no_python_exec(spark, replay_dir):
+    """Running totals are a built-in aggregate: no Python worker in the
+    plan. The chunk flush's plan is the positive control, so the node
+    names checked are the ones this Spark prints."""
+    import contextlib
+    import io
+
+    from aws_cloudfront_realtime_monitoring_spark.streaming.stateful import (
+        chunked_flush_stream,
+        running_totals_stream,
+    )
+
+    def plan(df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()
+        return buf.getvalue()
+
+    python_nodes = ("InPandas", "EvalPython", "PythonUDF")
+    parsed = stream_log_lines(spark, replay_dir)
+    assert any(n in plan(chunked_flush_stream(parsed)) for n in python_nodes)
+    totals = plan(running_totals_stream(parsed))
+    assert "HashAggregate" in totals
+    assert not any(n in totals for n in python_nodes), totals
+
+
 def test_chunk_cut_arithmetic_pure():
     """The chunk-boundary math behind chunked_flush_stream, driven directly
-    (the state-server transport needs protobuf, absent here; the arithmetic
-    is the part that can be wrong): carries accumulate across batches, every
-    completed chunk sums exactly chunk_size records' bytes, leftovers never
-    emit."""
+    (the arithmetic is the part that can be wrong): carries accumulate
+    across batches, every completed chunk sums exactly chunk_size records'
+    bytes, leftovers never emit."""
     import pandas as pd
 
     from aws_cloudfront_realtime_monitoring_spark.streaming.stateful import (
@@ -888,13 +851,7 @@ def test_dedup_stream_passes_null_request_ids_through(spark, replay_dir):
         f.write("\n".join(lines) + "\n")
     parsed = stream_log_lines(spark, d)
     out = dedup_stream(parsed)
-    q = (out.writeStream.format("memory").queryName("null_dedup_t")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT c_ip, x_edge_request_id FROM null_dedup_t").collect()
-    finally:
-        q.stop()
+    rows = drain_to_parquet(out.select("c_ip", "x_edge_request_id")).collect()
     ids = sorted((r.c_ip, r.x_edge_request_id) for r in rows)
     # the two SAME-ID rows collapse to one; both NULL-id rows survive
     assert len([r for r in ids if r[1] == "SAME-ID"]) == 1
@@ -1292,12 +1249,7 @@ def test_stateful_running_totals_bigint_key(spark, replay_dir):
     totals = running_totals_stream(parsed, group_col="sc_status")
     assert dict(totals.dtypes)["sc_status"] == \
         dict(parsed.dtypes)["sc_status"]
-    q = run_to_memory_sink(totals, "totals_bigint", output_mode="update")
-    try:
-        rows = spark.sql(
-            "SELECT sc_status, max(n) n FROM totals_bigint "
-            "GROUP BY sc_status").collect()
-    finally:
-        q.stop()
+    rows = drain_to_parquet(totals, "update").groupBy("sc_status").agg(
+        F.max("n").alias("n")).collect()
     got = {r.sc_status: r.n for r in rows}
     assert got and all(isinstance(k, int) for k in got)
