@@ -12,59 +12,88 @@ dimensions under the IHDR depth/color/interlace. The chunk walk and its
 animation validation are SHARED with the static decoder
 (:class:`multimodal._PNGChunks`: one pass collects the IDAT stream and
 the frames), and so is each frame's scanline decode
-(:meth:`multimodal._PNGChunks.samples`); only compositing is new here.
-
-Compositing follows the spec's state machine: the output buffer (always
-RGBA; gray/palette sources expand) starts fully-transparent black, each
+(:meth:`multimodal._PNGChunks.samples`); only the frame records are new
+here. They feed the one compositor, :func:`multimodal.composite_frames`,
+which GIF and WebP frames go through too. The output canvas is always RGBA (gray/palette sources
+expand) at the source depth and starts fully-transparent black; each
 frame draws into its region with ``blend_op`` SOURCE (replace) or OVER
-(Porter-Duff over, non-premultiplied), and before the NEXT frame draws,
+(Porter-Duff over, non-premultiplied), and after it is shown,
 ``dispose_op`` NONE keeps the region, BACKGROUND clears it to
-transparent black, PREVIOUS reverts it to its pre-draw content (first
-frame: PREVIOUS degrades to BACKGROUND, per spec).
+transparent black, PREVIOUS reverts it to its pre-draw content. The
+spec's two first-frame rules are set on the frame records here: frame 0
+always draws SOURCE, and a PREVIOUS dispose on frame 0 becomes
+BACKGROUND.
 
-Memory contract matches :func:`operators.gif.decode_gif_frames`: only
-requested frames are retained while every frame composites through one
-reused canvas; with no bound, files past ``DEFAULT_MAX_FRAMES`` are
-REFUSED, never silently trimmed. Malformed ANIMATION data raises
-``ValueError`` here; the walk only records it, so ``decode_image``
-reports the payload as the static image an APNG-unaware viewer would
-show (the spec's own fallback posture).
+Memory and work follow the compositor's contract: a frame's pixel
+stream is inflated only when it is at or before the last kept index,
+and only kept canvases are copied; with no ``keep_indices``,
+animations past ``DEFAULT_MAX_FRAMES`` are REFUSED, never silently
+trimmed. Malformed ANIMATION data raises ``ValueError`` here; the walk
+only records it, so ``decode_image`` reports the payload as the static
+image an APNG-unaware viewer would show (the spec's own fallback
+posture).
 
 Reference parity: the reference (aws-cloudfront-realtime-monitoring)
-delegates media handling entirely; this mirrors the GIF animation path's
-role as the repo's real frame-sampling substrate.
+delegates media handling entirely; APNG is one of the three formats the
+frame sampler reads.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
-from .multimodal import _PNGChunks, _expand_png_samples
+from .multimodal import (
+    DISPOSE_BACKGROUND,
+    DISPOSE_NONE,
+    DISPOSE_PREVIOUS,
+    Animation,
+    AnimationFrame,
+    _expand_png_samples,
+    _PNGChunks,
+    overwrite,
+)
 
-#: same retention contract as the GIF decoder
-DEFAULT_MAX_FRAMES = 256
-
-_DISPOSE_NONE, _DISPOSE_BACKGROUND, _DISPOSE_PREVIOUS = 0, 1, 2
-_BLEND_SOURCE, _BLEND_OVER = 0, 1
+#: APNG fcTL dispose_op -> dispose kind, and blend_op values
+_DISPOSE = (DISPOSE_NONE, DISPOSE_BACKGROUND, DISPOSE_PREVIOUS)
+_BLEND_SOURCE = 0
 
 
-def _animation(payload: bytes) -> _PNGChunks:
-    """The shared chunk walk, raising the animation defect it recorded
-    ("not an APNG (no acTL)" for a static PNG) as ``ValueError``."""
+def apng_frames(payload: bytes) -> Animation:
+    """The APNG frame source of :func:`multimodal.composite_frames`: the
+    shared chunk walk (raising the animation defect it recorded, "not an
+    APNG (no acTL)" for a static PNG, as ``ValueError``) and one record
+    per fcTL, whose pixels inflate on demand."""
     png = _PNGChunks(payload)
     if png.anim_error is not None:
         raise ValueError(png.anim_error)
-    return png
+    amax = 65535 if png.depth == 16 else 255
+    frames = []
+    for i, f in enumerate(png.frames):
+        dispose = _DISPOSE[f.dispose]
+        if i == 0 and dispose == DISPOSE_PREVIOUS:
+            dispose = DISPOSE_BACKGROUND  # spec: first-frame degrade
+        frames.append(AnimationFrame(
+            f.x, f.y, f.w, f.h,
+            partial(_frame_rgba, png, f),
+            overwrite if f.blend == _BLEND_SOURCE or i == 0
+            else partial(_blend_over, amax=amax),
+            dispose,
+        ))
+    background = np.zeros(4, np.uint16 if png.depth == 16 else np.uint8)
+    return Animation(png.width, png.height, background, frames)
 
 
-def _to_rgba(png: _PNGChunks, px: np.ndarray) -> np.ndarray:
-    """Native-channel samples -> RGBA at the source depth's dtype: the
-    static decoder's expansion rules (:func:`multimodal.
-    _expand_png_samples` -- ONE copy, r14 review) plus the forced-RGBA
-    presentation compositing needs (gray replicates to 3 channels,
-    missing alpha fills opaque)."""
+def _frame_rgba(png: _PNGChunks, f) -> np.ndarray:
+    """One frame's pixel stream -> RGBA samples at its fcTL size and the
+    source depth's dtype: the static decoder's expansion rules
+    (:func:`multimodal._expand_png_samples` -- ONE copy, r14 review) plus
+    the forced-RGBA presentation compositing needs (gray replicates to 3
+    channels, missing alpha fills opaque)."""
     color, depth = png.color, png.depth
-    px, alpha = _expand_png_samples(px, color, depth, png.plte, png.trns)
+    px, alpha = _expand_png_samples(png.samples(f.data, f.w, f.h), color,
+                                    depth, png.plte, png.trns)
     if color == 3:
         if alpha is None:
             alpha = np.full(px.shape[:2], 255, np.uint8)
@@ -80,11 +109,12 @@ def _to_rgba(png: _PNGChunks, px: np.ndarray) -> np.ndarray:
     return px  # color 6: already RGBA
 
 
-def _blend_over(dst: np.ndarray, src: np.ndarray, amax: int) -> np.ndarray:
-    """Porter-Duff OVER with non-premultiplied alpha (APNG spec's blend
-    formula), integer samples in/out. Rounding is floor(x + 0.5) --
-    half-AWAY-from-zero on these nonnegative values -- spelled out
-    because np.round is half-to-even (r11 review class)."""
+def _blend_over(dst: np.ndarray, src: np.ndarray, amax: int) -> None:
+    """The OVER draw rule: Porter-Duff OVER of ``src`` onto ``dst`` in
+    place, non-premultiplied alpha (APNG spec's blend formula), integer
+    samples in/out. Rounding is floor(x + 0.5) -- half-AWAY-from-zero on
+    these nonnegative values -- spelled out because np.round is
+    half-to-even (r11 review class)."""
     sa = src[:, :, 3].astype(np.float64) / amax
     da = dst[:, :, 3].astype(np.float64) / amax
     oa = sa + da * (1.0 - sa)
@@ -94,67 +124,5 @@ def _blend_over(dst: np.ndarray, src: np.ndarray, amax: int) -> np.ndarray:
     with np.errstate(invalid="ignore"):
         oc = np.where(oa[..., None] > 0, num / np.where(
             oa[..., None] > 0, oa[..., None], 1.0), 0.0)
-    out = np.empty_like(dst)
-    out[:, :, :3] = np.floor(oc + 0.5).astype(dst.dtype)
-    out[:, :, 3] = np.floor(oa * amax + 0.5).astype(dst.dtype)
-    return out
-
-
-def count_apng_frames(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, n_frames) from the chunk walk alone -- the
-    sampling pre-pass twin of :func:`gif.count_gif_frames`."""
-    png = _animation(payload)
-    return png.width, png.height, len(png.frames)
-
-
-def decode_apng_frames(
-    payload: bytes, max_frames: int | None = None,
-    keep_indices: set | None = None,
-) -> tuple[int, int, list[np.ndarray]]:
-    """Decode COMPOSITED animation frames: returns (width, height,
-    [canvas[h, w, 4] RGBA, ...]) -- frame k is what a viewer sees at
-    step k. Same retention contract as ``decode_gif_frames``:
-    ``max_frames`` keeps the first k, ``keep_indices`` an explicit set;
-    with neither, files past ``DEFAULT_MAX_FRAMES`` frames are REFUSED
-    (never silently trimmed). Peak memory is one canvas (plus one
-    PREVIOUS-dispose snapshot) plus the kept copies."""
-    png = _animation(payload)
-    frames = png.frames
-    if keep_indices is not None:
-        def keep(i: int) -> bool:
-            return i in keep_indices
-    elif max_frames is None:
-        if len(frames) > DEFAULT_MAX_FRAMES:
-            raise ValueError(
-                f"APNG has {len(frames)} frames, over the default "
-                f"retention cap of {DEFAULT_MAX_FRAMES}; pass max_frames "
-                "or keep_indices explicitly to decode it")
-
-        def keep(i: int) -> bool:
-            return True
-    else:
-        def keep(i: int) -> bool:
-            return i < max_frames
-    dt = np.uint16 if png.depth == 16 else np.uint8
-    amax = 65535 if png.depth == 16 else 255
-    canvas = np.zeros((png.height, png.width, 4), dt)  # transparent black
-    screens: list[np.ndarray] = []
-    for i, f in enumerate(frames):
-        region = (slice(f.y, f.y + f.h), slice(f.x, f.x + f.w))
-        dispose = f.dispose
-        if i == 0 and dispose == _DISPOSE_PREVIOUS:
-            dispose = _DISPOSE_BACKGROUND  # spec: first-frame degrade
-        snapshot = canvas[region].copy() if dispose == _DISPOSE_PREVIOUS \
-            else None
-        src = _to_rgba(png, png.samples(f.data, f.w, f.h))
-        if f.blend == _BLEND_SOURCE or i == 0:
-            canvas[region] = src
-        else:
-            canvas[region] = _blend_over(canvas[region], src, amax)
-        if keep(i):
-            screens.append(canvas.copy())
-        if dispose == _DISPOSE_BACKGROUND:
-            canvas[region] = 0
-        elif dispose == _DISPOSE_PREVIOUS:
-            canvas[region] = snapshot
-    return png.width, png.height, screens
+    dst[:, :, :3] = np.floor(oc + 0.5).astype(dst.dtype)
+    dst[:, :, 3] = np.floor(oa * amax + 0.5).astype(dst.dtype)

@@ -17,17 +17,19 @@ a narrow map, nothing driver-side.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 
-# the shared decompression-bomb cap now lives at the package level
-# (it is format-neutral); re-exported here for the existing importers
-from . import MAX_PIXELS  # noqa: F401
-
-#: frame-retention bound used when decode_gif_frames is called with
-#: neither max_frames nor keep_indices; longer files raise rather than
-#: silently trim (r11 advice)
-DEFAULT_MAX_FRAMES = 256
+from . import MAX_PIXELS
+from .multimodal import (
+    DISPOSE_BACKGROUND,
+    DISPOSE_NONE,
+    DISPOSE_PREVIOUS,
+    Animation,
+    AnimationFrame,
+    composite_frames,
+)
 
 #: GIF interlace passes: (start row, step)
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
@@ -112,88 +114,30 @@ def decode_gif(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     """REAL decoder for GIF87a/89a: returns (width, height, n_frames,
     first_frame[h, w, 3] uint8 RGB on the logical screen). Raises
     ``ValueError`` on malformed data."""
-    width, height, n_frames, screens = _decode_frames(payload, keep=1)
+    width, height, n_frames, screens = composite_frames(
+        gif_frames(payload), {0})
     return width, height, n_frames, screens[0]
 
 
-def count_gif_frames(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, n_frames) by walking the block structure only --
-    no LZW decode, no pixel buffers; the cheap first pass of two-pass
-    frame sampling."""
-    width, height, n_frames, _screens = _decode_frames(
-        payload, keep=set(), count_only=True
-    )
-    return width, height, n_frames
-
-
-def decode_gif_frames(
-    payload: bytes, max_frames: int | None = None,
-    keep_indices: set | None = None,
-) -> tuple[int, int, list[np.ndarray]]:
-    """Decode COMPOSITED animation frames: each frame draws onto the
-    running logical screen honoring the Graphic Control Extension --
+def gif_frames(payload: bytes) -> Animation:
+    """The GIF frame source of :func:`multimodal.composite_frames`: a
+    walk of the block structure (no LZW, no pixel buffers) listing each
+    image descriptor with the Graphic Control Extension before it --
     transparent pixels (GCE transparency flag + index) leave the
     underlying screen untouched (the common GIF89a transparency-delta
     encoding), and disposal methods 2 (restore to background) and 3
-    (restore to previous) are applied to the frame's rectangle before
-    the next frame draws -- so frame k is what a viewer sees at step k.
-    Returns (width, height, [screen[h, w, 3] uint8, ...]).
-
-    Memory contract: only the REQUESTED frames are retained --
-    ``max_frames`` keeps the first k, ``keep_indices`` keeps an explicit
-    index set (the frame-sampling path: count first, then fetch the
-    picks) -- while every frame still composites through one reused
-    screen buffer, so peak memory is one screen plus the kept copies,
-    never n_frames x frame_size (a 100-frame GIF near the MAX_PIXELS cap
-    would otherwise hold gigabytes). With neither argument, files up to
-    ``DEFAULT_MAX_FRAMES`` frames decode fully and longer files raise
-    ``ValueError`` (never a silent trim) -- pass a bound explicitly for
-    those."""
-    if keep_indices is not None:
-        keep = keep_indices
-    elif max_frames is None:
-        # a bounded DEFAULT (r11 review: the old unlimited default
-        # re-enabled the n_frames x frame_size blowup the memory
-        # contract above forbids -- a ~10 KB payload with hundreds of
-        # near-cap frames could allocate tens of GB). A file whose frame
-        # count exceeds the default is REFUSED, not silently trimmed
-        # (r11 advice: returning 256 of 300 screens with no signal is a
-        # correctness trap); the count pre-pass is a block walk only --
-        # no LZW, no pixel buffers -- so the refusal costs no decode work
-        _w, _h, n, _s = _decode_frames(payload, keep=set(), count_only=True)
-        if n > DEFAULT_MAX_FRAMES:
-            raise ValueError(
-                f"GIF has {n} frames, over the default retention cap of "
-                f"{DEFAULT_MAX_FRAMES}; pass max_frames or keep_indices "
-                "explicitly to decode it"
-            )
-        keep = DEFAULT_MAX_FRAMES
-    else:
-        keep = max_frames  # 0 is a real bound, not "unlimited"
-    width, height, _n, screens = _decode_frames(payload, keep=keep)
-    return width, height, screens
-
-
-def _decode_frames(payload: bytes, keep, count_only: bool = False):
+    (restore to previous) apply to the frame's rectangle after it is
+    shown (GIF89a spec section 23). A frame's LZW decode runs only when
+    the compositor asks for its pixels."""
     try:
-        return _decode_frames_impl(payload, keep, count_only)
+        return _gif_frames(payload)
     except (struct.error, IndexError, TypeError) as exc:
         # fuzzed/corrupt bytes must surface as ValueError only (the
         # mapInPandas fallback contract), never crash an executor task
         raise ValueError(f"malformed GIF: {exc}") from exc
 
 
-def _decode_frames_impl(payload: bytes, keep, count_only: bool):
-    wanted = keep if isinstance(keep, (set, frozenset)) else None
-    # frames AFTER the last requested index cannot affect any retained
-    # screen (compositing only looks backward), so their pixel work
-    # (LZW + composite) is skipped entirely -- decode_gif's keep=1 on a
-    # 100-frame file costs ONE frame decode + a block walk, not 100
-    # (r8 review); frames up to the last kept index still composite
-    if wanted is not None:
-        last_wanted = max(wanted) if wanted else -1
-    else:
-        last_wanted = keep - 1
+def _gif_frames(payload: bytes) -> Animation:
     if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     width, height = struct.unpack_from("<HH", payload, 6)
@@ -209,9 +153,7 @@ def _decode_frames_impl(payload: bytes, keep, count_only: bool):
         gct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
         pos += 3 * n
     bg_fill = gct[bg] if gct is not None and bg < len(gct) else None
-    n_frames = 0
-    screen = None
-    screens: list[np.ndarray] = []
+    frames: list[AnimationFrame] = []
     gce: tuple[int, int | None] | None = None  # (disposal, transparent idx)
     while pos < len(payload):
         block = payload[pos]
@@ -250,53 +192,56 @@ def _decode_frames_impl(payload: bytes, keep, count_only: bool):
             lzw, pos = _sub_blocks(payload, pos + 1)
             if iw <= 0 or ih <= 0 or left + iw > width or top + ih > height:
                 raise ValueError("GIF frame exceeds logical screen")
-            n_frames += 1
             disposal, t_idx = gce if gce is not None else (0, None)
             gce = None  # a GCE governs exactly one image descriptor
-            if count_only or n_frames - 1 > last_wanted:
-                continue  # block walk only: no LZW, no pixel buffers
-            idx = np.frombuffer(
-                _lzw_decode(lzw, min_code, iw * ih), np.uint8
-            ).reshape(ih, iw)
-            if ipacked & 0x40:  # interlaced: reorder the 4 passes
-                ordered = np.empty_like(idx)
-                src = 0
-                for start, step in _INTERLACE_PASSES:
-                    rows = range(start, ih, step)
-                    ordered[list(rows)] = idx[src : src + len(rows)]
-                    src += len(rows)
-                idx = ordered
-            if idx.max(initial=0) >= len(ct):
-                raise ValueError("GIF pixel index beyond color table")
-            if n_frames == 1:
-                screen = np.zeros((height, width, 3), np.uint8)
-                if bg_fill is not None:
-                    screen[:, :] = bg_fill
-            # EVERY frame composites onto the one reused screen buffer;
-            # transparent pixels leave the underlying screen (GIF89a
-            # transparency-delta animation); only requested frames copy
-            region = screen[top : top + ih, left : left + iw]
-            if disposal == 3:
-                saved = region.copy()  # restore-to-previous needs it
-            if t_idx is not None:
-                opaque = idx != t_idx
-                # palette-lookup only the opaque pixels: ct[idx][opaque]
-                # materialized the full rectangle's RGB first and threw
-                # the transparent majority away (r11 review; delta
-                # frames are mostly transparent)
-                region[opaque] = ct[idx[opaque]]
-            else:
-                region[:, :] = ct[idx]
-            if (n_frames - 1 in wanted) if wanted is not None                     else (n_frames <= keep):
-                screens.append(screen.copy())
-            # disposal applies AFTER the frame is displayed, before the
-            # next frame draws (T.81-analog: GIF89a spec section 23)
-            if disposal == 2:  # restore the rect to background
-                region[:, :] = bg_fill if bg_fill is not None else 0
-            elif disposal == 3:  # restore the rect to prior content
-                region[:, :] = saved
+            frames.append(AnimationFrame(
+                left, top, iw, ih,
+                partial(_frame_indices, lzw, min_code, iw, ih,
+                        bool(ipacked & 0x40), len(ct)),
+                partial(_draw, ct, t_idx),
+                _DISPOSE.get(disposal, DISPOSE_NONE),
+            ))
         else:
             raise ValueError(f"unknown GIF block {block:#x}")
-    if n_frames == 0:
+    if not frames:
         raise ValueError("GIF contains no image data")
-    return width, height, n_frames, screens
+    background = bg_fill if bg_fill is not None else np.zeros(3, np.uint8)
+    return Animation(width, height, background, frames)
+
+
+#: GIF disposal method -> dispose kind (0, 1 and 4-7 leave the frame)
+_DISPOSE = {2: DISPOSE_BACKGROUND, 3: DISPOSE_PREVIOUS}
+
+
+def _frame_indices(lzw: bytes, min_code: int, iw: int, ih: int,
+                   interlaced: bool, n_colors: int) -> np.ndarray:
+    """One frame's color indices[ih, iw] in row order: LZW decode, the
+    4-pass interlace reorder, and the color-table bound check."""
+    idx = np.frombuffer(
+        _lzw_decode(lzw, min_code, iw * ih), np.uint8
+    ).reshape(ih, iw)
+    if interlaced:
+        ordered = np.empty_like(idx)
+        src = 0
+        for start, step in _INTERLACE_PASSES:
+            rows = range(start, ih, step)
+            ordered[list(rows)] = idx[src : src + len(rows)]
+            src += len(rows)
+        idx = ordered
+    if idx.max(initial=0) >= n_colors:
+        raise ValueError("GIF pixel index beyond color table")
+    return idx
+
+
+def _draw(ct: np.ndarray, t_idx: int | None, region: np.ndarray,
+          idx: np.ndarray) -> None:
+    """GIF's draw rule: palette lookup, pixels at the GCE transparent
+    index leave the underlying screen."""
+    if t_idx is None:
+        region[...] = ct[idx]
+        return
+    opaque = idx != t_idx
+    # palette-lookup only the opaque pixels: ct[idx][opaque] materialized
+    # the full rectangle's RGB first and threw the transparent majority
+    # away (delta frames are mostly transparent)
+    region[opaque] = ct[idx[opaque]]

@@ -749,7 +749,7 @@ def _decode_scan(ent, frame, scan_tables, qt, restart_interval, color):
     h, w, comps, prec = frame.h, frame.w, frame.comps, frame.prec
     if h <= 0 or w <= 0:
         raise ValueError("degenerate JPEG dimensions")
-    from .gif import MAX_PIXELS
+    from . import MAX_PIXELS
 
     if h * w > MAX_PIXELS:
         raise ValueError("JPEG dimensions exceed the decode cap")

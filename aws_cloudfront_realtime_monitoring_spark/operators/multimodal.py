@@ -34,6 +34,7 @@ from __future__ import annotations
 import struct
 import zlib
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -580,7 +581,7 @@ def _webp(payload: bytes) -> tuple[str, int, int, int, np.ndarray | None]:
 
     # VP8L and VP8 stills: real pixels; animated VP8X: real header
     # metadata, no single canvas (composited frames via
-    # webp.decode_webp_frames)
+    # composite_frames)
     width, height, n_frames, px, _codec = decode_webp(payload)
     return "webp", width, height, n_frames, px
 
@@ -819,8 +820,114 @@ def image_pixel_stats_batches(
     )
 
 
-#: output schema of REAL animation frame sampling (GIF): one row per
-#: sampled frame with exact integer mean channels
+# ------------------------------------------- animation compositing
+#
+# GIF, APNG and animated WebP share one viewer state machine: a canvas
+# starts at the background, each frame draws into its rectangle under
+# its format's rule, the canvas is what a viewer sees at that step, and
+# the frame's dispose then restores its rectangle before the next frame
+# draws. Each format module keeps only its parser (which lists frames
+# without decoding pixels) and its spec blend; the loop lives here.
+
+#: frames retained when no ``keep_indices`` is given; a longer animation
+#: is refused, never silently trimmed
+DEFAULT_MAX_FRAMES = 256
+
+#: what a frame's rectangle becomes after the frame is shown
+DISPOSE_NONE, DISPOSE_BACKGROUND, DISPOSE_PREVIOUS = 0, 1, 2
+
+
+class AnimationFrame(NamedTuple):
+    """One frame as its format's parser lists it: the rectangle on the
+    canvas, ``pixels()`` (the lazy decode, called only for frames up to
+    the last kept index), ``draw(region, pixels)`` (the format's rule for
+    writing them into the canvas view in place: GIF's transparent-index
+    mask, APNG's SOURCE/OVER, WebP's overwrite/OVER) and the dispose
+    kind."""
+
+    x: int
+    y: int
+    w: int
+    h: int
+    pixels: Callable[[], np.ndarray]
+    draw: Callable[[np.ndarray, np.ndarray], None]
+    dispose: int
+
+
+class Animation(NamedTuple):
+    """A parsed animation: canvas size, the ``background`` sample (one
+    value per channel, in the canvas dtype) that fills the first canvas
+    and every BACKGROUND dispose, and the frame list, whose length is
+    the frame count."""
+
+    width: int
+    height: int
+    background: np.ndarray
+    frames: list[AnimationFrame]
+
+
+def overwrite(region: np.ndarray, px: np.ndarray) -> None:
+    """The replace draw rule (APNG SOURCE, WebP no-blend, a still)."""
+    region[...] = px
+
+
+def composite_frames(
+    anim: Animation, keep_indices: set | None = None,
+) -> tuple[int, int, int, list[np.ndarray]]:
+    """Composite ``anim`` and return (width, height, n_frames, [canvas
+    copy for each kept index, in index order]): frame k is what a viewer
+    sees at step k.
+
+    With ``keep_indices`` only those frames are retained; with none, all
+    of them, and an animation of more than ``DEFAULT_MAX_FRAMES`` frames
+    raises ``ValueError``. Frames after the last kept index cannot change
+    a retained canvas (compositing only looks backward), so their pixels
+    are never decoded. Peak memory is one canvas, one PREVIOUS snapshot
+    and the kept copies."""
+    n = len(anim.frames)
+    if keep_indices is None:
+        if n > DEFAULT_MAX_FRAMES:
+            raise ValueError(
+                f"animation has {n} frames, over the default retention "
+                f"cap of {DEFAULT_MAX_FRAMES}; pass keep_indices "
+                "explicitly to decode it")
+        keep_indices = range(n)
+    last = max(keep_indices, default=-1)
+    bg = anim.background
+    canvas = np.full((anim.height, anim.width, len(bg)), bg, bg.dtype)
+    screens: list[np.ndarray] = []
+    for i, f in enumerate(anim.frames):
+        if i > last:
+            break
+        region = canvas[f.y : f.y + f.h, f.x : f.x + f.w]
+        saved = region.copy() if f.dispose == DISPOSE_PREVIOUS else None
+        f.draw(region, f.pixels())
+        if i in keep_indices:
+            screens.append(canvas.copy())
+        if f.dispose == DISPOSE_BACKGROUND:
+            region[...] = bg
+        elif f.dispose == DISPOSE_PREVIOUS:
+            region[...] = saved
+    return anim.width, anim.height, n, screens
+
+
+def animation_frames(payload: bytes) -> Animation:
+    """Parse a GIF, APNG or WebP payload (a still counts as one frame)
+    with its format's frame source, picked by :func:`_family`. Raises
+    ``ValueError`` on anything else."""
+    from .apng import apng_frames
+    from .gif import gif_frames
+    from .webp import webp_frames
+
+    source = {"gif": gif_frames, "png": apng_frames,
+              "webp": webp_frames}.get(_family(payload))
+    if source is None:
+        raise ValueError("not a GIF, APNG or WebP payload")
+    return source(payload)
+
+
+#: output schema of REAL animation frame sampling: one row per sampled
+#: frame with exact integer mean channels
 FRAME_SAMPLE_SCHEMA = (
     "doc_id BIGINT, frame_idx BIGINT, n_frames BIGINT, width BIGINT, "
     "height BIGINT, mean_r BIGINT, mean_g BIGINT, mean_b BIGINT"
@@ -832,38 +939,30 @@ def sample_animation_frames(
     skip_invalid: bool = True,
 ) -> DataFrame:
     """REAL video-style frame sampling: decode up to ``n_samples``
-    evenly-spaced COMPOSITED frames from each animated GIF payload and
-    emit one feature row per frame (frame_sample_offsets is the
+    evenly-spaced COMPOSITED frames from each GIF, APNG or WebP payload
+    and emit one feature row per frame (frame_sample_offsets is the
     byte-offset stand-in for containers this sandbox cannot decode; this
-    is the genuine article for the format it can). One input row fans
+    is the genuine article for the formats it can). One input row fans
     out to <= n_samples output rows -- a generator-shaped narrow map
     through :func:`map_payloads`, dropping undecodable payloads under
     ``skip_invalid``.
 
-    Two passes per payload keep memory bounded at one screen plus the
-    picked copies: a block-walk counts frames (no LZW, no buffers), then
-    only the evenly-spaced picks are retained while compositing.
-
-    r14: APNG payloads sample through the same two-pass contract
-    (operators.apng count + keep_indices decode); their RGBA screens
-    report the RGB channel means, 16-bit samples scaled onto the 8-bit
-    range (the exact /257) so GIF and APNG means are comparable."""
-    from .apng import count_apng_frames, decode_apng_frames
-    from .gif import count_gif_frames, decode_gif_frames
+    Each payload is parsed once (:func:`animation_frames`: the frame
+    list, no pixel decode); only the evenly-spaced picks are retained
+    while compositing (:func:`composite_frames`), so memory stays at one
+    canvas plus the picked copies. RGBA canvases (APNG, WebP) report the
+    RGB channel means, 16-bit samples scaled onto the 8-bit range (the
+    exact /257) so every format's means are comparable."""
 
     def frames(doc_id: int, payload: bytes) -> list[dict]:
-        count, fetch = (
-            (count_apng_frames, decode_apng_frames)
-            if _family(payload) == "png"
-            else (count_gif_frames, decode_gif_frames)
-        )
-        w, h, n = count(payload)
+        anim = animation_frames(payload)
+        n = len(anim.frames)
         k = min(n_samples, n)
         picks = sorted(
             {round(i * (n - 1) / (k - 1)) for i in range(k)}
             if k > 1 else ({0} if k == 1 else set())
         )
-        _w, _h, screens = fetch(payload, keep_indices=set(picks))
+        w, h, _n, screens = composite_frames(anim, set(picks))
         out = []
         for fi, screen in zip(picks, screens):
             rgb = screen[:, :, :3]

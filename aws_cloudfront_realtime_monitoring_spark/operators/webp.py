@@ -35,10 +35,18 @@ decode is bounded by the stricter ``SLOW_PATH_MAX_PIXELS`` cap.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 
 from . import MAX_PIXELS, SLOW_PATH_MAX_PIXELS
+from .multimodal import (
+    DISPOSE_BACKGROUND,
+    DISPOSE_NONE,
+    Animation,
+    AnimationFrame,
+    overwrite,
+)
 
 #: code-length-code transmission order (spec section on normal codes)
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
@@ -681,23 +689,6 @@ def _decode_vp8l(data: bytes) -> tuple[int, int, np.ndarray]:
     return width, height, rgba
 
 
-def _vp8_dimensions(body: bytes) -> tuple[int, int]:
-    """Lossy VP8 keyframe dimensions from the uncompressed frame header
-    (3-byte frame tag, 3-byte start code 9D 01 2A, two 16-bit fields
-    whose low 14 bits are width/height)."""
-    if len(body) < 10:
-        raise ValueError("truncated VP8 frame header")
-    if body[0] & 0x01:
-        raise ValueError("VP8 stream does not start with a key frame")
-    if body[3:6] != b"\x9d\x01\x2a":
-        raise ValueError("bad VP8 keyframe start code")
-    width = struct.unpack_from("<H", body, 6)[0] & 0x3FFF
-    height = struct.unpack_from("<H", body, 8)[0] & 0x3FFF
-    if width == 0 or height == 0:
-        raise ValueError("degenerate VP8 dimensions")
-    return width, height
-
-
 def _subchunks(data: bytes) -> list[tuple[bytes, bytes]]:
     """Walk a sequence of even-padded RIFF chunks (container payload
     after the WEBP fourcc, or ANMF frame data)."""
@@ -838,6 +829,15 @@ def _decode_embedded_image(
     return None
 
 
+def _vp8x_canvas(body: bytes) -> tuple[int, int]:
+    """Canvas (width, height) from a VP8X chunk body (24-bit minus-one
+    fields at bytes 4 and 7)."""
+    if len(body) < 10:
+        raise ValueError("truncated VP8X chunk")
+    return (1 + int.from_bytes(body[4:7], "little"),
+            1 + int.from_bytes(body[7:10], "little"))
+
+
 def decode_webp(
     payload: bytes,
 ) -> tuple[int, int, int, np.ndarray | None, str]:
@@ -845,7 +845,7 @@ def decode_webp(
     rgba_or_None, codec) where codec is 'vp8l', 'vp8' or 'vp8x'.
     Pixels are real for VP8L and VP8 stills; a VP8X container decodes
     its wrapped still image (``None`` only for animated canvases,
-    whose composited frames come from :func:`decode_webp_frames`)."""
+    whose frames :func:`webp_frames` lists for the compositor)."""
     chunks = _riff_chunks(payload)
     tag, body = chunks[0]
     if tag == b"VP8L":
@@ -857,10 +857,7 @@ def decode_webp(
         width, height, rgba = decode_vp8_pixels(body)
         return width, height, 1, rgba, "vp8"
     if tag == b"VP8X":
-        if len(body) < 10:
-            raise ValueError("truncated VP8X chunk")
-        width = 1 + int.from_bytes(body[4:7], "little")
-        height = 1 + int.from_bytes(body[7:10], "little")
+        width, height = _vp8x_canvas(body)
         if width * height > MAX_PIXELS:
             raise ValueError("VP8X canvas exceeds the decode cap")
         n_frames = sum(1 for t, _ in chunks if t == b"ANMF") or 1
@@ -881,34 +878,12 @@ def decode_webp(
     raise ValueError(f"WebP leading chunk {tag!r} is not an image")
 
 
-def count_webp_frames(payload: bytes) -> tuple[int, int, int]:
-    """(canvas width, height, n_frames) by walking the chunk structure
-    only -- no pixel decode; the cheap first pass of two-pass frame
-    sampling (the GIF analog is :func:`gif.count_gif_frames`)."""
-    chunks = _riff_chunks(payload)
-    tag, body = chunks[0]
-    if tag == b"VP8L":
-        if not body or body[0] != 0x2F:
-            raise ValueError("missing VP8L signature byte")
-        br = _Bits(body[1:])
-        return br.read(14) + 1, br.read(14) + 1, 1
-    if tag == b"VP8 ":
-        width, height = _vp8_dimensions(body)
-        return width, height, 1
-    if tag == b"VP8X":
-        if len(body) < 10:
-            raise ValueError("truncated VP8X chunk")
-        width = 1 + int.from_bytes(body[4:7], "little")
-        height = 1 + int.from_bytes(body[7:10], "little")
-        return width, height, sum(1 for t, _ in chunks if t == b"ANMF") or 1
-    raise ValueError(f"WebP leading chunk {tag!r} is not an image")
-
-
-def _blend_over(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
-    """Source-over alpha compositing per the extended-format spec's
-    blending formula, in exact integer arithmetic (floor of the
-    rational): a = aS + aD*(255-aS)/255; rgb = (rgbS*aS*255 +
-    rgbD*aD*(255-aS)) / (255*a), 0 where a == 0."""
+def _blend_over(dst: np.ndarray, src: np.ndarray) -> None:
+    """The blend draw rule: source-over alpha compositing of ``src`` onto
+    ``dst`` in place, per the extended-format spec's blending formula, in
+    exact integer arithmetic (floor of the rational): a = aS +
+    aD*(255-aS)/255; rgb = (rgbS*aS*255 + rgbD*aD*(255-aS)) / (255*a), 0
+    where a == 0."""
     a_s = src[..., 3].astype(np.int64)
     a_d = dst[..., 3].astype(np.int64)
     inv = 255 - a_s
@@ -918,59 +893,44 @@ def _blend_over(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
         + dst[..., :3].astype(np.int64) * (a_d * inv)[..., None]
     )
     safe = np.maximum(a_out, 1)
-    out = np.empty_like(src)
-    out[..., :3] = np.where(
+    dst[..., :3] = np.where(
         a_out[..., None] > 0, rgb_num // safe[..., None], 0
     ).astype(np.uint8)
-    out[..., 3] = (a_out // 255).astype(np.uint8)
-    return out
+    dst[..., 3] = (a_out // 255).astype(np.uint8)
 
 
-def decode_webp_frames(
-    payload: bytes, keep_indices: set | None = None
-) -> tuple[int, int, int, list[np.ndarray]]:
-    """Decode COMPOSITED animation frames of an extended (VP8X + ANMF)
-    WebP: each frame draws onto the running
-    canvas at its (2-pixel-unit) offset, honoring the per-frame
-    blending flag (bit 1: 1 = overwrite, 0 = source-over alpha blend)
-    and disposal flag (bit 0: 1 = restore the frame rectangle to the
-    ANIM background color) -- so frame k is what a viewer sees at step
-    k.  Returns (width, height, n_frames, [canvas[h, w, 4] uint8 for
-    each kept index]).  Both VP8L-coded (lossless) and VP8-coded
-    (lossy key-frame) ANMF payloads decode real pixels.  Frames after
-    the last kept index are counted but never pixel-decoded -- same
-    memory/CPU contract as the GIF sibling."""
+def _still(width: int, height: int, rgba: np.ndarray) -> Animation:
+    """A still image is its own single frame (decoded already, as the
+    still decoders do)."""
+    return Animation(width, height, np.zeros(4, np.uint8), [AnimationFrame(
+        0, 0, width, height, lambda: rgba, overwrite, DISPOSE_NONE)])
+
+
+def webp_frames(payload: bytes) -> Animation:
+    """The WebP frame source of :func:`multimodal.composite_frames`. An
+    extended (VP8X + ANMF) file lists one record per ANMF frame: its
+    (2-pixel-unit) offset and size, the blending flag (bit 1: 1 =
+    overwrite, 0 = source-over alpha blend) and the disposal flag (bit
+    0: 1 = restore the frame rectangle to the ANIM background color);
+    the canvas starts at that background. A frame's VP8L (lossless) or
+    VP8 (lossy key-frame) payload decodes only when the compositor asks
+    for its pixels. VP8L, VP8 and still-VP8X files are one decoded
+    frame."""
     chunks = _riff_chunks(payload)
     tag, body = chunks[0]
-    if tag == b"VP8L":  # a still image is its own single frame
-        width, height, rgba = decode_vp8l_pixels(body)
-        keep = keep_indices if keep_indices is not None else {0}
-        return width, height, 1, [rgba] if 0 in keep else []
-    if tag == b"VP8 ":  # lossy still: also its own single frame (r11
-        from .vp8 import decode_vp8_pixels  # review: count_webp_frames
-
-        # counts it as 1, so the decode pass must accept it too)
-        width, height, rgba = decode_vp8_pixels(body)
-        keep = keep_indices if keep_indices is not None else {0}
-        return width, height, 1, [rgba] if 0 in keep else []
+    if tag in (b"VP8L", b"VP8 "):
+        return _still(*_decode_embedded_image(chunks[:1]))
     if tag != b"VP8X":
         raise ValueError("WebP payload has no decodable frames")
-    if len(body) < 10:
-        raise ValueError("truncated VP8X chunk")
-    width = 1 + int.from_bytes(body[4:7], "little")
-    height = 1 + int.from_bytes(body[7:10], "little")
+    width, height = _vp8x_canvas(body)
     if width * height > SLOW_PATH_MAX_PIXELS:
         raise ValueError("WebP canvas exceeds the decode cap")
-    frames = [b for t, b in chunks if t == b"ANMF"]
-    if not frames:
-        # a still VP8X: delegate to the single-image path
-        w, h, n, rgba, _codec = decode_webp(payload)
+    anmf = [b for t, b in chunks if t == b"ANMF"]
+    if not anmf:
+        w, h, _n, rgba, _codec = decode_webp(payload)
         if rgba is None:
             raise ValueError("still VP8X carries no image chunk")
-        keep = keep_indices if keep_indices is not None else {0}
-        return w, h, 1, [rgba] if 0 in keep else []
-    keep = keep_indices if keep_indices is not None else set(range(len(frames)))
-    last_wanted = max(keep) if keep else -1
+        return _still(w, h, rgba)
     # canvas starts as the ANIM background color (BGRA bytes), else
     # transparent black
     bg = np.zeros(4, np.uint8)
@@ -980,11 +940,8 @@ def decode_webp_frames(
                 raise ValueError("truncated ANIM chunk")
             bg = np.array([b[2], b[1], b[0], b[3]], np.uint8)  # BGRA->RGBA
             break
-    canvas = np.tile(bg, (height, width, 1))
-    screens: list[np.ndarray] = []
-    for idx, fb in enumerate(frames):
-        if idx > last_wanted:
-            break  # later frames cannot affect any retained screen
+    frames = []
+    for fb in anmf:
         if len(fb) < 16:
             raise ValueError("truncated ANMF header")
         fx = int.from_bytes(fb[0:3], "little") * 2
@@ -994,19 +951,20 @@ def decode_webp_frames(
         flags = fb[15]
         if fx + fw > width or fy + fh > height:
             raise ValueError("ANMF frame exceeds the canvas")
-        got = _decode_embedded_image(list(_subchunks(fb[16:])))
-        if got is None:
-            raise ValueError("ANMF frame carries no image chunk")
-        fw_d, fh_d, rgba = got
-        if (fw_d, fh_d) != (fw, fh):
-            raise ValueError("ANMF frame dims disagree with header")
-        region = canvas[fy : fy + fh, fx : fx + fw]
-        if flags & 0x02:  # no-blend: overwrite the rectangle
-            region[:, :] = rgba
-        else:
-            region[:, :] = _blend_over(rgba, region)
-        if idx in keep:
-            screens.append(canvas.copy())
-        if flags & 0x01:  # dispose to background before the next frame
-            region[:, :] = bg
-    return width, height, len(frames), screens
+        frames.append(AnimationFrame(
+            fx, fy, fw, fh, partial(_anmf_pixels, fb, fw, fh),
+            overwrite if flags & 0x02 else _blend_over,
+            DISPOSE_BACKGROUND if flags & 0x01 else DISPOSE_NONE,
+        ))
+    return Animation(width, height, bg, frames)
+
+
+def _anmf_pixels(fb: bytes, fw: int, fh: int) -> np.ndarray:
+    """One ANMF frame's image chunks -> rgba[fh, fw] (ALPH included)."""
+    got = _decode_embedded_image(_subchunks(fb[16:]))
+    if got is None:
+        raise ValueError("ANMF frame carries no image chunk")
+    fw_d, fh_d, rgba = got
+    if (fw_d, fh_d) != (fw, fh):
+        raise ValueError("ANMF frame dims disagree with header")
+    return rgba

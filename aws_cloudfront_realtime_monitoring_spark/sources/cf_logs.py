@@ -28,6 +28,22 @@ from pyspark.sql import functions as F
 from ..schema import CF_FIELDS, DROPPED_BY_DEFAULT, storage_name
 
 
+def decode_payload_bytes(col: Column, charset: str = "UTF-8") -> Column:
+    """Payload bytes -> text line, PERMISSIVE like the rest of the parser:
+    ``decode`` raises MALFORMED_CHARACTER_CODING on invalid UTF-8 under
+    Spark's defaults, so one bad Kafka or Kinesis record would fail the
+    whole micro-batch where the reference's chr() join never raises. The
+    UTF-8 path therefore goes through the lenient binary->string cast
+    (UTF8String wraps bytes unvalidated, invalid sequences flow through
+    as replacement-rendered data) -- corrupt tokens then fall out as
+    NULLs at the typed-token try_casts (D2), the documented degradation
+    path. Other charsets use ``decode``; ISO-8859-1 cannot fail (every
+    byte sequence is valid Latin-1)."""
+    if charset.upper().replace("-", "") == "UTF8":
+        return col.cast("string")
+    return F.decode(col, charset)
+
+
 def decode_kinesis_payload(col: Column, charset: str = "UTF-8") -> Column:
     """Kinesis envelope payload -> text line (A2+A3).
 
@@ -35,21 +51,11 @@ def decode_kinesis_payload(col: Column, charset: str = "UTF-8") -> Column:
     join (:72, accidental Latin-1). Pass ``charset='ISO-8859-1'`` for
     byte-exact reference behavior on non-ASCII payloads.
 
-    PERMISSIVE like the rest of the parser (r13 review): under ANSI
-    mode plain ``unbase64`` raises on a corrupt envelope and ``decode``
-    raises MALFORMED_CHARACTER_CODING on invalid UTF-8 -- one bad
-    Kinesis record would fail the whole micro-batch where the
-    reference's chr() join never raises. ``try_to_binary`` nulls bad
-    base64, and the UTF-8 path goes through the lenient binary->string
-    cast (UTF8String wraps bytes unvalidated, invalid sequences flow
-    through as replacement-rendered data) -- corrupt tokens then fall
-    out as NULLs at the typed-token try_casts (D2), the documented
-    degradation path. ISO-8859-1 decode cannot fail (every byte
-    sequence is valid Latin-1)."""
-    raw = F.try_to_binary(col, F.lit("base64"))
-    if charset.upper().replace("-", "") in ("UTF8",):
-        return raw.cast("string")
-    return F.decode(raw, charset)
+    PERMISSIVE (r13 review): under ANSI mode plain ``unbase64`` raises on
+    a corrupt envelope; ``try_to_binary`` nulls bad base64 instead, and
+    the bytes go through :func:`decode_payload_bytes`."""
+    return decode_payload_bytes(F.try_to_binary(col, F.lit("base64")),
+                                charset)
 
 
 def _typed_token_sql(toks: str, i: int, typ: str) -> str:
@@ -110,16 +116,6 @@ def _cs_header_names_sql(tok: str) -> str:
     lambda_function.py:50-52; golden shape test.json:73-82)."""
     return (f"filter(split({_url_decode_permissive_sql(tok)}, '\\n'), "
             "x -> x != '')")
-
-
-def parse_cs_headers(col: str) -> Column:
-    """Column form of :func:`_cs_headers_sql` over the column ``col``."""
-    return F.expr(_cs_headers_sql(col))
-
-
-def parse_cs_header_names(col: str) -> Column:
-    """Column form of :func:`_cs_header_names_sql` over the column ``col``."""
-    return F.expr(_cs_header_names_sql(col))
 
 
 def parse_log_lines(

@@ -34,7 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.cf_logs import parse_log_lines
+from ..sources.cf_logs import decode_payload_bytes, parse_log_lines
 
 
 def stream_log_lines(
@@ -287,8 +287,18 @@ def _connector_lines(
     reader = spark.readStream.format(source_format)
     for k, v in opts.items():
         reader = reader.option(k, v)
-    lines = reader.load().select(
-        F.decode(F.col(data_col), charset).alias("value")
+    return _parse_records(reader.load(), data_col, charset, sample_fraction)
+
+
+def _parse_records(
+    records: DataFrame, data_col: str, charset: str,
+    sample_fraction: float | None,
+) -> DataFrame:
+    """The connector path's decode-and-parse step: the binary payload
+    column through the permissive bytes->string decode, then the parser
+    (works on a batch frame too)."""
+    lines = records.select(
+        decode_payload_bytes(F.col(data_col), charset).alias("value")
     )
     return parse_log_lines(lines, sample_fraction=sample_fraction)
 

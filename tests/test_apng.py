@@ -23,14 +23,19 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from test_png_full import _chunk, _serialize, _rng, make_png, _SIG
 
 from aws_cloudfront_realtime_monitoring_spark.operators.apng import (
-    DEFAULT_MAX_FRAMES,
-    count_apng_frames,
-    decode_apng_frames,
+    apng_frames,
 )
 from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
+    composite_frames,
     decode_image,
     decode_png_pixels,
 )
+
+
+def _screens(payload, keep_indices=None):
+    """(width, height, kept canvases) through the compositor."""
+    w, h, _n, screens = composite_frames(apng_frames(payload), keep_indices)
+    return w, h, screens
 
 
 # --------------------------------------------------------------- encoder
@@ -202,7 +207,7 @@ def test_apng_two_frames_idat_first_full_replace():
     f0 = np.full((4, 4, 4), 100, np.uint8)
     f1 = np.full((2, 2, 4), 200, np.uint8)
     data = make_apng((4, 4), [(f0, 0, 0, 0, 0), (f1, 1, 1, 0, 0)])
-    w, h, screens = decode_apng_frames(data)
+    w, h, screens = _screens(data)
     assert (w, h) == (4, 4) and len(screens) == 2
     want = reference_composite((4, 4), [
         ([[_rgba(100, 100, 100, 100)] * 4] * 4, 0, 0, 0, 0),
@@ -218,7 +223,7 @@ def test_apng_blend_over_and_dispose_background_match_reference():
     f2 = r.randint(0, 256, (3, 2, 4)).astype(np.uint8)
     specs = [(f0, 0, 0, 0, 0), (f1, 1, 2, 1, 1), (f2, 2, 0, 0, 1)]
     data = make_apng((4, 4), specs)
-    _w, _h, screens = decode_apng_frames(data)
+    _w, _h, screens = _screens(data)
     want = reference_composite(
         (4, 4), [(s.tolist(), x, y, d, b) for s, x, y, d, b in specs])
     _assert_screens(screens, want)
@@ -230,7 +235,7 @@ def test_apng_dispose_previous_reverts_region():
     f2 = np.full((1, 1, 4), 10, np.uint8)
     specs = [(f0, 0, 0, 0, 0), (f1, 0, 0, 2, 0), (f2, 2, 2, 0, 0)]
     data = make_apng((3, 3), specs)
-    _w, _h, screens = decode_apng_frames(data)
+    _w, _h, screens = _screens(data)
     want = reference_composite(
         (3, 3), [(s.tolist(), x, y, d, b) for s, x, y, d, b in specs])
     _assert_screens(screens, want)
@@ -242,7 +247,7 @@ def test_apng_first_frame_dispose_previous_degrades_to_background():
     f0 = np.full((2, 2, 4), 99, np.uint8)
     f1 = np.full((1, 1, 4), 7, np.uint8)
     data = make_apng((2, 2), [(f0, 0, 0, 2, 0), (f1, 1, 1, 0, 0)])
-    _w, _h, screens = decode_apng_frames(data)
+    _w, _h, screens = _screens(data)
     # after frame 0's BACKGROUND-degraded dispose, the canvas is clear:
     # frame 1 shows only its own pixel
     np.testing.assert_array_equal(screens[1][0, 0], [0, 0, 0, 0])
@@ -253,7 +258,7 @@ def test_apng_static_idat_not_in_animation():
     static = np.full((3, 3, 4), 123, np.uint8)
     f0 = np.full((2, 2, 4), 200, np.uint8)
     data = make_apng((3, 3), [(f0, 0, 1, 0, 0)], static=static)
-    w, h, screens = decode_apng_frames(data)
+    w, h, screens = _screens(data)
     assert (w, h, len(screens)) == (3, 3, 1)
     # animation starts from a TRANSPARENT canvas, not the static image
     np.testing.assert_array_equal(screens[0][0, 0], [0, 0, 0, 0])
@@ -267,7 +272,7 @@ def test_apng_gray_and_palette_sources_expand_to_rgba():
     g0 = np.array([[[3]]], np.uint8)  # depth-2 gray, scales to 255
     g1 = np.array([[[1]]], np.uint8)  # scales to 85
     data = make_apng((1, 1), [(g0, 0, 0, 0, 0), (g1, 0, 0, 0, 0)], depth=2)
-    _w, _h, screens = decode_apng_frames(data)
+    _w, _h, screens = _screens(data)
     np.testing.assert_array_equal(screens[0][0, 0], [255, 255, 255, 255])
     np.testing.assert_array_equal(screens[1][0, 0], [85, 85, 85, 255])
 
@@ -276,7 +281,7 @@ def test_apng_gray_and_palette_sources_expand_to_rgba():
     p1 = np.array([[[1]]], np.uint8)
     data = make_apng((1, 1), [(p0, 0, 0, 0, 0), (p1, 0, 0, 0, 0)],
                      depth=8, color_type=3, palette=pal, trns=b"\x80")
-    _w, _h, screens = decode_apng_frames(data)
+    _w, _h, screens = _screens(data)
     np.testing.assert_array_equal(screens[0][0, 0], [10, 20, 30, 128])
     np.testing.assert_array_equal(screens[1][0, 0], [40, 50, 60, 255])
 
@@ -286,7 +291,7 @@ def test_apng_16bit_blend_over_matches_fraction_reference():
     f1 = np.array([[[1000, 2000, 3000, 20000]]], np.uint16)
     specs = [(f0, 0, 0, 0, 0), (f1, 0, 0, 0, 1)]
     data = make_apng((1, 1), specs, depth=16)
-    _w, _h, screens = decode_apng_frames(data)
+    _w, _h, screens = _screens(data)
     assert screens[0].dtype == np.uint16
     want = reference_composite(
         (1, 1), [(s.tolist(), x, y, d, b) for s, x, y, d, b in specs],
@@ -298,23 +303,24 @@ def test_apng_retention_contract():
     frames = [(np.full((1, 1, 4), i, np.uint8), 0, 0, 0, 0)
               for i in range(5)]
     data = make_apng((1, 1), frames)
-    _w, _h, screens = decode_apng_frames(data, keep_indices={1, 3})
+    _w, _h, screens = _screens(data, keep_indices={1, 3})
     assert [int(s[0, 0, 0]) for s in screens] == [1, 3]
-    _w, _h, screens = decode_apng_frames(data, max_frames=2)
+    _w, _h, screens = _screens(data, keep_indices={0, 1})
     assert [int(s[0, 0, 0]) for s in screens] == [0, 1]
-    assert count_apng_frames(data) == (1, 1, 5)
+    assert len(apng_frames(data).frames) == 5
 
 
 def test_apng_default_frame_cap_refuses_never_trims(monkeypatch):
-    import aws_cloudfront_realtime_monitoring_spark.operators.apng as apng_mod
+    import aws_cloudfront_realtime_monitoring_spark.operators.multimodal as mm
 
     frames = [(np.full((1, 1, 4), i, np.uint8), 0, 0, 0, 0)
               for i in range(4)]
     data = make_apng((1, 1), frames)
-    monkeypatch.setattr(apng_mod, "DEFAULT_MAX_FRAMES", 3)
+    default = mm.DEFAULT_MAX_FRAMES
+    monkeypatch.setattr(mm, "DEFAULT_MAX_FRAMES", 3)
     with pytest.raises(ValueError, match="retention cap"):
-        decode_apng_frames(data)
-    assert DEFAULT_MAX_FRAMES >= 256  # module default unchanged
+        _screens(data)
+    assert default >= 256  # module default unchanged
 
 
 def test_apng_malformed_animation_raises():
@@ -325,18 +331,18 @@ def test_apng_malformed_animation_raises():
     bad_seq = make_apng((2, 2), [(f0, 0, 0, 0, 0), (f1, 0, 0, 0, 0)],
                         break_seq=True)
     with pytest.raises(ValueError, match="sequence"):
-        decode_apng_frames(bad_seq)
+        _screens(bad_seq)
     # acTL count mismatch
     bad_n = make_apng((2, 2), [(f0, 0, 0, 0, 0), (f1, 0, 0, 0, 0)],
                       actl_frames=5)
     with pytest.raises(ValueError, match="declares"):
-        decode_apng_frames(bad_n)
+        _screens(bad_n)
     # frame region outside the canvas
     with pytest.raises(ValueError, match="geometry"):
-        decode_apng_frames(
+        _screens(
             make_apng((2, 2), [(f0, 0, 0, 0, 0), (f1, 2, 2, 0, 0)]))
     # the good one still decodes (guards the guards)
-    assert len(decode_apng_frames(good)[2]) == 2
+    assert len(_screens(good)[2]) == 2
 
 
 def test_decode_image_reports_apng_and_falls_back_when_malformed():
@@ -360,7 +366,7 @@ def test_decode_image_reports_apng_and_falls_back_when_malformed():
     row = decode_image(4, bad_crc)
     assert (row["fmt"], row["n_frames"]) == ("png", 1)
     with pytest.raises(ValueError, match="CRC mismatch"):
-        decode_apng_frames(bad_crc)
+        _screens(bad_crc)
     # a plain static PNG still reports png/1
     row = decode_image(3, make_png(np.full((2, 2, 3), 5, np.uint8)))
     assert (row["fmt"], row["n_frames"]) == ("png", 1)
@@ -381,7 +387,7 @@ def test_apng_adam7_interlaced_frames_roundtrip():
     f1 = r.randint(0, 256, (5, 6, 4)).astype(np.uint8)
     specs = [(f0, 0, 0, 0, 0), (f1, 3, 2, 0, 0)]
     data = make_apng((10, 9), specs, interlace=1)
-    _w, _h, screens = decode_apng_frames(data)
+    _w, _h, screens = _screens(data)
     want = reference_composite(
         (10, 9), [(s.tolist(), x, y, d, b) for s, x, y, d, b in specs])
     _assert_screens(screens, want)

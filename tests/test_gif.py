@@ -9,7 +9,13 @@ import struct
 import numpy as np
 import pytest
 
-from aws_cloudfront_realtime_monitoring_spark.operators.gif import decode_gif
+from aws_cloudfront_realtime_monitoring_spark.operators.gif import (
+    decode_gif,
+    gif_frames,
+)
+from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
+    composite_frames,
+)
 
 #: GIF89a Appendix E interlace passes, spelled HERE from the spec (NOT
 #: imported from the decoder): pass 1 every 8th row from row 0, pass 2
@@ -86,6 +92,11 @@ def _frame(idx: np.ndarray, left: int = 0, top: int = 0,
         b"\x2c" + struct.pack("<HHHH", left, top, w, h) + bytes([packed])
         + bytes([mc]) + _blocks(_lzw_encode(list(idx.reshape(-1)), mc))
     )
+
+
+def _frames(blob: bytes, keep: set | None = None):
+    """(width, height, n_frames, kept screens) through the compositor."""
+    return composite_frames(gif_frames(blob), keep)
 
 
 def _make_gif(frames: list[bytes], palette: np.ndarray, w: int, h: int,
@@ -198,9 +209,6 @@ def test_gif_frame_compositing_and_sampling(spark):
     running screen) and the REAL frame-sampling op emits evenly-spaced
     frames whose mean colors match numpy computed on the composited
     screens."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.gif import (
-        decode_gif_frames,
-    )
     from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
         sample_animation_frames,
     )
@@ -218,7 +226,7 @@ def test_gif_frame_compositing_and_sampling(spark):
          _frame(f4, left=0)],
         pal, 4, 4, with_ext=True,
     )
-    w, h, screens = decode_gif_frames(blob)
+    w, h, _n, screens = _frames(blob)
     assert (w, h, len(screens)) == (4, 4, 4)
     expect = np.zeros((4, 4, 3), np.uint8)
     expect[:, :] = pal[0]
@@ -229,9 +237,9 @@ def test_gif_frame_compositing_and_sampling(spark):
     np.testing.assert_array_equal(screens[2], expect)
     expect[:, 0] = pal[3]
     np.testing.assert_array_equal(screens[3], expect)
-    # max_frames truncates the composite list but still counts all
-    _w, _h, two = decode_gif_frames(blob, max_frames=2)
-    assert len(two) == 2
+    # keep_indices trims the composite list but still counts all
+    _w, _h, n, two = _frames(blob, {0, 1})
+    assert (n, len(two)) == (4, 2)
 
     df = spark.createDataFrame(
         [(9, bytearray(blob))], "doc_id BIGINT, payload BINARY"
@@ -289,9 +297,6 @@ def test_gif_gce_transparency_leaves_underlying_screen():
     """Transparency-delta animation (the common GIF89a encoding): pixels
     equal to the GCE transparent index must NOT overwrite the running
     screen with a palette color."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.gif import (
-        decode_gif_frames,
-    )
 
     pal = np.array([[10, 20, 30], [200, 100, 0], [0, 0, 250], [90, 90, 90]],
                    np.uint8)
@@ -300,7 +305,7 @@ def test_gif_gce_transparency_leaves_underlying_screen():
     blob = _make_gif(
         [_frame(f1), _gce(t_idx=3) + _frame(f2, left=1, top=1)], pal, 4, 4
     )
-    w, h, screens = decode_gif_frames(blob)
+    w, h, _n, screens = _frames(blob)
     assert (w, h, len(screens)) == (4, 4, 2)
     expect = np.zeros((4, 4, 3), np.uint8)
     expect[:, :] = pal[0]
@@ -315,9 +320,6 @@ def test_gif_gce_disposal_background_and_previous():
     """Disposal 2 restores the frame's rect to the background color,
     disposal 3 restores it to the pre-frame content, both BEFORE the
     next frame draws."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.gif import (
-        decode_gif_frames,
-    )
 
     pal = np.array([[10, 20, 30], [200, 100, 0], [0, 0, 250], [90, 90, 90]],
                    np.uint8)
@@ -330,7 +332,7 @@ def test_gif_gce_disposal_background_and_previous():
         [fill, _gce(disposal=2) + _frame(rect, left=0, top=0), dot],
         pal, 4, 4,
     )
-    _w, _h, screens = decode_gif_frames(blob)
+    _w, _h, _n, screens = _frames(blob)
     expect = np.zeros((4, 4, 3), np.uint8)
     expect[:, :] = pal[1]
     expect[0:2, 0:2] = pal[2]
@@ -344,7 +346,7 @@ def test_gif_gce_disposal_background_and_previous():
         [fill, _gce(disposal=3) + _frame(rect, left=1, top=1), dot],
         pal, 4, 4,
     )
-    _w, _h, screens = decode_gif_frames(blob)
+    _w, _h, _n, screens = _frames(blob)
     expect = np.zeros((4, 4, 3), np.uint8)
     expect[:, :] = pal[1]
     expect[1:3, 1:3] = pal[2]
@@ -375,10 +377,6 @@ def test_gif_frames_beyond_last_kept_are_not_decoded():
     composite for frames after the first: a frame with CORRUPT LZW data
     past the kept index still counts (block walk) without raising,
     while requesting that frame decodes it and fails."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.gif import (
-        decode_gif,
-        decode_gif_frames,
-    )
 
     pal = np.array([[10, 20, 30], [200, 100, 0]], np.uint8)
     f1 = _frame(np.zeros((2, 2), np.uint8))
@@ -390,31 +388,27 @@ def test_gif_frames_beyond_last_kept_are_not_decoded():
     assert (w, h, n) == (2, 2, 2)
     np.testing.assert_array_equal(first[0, 0], pal[0])
     with pytest.raises(ValueError):  # decoding frame 2 surfaces the rot
-        decode_gif_frames(blob, keep_indices={1})
+        _frames(blob, {1})
 
 def test_gif_default_cap_refuses_rather_than_trims():
-    """decode_gif_frames with neither max_frames nor keep_indices refuses
-    a file longer than DEFAULT_MAX_FRAMES (r11 advice: the old behavior
-    silently returned 256 of N screens); an explicit bound still works,
-    and the refusal happens in the count pre-pass (cheap block walk)."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.gif import (
+    """Compositing with no keep_indices refuses a file longer than
+    DEFAULT_MAX_FRAMES (r11 advice: the old behavior silently returned
+    256 of N screens); explicit picks still work."""
+    from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
         DEFAULT_MAX_FRAMES,
-        decode_gif_frames,
     )
 
     pal = np.array([[1, 2, 3], [4, 5, 6]], np.uint8)
     one = _frame(np.zeros((1, 1), np.uint8))
     blob = _make_gif([one] * (DEFAULT_MAX_FRAMES + 1), pal, 1, 1)
     with pytest.raises(ValueError, match="default retention cap"):
-        decode_gif_frames(blob)
+        _frames(blob)
     # explicit bounds and explicit picks are unaffected
-    _w, _h, screens = decode_gif_frames(blob, max_frames=3)
-    assert len(screens) == 3
-    _w, _h, screens = decode_gif_frames(
-        blob, keep_indices={DEFAULT_MAX_FRAMES}
-    )
+    _w, _h, n, screens = _frames(blob, {0, 1, 2})
+    assert (n, len(screens)) == (DEFAULT_MAX_FRAMES + 1, 3)
+    _w, _h, _n, screens = _frames(blob, {DEFAULT_MAX_FRAMES})
     assert len(screens) == 1
     # at exactly the cap, the default decodes everything
     blob_ok = _make_gif([one] * DEFAULT_MAX_FRAMES, pal, 1, 1)
-    _w, _h, screens = decode_gif_frames(blob_ok)
+    _w, _h, _n, screens = _frames(blob_ok)
     assert len(screens) == DEFAULT_MAX_FRAMES

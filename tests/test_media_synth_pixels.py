@@ -15,10 +15,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from aws_cloudfront_realtime_monitoring_spark.operators.apng import (
-    count_apng_frames,
-    decode_apng_frames,
-)
 from aws_cloudfront_realtime_monitoring_spark.operators.jpeg import (
     decode_jpeg_pixels,
 )
@@ -29,6 +25,8 @@ from aws_cloudfront_realtime_monitoring_spark.operators.media_synth import (
     trns_png_payload,
 )
 from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
+    animation_frames,
+    composite_frames,
     decode_image,
     decode_pixel_stats,
     decode_png_pixels,
@@ -41,9 +39,8 @@ IDS = [0, 1, 2, 3, 17, 123, 499]
 @pytest.mark.parametrize("doc_id", IDS)
 def test_apng_payload_composites_to_formula_colors(doc_id):
     p = apng_payload(doc_id)
-    w, h, n = count_apng_frames(p)
+    w, h, n, screens = composite_frames(animation_frames(p))
     assert (w, h, n) == (doc_id % 24 + 8, doc_id % 16 + 8, doc_id % 4 + 2)
-    _, _, screens = decode_apng_frames(p)
     assert len(screens) == n
     for k, screen in enumerate(screens):
         assert screen.shape == (h, w, 4)
@@ -231,19 +228,14 @@ def test_gif_anim_payload_composites_to_formula_colors(doc_id):
     """r15: GIF animation builder — per-frame local color tables, GCE
     disposal, real LZW — composites to exact frame colors through the
     repo's decoder (the APNG sibling check)."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.gif import (
-        count_gif_frames,
-        decode_gif_frames,
-    )
     from aws_cloudfront_realtime_monitoring_spark.operators.media_synth import (
         gif_anim_frame_color,
         gif_anim_payload,
     )
 
     p = gif_anim_payload(doc_id)
-    w, h, n = count_gif_frames(p)
+    w, h, n, screens = composite_frames(animation_frames(p))
     assert (w, h, n) == (doc_id % 16 + 6, doc_id % 10 + 6, doc_id % 3 + 2)
-    _, _, screens = decode_gif_frames(p, keep_indices=set(range(n)))
     assert len(screens) == n
     for k, screen in enumerate(screens):
         r, g, b = gif_anim_frame_color(doc_id, k)

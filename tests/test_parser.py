@@ -249,3 +249,26 @@ def test_kinesis_payload_decode_is_permissive(spark):
     # and corrupt records degrade to all-NULL parsed rows, not errors
     parsed = parse_log_lines(df)
     assert parsed.count() == 3
+
+
+def test_connector_decode_is_permissive_on_invalid_utf8(spark):
+    """The Kafka/Kinesis connector path decodes the binary record value
+    through the same permissive decode: a record carrying an invalid
+    UTF-8 byte (0xFF) parses to a row instead of failing the
+    micro-batch with MALFORMED_CHARACTER_CODING, which plain ``decode``
+    raises under Spark's defaults."""
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
+    from aws_cloudfront_realtime_monitoring_spark.streaming.ingest import (
+        _parse_records,
+    )
+
+    bad = GOLDEN_LINE.replace("curl/7.53.1", "curl\xff").encode("latin-1")
+    df = spark.createDataFrame(
+        [(bytearray(GOLDEN_LINE.encode()),), (bytearray(bad),)],
+        StructType([StructField("value", BinaryType())]))
+    rows = _parse_records(df, "value", "UTF-8", None).collect()
+    assert [r.sc_bytes for r in rows] == [16653, 16653]
+    assert rows[0].cs_user_agent == "curl/7.53.1"
+    latin = _parse_records(df, "value", "ISO-8859-1", None).collect()
+    assert latin[1].cs_user_agent == "curl\xff"

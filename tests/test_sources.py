@@ -224,28 +224,24 @@ def test_header_decode_permissive_on_malformed_escape(spark):
     which would kill the whole micro-batch for one corrupt token. The
     permissive decode falls back to the RAW blob instead -- and
     well-formed blobs decode exactly as before."""
-    from pyspark.sql import functions as F
-
     from aws_cloudfront_realtime_monitoring_spark.sources.cf_logs import (
-        parse_cs_header_names,
-        parse_cs_headers,
+        to_wire_line,
     )
 
-    df = spark.createDataFrame(
-        [("Host:ex%3Aample.com%0AUA:x",),   # well-formed
-         ("Host:bad%zzescape%0AUA:x",),      # malformed mid-blob
-         ("truncated%E",)],                  # truncated escape
-        "blob string",
-    )
-    rows = df.select(parse_cs_headers("blob").alias("h")).collect()
-    assert [(e.Name, e.Value) for e in rows[0].h] == [
+    blobs = ["Host:ex%3Aample.com%0AUA:x",   # well-formed
+             "Host:bad%zzescape%0AUA:x",     # malformed mid-blob
+             "truncated%E"]                  # truncated escape
+    df = lines_df(spark, *(
+        to_wire_line({"cs-headers": b, "cs-header-names": b}) for b in blobs))
+    rows = parse_log_lines(df, drop_headers=False,
+                           parse_headers=True).collect()
+    assert [(e.Name, e.Value) for e in rows[0].cs_headers] == [
         ("Host", "ex:ample.com"), ("UA", "x")]
     # malformed: raw passthrough, still split on the literal ':'
-    assert rows[1].h[0].Name == "Host"
-    assert rows[1].h[0].Value == "bad%zzescape%0AUA:x"
-    assert rows[2].h == []  # no ':' once raw -- dropped, not an error
-    names = df.select(parse_cs_header_names("blob").alias("n")).collect()
-    assert names[2].n == ["truncated%E"]
+    assert rows[1].cs_headers[0].Name == "Host"
+    assert rows[1].cs_headers[0].Value == "bad%zzescape%0AUA:x"
+    assert rows[2].cs_headers == []  # no ':' once raw -- dropped, not an error
+    assert rows[2].cs_header_names == ["truncated%E"]
 
 
 def test_register_views_distinct_per_sibling_session(spark, sf_dir):

@@ -1079,46 +1079,65 @@ def test_alph_malformed_rejected():
         _decode_alpha_plane(bytes([2]) + b"\x00" * 16, 4, 4)
 
 
+def _riff_chunk(tag: bytes, body: bytes) -> bytes:
+    chunk = tag + struct.pack("<I", len(body)) + body
+    return chunk + b"\x00" if len(body) % 2 else chunk
+
+
+def _anmf(sub: bytes, w: int, h: int, x: int = 0, y: int = 0,
+          flags: int = 0) -> bytes:
+    """One ANMF chunk (container spec 'Animation'): even offset, size,
+    100 ms duration, flags (bit 1 = no blend, bit 0 = dispose), then the
+    frame's image subchunks ``sub``."""
+    head = (x // 2).to_bytes(3, "little") + (y // 2).to_bytes(3, "little")
+    head += (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
+    head += (100).to_bytes(3, "little") + bytes([flags])
+    return _riff_chunk(b"ANMF", head + sub)
+
+
+def _anim_webp(w: int, h: int, anmfs: list, bgra: bytes = bytes(4)) -> bytes:
+    """Extended WebP: VP8X (alpha + animation flags), ANIM (background
+    color in B, G, R, A byte order, loop count 0), then the frames."""
+    vp8x = bytes([0x12, 0, 0, 0])
+    vp8x += (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
+    chunks = (_riff_chunk(b"VP8X", vp8x)
+              + _riff_chunk(b"ANIM", bgra + struct.pack("<H", 0))
+              + b"".join(anmfs))
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WEBP" + chunks
+
+
+def _vp8l_anmf(rgba: np.ndarray, x: int = 0, y: int = 0,
+               flags: int = 0) -> bytes:
+    h, w = rgba.shape[:2]
+    return _anmf(_riff_chunk(b"VP8L", _encode_vp8l(rgba)[0]), w, h, x, y,
+                 flags)
+
+
 def test_alph_animation_frames_composite_real_alpha():
     """An ANMF frame whose subchunks are ALPH + VP8 composites with the
     DECODED alpha: a no-blend frame lands the plane verbatim in the
     canvas, and a source-over second frame with alpha=0 leaves the
     first frame's pixels visible (the pre-r10 behavior blended lossy
     frames at alpha=255, overwriting them)."""
-    from aws_cloudfront_realtime_monitoring_spark.operators.webp import (
-        decode_webp_frames,
+    from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
+        animation_frames,
+        composite_frames,
     )
     from tests.test_vp8 import build_frame
 
     w = h = 16
     plane = _alpha_test_plane(w, h)
-    vp8 = build_frame(1, 1, [[0] * 16])
+    vp8 = _riff_chunk(b"VP8 ", build_frame(1, 1, [[0] * 16]))
 
     def anmf(alph_body, flags):
-        sub = b"ALPH" + struct.pack("<I", len(alph_body)) + alph_body
-        if len(alph_body) % 2:
-            sub += b"\x00"
-        sub += b"VP8 " + struct.pack("<I", len(vp8)) + vp8
-        if len(vp8) % 2:
-            sub += b"\x00"
-        head = (0).to_bytes(3, "little") * 2  # fx, fy
-        head += (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
-        head += (100).to_bytes(3, "little") + bytes([flags])
-        return head + sub
+        return _anmf(_riff_chunk(b"ALPH", alph_body) + vp8, w, h,
+                     flags=flags)
 
-    vp8x = bytes([0x12, 0, 0, 0])  # alpha + animation flags
-    vp8x += (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
-    anim = struct.pack("<I", 0) + struct.pack("<H", 0)  # bg, loop
-    chunks = b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x
-    chunks += b"ANIM" + struct.pack("<I", len(anim)) + anim
-    f1 = anmf(bytes([0]) + plane.tobytes(), 0x02)  # no-blend
-    f2 = anmf(bytes([0]) + b"\x00" * (w * h), 0x00)  # alpha-0, blend
-    for f in (f1, f2):
-        chunks += b"ANMF" + struct.pack("<I", len(f)) + f
-        if len(f) % 2:
-            chunks += b"\x00"
-    blob = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WEBP" + chunks
-    gw, gh, n, screens = decode_webp_frames(blob)
+    blob = _anim_webp(w, h, [
+        anmf(bytes([0]) + plane.tobytes(), 0x02),  # no-blend
+        anmf(bytes([0]) + b"\x00" * (w * h), 0x00),  # alpha-0, blend
+    ])
+    gw, gh, n, screens = composite_frames(animation_frames(blob))
     assert (gw, gh, n) == (w, h, 2)
     assert np.array_equal(screens[0][..., 3], plane)
     # frame 2 contributes nothing VISIBLE where its alpha is 0: alpha is
@@ -1130,22 +1149,70 @@ def test_alph_animation_frames_composite_real_alpha():
     assert np.array_equal(screens[1][vis], screens[0][vis])
 
 
+def test_sample_animation_frames_reads_animated_webp(spark):
+    """The frame sampler reads animated WebP through the same compositor
+    as GIF and APNG: five VP8L frames over a non-black ANIM background
+    -- a full opaque frame, a blended opaque patch, a no-blend patch
+    disposed to the background, a fully transparent blended frame, and
+    an offset patch -- sampled at 0, 2 and 4 with exact channel means
+    of hand-composited canvases."""
+    from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
+        sample_animation_frames,
+    )
+
+    W, H = 6, 4
+    bg = np.array([40, 30, 20, 255], np.uint8)  # RGBA
+    rng = np.random.RandomState(7)
+
+    def solid(h, w, rgb, a=255):
+        return np.dstack([np.full((h, w, 3), rgb, np.uint8),
+                          np.full((h, w), a, np.uint8)])
+
+    f0 = rng.randint(0, 256, (H, W, 4)).astype(np.uint8)
+    f0[..., 3] = 255
+    f1, f2 = solid(2, 2, (200, 10, 90)), solid(2, 4, (7, 250, 33))
+    f3, f4 = solid(H, W, (99, 99, 99), a=0), solid(2, 2, (1, 2, 3))
+    blob = _anim_webp(W, H, [
+        _vp8l_anmf(f0),
+        _vp8l_anmf(f1, x=2, y=2),
+        _vp8l_anmf(f2, x=2, y=0, flags=0x03),  # no blend, then dispose
+        _vp8l_anmf(f3),  # blended at alpha 0: changes nothing
+        _vp8l_anmf(f4, x=4, y=0),
+    ], bgra=bytes([bg[2], bg[1], bg[0], bg[3]]))
+    shown1 = f0.copy()
+    shown1[2:4, 2:4] = f1
+    want = {0: f0, 2: shown1.copy(), 4: shown1.copy()}
+    want[2][0:2, 2:6] = f2
+    want[4][0:2, 2:6] = bg  # frame 2's dispose
+    want[4][0:2, 4:6] = f4
+    df = spark.createDataFrame([(1, bytearray(blob))],
+                               "doc_id BIGINT, payload BINARY")
+    got = sorted(sample_animation_frames(df, n_samples=3,
+                                         skip_invalid=False).collect(),
+                 key=lambda r: r.frame_idx)
+    assert [r.frame_idx for r in got] == [0, 2, 4]
+    for r in got:
+        means = want[r.frame_idx][..., :3].reshape(-1, 3).mean(axis=0)
+        assert (r.mean_r, r.mean_g, r.mean_b) == tuple(
+            int(v) for v in means.round())
+        assert (r.n_frames, r.width, r.height) == (5, W, H)
+
+
 def test_lossy_still_count_and_frame_decode_agree():
-    """r11 review: count_webp_frames counts a plain lossy (VP8) still
-    as one frame, so decode_webp_frames must decode it as its own
-    single frame too -- the two-pass count-then-decode sampler pair
-    (keep_indices from the count) was rejecting the payload."""
+    """r11 review: a plain lossy (VP8) still is one frame, so the frame
+    source must decode it as its own single frame too -- the sampler was
+    rejecting the payload."""
+    from aws_cloudfront_realtime_monitoring_spark.operators.multimodal import (
+        animation_frames,
+        composite_frames,
+    )
     from aws_cloudfront_realtime_monitoring_spark.operators.webp import (
-        count_webp_frames,
         decode_webp,
-        decode_webp_frames,
     )
     from tests.test_vp8 import build_frame
 
     blob = _wrap_riff(build_frame(1, 1, [[0] * 16]), b"VP8 ")
-    w, h, n = count_webp_frames(blob)
-    assert (w, h, n) == (16, 16, 1)
-    fw, fh, fn, screens = decode_webp_frames(blob, keep_indices={0})
+    fw, fh, fn, screens = composite_frames(animation_frames(blob), {0})
     assert (fw, fh, fn) == (16, 16, 1) and len(screens) == 1
     _w, _h, _n, still, _codec = decode_webp(blob)
     np.testing.assert_array_equal(screens[0], still)
@@ -1235,15 +1302,16 @@ def test_vp8l_synth_encoder_roundtrips_exactly():
         webp_channel_bases,
     )
     from aws_cloudfront_realtime_monitoring_spark.operators.webp import (
-        count_webp_frames,
         decode_webp,
+        webp_frames,
     )
 
     for doc_id in list(range(60)) + [239, 240, 1234, 99999]:
         p = vp8l_webp_payload(doc_id)
         w, h, n, rgba, codec = decode_webp(p)
         assert (codec, n) == ("vp8l", 1)
-        assert count_webp_frames(p) == (w, h, 1)
+        anim = webp_frames(p)
+        assert (anim.width, anim.height, len(anim.frames)) == (w, h, 1)
         W, H = doc_id % 20 + 4, doc_id % 14 + 4
         assert (w, h) == (W, H)
         gb, rb, bb = webp_channel_bases(doc_id)
